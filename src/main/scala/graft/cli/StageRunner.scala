@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.config.PipelineConfig.Stage
-import graft.ops.{AfpStore, DedupStore, IvfIndex, IvfPqStore, PhashStore,
-  PqStore, StoreMaintenance}
+import graft.ops.{AfpStore, Classify, DedupStore, IvfIndex, IvfPqStore,
+  PhashStore, PqStore, StoreMaintenance, VersionedStore}
 
 /** Executes one declarative analytics stage
   * ([[graft.config.PipelineConfig.Stage]]) and returns the DataFrame
@@ -33,7 +33,7 @@ import graft.ops.{AfpStore, DedupStore, IvfIndex, IvfPqStore, PhashStore,
   *    a season of scheduled pipeline runs leaves a queryable
   *    maintenance history in the warehouse instead of a log trail.
   *    `action: recommend` lands the rebuild-vs-compact-vs-ok ADVISORY
-  *    row for ANY of the four stores, judged at the stage's own
+  *    row for ANY of the six stores, judged at the stage's own
   *    `margin`/`min_cosine`/threshold knobs; `action: rebuild` ACTS
   *    on it — a fresh save() from the stage's current corpus under
   *    the maintainer lease, so a fingerprint-drifted store goes
@@ -132,19 +132,54 @@ object StageRunner {
     }
   }
 
+  /** A persisted store as the YAML `store:` name sees it: the stage
+    * input its build/append read by default, and its save/append at
+    * the library defaults. Every other verb is the store's own.
+    */
+  private final case class StoreVerbs(store: VersionedStore, corpus: String,
+      save: (DataFrame, String) => Unit,
+      append: (DataFrame, String, String) => Unit)
+
+  private val stores: Map[String, StoreVerbs] = Map(
+    "dedup" -> StoreVerbs(DedupStore, "documents",
+      DedupStore.save(_, _), DedupStore.append(_, _, _)),
+    // the image/audio fingerprint stores: decode paid once at
+    // build/append, never again
+    "phash" -> StoreVerbs(PhashStore, "documents",
+      PhashStore.save(_, _), PhashStore.append(_, _, _)),
+    "afp" -> StoreVerbs(AfpStore, "documents",
+      AfpStore.save(_, _), AfpStore.append(_, _, _)),
+    "ivf" -> StoreVerbs(IvfIndex, "embeddings",
+      IvfIndex.save(_, _), IvfIndex.append(_, _, _)),
+    "pq" -> StoreVerbs(PqStore, "embeddings",
+      PqStore.save(_, _), PqStore.append(_, _, _)),
+    "ivfpq" -> StoreVerbs(IvfPqStore, "embeddings",
+      IvfPqStore.save(_, _), IvfPqStore.append(_, _, _)))
+
   private def runStore(spark: SparkSession, stage: Stage,
       priorOutput: String => DataFrame): DataFrame = {
     val dir = stage.dir.get
-    val store = stage.store.get
+    val name = stage.store.get
     val action = stage.action.get
-    def embeddings: DataFrame =
-      adaptedInput(spark, stage, priorOutput, default = "embeddings")
-        .getOrElse(graft.engine.Tables.table(spark, stage.inputDir,
-          "embeddings"))
-    def documents: DataFrame =
-      adaptedInput(spark, stage, priorOutput, default = "documents")
-        .getOrElse(graft.engine.Tables.table(spark, stage.inputDir,
-          "documents"))
+    def input(default: String): DataFrame =
+      adaptedInput(spark, stage, priorOutput, default)
+        .getOrElse(graft.engine.Tables.table(spark, stage.inputDir, default))
+    // the classifier model is a store too (build once, score many):
+    // `build`/`rebuild` train from the stage's (adaptable) corpus and
+    // commit a fresh version — the labels come from the corpus' `lang`
+    // column, so a differently-labeled corpus maps it via `columns:`
+    if (name == "classifier") {
+      action match {
+        case "build" | "rebuild" => Classify.saveModel(input("documents"), dir)
+        case "stats" =>
+        case other => throw new IllegalArgumentException(
+          s"stage '${stage.name}': unsupported ${(name, other)}")
+      }
+      return statsAudit(spark, stage, name, dir, action, compacted = false)
+    }
+    val verbs = stores(name)
+    val store = verbs.store
+    def corpus: DataFrame = input(verbs.corpus)
     // advisory/dedup knobs: the stage's own bar, else the ONE shared
     // set of library defaults (StoreMaintenance.Default*) — an
     // advisory judged at a margin the deployment does not run is the
@@ -158,54 +193,33 @@ object StageRunner {
       .getOrElse(StoreMaintenance.DefaultMaxTombstoneRatio)
     val maxIngests =
       stage.maxIngests.getOrElse(StoreMaintenance.DefaultMaxIngests)
-    // `dedup` is the one action whose OUTPUT is the operator relation
-    // (flagged near-duplicates of the incoming batch against the
-    // persisted history), not the stats audit row — the incremental
-    // step of a declarative curation pipeline: yesterday's store,
-    // today's batch, flags to the sink
     // `recommend` lands the maintenance ADVISORY row (rebuild vs
     // compact vs ok, from stats + lineage + the sampled margin gap) —
     // a scheduled pipeline run leaves the decision trail in the
     // warehouse next to the stats audit rows. The stage's corpus rides
-    // in for the lineage-drift check.
+    // in for the lineage-drift check, the stage's knobs set the bar.
+    def advice: DataFrame = StoreMaintenance.recommend(store, spark, dir,
+      Some(corpus), margin, minCosine, maxTombstoneRatio, maxIngests)
     // `auto` closes the whole loop in ONE scheduled stage: compute the
-    // advisory (at the stage's knobs, against the stage's corpus),
-    // then ACT on it — ok → nothing, compact → compact, rebuild → a
-    // fresh save() from the current corpus — and land the advisory row
-    // tagged with what was done. The nightly maintenance cron becomes
-    // one YAML stage whose audit trail shows both the decision and the
-    // action taken.
+    // advisory, then ACT on it — ok → nothing, compact → compact,
+    // rebuild → a fresh save() from the current corpus — and land the
+    // advisory row tagged with what was done. The nightly maintenance
+    // cron becomes one YAML stage whose audit trail shows both the
+    // decision and the action taken.
     if (action == "auto") {
-      val advice = recommendFor(spark, store, dir,
-        embeddings, documents, margin, minCosine, maxTombstoneRatio,
-        maxIngests)
-      val head = advice.head()
+      val advised = advice
+      val head = advised.head()
       val verdict = head.getString(head.fieldIndex("recommendation"))
       verdict match {
-        case "rebuild" => store match {
-          case "dedup" => DedupStore.save(documents, dir)
-          case "phash" => PhashStore.save(documents, dir)
-          case "afp" => AfpStore.save(documents, dir)
-          case "ivf" => IvfIndex.save(embeddings, dir)
-          case "pq" => PqStore.save(embeddings, dir)
-          case "ivfpq" => IvfPqStore.save(embeddings, dir)
-        }
-        case "compact" => store match {
-          case "dedup" => DedupStore.compact(spark, dir)
-          case "phash" => PhashStore.compact(spark, dir)
-          case "afp" => AfpStore.compact(spark, dir)
-          case "ivf" => IvfIndex.compact(spark, dir)
-          case "pq" => PqStore.compact(spark, dir)
-          case "ivfpq" => IvfPqStore.compact(spark, dir)
-        }
+        case "rebuild" => verbs.save(corpus, dir)
+        case "compact" => store.compact(spark, dir)
         case _ => // ok: nothing to do
       }
-      return advice.withColumn("stage", lit(stage.name))
+      return advised.withColumn("stage", lit(stage.name))
         .withColumn("acted", lit(verdict != "ok"))
     }
-    if (action == "recommend") return recommendFor(spark, store, dir,
-      embeddings, documents, margin, minCosine, maxTombstoneRatio,
-      maxIngests).withColumn("stage", lit(stage.name))
+    if (action == "recommend")
+      return advice.withColumn("stage", lit(stage.name))
     // `delete` files tombstones from a declared takedown relation (a
     // GDPR erasure / license takedown batch, from YAML): retraction is
     // immediate (queries anti-join the ids out), physical reclaim is
@@ -214,36 +228,30 @@ object StageRunner {
     // adaptable via table/columns/input_stage); malformed ids refuse
     // loudly through requireLongIds, never a silent non-retraction.
     if (action == "delete") {
-      val idCol =
-        if (Set("dedup", "phash", "afp")(store)) "doc_id" else "vec_id"
-      val rel = adaptedInput(spark, stage, priorOutput,
-        default = "takedowns").getOrElse(
-        graft.engine.Tables.table(spark, stage.inputDir, "takedowns"))
+      val idCol = if (verbs.corpus == "documents") "doc_id" else "vec_id"
+      val rel = input("takedowns")
       require(rel.columns.contains(idCol),
         s"stage '${stage.name}': action 'delete' needs column '$idCol' " +
           s"in the takedown relation (${rel.columns.mkString(", ")}) — " +
           "map it via 'columns:'")
-      val ids = rel.select(col(idCol))
-      store match {
-        case "dedup" => DedupStore.delete(ids, dir)
-        case "phash" => PhashStore.delete(ids, dir)
-        case "afp" => AfpStore.delete(ids, dir)
-        case "ivf" => IvfIndex.delete(ids, dir)
-        case "pq" => PqStore.delete(ids, dir)
-        case "ivfpq" => IvfPqStore.delete(ids, dir)
-      }
-      return statsAudit(spark, stage, store, dir, "delete",
+      store.delete(rel.select(col(idCol)), dir)
+      return statsAudit(spark, stage, name, dir, "delete",
         compacted = false)
     }
-    if (action == "dedup") return store match {
-      case "dedup" => DedupStore.dedupAgainst(spark, documents, dir)
+    // `dedup` is the one action whose OUTPUT is the operator relation
+    // (flagged near-duplicates of the incoming batch against the
+    // persisted history), not the stats audit row — the incremental
+    // step of a declarative curation pipeline: yesterday's store,
+    // today's batch, flags to the sink
+    if (action == "dedup") return name match {
+      case "dedup" => DedupStore.dedupAgainst(spark, corpus, dir)
       // the incremental image/audio step: decode TODAY'S batch only,
       // flag it against the stored fingerprints — the corpus never
       // re-decodes
-      case "phash" => PhashStore.dedupAgainst(spark, documents, dir)
-      case "afp" => AfpStore.dedupAgainst(spark, documents, dir)
+      case "phash" => PhashStore.dedupAgainst(spark, corpus, dir)
+      case "afp" => AfpStore.dedupAgainst(spark, corpus, dir)
       case "ivfpq" => IvfPqStore.dedupAgainst(spark, dir,
-        embeddings.select(col("vec_id").as("query_id"),
+        corpus.select(col("vec_id").as("query_id"),
           col("embedding").as("qv")),
         minCosine = minCosine, margin = margin)
       case other => throw new IllegalArgumentException(
@@ -251,109 +259,29 @@ object StageRunner {
           s"phash, afp and ivfpq stores, not '$other'")
     }
     var compacted = false
-    (store, action) match {
+    action match {
       // `rebuild` IS save(): a fresh version root re-fit from the
       // stage's CURRENT corpus, committed by marker under the
       // maintainer lease — the ACT half of the recommend advisory
       // (geometry re-fits, lineage re-fingerprints, tombstones and
       // fragmentation reset with the fresh build)
-      case ("dedup", "build" | "rebuild") => DedupStore.save(documents, dir)
-      case ("dedup", "append") =>
-        DedupStore.append(documents, dir, stage.ingestId.get)
-      case ("dedup", "compact") => DedupStore.compact(spark, dir)
-      case ("dedup", "maintain") =>
-        compacted = StoreMaintenance.maintainDedup(spark, dir,
-          maxTombstoneRatio, maxIngests)
-      // the image fingerprint store: same lifecycle verbs, decode paid
-      // once at build/append, never again
-      case ("phash", "build" | "rebuild") => PhashStore.save(documents, dir)
-      case ("phash", "append") =>
-        PhashStore.append(documents, dir, stage.ingestId.get)
-      case ("phash", "compact") => PhashStore.compact(spark, dir)
-      case ("phash", "maintain") =>
-        compacted = StoreMaintenance.maintainPhash(spark, dir,
-          maxTombstoneRatio, maxIngests)
-      // the audio fingerprint store: the same shared lifecycle
-      case ("afp", "build" | "rebuild") => AfpStore.save(documents, dir)
-      case ("afp", "append") =>
-        AfpStore.append(documents, dir, stage.ingestId.get)
-      case ("afp", "compact") => AfpStore.compact(spark, dir)
-      case ("afp", "maintain") =>
-        compacted = StoreMaintenance.maintainAfp(spark, dir,
-          maxTombstoneRatio, maxIngests)
-      case ("ivf", "build" | "rebuild") => IvfIndex.save(embeddings, dir)
-      case ("ivf", "append") =>
-        IvfIndex.append(embeddings, dir, stage.ingestId.get)
-      case ("ivf", "compact") => IvfIndex.compact(spark, dir)
-      case ("ivf", "maintain") =>
-        compacted = StoreMaintenance.maintainIvf(spark, dir,
-          maxTombstoneRatio, maxIngests)
-      case ("pq", "build" | "rebuild") => PqStore.save(embeddings, dir)
-      case ("pq", "append") =>
-        PqStore.append(embeddings, dir, stage.ingestId.get)
-      case ("pq", "compact") => PqStore.compact(spark, dir)
-      case ("pq", "maintain") =>
-        compacted = StoreMaintenance.maintainPq(spark, dir,
-          maxTombstoneRatio, maxIngests)
-      // the classifier model is a store too (build once, score many):
-      // `build`/`rebuild` train from the stage's (adaptable) corpus and
-      // commit a fresh version — the labels come from the corpus' `lang`
-      // column, so a differently-labeled corpus maps it via `columns:`
-      case ("classifier", "build" | "rebuild") =>
-        graft.ops.Classify.saveModel(documents, dir)
-      case ("ivfpq", "build" | "rebuild") => IvfPqStore.save(embeddings, dir)
-      case ("ivfpq", "append") =>
-        IvfPqStore.append(embeddings, dir, stage.ingestId.get)
-      case ("ivfpq", "compact") => IvfPqStore.compact(spark, dir)
-      case ("ivfpq", "maintain") =>
-        compacted = StoreMaintenance.maintainIvfPq(spark, dir,
-          maxTombstoneRatio, maxIngests)
-      case (_, "stats") => // introspection only, no maintenance op
+      case "build" | "rebuild" => verbs.save(corpus, dir)
+      case "append" => verbs.append(corpus, dir, stage.ingestId.get)
+      case "compact" => store.compact(spark, dir)
+      case "maintain" => compacted = StoreMaintenance.maintain(store,
+        spark, dir, maxTombstoneRatio, maxIngests)
+      case "stats" => // introspection only, no maintenance op
       case other => throw new IllegalArgumentException(
-        s"stage '${stage.name}': unsupported $other")
+        s"stage '${stage.name}': unsupported ${(name, other)}")
     }
-    statsAudit(spark, stage, store, dir, action, compacted)
-  }
-
-  /** One advisory body for the `recommend` and `auto` actions: the
-    * stage's corpus rides in for the lineage-drift check, the stage's
-    * knobs set the bar.
-    */
-  private def recommendFor(spark: SparkSession, store: String, dir: String,
-      embeddings: => DataFrame, documents: => DataFrame,
-      margin: Double, minCosine: Double, maxTombstoneRatio: Double,
-      maxIngests: Long): DataFrame = store match {
-    case "ivfpq" => StoreMaintenance.recommendIvfPq(spark, dir,
-      corpus = Some(embeddings), margin = margin, minCosine = minCosine,
-      maxTombstoneRatio = maxTombstoneRatio, maxIngests = maxIngests)
-    case "pq" => StoreMaintenance.recommendPq(spark, dir,
-      corpus = Some(embeddings), margin = margin, minCosine = minCosine,
-      maxTombstoneRatio = maxTombstoneRatio, maxIngests = maxIngests)
-    case "ivf" => StoreMaintenance.recommendIvf(spark, dir,
-      corpus = Some(embeddings),
-      maxTombstoneRatio = maxTombstoneRatio, maxIngests = maxIngests)
-    case "dedup" => StoreMaintenance.recommendDedup(spark, dir,
-      corpus = Some(documents),
-      maxTombstoneRatio = maxTombstoneRatio, maxIngests = maxIngests)
-    case "phash" => StoreMaintenance.recommendPhash(spark, dir,
-      corpus = Some(documents),
-      maxTombstoneRatio = maxTombstoneRatio, maxIngests = maxIngests)
-    case "afp" => StoreMaintenance.recommendAfp(spark, dir,
-      corpus = Some(documents),
-      maxTombstoneRatio = maxTombstoneRatio, maxIngests = maxIngests)
+    statsAudit(spark, stage, name, dir, action, compacted)
   }
 
   private def statsAudit(spark: SparkSession, stage: Stage, store: String,
       dir: String, action: String, compacted: Boolean): DataFrame = {
-    val stats = store match {
-      case "dedup" => DedupStore.stats(spark, dir)
-      case "phash" => PhashStore.stats(spark, dir)
-      case "afp" => AfpStore.stats(spark, dir)
-      case "ivf" => IvfIndex.stats(spark, dir)
-      case "pq" => PqStore.stats(spark, dir)
-      case "ivfpq" => IvfPqStore.stats(spark, dir)
-      case "classifier" => graft.ops.Classify.modelStats(spark, dir)
-    }
+    val stats =
+      if (store == "classifier") Classify.modelStats(spark, dir)
+      else stores(store).store.stats(spark, dir)
     val statCols = stats.columns.toSeq
     stats
       .withColumn("stage", lit(stage.name))
@@ -489,12 +417,12 @@ object StageRunner {
           // other stage kind), else input_dir documents — and the next
           // scheduled run retrains from the then-current corpus
           val model = stage.modelDir match {
-            case Some(md) => graft.ops.Classify.loadModel(spark, md)
+            case Some(md) => Classify.loadModel(spark, md)
             case None =>
               val docs = adaptedInput(spark, stage, priorOutput,
                 default = "documents").getOrElse(
                 graft.engine.Tables.table(spark, stage.inputDir, "documents"))
-              graft.ops.Classify.tokenClassifierModel(docs)
+              Classify.tokenClassifierModel(docs)
           }
           val q = graft.streaming.StreamingClassify.streamingPredictToDir(
             spark, sourceDir, schema, model, outDir,

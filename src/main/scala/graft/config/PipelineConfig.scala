@@ -205,16 +205,16 @@ object PipelineConfig {
     *    adapt non-fixture schemas and `input_stage:` chains onto a
     *    prior stage's landed output.
     *  - `kind: store` — drive a persisted store's lifecycle (`store:`
-    *    dedup | ivf | pq | ivfpq | classifier; `action:` build |
-    *    rebuild | append |
+    *    dedup | phash | afp | ivf | pq | ivfpq | classifier;
+    *    `action:` build | rebuild | append |
     *    compact | maintain | stats | recommend | dedup | delete) at
     *    `dir:`, landing the store's STATS relation on the sink as the
     *    run's audit row (the maintenance-loop contract: decisions
     *    read stats, pipelines record them). Exceptions to the
-    *    stats-audit output: `action: dedup` (dedup/ivfpq stores)
+    *    stats-audit output: `action: dedup` (dedup/phash/afp/ivfpq)
     *    lands the OPERATOR relation — the incoming batch's flagged
     *    near-duplicates against the persisted history — and
-    *    `action: recommend` (all four stores) lands the
+    *    `action: recommend` (all six stores) lands the
     *    rebuild-vs-compact-vs-ok ADVISORY row, judged at the stage's
     *    own `margin`/`min_cosine`/threshold knobs. `action: rebuild`
     *    acts on that advisory (a fresh save() from the stage's

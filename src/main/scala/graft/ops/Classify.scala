@@ -68,9 +68,10 @@ object Classify {
   }
 
   /** Persist the trained model as a versioned artifact — the same
-    * committed-root convention as the four stores ([[StoreVersioning]]:
-    * fresh `v<n>/`, `_META` lineage sidecar, atomic `_COMMITTED`
-    * marker, maintainer lease), because the model IS a store: built
+    * committed-root convention and save step as every
+    * [[VersionedStore]] ([[StoreVersioning.save]]: fresh `v<n>/`,
+    * `_META` lineage sidecar, atomic `_COMMITTED` marker, maintainer
+    * lease), because the model IS a store: built
     * once from a corpus, queried by many scheduled scoring runs. The
     * amortization this exists for: a `stream: classify` drain that
     * RETRAINS per run pays O(corpus) every schedule tick; a persisted
@@ -83,23 +84,14 @@ object Classify {
     * weights.
     */
   def saveModel(docs: DataFrame, dir: String, labelCol: String = "lang",
-      trainCut: Int = 8000): Unit = {
-    val spark = docs.sparkSession
-    StoreVersioning.withMaintainerLock(spark, dir, "classifier saveModel") {
-      val v = StoreVersioning.nextVersion(spark, dir)
-      val root = s"$dir/$v"
-      tokenClassifierModel(docs, labelCol, trainCut)
-        .write.mode("overwrite").parquet(s"$root/model")
-      StoreVersioning.writeMeta(spark, root, Seq(
-        "store" -> "classifier",
-        "label_col" -> labelCol,
-        "train_cut" -> trainCut.toString,
-        "train_fingerprint" -> StoreVersioning.trainFingerprint(docs),
-        "train_content_fingerprint" ->
-          StoreVersioning.contentFingerprint(docs)))
-      StoreVersioning.commit(spark, dir, v)
+      trainCut: Int = 8000): Unit =
+    StoreVersioning.save(docs, dir, "classifier", "classifier saveModel",
+        Seq("label_col" -> labelCol, "train_cut" -> trainCut.toString)) {
+      root =>
+        tokenClassifierModel(docs, labelCol, trainCut)
+          .write.mode("overwrite").parquet(s"$root/model")
+        Nil
     }
-  }
 
   /** The committed model relation (label, tok, w) — refuses loudly
     * when `dir` has no committed version or holds a DIFFERENT kind of
@@ -118,7 +110,7 @@ object Classify {
 
   /** The model store's audit relation — one row of
     * (n_weights, n_labels, label_col, train_cut, train_fingerprint,
-    * version), the classifier analog of the four stores' stats()
+    * version), the classifier analog of [[VersionedStore.stats]]
     * (what a scheduled pipeline lands as the run's audit row).
     */
   def modelStats(spark: SparkSession, dir: String): DataFrame = {

@@ -32,20 +32,18 @@ import org.apache.spark.sql.functions._
   * the in-session operator, so the driver gate row replays the SAME
   * DuckDB oracle as `x_dedup_incremental` through the persisted path.
   */
-object DedupStore {
-
-  private def gramsPath(root: String) = s"$root/grams"
-  private def sizesPath(root: String) = s"$root/sizes"
-  private def deletesPath(root: String) = s"$root/deletes"
+object DedupStore extends VersionedStore("DedupStore") {
 
   /** Physical-layout version of the gram/size relations (v1:
-    * ingest-keyed since the store's introduction) — `_META` + layout
-    * gate, the [[IvfIndex]] convention.
+    * ingest-keyed since the store's introduction).
     */
-  private val Layout = 1L
-
-  private def requireLayout(spark: SparkSession, root: String): Unit =
-    StoreVersioning.requireLayout(spark, root, "DedupStore", "grams", Layout)
+  protected val layout = 1L
+  protected val keyCol = "corpus_id"
+  protected val dataRels = Seq(
+    DataRel("grams",
+      ddl = Some("corpus_id BIGINT, shingle STRING, ingest STRING")),
+    DataRel("sizes", ddl = Some("corpus_id BIGINT, nb INT, ingest STRING")))
+  override protected val rowsRel = "sizes"
 
   /** Build the store at `dir`: one shingle pass over the kept corpus,
     * grams and sizes landed in a FRESH version root, committed by
@@ -55,45 +53,24 @@ object DedupStore {
     * superseded versions (which is also what resets tombstones: the
     * fresh version contains only what `corpus` holds).
     */
-  def save(corpus: DataFrame, dir: String): Unit = {
-    val spark = corpus.sparkSession
-    StoreVersioning.withMaintainerLock(spark, dir, "DedupStore.save") {
-      val v = StoreVersioning.nextVersion(spark, dir)
-      write(corpus, s"$dir/$v", "0", full = true)
-      StoreVersioning.writeMeta(spark, s"$dir/$v", Seq(
-        "store" -> "DedupStore",
-        "layout" -> Layout.toString,
-        "train_fingerprint" -> StoreVersioning.trainFingerprint(corpus),
-        "train_content_fingerprint" -> StoreVersioning.contentFingerprint(corpus)))
-      StoreVersioning.commit(spark, dir, v)
-    }
-  }
+  def save(corpus: DataFrame, dir: String): Unit =
+    saveVersion(corpus, dir) { root => write(corpus, root, "0"); Nil }
 
   /** Add newly-kept documents to the committed store as ingest
     * partition `ingestId` — one shingle pass over the NEW documents
     * only; other ingests' files are untouched.
     *
     * `ingestId` names the batch (a date, a run id) and makes the
-    * append IDEMPOTENT: the write is a dynamic partition overwrite of
-    * exactly this ingest's subtree, so re-running a failed or
-    * ambiguous append with the same id replaces its own partial
-    * output instead of double-counting grams (doubled grams would
-    * double every |∩| and flag non-duplicates). The recovery story
-    * for any append failure is therefore: run the same append again.
+    * append IDEMPOTENT: re-running a failed or ambiguous append with
+    * the same id replaces its own partial output instead of
+    * double-counting grams (doubled grams would double every |∩| and
+    * flag non-duplicates). The recovery story for any append failure
+    * is therefore: run the same append again.
     */
-  def append(docs: DataFrame, dir: String, ingestId: String): Unit = {
-    require(ingestId.nonEmpty && ingestId != "0",
-      "ingestId must be a non-empty batch name other than the reserved \"0\"")
-    StoreVersioning.withMaintainerLock(docs.sparkSession, dir,
-        "DedupStore.append") {
-      val root = StoreVersioning.requireRoot(docs.sparkSession, dir)
-      requireLayout(docs.sparkSession, root)
-      write(docs, root, ingestId, full = false)
-    }
-  }
+  def append(docs: DataFrame, dir: String, ingestId: String): Unit =
+    appendVersion(docs.sparkSession, dir, ingestId)(write(docs, _, ingestId))
 
-  private def write(docs: DataFrame, root: String, ingestId: String,
-      full: Boolean): Unit = {
+  private def write(docs: DataFrame, root: String, ingestId: String): Unit = {
     // a LOCAL persist, not the bounded plan-hash memo: a store build
     // runs once per corpus (per JVM at most, behind the gate's
     // build-once guard), so memoizing its shingle relation would only
@@ -104,81 +81,11 @@ object DedupStore {
     // memo)
     val sh = Dedup.shingled(docs).persist()
     try {
-      // a full build writes into a fresh version root (no live data
-      // at the target, so the session's partitionOverwriteMode is
-      // irrelevant); an append dynamically overwrites only its own
-      // ingest partition (idempotent retry) — pinned explicitly so a
-      // cluster-wide static default can't widen it to the whole table
-      def writer(df: DataFrame) = {
-        val w = df.withColumn("ingest", lit(ingestId))
-          .write.mode("overwrite").partitionBy("ingest")
-        if (full) w else w.option("partitionOverwriteMode", "dynamic")
-      }
-      writer(sh.select(col("doc_id").as("corpus_id"),
-          explode(col("g")).as("shingle")))
-        .parquet(gramsPath(root))
-      writer(sh.select(col("doc_id").as("corpus_id"),
-          size(col("g")).as("nb")))
-        .parquet(sizesPath(root))
+      land(sh.select(col("doc_id").as("corpus_id"),
+          explode(col("g")).as("shingle")), root, "grams", ingestId)
+      land(sh.select(col("doc_id").as("corpus_id"),
+          size(col("g")).as("nb")), root, "sizes", ingestId)
     } finally { sh.unpersist(); () }
-  }
-
-  /** Retract documents from the store WITHOUT rewriting it: parquet
-    * is immutable and the gram relation is the store's bulk, so a
-    * takedown (GDPR erasure, license retraction, a batch later found
-    * contaminated) appends ids to a TOMBSTONE relation instead, and
-    * [[dedupAgainst]] anti-joins it out of the gram relation.
-    * Tombstoned docs stop matching immediately; their dead grams are
-    * physically reclaimed by the next [[compact]] or [[save]].
-    */
-  def delete(docIds: DataFrame, dir: String): Unit =
-    StoreVersioning.withMaintainerLock(docIds.sparkSession, dir,
-        "DedupStore.delete") {
-      val root = StoreVersioning.requireRoot(docIds.sparkSession, dir)
-      val ids = StoreVersioning.requireLongIds(docIds, "corpus_id")
-      ids.write.mode("append").parquet(deletesPath(root))
-    }
-
-  private def readRel(spark: SparkSession, path: String,
-      ddl: String): DataFrame = StoreVersioning.readRel(spark, path, ddl)
-
-  private def deletesIfAny(spark: SparkSession,
-      root: String): Option[DataFrame] =
-    StoreVersioning.deletesIfAny(spark, deletesPath(root))
-
-  /** Rewrite the store from its own contents into a FRESH version:
-    * grams and sizes minus the tombstoned docs, collapsed to one
-    * ingest — dead rows reclaimed and the per-append file growth
-    * re-bounded WITHOUT touching document text (no re-shingling; the
-    * store is its own source). Run it on the maintenance cadence a
-    * 100 TB store needs after a season of daily appends and
-    * takedowns. The new version reads from the OLD committed root and
-    * lands beside it, so a crashed compaction destroys nothing
-    * (the old version stays the committed one) and the
-    * recovery is to run compact again.
-    */
-  def compact(spark: SparkSession, dir: String): Unit =
-      StoreVersioning.withMaintainerLock(spark, dir, "DedupStore.compact") {
-    val root = StoreVersioning.requireRoot(spark, dir)
-    requireLayout(spark, root)
-    val v = StoreVersioning.nextVersion(spark, dir)
-    val newRoot = s"$dir/$v"
-    val del = deletesIfAny(spark, root)
-    def live(df: DataFrame): DataFrame =
-      del.fold(df)(d => df.join(d, Seq("corpus_id"), "left_anti"))
-    def land(df: DataFrame, to: String): Unit =
-      df.withColumn("ingest", lit("0"))
-        .write.mode("overwrite").partitionBy("ingest").parquet(to)
-    land(live(readRel(spark, gramsPath(root),
-        "corpus_id BIGINT, shingle STRING, ingest STRING").drop("ingest")),
-      gramsPath(newRoot))
-    land(live(readRel(spark, sizesPath(root),
-        "corpus_id BIGINT, nb INT, ingest STRING").drop("ingest")),
-      sizesPath(newRoot))
-    // lineage carries over verbatim (the store is its own source)
-    StoreVersioning.writeMeta(spark, newRoot,
-      StoreVersioning.metaOf(spark, root).toSeq.sortBy(_._1))
-    StoreVersioning.commit(spark, dir, v)
   }
 
   /** Maintenance introspection — the one-row relation an operator (or
@@ -192,25 +99,10 @@ object DedupStore {
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = StoreVersioning.requireRoot(spark, dir)
-    requireLayout(spark, root)
-    val meta = StoreVersioning.metaOf(spark, root)
-    val grams = readRel(spark, gramsPath(root),
-      "corpus_id BIGINT, shingle STRING, ingest STRING")
-    val sizes = readRel(spark, sizesPath(root),
-      "corpus_id BIGINT, nb INT, ingest STRING")
-    val del = deletesIfAny(spark, root)
-    val nDocs = sizes.count()
-    val nTomb = del.fold(0L)(_.select(col("corpus_id")).distinct().count())
-    val nLive = del.fold(nDocs)(d =>
-      sizes.join(d, Seq("corpus_id"), "left_anti").count())
-    Seq((StoreVersioning.versionOf(root),
-        // partition-value inference types an all-numeric ingest as int
-        sizes.select(col("ingest").cast("string")).distinct().count(),
-        StoreVersioning.dataFileCount(spark, gramsPath(root)),
-        grams.count(), nDocs, nTomb, nLive,
-        meta.getOrElse("layout", "unknown"),
-        meta.getOrElse("train_fingerprint", "unknown")))
+    val h = health(spark, dir)
+    Seq((h.version, h.nIngests, h.nFiles, read(spark, h.root, "grams").count(),
+        h.nRows, h.nTombstoned, h.nLive, h.metaOr("layout"),
+        h.metaOr("train_fingerprint")))
       .toDF("version", "n_ingests", "n_gram_files", "n_grams",
         "n_docs", "n_tombstoned", "n_live_docs",
         "layout", "train_fingerprint")
@@ -237,18 +129,14 @@ object DedupStore {
   private[graft] def dedupShingled(spark: SparkSession, inc: DataFrame,
       dir: String): DataFrame = {
     val root = StoreVersioning.requireRoot(spark, dir)
+    gate(spark, root, maintenance = false)
     val incTok = inc.select(col("doc_id").as("inc_id"),
       explode(col("g")).as("shingle"))
     // tombstones prune at the GRAM relation (broadcast anti join on a
     // takedown-sized id set) so retracted docs never even generate
     // candidates; when no tombstone exists the path is untouched
-    val deletes = deletesIfAny(spark, root)
-    val corpTok0 = readRel(spark, gramsPath(root),
-      "corpus_id BIGINT, shingle STRING, ingest STRING")
-    val corpTok = deletes.fold(corpTok0)(del =>
-      corpTok0.join(del, Seq("corpus_id"), "left_anti"))
-    val sizes = readRel(spark, sizesPath(root),
-      "corpus_id BIGINT, nb INT, ingest STRING")
+    val corpTok = live(spark, root, read(spark, root, "grams"))
+    val sizes = read(spark, root, "sizes")
     incTok.join(corpTok, Seq("shingle"))
       .groupBy(col("inc_id"), col("corpus_id"))
       .agg(count(lit(1)).as("inter"))

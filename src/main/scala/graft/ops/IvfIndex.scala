@@ -47,34 +47,26 @@ import org.apache.spark.sql.functions._
   * queries an even-half-built, odd-half-appended index at
   * nProbe == nCells and still hash-matches the full brute oracle.
   */
-object IvfIndex {
-
-  private def centroidsPath(root: String) = s"$root/centroids"
-  private def vectorsPath(root: String) = s"$root/vectors"
-  private def deletesPath(root: String) = s"$root/deletes"
+object IvfIndex extends VersionedStore("IvfIndex") {
 
   /** Physical-layout version of the vectors relation: v1 (round 13)
     * partitioned by `cell` alone; v2 (round 14) by `(ingest, cell)`
-    * for idempotent appends. Recorded in each committed root's
-    * `_META` and enforced by [[StoreVersioning.requireLayout]] before
-    * any maintenance that assumes the layout.
+    * for idempotent appends.
     */
-  private val Layout = 2L
-
-  private def requireLayout(spark: SparkSession, root: String): Unit = {
-    StoreVersioning.requireLayout(spark, root, "IvfIndex", "vectors", Layout)
-    // geometry rides with layout on maintenance paths: an append into
-    // a raw-space root would place new vectors by the spherical rule
-    requireGeometry(spark, root)
-  }
-
-  /** The geometry gate alone — enforced on QUERY paths too (unlike
-    * layout, which leaves committed roots query-valid): ranking
-    * unit-normalized queries against raw-space centroids silently
-    * degrades partial-probe recall ([[StoreVersioning.requireGeometry]]).
-    */
-  private def requireGeometry(spark: SparkSession, root: String): Unit =
-    StoreVersioning.requireGeometry(spark, root, "IvfIndex")
+  protected val layout = 2L
+  override protected val geometry = true
+  protected val keyCol = "vec_id"
+  override protected val modelRels = Seq("centroids")
+  // repartition ON the partition column first: partitionBy splits
+  // every writing task by cell, so T upstream tasks × C cells would
+  // land T·C small files; clustering cells into tasks bounds the
+  // index at ~C files per build — the file-count discipline a
+  // √n-cell index needs at corpus scale. `ingest` leads the
+  // partition spec so an append owns a whole `ingest=<id>/` subtree
+  // it can dynamically overwrite on retry; `cell` stays a partition
+  // column, so the probe join's dynamic pruning is untouched (it
+  // prunes on ANY partition column).
+  protected val dataRels = Seq(DataRel("vectors", by = Seq("cell")))
 
   /** Build the index at `dir`: fits (or reuses — the quantizer memo
     * is keyed on the training lineage, not the caller) the coarse
@@ -84,41 +76,15 @@ object IvfIndex {
     * the fresh index starts with no tombstones).
     */
   def save(embeddings: DataFrame, dir: String, nCells: Int = 16,
-      trainMod: Int = 4): Unit = {
-    val spark = embeddings.sparkSession
-    StoreVersioning.withMaintainerLock(spark, dir, "IvfIndex.save") {
-      val v = StoreVersioning.nextVersion(spark, dir)
-      val root = s"$dir/$v"
+      trainMod: Int = 4): Unit =
+    saveVersion(embeddings, dir) { root =>
       val (assigned, model) =
         Similarity.assignedWithModel(embeddings, nCells, trainMod)
-      Similarity.centroidsDf(spark, model)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(centroidsPath(root))
-      // repartition ON the partition column first: partitionBy splits
-      // every writing task by cell, so T upstream tasks × C cells would
-      // land T·C small files; clustering cells into tasks bounds the
-      // index at ~C files per build — the file-count discipline a
-      // √n-cell index needs at corpus scale. `ingest` leads the
-      // partition spec so an append ([[append]]) owns a whole
-      // `ingest=<id>/` subtree it can dynamically overwrite on retry;
-      // `cell` stays a partition column, so the probe join's dynamic
-      // pruning is untouched (it prunes on ANY partition column).
-      assigned
-        .withColumn("ingest", lit("0"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("ingest", "cell")
-        .parquet(vectorsPath(root))
-      StoreVersioning.writeMeta(spark, root, Seq(
-        "store" -> "IvfIndex",
-        "layout" -> Layout.toString,
-        "geometry" -> StoreVersioning.UnitSphereGeometry,
-        "n_cells" -> nCells.toString,
-        "train_fingerprint" -> StoreVersioning.trainFingerprint(embeddings),
-        "train_content_fingerprint" ->
-          StoreVersioning.contentFingerprint(embeddings)))
-      StoreVersioning.commit(spark, dir, v)
+      writeModel(Similarity.centroidsDf(embeddings.sparkSession, model),
+        root, "centroids")
+      land(assigned, root, "vectors", "0")
+      Seq("n_cells" -> nCells.toString)
     }
-  }
 
   /** Assign `embeddings` to the index's STORED centroids (nearest by
     * the same codegen'd distance the probe ranking uses) and append
@@ -135,118 +101,39 @@ object IvfIndex {
     * force is assignment-independent by construction.
     *
     * `ingestId` names the batch (a date, a run id) and makes the
-    * append IDEMPOTENT — the [[DedupStore.append]] contract: the
-    * write is a dynamic partition overwrite of exactly this ingest's
-    * `ingest=<id>/` subtree, so a retried/replayed append replaces
-    * its own partial output instead of double-inserting vectors
-    * (a duplicated vector would occupy two top-k ranks in every query
-    * it neighbors). The recovery story for any append failure is:
-    * run the same append again.
+    * append IDEMPOTENT ([[VersionedStore.appendVersion]]): a
+    * retried/replayed append replaces its own partial output instead
+    * of double-inserting vectors (a duplicated vector would occupy two
+    * top-k ranks in every query it neighbors). The recovery story for
+    * any append failure is: run the same append again.
     */
   def append(embeddings: DataFrame, dir: String, ingestId: String): Unit = {
-    require(ingestId.nonEmpty && ingestId != "0",
-      "ingestId must be a non-empty batch name other than the reserved \"0\"")
     val spark = embeddings.sparkSession
-    StoreVersioning.withMaintainerLock(spark, dir, "IvfIndex.append") {
-      val root = StoreVersioning.requireRoot(spark, dir)
-      requireLayout(spark, root)
-      val cents = spark.read.parquet(centroidsPath(root))
+    appendVersion(spark, dir, ingestId) { root =>
       val e = Similarity.withNorm(embeddings)
-      val asg = Similarity.nearestCellsFrom(e, cents, nProbe = 1)
+      val asg = Similarity.nearestCellsFrom(e,
+          spark.read.parquet(s"$root/centroids"), nProbe = 1)
         .select(col("vec_id"), col("cell"))
-      e.join(asg, "vec_id")
-        .select(col("vec_id"), col("v"), col("norm"), col("cell"))
-        .withColumn("ingest", lit(ingestId))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("ingest", "cell")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(vectorsPath(root))
+      land(e.join(asg, "vec_id")
+          .select(col("vec_id"), col("v"), col("norm"), col("cell")),
+        root, "vectors", ingestId)
     }
   }
 
-  /** Retract vectors from the index WITHOUT rewriting it: ids land in
-    * a tombstone relation and [[query]] anti-joins them out of the
-    * candidate stream (broadcast anti on a takedown-sized set), so a
-    * retracted vector stops appearing as a neighbor immediately; its
-    * dead rows are physically reclaimed by the next [[compact]] or
-    * [[save]] — the same retraction lifecycle as [[DedupStore.delete]].
-    */
-  def delete(vecIds: DataFrame, dir: String): Unit =
-    StoreVersioning.withMaintainerLock(vecIds.sparkSession, dir,
-        "IvfIndex.delete") {
-      val root = StoreVersioning.requireRoot(vecIds.sparkSession, dir)
-      val ids = StoreVersioning.requireLongIds(vecIds, "vec_id")
-      ids.write.mode("append").parquet(deletesPath(root))
-    }
-
-  private def deletesIfAny(spark: SparkSession,
-      root: String): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(deletesPath(root))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) Some(spark.read.parquet(deletesPath(root)))
-    else None
-  }
-
-  /** Rewrite the vector relation from its own contents into a fresh
-    * version: tombstoned vectors drop out, every cell's rows
-    * re-cluster into ~one file (appends add files per ingest; a
-    * season of daily appends fragments the very scans the
-    * partitioning is for), centroids carried over unchanged — no
-    * refit, no embedding re-read. The new version reads from the OLD
-    * committed root and lands beside it, so a crashed compaction
-    * destroys nothing and the recovery is to run compact again.
-    */
-  def compact(spark: SparkSession, dir: String): Unit =
-    StoreVersioning.withMaintainerLock(spark, dir, "IvfIndex.compact") {
-      val root = StoreVersioning.requireRoot(spark, dir)
-      requireLayout(spark, root)
-      val v = StoreVersioning.nextVersion(spark, dir)
-      val newRoot = s"$dir/$v"
-      val live = deletesIfAny(spark, root)
-        .fold(spark.read.parquet(vectorsPath(root)))(d =>
-          spark.read.parquet(vectorsPath(root))
-            .join(d, Seq("vec_id"), "left_anti"))
-      spark.read.parquet(centroidsPath(root))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(centroidsPath(newRoot))
-      // a season of appends collapses back to the single "0" ingest
-      live.drop("ingest").withColumn("ingest", lit("0"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("ingest", "cell")
-        .parquet(vectorsPath(newRoot))
-      // geometry is frozen at build: lineage carries over verbatim
-      StoreVersioning.writeMeta(spark, newRoot,
-        StoreVersioning.metaOf(spark, root).toSeq.sortBy(_._1))
-      StoreVersioning.commit(spark, dir, v)
-    }
-
-  /** Maintenance introspection — the [[DedupStore.stats]] contract
-    * for the index: `n_vector_files` against `n_cells × n_ingests`
-    * is the fragmentation signal (each append lands ~a file per cell
-    * it touches; the probe join's pruning reads whole cells, so
-    * files-per-cell is exactly the scan's open cost), `n_tombstoned /
-    * n_vectors` the dead-row ratio each query pays an anti-join for
-    * until a compaction reclaims it.
+  /** Maintenance introspection: `n_vector_files` against
+    * `n_cells × n_ingests` is the fragmentation signal (each append
+    * lands ~a file per cell it touches; the probe join's pruning reads
+    * whole cells, so files-per-cell is exactly the scan's open cost),
+    * `n_tombstoned / n_vectors` the dead-row ratio each query pays an
+    * anti-join for until a compaction reclaims it.
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = StoreVersioning.requireRoot(spark, dir)
-    requireLayout(spark, root)
-    val vectors = spark.read.parquet(vectorsPath(root))
-    val del = deletesIfAny(spark, root)
-    val meta = StoreVersioning.metaOf(spark, root)
-    val nVec = vectors.count()
-    val nTomb = del.fold(0L)(_.select(col("vec_id")).distinct().count())
-    val nLive = del.fold(nVec)(d =>
-      vectors.join(d, Seq("vec_id"), "left_anti").count())
-    Seq((StoreVersioning.versionOf(root),
-        vectors.select(col("ingest").cast("string")).distinct().count(),
-        StoreVersioning.dataFileCount(spark, vectorsPath(root)),
-        nVec,
-        spark.read.parquet(centroidsPath(root)).count(),
-        nTomb, nLive,
-        meta.getOrElse("layout", "unknown"),
-        meta.getOrElse("train_fingerprint", "unknown")))
+    val h = health(spark, dir)
+    Seq((h.version, h.nIngests, h.nFiles, h.nRows,
+        spark.read.parquet(s"${h.root}/centroids").count(),
+        h.nTombstoned, h.nLive, h.metaOr("layout"),
+        h.metaOr("train_fingerprint")))
       .toDF("version", "n_ingests", "n_vector_files", "n_vectors",
         "n_cells", "n_tombstoned", "n_live_vectors",
         "layout", "train_fingerprint")
@@ -305,9 +192,9 @@ object IvfIndex {
   private def queryFrom(spark: SparkSession, root: String,
       queries: DataFrame, k: Int, nProbe: Int, excludeSelf: Boolean,
       maxBroadcastProbeRows: Long = MaxBroadcastProbeRows): DataFrame = {
-    requireGeometry(spark, root)
-    val vectors = spark.read.parquet(vectorsPath(root))
-    val cents = spark.read.parquet(centroidsPath(root))
+    gate(spark, root, maintenance = false)
+    val vectors = spark.read.parquet(s"$root/vectors")
+    val cents = spark.read.parquet(s"$root/centroids")
     val qn = queries
       .select(col("query_id"), col("qv"))
       .withColumn("qn", sqrt(Similarity.dot(col("qv"), col("qv"))))
@@ -324,8 +211,7 @@ object IvfIndex {
       if (queries.count() * nProbe <= maxBroadcastProbeRows) broadcast(q)
       else q
     val candidates0 = vectors.join(qHinted, Seq("cell"))
-    val candidates1 = deletesIfAny(spark, root).fold(candidates0)(del =>
-      candidates0.join(del, Seq("vec_id"), "left_anti"))
+    val candidates1 = live(spark, root, candidates0)
     val candidates =
       if (excludeSelf) candidates1.filter(col("query_id") =!= col("vec_id"))
       else candidates1
@@ -350,12 +236,10 @@ object IvfIndex {
       nQueries: Long = 5, nProbe: Int = 4): DataFrame = {
     // resolve the root ONCE for query vectors and candidates alike
     val root = StoreVersioning.requireRoot(spark, dir)
-    val own = spark.read.parquet(vectorsPath(root))
-      .filter(col("vec_id") < nQueries)
-    val live = deletesIfAny(spark, root).fold(own)(del =>
-      own.join(del, Seq("vec_id"), "left_anti"))
+    val own = live(spark, root, spark.read.parquet(s"$root/vectors")
+      .filter(col("vec_id") < nQueries))
     queryFrom(spark, root,
-      live.select(col("vec_id").as("query_id"), col("v").as("qv")),
+      own.select(col("vec_id").as("query_id"), col("v").as("qv")),
       k, nProbe, excludeSelf = true)
   }
 }

@@ -43,32 +43,17 @@ import org.apache.spark.sql.functions._
   * probe counts and depths are the recall knobs, exactly like the
   * in-session [[Pq.knnPqIvf]].
   */
-object IvfPqStore {
-
-  private def centroidsPath(root: String) = s"$root/centroids"
-  private def codebookPath(root: String) = s"$root/codebook"
-  private def vectorsPath(root: String) = s"$root/vectors"
-  private def deletesPath(root: String) = s"$root/deletes"
+object IvfPqStore extends PqCodedStore("IvfPqStore") {
 
   /** Physical-layout version of the vectors relation (v1:
-    * (ingest, cell)-partitioned since the store's introduction) —
-    * `_META` + layout gate, the [[IvfIndex]] convention.
+    * (ingest, cell)-partitioned since the store's introduction).
     */
-  private val Layout = 1L
-
-  private def requireLayout(spark: SparkSession, root: String): Unit = {
-    StoreVersioning.requireLayout(spark, root, "IvfPqStore", "vectors",
-      Layout)
-    requireGeometry(spark, root)
-  }
-
-  /** The geometry gate alone — enforced on QUERY/dedup paths too
-    * (unlike layout): coarse probing is spherical, so a raw-space root
-    * would silently lose partial-probe recall
-    * ([[StoreVersioning.requireGeometry]]).
-    */
-  private def requireGeometry(spark: SparkSession, root: String): Unit =
-    StoreVersioning.requireGeometry(spark, root, "IvfPqStore")
+  protected val layout = 1L
+  override protected val geometry = true
+  override protected val modelRels = Seq("centroids", "codebook")
+  // cells cluster into tasks before partitionBy — ~nCells files per
+  // build, not tasks×cells (the IvfIndex file-count discipline)
+  protected val dataRels = Seq(DataRel("vectors", by = Seq("cell")))
 
   /** Build the index at `dir`: coarse-assign every vector (memoized
     * quantizer — the lineage every IVF family shares), PQ-encode it
@@ -77,50 +62,19 @@ object IvfPqStore {
     */
   def save(embeddings: DataFrame, dir: String, nCells: Int = 16,
       cellTrainMod: Int = 4, m: Int = 16, kCodes: Int = 32,
-      trainMod: Int = 1): Unit = {
-    val spark = embeddings.sparkSession
-    StoreVersioning.withMaintainerLock(spark, dir, "IvfPqStore.save") {
-      val v = StoreVersioning.nextVersion(spark, dir)
-      val root = s"$dir/$v"
+      trainMod: Int = 1): Unit =
+    saveVersion(embeddings, dir) { root =>
       val (assigned, model) =
         Similarity.assignedWithModel(embeddings, nCells, cellTrainMod)
       val b = Pq.codebookForStore(embeddings, m, kCodes, trainMod)
-      Similarity.centroidsDf(spark, model)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(centroidsPath(root))
-      PqStore.writeCodebook(spark, b, root)
-      writeVectors(
-        Pq.encoded(embeddings, b)
-          .join(assigned.select(col("vec_id"), col("cell")), "vec_id"),
-        root, "0", full = true)
-      StoreVersioning.writeMeta(spark, root, Seq(
-        "store" -> "IvfPqStore",
-        "layout" -> Layout.toString,
-        "geometry" -> StoreVersioning.UnitSphereGeometry,
-        "n_cells" -> nCells.toString,
-        "m" -> b.m.toString,
-        "k_codes" -> b.k.toString,
-        "sub_dim" -> b.subDim.toString,
-        "train_fingerprint" -> StoreVersioning.trainFingerprint(embeddings),
-        "train_content_fingerprint" ->
-          StoreVersioning.contentFingerprint(embeddings)))
-      StoreVersioning.commit(spark, dir, v)
+      writeModel(Similarity.centroidsDf(embeddings.sparkSession, model),
+        root, "centroids")
+      writeCodebook(embeddings.sparkSession, b, root)
+      land(encodedVectors(Pq.encoded(embeddings, b)
+          .join(assigned.select(col("vec_id"), col("cell")), "vec_id"), "cell"),
+        root, "vectors", "0")
+      Seq("n_cells" -> nCells.toString) ++ codebookMeta(b)
     }
-  }
-
-  private def writeVectors(encWithCell: DataFrame, root: String,
-      ingestId: String, full: Boolean): Unit = {
-    // cluster cells into tasks before partitionBy — ~nCells files per
-    // build, not tasks×cells (the IvfIndex file-count discipline)
-    val w = encWithCell
-      .select(col("vec_id"), col("v"), col("norm"), col("pcodes"),
-        col("pq_norm"), col("cell"))
-      .withColumn("ingest", lit(ingestId))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("ingest", "cell")
-    (if (full) w else w.option("partitionOverwriteMode", "dynamic"))
-      .parquet(vectorsPath(root))
-  }
 
   /** Grow the index: assign NEW vectors to the STORED centroids and
     * encode them with the STORED codebook (no refit of either —
@@ -128,67 +82,17 @@ object IvfPqStore {
     * ingest-keyed partition overwrite.
     */
   def append(embeddings: DataFrame, dir: String, ingestId: String): Unit = {
-    require(ingestId.nonEmpty && ingestId != "0",
-      "ingestId must be a non-empty batch name other than the reserved \"0\"")
     val spark = embeddings.sparkSession
-    StoreVersioning.withMaintainerLock(spark, dir, "IvfPqStore.append") {
-      val root = StoreVersioning.requireRoot(spark, dir)
-      requireLayout(spark, root)
-      val cents = spark.read.parquet(centroidsPath(root))
-      val b = PqStore.codebookOf(spark, root)
-      val enc = Pq.encoded(embeddings, b)
+    appendVersion(spark, dir, ingestId) { root =>
+      val enc = Pq.encoded(embeddings, codebookOf(spark, root))
       val asg = Similarity.nearestCellsFrom(
-          enc.select(col("vec_id"), col("v")), cents, nProbe = 1)
+          enc.select(col("vec_id"), col("v")),
+          spark.read.parquet(s"$root/centroids"), nProbe = 1)
         .select(col("vec_id"), col("cell"))
-      writeVectors(enc.join(asg, "vec_id"), root, ingestId, full = false)
+      land(encodedVectors(enc.join(asg, "vec_id"), "cell"),
+        root, "vectors", ingestId)
     }
   }
-
-  /** Tombstone retraction — the store-family contract, loud on
-    * malformed ids.
-    */
-  def delete(vecIds: DataFrame, dir: String): Unit =
-    StoreVersioning.withMaintainerLock(vecIds.sparkSession, dir,
-        "IvfPqStore.delete") {
-      val root = StoreVersioning.requireRoot(vecIds.sparkSession, dir)
-      val ids = StoreVersioning.requireLongIds(vecIds, "vec_id")
-      ids.write.mode("append").parquet(deletesPath(root))
-    }
-
-  private def deletesIfAny(spark: SparkSession,
-      root: String): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(deletesPath(root))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) Some(spark.read.parquet(deletesPath(root)))
-    else None
-  }
-
-  /** Rewrite live rows into a fresh version: tombstones reclaimed,
-    * ingests collapsed, cells re-clustered to ~one file each, both
-    * model relations carried over unchanged.
-    */
-  def compact(spark: SparkSession, dir: String): Unit =
-    StoreVersioning.withMaintainerLock(spark, dir, "IvfPqStore.compact") {
-      val root = StoreVersioning.requireRoot(spark, dir)
-      requireLayout(spark, root)
-      val v = StoreVersioning.nextVersion(spark, dir)
-      val newRoot = s"$dir/$v"
-      spark.read.parquet(centroidsPath(root))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(centroidsPath(newRoot))
-      spark.read.parquet(codebookPath(root))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(codebookPath(newRoot))
-      val live = deletesIfAny(spark, root)
-        .fold(spark.read.parquet(vectorsPath(root)))(d =>
-          spark.read.parquet(vectorsPath(root))
-            .join(d, Seq("vec_id"), "left_anti"))
-      writeVectors(live.drop("ingest"), newRoot, "0", full = true)
-      // geometry is frozen at build: lineage carries over verbatim
-      StoreVersioning.writeMeta(spark, newRoot,
-        StoreVersioning.metaOf(spark, root).toSeq.sortBy(_._1))
-      StoreVersioning.commit(spark, dir, v)
-    }
 
   /** Maintenance introspection — the store-family stats contract,
     * plus the frozen model lineage from the root's `_META` (layout,
@@ -200,25 +104,11 @@ object IvfPqStore {
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = StoreVersioning.requireRoot(spark, dir)
-    requireLayout(spark, root)
-    val vectors = spark.read.parquet(vectorsPath(root))
-    val del = deletesIfAny(spark, root)
-    val meta = StoreVersioning.metaOf(spark, root)
-    val nVec = vectors.count()
-    val nTomb = del.fold(0L)(_.select(col("vec_id")).distinct().count())
-    val nLive = del.fold(nVec)(d =>
-      vectors.join(d, Seq("vec_id"), "left_anti").count())
-    Seq((StoreVersioning.versionOf(root),
-        vectors.select(col("ingest").cast("string")).distinct().count(),
-        StoreVersioning.dataFileCount(spark, vectorsPath(root)),
-        nVec,
-        spark.read.parquet(centroidsPath(root)).count(),
-        nTomb, nLive,
-        meta.getOrElse("layout", "unknown"),
-        meta.getOrElse("m", "unknown"),
-        meta.getOrElse("k_codes", "unknown"),
-        meta.getOrElse("train_fingerprint", "unknown")))
+    val h = health(spark, dir)
+    Seq((h.version, h.nIngests, h.nFiles, h.nRows,
+        spark.read.parquet(s"${h.root}/centroids").count(),
+        h.nTombstoned, h.nLive, h.metaOr("layout"), h.metaOr("m"),
+        h.metaOr("k_codes"), h.metaOr("train_fingerprint")))
       .toDF("version", "n_ingests", "n_vector_files", "n_vectors",
         "n_cells", "n_tombstoned", "n_live_vectors",
         "layout", "m", "k_codes", "train_fingerprint")
@@ -246,12 +136,10 @@ object IvfPqStore {
   def querySelf(spark: SparkSession, dir: String, k: Int = 5,
       nQueries: Long = 5, nProbe: Int = 4, candidates: Int = 0): DataFrame = {
     val root = StoreVersioning.requireRoot(spark, dir)
-    val own = spark.read.parquet(vectorsPath(root))
-      .filter(col("vec_id") < nQueries)
-    val live = deletesIfAny(spark, root).fold(own)(del =>
-      own.join(del, Seq("vec_id"), "left_anti"))
+    val own = live(spark, root, spark.read.parquet(s"$root/vectors")
+      .filter(col("vec_id") < nQueries))
     queryFrom(spark, root,
-      live.select(col("vec_id").as("query_id"), col("v").as("qv"),
+      own.select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("norm").as("qn")),
       k, nProbe, candidates, excludeSelf = true,
       Pq.MaxBroadcastQtabRows)
@@ -291,38 +179,6 @@ object IvfPqStore {
     * driver-sized broadcast anywhere — it degrades to partitioned
     * shuffles, same rows (the gate spec pins both regimes equal).
     */
-  /** Memoized store-geometry margin certifications, keyed per
-    * (version root, vectors file listing, threshold): the QUANTIZER is
-    * frozen per root, but the sampled gap is measured over the STORED
-    * vectors, and append() grows those under the SAME root — so the
-    * file-listing fingerprint rides in the key and any append (new
-    * files) forces a fresh certification probe at the next dedup call,
-    * instead of a long-lived streaming session certifying forever
-    * against the pre-append sample and missing exactly the
-    * drifted-append exposure the certification exists to catch. A
-    * compact commits a NEW root, so the root key already covers it.
-    */
-  private val marginCerts =
-    new BoundedMemo[(String, String, Double), Double](capacity = 64)
-
-  /** The store's sampled worst one-sided exact−ADC gap at `minCosine`
-    * — the memoized certification statistic, exposed for
-    * [[StoreMaintenance.recommendIvfPq]] (advisory: compare it to the
-    * deployment's dedup margin BEFORE the nightly run refuses).
-    */
-  private[ops] def sampledDedupGap(spark: SparkSession, dir: String,
-      minCosine: Double): Double = {
-    val root = StoreVersioning.requireRoot(spark, dir)
-    val vectors = spark.read.parquet(vectorsPath(root))
-    val b = PqStore.codebookOf(spark, root)
-    val fp = StoreVersioning.trainFingerprint(vectors)
-    marginCerts.getOrElseUpdate((root, fp, minCosine))(
-      Pq.adcSampledGap(
-        vectors.select(col("vec_id"), col("v"), col("norm"),
-          col("pcodes"), col("pq_norm")),
-        b, nearMin = minCosine))
-  }
-
   def dedupAgainst(spark: SparkSession, dir: String, incoming: DataFrame,
       minCosine: Double = 0.3, nProbe: Int = 4, margin: Double = 0.35,
       maxBroadcastProbeRows: Long = Pq.MaxBroadcastQtabRows,
@@ -330,10 +186,10 @@ object IvfPqStore {
       certifyMargin: Boolean = true)
       : DataFrame = {
     val root = StoreVersioning.requireRoot(spark, dir)
-    requireGeometry(spark, root)
-    val vectors = spark.read.parquet(vectorsPath(root))
-    val cents = spark.read.parquet(centroidsPath(root))
-    val b = PqStore.codebookOf(spark, root)
+    gate(spark, root, maintenance = false)
+    val vectors = spark.read.parquet(s"$root/vectors")
+    val cents = spark.read.parquet(s"$root/centroids")
+    val b = codebookOf(spark, root)
     // Margin self-certification (the embeddingNearDupPq convention,
     // store-side): the worst sampled one-sided exact−ADC gap of the
     // STORE's own quantization must sit inside the configured margin,
@@ -343,13 +199,10 @@ object IvfPqStore {
     // measured SDC margins; a store whose geometry went stale (built
     // on last year's distribution, appends frozen) is exactly what
     // this catches — rebuild, raise the margin, or opt out.
+    // The sampled gap is memoized per (root, vectors file listing,
+    // threshold), so an append under the same root re-probes.
     if (certifyMargin) {
-      val fp = StoreVersioning.trainFingerprint(vectors)
-      val gap = marginCerts.getOrElseUpdate((root, fp, minCosine))(
-        Pq.adcSampledGap(
-          vectors.select(col("vec_id"), col("v"), col("norm"),
-            col("pcodes"), col("pq_norm")),
-          b, nearMin = minCosine))
+      val gap = gapAt(spark, root, b, minCosine)
       require(gap <= margin,
         f"IvfPqStore.dedupAgainst cannot certify the ADC covering " +
           f"margin at $root: sampled worst exact-ADC gap $gap%.3f " +
@@ -395,8 +248,7 @@ object IvfPqStore {
       .select(col("vec_id"), col("cell"), col("pcodes"), col("pq_norm"))
       .join(probesHinted, Seq("cell"))
       .join(qtabHinted, Seq("query_id"))
-    val cand1 = deletesIfAny(spark, root).fold(cand0)(del =>
-      cand0.join(del, Seq("vec_id"), "left_anti"))
+    val cand1 = live(spark, root, cand0)
     val adc = call_function("adc_dot_packed",
       col("pcodes"), col("qtab"), lit(b.k))
     // keep-on-degenerate, like the SDC filter: a zero-norm
@@ -436,10 +288,10 @@ object IvfPqStore {
   private def queryFrom(spark: SparkSession, root: String, q0: DataFrame,
       k: Int, nProbe: Int, candidates: Int, excludeSelf: Boolean,
       maxBroadcastProbeRows: Long): DataFrame = {
-    requireGeometry(spark, root)
-    val vectors = spark.read.parquet(vectorsPath(root))
-    val cents = spark.read.parquet(centroidsPath(root))
-    val b = PqStore.codebookOf(spark, root)
+    gate(spark, root, maintenance = false)
+    val vectors = spark.read.parquet(s"$root/vectors")
+    val cents = spark.read.parquet(s"$root/centroids")
+    val b = codebookOf(spark, root)
     val depth =
       if (candidates > 0) candidates
       else Pq.autoCandidates(vectors.count())
@@ -462,12 +314,11 @@ object IvfPqStore {
     val ranked0 = vectors
       .select(col("vec_id"), col("cell"), col("pcodes"), col("pq_norm"))
       .join(qHinted, Seq("cell"))
-    val ranked1 = deletesIfAny(spark, root).fold(ranked0)(del =>
-      // tombstones prune the CANDIDATE stream after the cell join —
-      // an anti join under the join would sit inside the pruning
-      // rule's scan-side pattern and revert to a full index read
-      // (the IvfIndex lesson, spec-pinned there)
-      ranked0.join(del, Seq("vec_id"), "left_anti"))
+    // tombstones prune the CANDIDATE stream after the cell join — an
+    // anti join under the join would sit inside the pruning rule's
+    // scan-side pattern and revert to a full index read (the IvfIndex
+    // lesson, spec-pinned there)
+    val ranked1 = live(spark, root, ranked0)
     val ranked2 =
       if (excludeSelf) ranked1.filter(col("query_id") =!= col("vec_id"))
       else ranked1

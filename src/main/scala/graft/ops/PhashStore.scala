@@ -32,10 +32,10 @@ import org.apache.spark.sql.functions._
   *
   * The modality enters through exactly one seam ([[fingerprint]] —
   * which decoder appends which hash column); everything else (the
-  * versioned lifecycle, idempotent appends, tombstones, compaction,
-  * stats, the banded store join) is shared, so [[PhashStore]] (image
-  * dHash) and [[AfpStore]] (audio energy fingerprint) cannot drift
-  * apart, and a future video modality is one decoder away.
+  * banded store join here, the versioned lifecycle in
+  * [[VersionedStore]]) is shared, so [[PhashStore]] (image dHash) and
+  * [[AfpStore]] (audio energy fingerprint) cannot drift apart, and a
+  * future video modality is one decoder away.
   *
   * @param storeName the store's `_META` identity and lock-holder name
   * @param hashCol   the stored BIGINT fingerprint column
@@ -43,7 +43,8 @@ import org.apache.spark.sql.functions._
   *                  (`n_<rowNoun>`, `n_live_<rowNoun>`)
   */
 private[graft] abstract class FingerprintStore(
-    val storeName: String, val hashCol: String, rowNoun: String) {
+    storeName: String, val hashCol: String, rowNoun: String)
+    extends VersionedStore(storeName) {
 
   /** The modality seam: append the nullable BIGINT fingerprint column
     * named [[hashCol]] to `docs` (null for undecodable payloads —
@@ -51,31 +52,13 @@ private[graft] abstract class FingerprintStore(
     */
   protected def fingerprint(docs: DataFrame, payloadCol: String): DataFrame
 
-  private def fpsPath(root: String) = s"$root/fps"
-  private def deletesPath(root: String) = s"$root/deletes"
-
   /** Physical-layout version of the fingerprint relation (v1:
     * ingest-keyed since the store's introduction).
     */
-  private val Layout = 1L
-
-  private def fpsDdl = s"corpus_id BIGINT, $hashCol BIGINT, ingest STRING"
-
-  private def requireLayout(spark: SparkSession, root: String): Unit = {
-    // ONE _META read for both checks (dedupAgainst runs per
-    // streaming micro-batch; a second sidecar read would double the
-    // per-batch metadata round-trips on a remote filesystem)
-    val meta = StoreVersioning.metaOf(spark, root)
-    // the two fingerprint stores share one physical layout, so the
-    // layout check alone would let a misrouted stage read an IMAGE
-    // store as audio (or vice versa) and die on a missing-column
-    // analysis error — refuse by identity first, loudly
-    meta.get("store").foreach(s =>
-      require(s == storeName,
-        s"$storeName at $root: the committed root was built by $s — " +
-          "point this stage at the right store directory"))
-    StoreVersioning.requireLayout(spark, root, storeName, "fps", Layout, meta)
-  }
+  protected val layout = 1L
+  protected val keyCol = "corpus_id"
+  protected val dataRels = Seq(DataRel("fps",
+    ddl = Some(s"corpus_id BIGINT, $hashCol BIGINT, ingest STRING")))
 
   /** The validated, decoded (corpus_id, hash) relation of a corpus:
     * payloads prune to the two needed columns BEFORE the decode,
@@ -96,99 +79,23 @@ private[graft] abstract class FingerprintStore(
     * still committed; the recovery is to run save again.
     */
   def save(corpus: DataFrame, dir: String, idCol: String = "doc_id",
-      payloadCol: String = "payload"): Unit = {
-    val spark = corpus.sparkSession
-    StoreVersioning.withMaintainerLock(spark, dir, s"$storeName.save") {
-      val v = StoreVersioning.nextVersion(spark, dir)
-      write(corpus, s"$dir/$v", "0", full = true, idCol, payloadCol)
-      StoreVersioning.writeMeta(spark, s"$dir/$v", Seq(
-        "store" -> storeName,
-        "layout" -> Layout.toString,
-        "train_fingerprint" -> StoreVersioning.trainFingerprint(corpus),
-        "train_content_fingerprint" ->
-          StoreVersioning.contentFingerprint(corpus)))
-      StoreVersioning.commit(spark, dir, v)
+      payloadCol: String = "payload"): Unit =
+    saveVersion(corpus, dir) { root =>
+      land(fingerprints(corpus, idCol, payloadCol), root, "fps", "0")
+      Nil
     }
-  }
 
   /** Add newly-kept payloads to the committed store as ingest
     * partition `ingestId` — one decode pass over the NEW payloads
     * only; other ingests' files are untouched. `ingestId` names the
-    * batch and makes the append IDEMPOTENT: the write is a dynamic
-    * partition overwrite of exactly this ingest's subtree, so
-    * re-running a failed append with the same id replaces its own
-    * partial output instead of double-storing fingerprints.
+    * batch and makes the append IDEMPOTENT: re-running a failed append
+    * with the same id replaces its own partial output instead of
+    * double-storing fingerprints.
     */
   def append(docs: DataFrame, dir: String, ingestId: String,
-      idCol: String = "doc_id", payloadCol: String = "payload"): Unit = {
-    require(ingestId.nonEmpty && ingestId != "0",
-      "ingestId must be a non-empty batch name other than the reserved \"0\"")
-    StoreVersioning.withMaintainerLock(docs.sparkSession, dir,
-        s"$storeName.append") {
-      val root = StoreVersioning.requireRoot(docs.sparkSession, dir)
-      requireLayout(docs.sparkSession, root)
-      write(docs, root, ingestId, full = false, idCol, payloadCol)
-    }
-  }
-
-  private def write(docs: DataFrame, root: String, ingestId: String,
-      full: Boolean, idCol: String, payloadCol: String): Unit = {
-    val w = fingerprints(docs, idCol, payloadCol)
-      .withColumn("ingest", lit(ingestId))
-      .write.mode("overwrite").partitionBy("ingest")
-    (if (full) w else w.option("partitionOverwriteMode", "dynamic"))
-      .parquet(fpsPath(root))
-  }
-
-  /** Retract payloads from the store WITHOUT rewriting it: takedown
-    * ids land in a tombstone relation and [[dedupAgainst]] anti-joins
-    * them out of the fingerprint relation — retraction is immediate,
-    * dead rows are physically reclaimed by the next [[compact]] or
-    * [[save]].
-    */
-  def delete(docIds: DataFrame, dir: String): Unit =
-    StoreVersioning.withMaintainerLock(docIds.sparkSession, dir,
-        s"$storeName.delete") {
-      val root = StoreVersioning.requireRoot(docIds.sparkSession, dir)
-      // identity-checked like every other verb: a takedown routed at
-      // the OTHER modality's store would otherwise tombstone that
-      // store's rows while the intended retraction silently never
-      // happens — the exact silent-non-retraction class requireLongIds
-      // exists to refuse
-      requireLayout(docIds.sparkSession, root)
-      val ids = StoreVersioning.requireLongIds(docIds, "corpus_id")
-      ids.write.mode("append").parquet(deletesPath(root))
-    }
-
-  private def readRel(spark: SparkSession, path: String,
-      ddl: String): DataFrame = StoreVersioning.readRel(spark, path, ddl)
-
-  private def deletesIfAny(spark: SparkSession,
-      root: String): Option[DataFrame] =
-    StoreVersioning.deletesIfAny(spark, deletesPath(root))
-
-  /** Rewrite the store from its own contents into a FRESH version:
-    * fingerprints minus the tombstoned payloads, collapsed to one
-    * ingest — dead rows reclaimed and per-append file growth
-    * re-bounded WITHOUT touching payload bytes (no re-decode; the
-    * store is its own source). A crashed compaction destroys nothing.
-    */
-  def compact(spark: SparkSession, dir: String): Unit =
-      StoreVersioning.withMaintainerLock(spark, dir, s"$storeName.compact") {
-    val root = StoreVersioning.requireRoot(spark, dir)
-    requireLayout(spark, root)
-    val v = StoreVersioning.nextVersion(spark, dir)
-    val newRoot = s"$dir/$v"
-    val del = deletesIfAny(spark, root)
-    val live0 = readRel(spark, fpsPath(root), fpsDdl).drop("ingest")
-    val live = del.fold(live0)(d => live0.join(d, Seq("corpus_id"), "left_anti"))
-    live.withColumn("ingest", lit("0"))
-      .write.mode("overwrite").partitionBy("ingest").parquet(fpsPath(newRoot))
-    // lineage carries over verbatim (the store is its own source)
-    StoreVersioning.writeMeta(spark, newRoot,
-      StoreVersioning.metaOf(spark, root).toSeq.sortBy(_._1))
-    StoreVersioning.commit(spark, dir, v)
-  }
+      idCol: String = "doc_id", payloadCol: String = "payload"): Unit =
+    appendVersion(docs.sparkSession, dir, ingestId)(
+      land(fingerprints(docs, idCol, payloadCol), _, "fps", ingestId))
 
   /** Maintenance introspection — same contract as
     * [[DedupStore.stats]]: fragmentation and dead-row signals as one
@@ -196,21 +103,9 @@ private[graft] abstract class FingerprintStore(
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = StoreVersioning.requireRoot(spark, dir)
-    requireLayout(spark, root)
-    val meta = StoreVersioning.metaOf(spark, root)
-    val fps = readRel(spark, fpsPath(root), fpsDdl)
-    val del = deletesIfAny(spark, root)
-    val nRows = fps.count()
-    val nTomb = del.fold(0L)(_.select(col("corpus_id")).distinct().count())
-    val nLive = del.fold(nRows)(d =>
-      fps.join(d, Seq("corpus_id"), "left_anti").count())
-    Seq((StoreVersioning.versionOf(root),
-        fps.select(col("ingest").cast("string")).distinct().count(),
-        StoreVersioning.dataFileCount(spark, fpsPath(root)),
-        nRows, nTomb, nLive,
-        meta.getOrElse("layout", "unknown"),
-        meta.getOrElse("train_fingerprint", "unknown")))
+    val h = health(spark, dir)
+    Seq((h.version, h.nIngests, h.nFiles, h.nRows, h.nTombstoned, h.nLive,
+        h.metaOr("layout"), h.metaOr("train_fingerprint")))
       .toDF("version", "n_ingests", "n_fp_files",
         s"n_$rowNoun", "n_tombstoned", s"n_live_$rowNoun",
         "layout", "train_fingerprint")
@@ -233,12 +128,10 @@ private[graft] abstract class FingerprintStore(
     // diverge from hammingNearDup's pinned contract
     Dedup.requireBands(maxDist, nBands)
     val root = StoreVersioning.requireRoot(spark, dir)
-    requireLayout(spark, root)
+    gate(spark, root, maintenance = false)
     val inc = fingerprints(incoming, idCol, payloadCol)
       .select(col("corpus_id").as("inc_id"), col(hashCol).as("ih"))
-    val stored0 = readRel(spark, fpsPath(root), fpsDdl)
-    val stored = deletesIfAny(spark, root).fold(stored0)(d =>
-      stored0.join(d, Seq("corpus_id"), "left_anti"))
+    val stored = live(spark, root, read(spark, root, "fps"))
     Dedup.bandedProjection(inc, "ih", nBands)
       .join(Dedup.bandedProjection(
           stored.select(col("corpus_id"), col(hashCol)), hashCol, nBands),

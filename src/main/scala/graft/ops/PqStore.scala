@@ -47,29 +47,14 @@ import org.apache.spark.sql.functions._
   * misencoded), not PQ recall, exactly like the IvfIndex append gate
   * at nProbe == nCells.
   */
-object PqStore {
-
-  private def codebookPath(root: String) = s"$root/codebook"
-  private def vectorsPath(root: String) = s"$root/vectors"
-  private def deletesPath(root: String) = s"$root/deletes"
+object PqStore extends PqCodedStore("PqStore") {
 
   /** Physical-layout version of the vectors relation (v1: ingest-keyed
-    * since the store's introduction) — `_META` + layout gate, the
-    * [[IvfIndex]] convention.
+    * since the store's introduction).
     */
-  private val Layout = 1L
-
-  private def requireLayout(spark: SparkSession, root: String): Unit =
-    StoreVersioning.requireLayout(spark, root, "PqStore", "vectors", Layout)
-
-  private def metaOf(b: Pq.Codebook, embeddings: DataFrame) = Seq(
-    "store" -> "PqStore",
-    "layout" -> Layout.toString,
-    "m" -> b.m.toString,
-    "k_codes" -> b.k.toString,
-    "sub_dim" -> b.subDim.toString,
-    "train_fingerprint" -> StoreVersioning.trainFingerprint(embeddings),
-    "train_content_fingerprint" -> StoreVersioning.contentFingerprint(embeddings))
+  protected val layout = 1L
+  override protected val modelRels = Seq("codebook")
+  protected val dataRels = Seq(DataRel("vectors"))
 
   /** Build the store at `dir`: fit (or reuse — the codebook memo is
     * keyed on the training lineage) the m per-subspace codebooks,
@@ -77,57 +62,13 @@ object PqStore {
     * version root, commit by marker creation.
     */
   def save(embeddings: DataFrame, dir: String, m: Int = 16,
-      kCodes: Int = 32, trainMod: Int = 1): Unit = {
-    val spark = embeddings.sparkSession
-    StoreVersioning.withMaintainerLock(spark, dir, "PqStore.save") {
-      val v = StoreVersioning.nextVersion(spark, dir)
-      val root = s"$dir/$v"
+      kCodes: Int = 32, trainMod: Int = 1): Unit =
+    saveVersion(embeddings, dir) { root =>
       val b = Pq.codebookForStore(embeddings, m, kCodes, trainMod)
-      writeCodebook(spark, b, root)
-      writeVectors(Pq.encoded(embeddings, b), root, "0", full = true)
-      StoreVersioning.writeMeta(spark, root, metaOf(b, embeddings))
-      StoreVersioning.commit(spark, dir, v)
+      writeCodebook(embeddings.sparkSession, b, root)
+      land(encodedVectors(Pq.encoded(embeddings, b)), root, "vectors", "0")
+      codebookMeta(b)
     }
-  }
-
-  private[ops] def writeCodebook(spark: SparkSession, b: Pq.Codebook,
-      root: String): Unit = {
-    import spark.implicits._
-    (for (s <- 0 until b.m; c <- 0 until b.k) yield (s, c, b.cb(s)(c).toSeq))
-      .toDF("s", "c", "cvec")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(codebookPath(root))
-  }
-
-  private def writeVectors(enc: DataFrame, root: String, ingestId: String,
-      full: Boolean): Unit = {
-    val w = enc
-      .select(col("vec_id"), col("v"), col("norm"), col("pcodes"),
-        col("pq_norm"))
-      .withColumn("ingest", lit(ingestId))
-      .write.mode("overwrite").partitionBy("ingest")
-    (if (full) w else w.option("partitionOverwriteMode", "dynamic"))
-      .parquet(vectorsPath(root))
-  }
-
-  /** The stored codebook as driver-side model state (m·k rows — the
-    * `clusterCenters` class of collect, never a corpus).
-    */
-  private[ops] def codebookOf(spark: SparkSession, root: String): Pq.Codebook = {
-    val rows = spark.read.parquet(codebookPath(root))
-      .select(col("s"), col("c"), col("cvec")).collect()
-    require(rows.nonEmpty, s"empty codebook at ${codebookPath(root)}")
-    val m = rows.iterator.map(_.getInt(0)).max + 1
-    val k = rows.iterator.map(_.getInt(1)).max + 1
-    require(rows.length == m * k,
-      s"codebook at ${codebookPath(root)} is not dense: " +
-        s"${rows.length} rows for m=$m k=$k")
-    val subDim = rows.head.getSeq[Double](2).length
-    val cb = Array.ofDim[Array[Double]](m, k)
-    rows.foreach(r => cb(r.getInt(0))(r.getInt(1)) =
-      r.getSeq[Double](2).toArray)
-    Pq.Codebook(m, k, subDim, cb)
-  }
 
   /** Encode `embeddings` with the STORED codebook (no refit) and
     * append them as ingest partition `ingestId` — idempotent exactly
@@ -137,128 +78,26 @@ object PqStore {
     * appended store stays exhaustive-depth-correct by construction.
     */
   def append(embeddings: DataFrame, dir: String, ingestId: String): Unit = {
-    require(ingestId.nonEmpty && ingestId != "0",
-      "ingestId must be a non-empty batch name other than the reserved \"0\"")
     val spark = embeddings.sparkSession
-    StoreVersioning.withMaintainerLock(spark, dir, "PqStore.append") {
-      val root = StoreVersioning.requireRoot(spark, dir)
-      requireLayout(spark, root)
-      val b = codebookOf(spark, root)
-      writeVectors(Pq.encoded(embeddings, b), root, ingestId, full = false)
+    appendVersion(spark, dir, ingestId) { root =>
+      land(encodedVectors(Pq.encoded(embeddings, codebookOf(spark, root))),
+        root, "vectors", ingestId)
     }
   }
 
-  /** Retract vectors without rewriting the store: tombstones, applied
-    * by [[query]]/[[querySelf]] as a broadcast anti join on the code
-    * scan; dead rows are physically reclaimed by the next [[compact]]
-    * or [[save]]. Malformed ids fail loudly
-    * ([[StoreVersioning.requireLongIds]]).
-    */
-  def delete(vecIds: DataFrame, dir: String): Unit =
-    StoreVersioning.withMaintainerLock(vecIds.sparkSession, dir,
-        "PqStore.delete") {
-      val root = StoreVersioning.requireRoot(vecIds.sparkSession, dir)
-      val ids = StoreVersioning.requireLongIds(vecIds, "vec_id")
-      ids.write.mode("append").parquet(deletesPath(root))
-    }
-
-  private def deletesIfAny(spark: SparkSession,
-      root: String): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(deletesPath(root))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) Some(spark.read.parquet(deletesPath(root)))
-    else None
-  }
-
-  /** Rewrite the encoded relation from its own contents into a fresh
-    * version: tombstoned vectors drop out, a season of appends
-    * collapses to the single "0" ingest, codebook carried over
-    * unchanged — no refit, no re-encode, no embedding re-read.
-    */
-  def compact(spark: SparkSession, dir: String): Unit =
-    StoreVersioning.withMaintainerLock(spark, dir, "PqStore.compact") {
-      val root = StoreVersioning.requireRoot(spark, dir)
-      requireLayout(spark, root)
-      val v = StoreVersioning.nextVersion(spark, dir)
-      val newRoot = s"$dir/$v"
-      spark.read.parquet(codebookPath(root))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(codebookPath(newRoot))
-      val live = deletesIfAny(spark, root)
-        .fold(spark.read.parquet(vectorsPath(root)))(d =>
-          spark.read.parquet(vectorsPath(root))
-            .join(d, Seq("vec_id"), "left_anti"))
-      live.drop("ingest").withColumn("ingest", lit("0"))
-        .write.mode("overwrite").partitionBy("ingest")
-        .parquet(vectorsPath(newRoot))
-      // geometry is frozen at build: lineage carries over verbatim
-      StoreVersioning.writeMeta(spark, newRoot,
-        StoreVersioning.metaOf(spark, root).toSeq.sortBy(_._1))
-      StoreVersioning.commit(spark, dir, v)
-    }
-
-  /** Maintenance introspection — the [[DedupStore.stats]] contract:
-    * file-count fragmentation and the live/tombstoned ratio a
-    * compaction decision reads.
+  /** Maintenance introspection: file-count fragmentation and the
+    * live/tombstoned ratio a compaction decision reads, plus the
+    * frozen codebook geometry from `_META`.
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = StoreVersioning.requireRoot(spark, dir)
-    requireLayout(spark, root)
-    val vectors = spark.read.parquet(vectorsPath(root))
-    val del = deletesIfAny(spark, root)
-    val meta = StoreVersioning.metaOf(spark, root)
-    val nVec = vectors.count()
-    val nTomb = del.fold(0L)(_.select(col("vec_id")).distinct().count())
-    val nLive = del.fold(nVec)(d =>
-      vectors.join(d, Seq("vec_id"), "left_anti").count())
-    Seq((StoreVersioning.versionOf(root),
-        vectors.select(col("ingest").cast("string")).distinct().count(),
-        StoreVersioning.dataFileCount(spark, vectorsPath(root)),
-        nVec, nTomb, nLive,
-        meta.getOrElse("layout", "unknown"),
-        meta.getOrElse("m", "unknown"),
-        meta.getOrElse("k_codes", "unknown"),
-        meta.getOrElse("train_fingerprint", "unknown")))
+    val h = health(spark, dir)
+    Seq((h.version, h.nIngests, h.nFiles, h.nRows, h.nTombstoned, h.nLive,
+        h.metaOr("layout"), h.metaOr("m"), h.metaOr("k_codes"),
+        h.metaOr("train_fingerprint")))
       .toDF("version", "n_ingests", "n_vector_files", "n_vectors",
         "n_tombstoned", "n_live_vectors",
         "layout", "m", "k_codes", "train_fingerprint")
-  }
-
-  /** Memoized per (version root, vectors file listing, threshold), the
-    * [[IvfPqStore]] convention: the listing fingerprint invalidates
-    * the memo on append() — the gap is measured over the stored
-    * vectors, which grow under the same root.
-    */
-  private val sampledGaps =
-    new BoundedMemo[(String, String, Double), Double](capacity = 64)
-
-  /** The store's sampled worst one-sided exact−ADC gap at `minCosine`
-    * — the [[StoreMaintenance.recommendPq]] statistic: the same
-    * frozen-codebook quantization exposure as the composed store,
-    * measured over the stored vectors' own reconstructions.
-    */
-  private[ops] def sampledGap(spark: SparkSession, dir: String,
-      minCosine: Double): Double = {
-    val root = StoreVersioning.requireRoot(spark, dir)
-    val vectors = spark.read.parquet(vectorsPath(root))
-    val b = codebookOf(spark, root)
-    sampledGaps.getOrElseUpdate(
-        (root, StoreVersioning.trainFingerprint(vectors), minCosine))(
-      Pq.adcSampledGap(
-        vectors.select(col("vec_id"), col("v"), col("norm"),
-          col("pcodes"), col("pq_norm")),
-        b, nearMin = minCosine))
-  }
-
-  /** The live encoded relation at `root`: tombstones anti-joined off
-    * the scan (a broadcast anti on a takedown-sized set — there is no
-    * partition pruning to protect here, unlike [[IvfIndex]]).
-    */
-  private def liveVectors(spark: SparkSession, root: String): DataFrame = {
-    val vectors = spark.read.parquet(vectorsPath(root))
-    deletesIfAny(spark, root).fold(vectors)(d =>
-      vectors.join(d, Seq("vec_id"), "left_anti"))
   }
 
   /** Top-k cosine neighbors from the persisted store for an explicit
@@ -287,7 +126,7 @@ object PqStore {
   def querySelf(spark: SparkSession, dir: String, k: Int = 5,
       nQueries: Long = 5, candidates: Int = 0): DataFrame = {
     val root = StoreVersioning.requireRoot(spark, dir)
-    val q = liveVectors(spark, root)
+    val q = live(spark, root, spark.read.parquet(s"$root/vectors"))
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("norm").as("qn"))
@@ -299,13 +138,18 @@ object PqStore {
     */
   private def queryFrom(spark: SparkSession, root: String, q: DataFrame,
       k: Int, candidates: Int, excludeSelf: Boolean): DataFrame = {
+    gate(spark, root, maintenance = false)
     val b = codebookOf(spark, root)
-    val enc = liveVectors(spark, root)
+    val vectors = spark.read.parquet(s"$root/vectors")
+    // tombstones anti-joined off the scan (a broadcast anti on a
+    // takedown-sized set — there is no partition pruning to protect
+    // here, unlike IvfIndex)
+    val enc = live(spark, root, vectors)
     val depth =
       if (candidates > 0) candidates
       // parquet-metadata count of the raw store (pre-tombstone): a
       // depth bound only needs the right scale, not exactness
-      else Pq.autoCandidates(spark.read.parquet(vectorsPath(root)).count())
+      else Pq.autoCandidates(vectors.count())
     val nQ = q.count()
     Pq.requireRerankBound(nQ, depth)
     // this path broadcasts the qtab query side unconditionally
@@ -319,5 +163,84 @@ object PqStore {
       .filter(col("crk") <= depth)
       .select(col("query_id"), col("neighbor_id"))
     Pq.exactRerank(enc, q, cand, k)
+  }
+}
+
+/** The stores holding PQ codes ([[PqStore]], [[IvfPqStore]]): a
+  * `codebook/` model relation (s, c, cvec) and a `vectors/` relation
+  * carrying (vec_id, v, norm, pcodes, pq_norm), plus the sampled
+  * margin-gap probe [[StoreMaintenance.recommend]] reads as its
+  * rebuild trigger.
+  */
+private[graft] abstract class PqCodedStore(name: String)
+    extends VersionedStore(name) {
+
+  protected val keyCol = "vec_id"
+
+  protected def codebookMeta(b: Pq.Codebook): Seq[(String, String)] = Seq(
+    "m" -> b.m.toString, "k_codes" -> b.k.toString,
+    "sub_dim" -> b.subDim.toString)
+
+  /** The encoded relation's stored columns, in order. */
+  protected def encodedVectors(enc: DataFrame, carry: String*): DataFrame =
+    enc.select((Seq("vec_id", "v", "norm", "pcodes", "pq_norm") ++ carry)
+      .map(col): _*)
+
+  protected def writeCodebook(spark: SparkSession, b: Pq.Codebook,
+      root: String): Unit = {
+    import spark.implicits._
+    writeModel(
+      (for (s <- 0 until b.m; c <- 0 until b.k) yield (s, c, b.cb(s)(c).toSeq))
+        .toDF("s", "c", "cvec"),
+      root, "codebook")
+  }
+
+  /** The stored codebook as driver-side model state (m·k rows — the
+    * `clusterCenters` class of collect, never a corpus).
+    */
+  protected def codebookOf(spark: SparkSession, root: String): Pq.Codebook = {
+    val path = s"$root/codebook"
+    val rows = spark.read.parquet(path)
+      .select(col("s"), col("c"), col("cvec")).collect()
+    require(rows.nonEmpty, s"empty codebook at $path")
+    val m = rows.iterator.map(_.getInt(0)).max + 1
+    val k = rows.iterator.map(_.getInt(1)).max + 1
+    require(rows.length == m * k,
+      s"codebook at $path is not dense: " +
+        s"${rows.length} rows for m=$m k=$k")
+    val subDim = rows.head.getSeq[Double](2).length
+    val cb = Array.ofDim[Array[Double]](m, k)
+    rows.foreach(r => cb(r.getInt(0))(r.getInt(1)) =
+      r.getSeq[Double](2).toArray)
+    Pq.Codebook(m, k, subDim, cb)
+  }
+
+  /** Memoized per (version root, vectors file listing, threshold): the
+    * codebook is frozen per root, but the gap is measured over the
+    * STORED vectors, and append() grows those under the SAME root — so
+    * the file-listing fingerprint rides in the key and any append (new
+    * files) forces a fresh probe, instead of a long-lived streaming
+    * session certifying forever against the pre-append sample. A
+    * compact commits a NEW root, so the root key already covers it.
+    */
+  private val sampledGaps =
+    new BoundedMemo[(String, String, Double), Double](capacity = 64)
+
+  /** The sampled worst one-sided exact−ADC gap at `minCosine` of the
+    * store's own quantization, over the stored vectors' own
+    * reconstructions.
+    */
+  protected def gapAt(spark: SparkSession, root: String, b: => Pq.Codebook,
+      minCosine: Double): Double = {
+    val vectors = spark.read.parquet(s"$root/vectors")
+    sampledGaps.getOrElseUpdate(
+        (root, StoreVersioning.trainFingerprint(vectors), minCosine))(
+      Pq.adcSampledGap(encodedVectors(vectors), b, nearMin = minCosine))
+  }
+
+  override private[ops] def sampledGap(spark: SparkSession, dir: String,
+      minCosine: Double): Option[Double] = {
+    val root = StoreVersioning.requireRoot(spark, dir)
+    Some(gapAt(spark, root, codebookOf(spark, root), minCosine))
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The maintenance loop the stats relations exist for: read a store's
   * health, compact it exactly when the numbers say so — never blind
@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   *    partition it touches) and scans are paying open/footer overhead
   *    a rewrite re-bounds to ~one file per partition.
   *
-  * Each `maintain*` returns whether it compacted, so a scheduler can
+  * [[maintain]] returns whether it compacted, so a scheduler can
   * log/alert on the decision. The compact itself runs under the
   * maintainer lease like every maintenance op; racing a live ingest
   * stream fails loudly (stop the stream, maintain, restart — the
@@ -64,152 +64,52 @@ object StoreMaintenance {
     (nRows > 0 && nTombstoned.toDouble / nRows > maxTombstoneRatio) ||
       nIngests > maxIngests
 
-  private def decideAndRun(
-      stats: org.apache.spark.sql.DataFrame, rowsCol: String,
-      maxTombstoneRatio: Double, maxIngests: Long)(
-      compact: => Unit): Boolean = {
-    val s = stats.head()
-    val go = shouldCompact(s.getAs[Long](rowsCol),
-      s.getAs[Long]("n_tombstoned"), s.getAs[Long]("n_ingests"),
+  /** Compact `store` at `dir` exactly when its dead-row ratio or
+    * ingest count is past the bar; returns whether it compacted.
+    */
+  def maintain(store: VersionedStore, spark: SparkSession, dir: String,
+      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
+      maxIngests: Long = DefaultMaxIngests): Boolean = {
+    val h = store.health(spark, dir)
+    val go = shouldCompact(h.nRows, h.nTombstoned, h.nIngests,
       maxTombstoneRatio, maxIngests)
-    if (go) compact
+    if (go) store.compact(spark, dir)
     go
   }
 
-  def maintainIvf(spark: SparkSession, dir: String,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): Boolean =
-    decideAndRun(IvfIndex.stats(spark, dir), "n_vectors",
-      maxTombstoneRatio, maxIngests)(IvfIndex.compact(spark, dir))
-
-  def maintainPq(spark: SparkSession, dir: String,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): Boolean =
-    decideAndRun(PqStore.stats(spark, dir), "n_vectors",
-      maxTombstoneRatio, maxIngests)(PqStore.compact(spark, dir))
-
-  def maintainIvfPq(spark: SparkSession, dir: String,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): Boolean =
-    decideAndRun(IvfPqStore.stats(spark, dir), "n_vectors",
-      maxTombstoneRatio, maxIngests)(IvfPqStore.compact(spark, dir))
-
-  def maintainPhash(spark: SparkSession, dir: String,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): Boolean =
-    decideAndRun(PhashStore.stats(spark, dir), "n_images",
-      maxTombstoneRatio, maxIngests)(PhashStore.compact(spark, dir))
-
-  def maintainAfp(spark: SparkSession, dir: String,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): Boolean =
-    decideAndRun(AfpStore.stats(spark, dir), "n_clips",
-      maxTombstoneRatio, maxIngests)(AfpStore.compact(spark, dir))
-
-  def maintainDedup(spark: SparkSession, dir: String,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): Boolean =
-    decideAndRun(DedupStore.stats(spark, dir), "n_docs",
-      maxTombstoneRatio, maxIngests)(DedupStore.compact(spark, dir))
-
   /** The DECISION the `_META` lineage and the margin probe exist for:
     * one advisory row telling an operator (or a scheduled pipeline)
-    * whether the composed IVF×PQ store needs nothing, a COMPACT
-    * (fragmentation/dead rows — cheap, no re-fit), or a REBUILD
-    * (frozen geometry no longer fits the corpus — compaction cannot
-    * help). Rebuild triggers, strongest first:
+    * whether the store needs nothing, a COMPACT (fragmentation/dead
+    * rows — cheap, no re-fit), or a REBUILD (frozen geometry no longer
+    * fits the corpus — compaction cannot help). Rebuild triggers,
+    * strongest first:
     *
-    *  - the store's sampled ADC covering gap exceeds `margin`: the
-    *    quantization error provably loses near-duplicate pairs at the
-    *    configured dedup margin ([[IvfPqStore.dedupAgainst]] would
-    *    refuse — this surfaces it BEFORE the nightly run does);
+    *  - the store's sampled ADC covering gap exceeds `margin` (only
+    *    the stores holding PQ codes carry the probe,
+    *    [[VersionedStore.sampledGap]]): the quantization error
+    *    provably loses near-duplicate pairs at the configured dedup
+    *    margin ([[IvfPqStore.dedupAgainst]] would refuse — this
+    *    surfaces it BEFORE the nightly run does);
     *  - `corpus` (today's training relation, when provided) has a
-    *    different file-listing fingerprint than the one the store was
-    *    built from: appends froze geometry at build, so a corpus that
-    *    has moved on retrieves against last season's centroids —
-    *    legal, but measurably worse, and only lineage makes it
-    *    visible.
+    *    different fingerprint than the one the store was built from:
+    *    appends froze geometry at build, so a corpus that has moved on
+    *    retrieves against last season's centroids — legal, but
+    *    measurably worse — and an exact store (grams, fingerprints)
+    *    no longer covers the corpus it dedups against.
     *
     * Advisory only — it runs NO maintenance (pair it with
-    * [[maintainIvfPq]] or a rebuild job); bounded work (stats
-    * aggregates + the memoized ≤1M-pair gap probe).
+    * [[maintain]] or a rebuild job); bounded work (stats aggregates +
+    * the memoized ≤1M-pair gap probe).
     */
-  def recommendIvfPq(spark: SparkSession, dir: String,
-      corpus: Option[org.apache.spark.sql.DataFrame] = None,
+  def recommend(store: VersionedStore, spark: SparkSession, dir: String,
+      corpus: Option[DataFrame] = None,
       margin: Double = DefaultMargin, minCosine: Double = DefaultMinCosine,
       maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): org.apache.spark.sql.DataFrame =
-    recommendFrom(spark, dir, IvfPqStore.stats(spark, dir), "n_vectors",
-      Some(IvfPqStore.sampledDedupGap(spark, dir, minCosine)),
-      corpus, margin, maxTombstoneRatio, maxIngests)
-
-  /** [[recommendIvfPq]] for the plain PQ store — same quantization
-    * exposure (stored codes, frozen codebook), same gap probe.
-    */
-  def recommendPq(spark: SparkSession, dir: String,
-      corpus: Option[org.apache.spark.sql.DataFrame] = None,
-      margin: Double = DefaultMargin, minCosine: Double = DefaultMinCosine,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): org.apache.spark.sql.DataFrame =
-    recommendFrom(spark, dir, PqStore.stats(spark, dir), "n_vectors",
-      Some(PqStore.sampledGap(spark, dir, minCosine)),
-      corpus, margin, maxTombstoneRatio, maxIngests)
-
-  /** [[recommendIvfPq]] for the float IVF index: no quantization on
-    * the stored vectors (exact cosine at query time), so only lineage
-    * drift (stale cells cost partial-probe recall, not correctness)
-    * and fragmentation can fire.
-    */
-  def recommendIvf(spark: SparkSession, dir: String,
-      corpus: Option[org.apache.spark.sql.DataFrame] = None,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): org.apache.spark.sql.DataFrame =
-    recommendFrom(spark, dir, IvfIndex.stats(spark, dir), "n_vectors",
-      None, corpus, 0.0, maxTombstoneRatio, maxIngests)
-
-  /** [[recommendIvfPq]] for the dedup gram store: exact trigram
-    * machinery (no quantization, no geometry) — drift means the store
-    * no longer covers the corpus it is supposed to dedup against
-    * (append the delta or rebuild), fragmentation means compact.
-    */
-  def recommendDedup(spark: SparkSession, dir: String,
-      corpus: Option[org.apache.spark.sql.DataFrame] = None,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): org.apache.spark.sql.DataFrame =
-    recommendFrom(spark, dir, DedupStore.stats(spark, dir), "n_docs",
-      None, corpus, 0.0, maxTombstoneRatio, maxIngests)
-
-  /** [[recommendDedup]] for the image fingerprint store: exact
-    * hash machinery (no learned geometry) — drift means the store no
-    * longer covers the image corpus it dedups against, fragmentation
-    * means compact.
-    */
-  def recommendPhash(spark: SparkSession, dir: String,
-      corpus: Option[org.apache.spark.sql.DataFrame] = None,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): org.apache.spark.sql.DataFrame =
-    recommendFrom(spark, dir, PhashStore.stats(spark, dir), "n_images",
-      None, corpus, 0.0, maxTombstoneRatio, maxIngests)
-
-  /** [[recommendPhash]] for the audio fingerprint store — the same
-    * exact-hash advisory over [[AfpStore.stats]].
-    */
-  def recommendAfp(spark: SparkSession, dir: String,
-      corpus: Option[org.apache.spark.sql.DataFrame] = None,
-      maxTombstoneRatio: Double = DefaultMaxTombstoneRatio,
-      maxIngests: Long = DefaultMaxIngests): org.apache.spark.sql.DataFrame =
-    recommendFrom(spark, dir, AfpStore.stats(spark, dir), "n_clips",
-      None, corpus, 0.0, maxTombstoneRatio, maxIngests)
-
-  private def recommendFrom(spark: SparkSession, dir: String,
-      stats: org.apache.spark.sql.DataFrame, rowsCol: String,
-      sampledGap: Option[Double],
-      corpus: Option[org.apache.spark.sql.DataFrame],
-      margin: Double, maxTombstoneRatio: Double,
-      maxIngests: Long): org.apache.spark.sql.DataFrame = {
+      maxIngests: Long = DefaultMaxIngests): DataFrame = {
     import spark.implicits._
-    val s = stats.head()
-    val storedFp = s.getString(s.fieldIndex("train_fingerprint"))
+    val h = store.health(spark, dir)
+    val sampledGap = store.sampledGap(spark, dir, minCosine)
+    val storedFp = h.metaOr("train_fingerprint")
     val gap = sampledGap.getOrElse(0.0)
     // two-level drift: the cheap file-listing fingerprint screens, and
     // ONLY on a listing mismatch does the content fingerprint decide —
@@ -218,16 +118,12 @@ object StoreMaintenance {
     // night as "drifted" and `action: auto` would rebuild perpetually
     // over identical rows (r16 ADVICE). Legacy roots without the
     // content key keep the listing-only behavior.
-    lazy val storedContentFp = StoreVersioning
-      .metaOf(spark, StoreVersioning.requireRoot(spark, dir))
-      .get("train_content_fingerprint")
     val drift = corpus.exists(c =>
       StoreVersioning.trainFingerprint(c) != storedFp &&
-        storedContentFp.forall(
+        h.meta.get("train_content_fingerprint").forall(
           StoreVersioning.contentFingerprint(c) != _))
-    val fragmented = shouldCompact(
-      s.getAs[Long](rowsCol), s.getAs[Long]("n_tombstoned"),
-      s.getAs[Long]("n_ingests"), maxTombstoneRatio, maxIngests)
+    val fragmented = shouldCompact(h.nRows, h.nTombstoned, h.nIngests,
+      maxTombstoneRatio, maxIngests)
     val (what, why) =
       if (sampledGap.isDefined && gap > margin)
         ("rebuild", f"sampled ADC covering gap $gap%.3f exceeds the " +
@@ -238,8 +134,7 @@ object StoreMaintenance {
       else if (fragmented)
         ("compact", "tombstone ratio or ingest count past threshold")
       else ("ok", "stats and geometry inside contract")
-    Seq((what, why, gap, storedFp, drift,
-        s.getAs[Long]("n_tombstoned"), s.getAs[Long]("n_ingests")))
+    Seq((what, why, gap, storedFp, drift, h.nTombstoned, h.nIngests))
       .toDF("recommendation", "reason", "sampled_adc_gap",
         "train_fingerprint", "fingerprint_drift",
         "n_tombstoned", "n_ingests")

@@ -4,11 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Versioned roots for the persisted stores ([[IvfIndex]],
-  * [[DedupStore]]): every rebuild or compaction writes a FRESH
-  * `v<n>/` directory and commits it by creating a `_COMMITTED` marker
-  * file inside it — never by overwriting live data in place, and
-  * never by a multi-step pointer mutation.
+/** Versioned roots for the persisted stores (every [[VersionedStore]],
+  * and the [[Classify.saveModel]] model): every rebuild or compaction
+  * writes a FRESH `v<n>/` directory and commits it by creating a
+  * `_COMMITTED` marker file inside it — never by overwriting live
+  * data in place, and never by a multi-step pointer mutation.
   *
   * This is what makes the stores' failure story structural instead of
   * rhetorical: an in-place static overwrite DELETES its target before
@@ -215,9 +215,8 @@ private[ops] object StoreVersioning {
     * relation, which parquet lands as a bare `_SUCCESS` with no
     * footer to infer a schema from — the read-back must behave as
     * "matches nothing" (exactly what the in-session operator returns
-    * on such a corpus), not throw. Shared by every store
-    * ([[DedupStore]], [[PhashStore]]) so a new Spark error-condition
-    * name lands once.
+    * on such a corpus), not throw. Shared by every store through
+    * [[VersionedStore]] so a new Spark error-condition name lands once.
     */
   def readRel(spark: SparkSession, path: String, ddl: String): DataFrame =
     try spark.read.parquet(path)
@@ -349,9 +348,8 @@ private[ops] object StoreVersioning {
     * the key only needs writing from now on so the NEXT geometry
     * change has something to compare.
     */
-  def requireGeometry(spark: SparkSession, root: String,
-      store: String): Unit = {
-    val meta = metaOf(spark, root)
+  def requireGeometry(root: String, store: String,
+      meta: Map[String, String]): Unit = {
     require(meta.nonEmpty,
       s"$store at $root was committed by an older build without a " +
         "_META sidecar, which predates the unit-sphere coarse-quantizer " +
@@ -368,6 +366,45 @@ private[ops] object StoreVersioning {
         "save() a fresh version from the corpus")
   }
 
+  /** Refuse a root a DIFFERENT store built (its `_META` names
+    * another `store`). Layout versions alone cannot tell two stores
+    * apart — several record layout 1 — so without this a misrouted
+    * compact could commit a root missing the other store's model
+    * relations, and a misrouted delete would tombstone the wrong
+    * store while the intended retraction silently never happens. A
+    * legacy root without the key passes (save is its migration).
+    */
+  def requireIdentity(root: String, store: String,
+      meta: Map[String, String]): Unit =
+    meta.get("store").foreach(s =>
+      require(s == store,
+        s"$store at $root: the committed root was built by $s — " +
+          "point this stage at the right store directory"))
+
+  /** The shared save step: under the maintainer lease, allocate the
+    * next version, let `write` land the relations under its root and
+    * return the model's `_META` entries, write `_META` (`store`,
+    * `header`, the model entries, then the training lineage) and
+    * commit by marker. A root another store built refuses by identity
+    * before anything is written.
+    */
+  def save(corpus: DataFrame, dir: String, store: String, op: String,
+      header: Seq[(String, String)])(
+      write: String => Seq[(String, String)]): Unit = {
+    val spark = corpus.sparkSession
+    withMaintainerLock(spark, dir, op) {
+      currentRoot(spark, dir).foreach(r =>
+        requireIdentity(r, store, metaOf(spark, r)))
+      val v = nextVersion(spark, dir)
+      val root = s"$dir/$v"
+      val model = write(root)
+      writeMeta(spark, root, Seq("store" -> store) ++ header ++ model ++ Seq(
+        "train_fingerprint" -> trainFingerprint(corpus),
+        "train_content_fingerprint" -> contentFingerprint(corpus)))
+      commit(spark, dir, v)
+    }
+  }
+
   /** Enforce the store's physical layout contract on a committed
     * root before any operation that ASSUMES it (append's dynamic
     * partition overwrite, stats' ingest column, compact's rewrite):
@@ -378,15 +415,6 @@ private[ops] object StoreVersioning {
     * discovery errors at best, a silently corrupted store at worst;
     * for an artifact whose whole point is persistence, the loud
     * refusal IS the migration path).
-    */
-  def requireLayout(spark: SparkSession, root: String, store: String,
-      dataDir: String, expected: Long): Unit =
-    requireLayout(spark, root, store, dataDir, expected, metaOf(spark, root))
-
-  /** [[requireLayout]] over an already-read `_META` map — so a caller
-    * that also inspects other sidecar keys (the fingerprint stores'
-    * identity check) pays ONE filesystem read per operation, not two
-    * (dedupAgainst runs once per streaming micro-batch).
     */
   def requireLayout(spark: SparkSession, root: String, store: String,
       dataDir: String, expected: Long, meta: Map[String, String]): Unit =
@@ -412,8 +440,8 @@ private[ops] object StoreVersioning {
   /** Data-file count under `path` (recursive) — the fragmentation
     * signal a compaction decision reads: each append lands fresh
     * files, so files-per-partition growing past ~1 means the store's
-    * scans are paying open/footer overhead a [[IvfIndex.compact]]/
-    * [[DedupStore.compact]] would re-bound. Driver-side listing, the
+    * scans are paying open/footer overhead a
+    * [[VersionedStore.compact]] would re-bound. Driver-side listing, the
     * same class of metadata walk every parquet read performs.
     */
   def dataFileCount(spark: SparkSession, path: String): Long = {

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[FingerprintStore]] lifecycle through the [[AfpStore]] instance —
   * what this suite pins beyond [[PhashStoreSpec]] (the lifecycle is
   * one implementation now) is the audio decoder at the modality seam,
-  * the audio-named stats/maintenance surface, and the cross-store
-  * identity refusal.
+  * and the audio-named stats/maintenance surface. The cross-store
+  * identity refusal is pinned for every store in
+  * [[StoreLifecycleSpec]].
   */
 class AfpStoreSpec extends AnyFunSuite {
 
@@ -69,10 +70,11 @@ class AfpStoreSpec extends AnyFunSuite {
     assert(st.getAs[Long]("n_ingests") == 2L)
     assert(st.getAs[Long]("n_clips") == 20L,
       "a replayed ingest must not double-store fingerprints")
-    assert(StoreMaintenance.maintainAfp(spark, dir, maxIngests = 1L),
+    assert(StoreMaintenance.maintain(AfpStore, spark, dir, maxIngests = 1L),
       "2 ingests past a cap of 1 must compact")
     assert(AfpStore.stats(spark, dir).head().getAs[Long]("n_ingests") == 1L)
-    val rec = StoreMaintenance.recommendAfp(spark, dir, maxIngests = 1L).head()
+    val rec = StoreMaintenance.recommend(AfpStore, spark, dir,
+      maxIngests = 1L).head()
     assert(rec.getString(rec.fieldIndex("recommendation")) == "ok")
   }
 
@@ -91,25 +93,5 @@ class AfpStoreSpec extends AnyFunSuite {
     assert(st.getAs[Long]("n_clips") == 19L)
     assert(flagsOf(AfpStore.dedupAgainst(spark, incomingDf, dir))
       == afterDelete, "compaction must not change the flag relation")
-  }
-
-  test("a store built by the OTHER fingerprint modality refuses by " +
-      "identity instead of a missing-column error") {
-    val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("afp_cross").toString
-    PhashStore.save(
-      Seq((1L, Multimodal.grayCellsPng(Multimodal.cellsForBits(mix(1)))))
-        .toDF("doc_id", "payload"), dir)
-    val e = intercept[IllegalArgumentException](
-      AfpStore.dedupAgainst(spark, incomingDf, dir))
-    assert(e.getMessage.contains("built by PhashStore"),
-      s"refusal must name the actual builder: ${e.getMessage}")
-    // delete is identity-checked too: a misrouted takedown must not
-    // silently tombstone the OTHER modality's rows while the intended
-    // retraction never happens
-    val d = intercept[IllegalArgumentException](
-      AfpStore.delete(Seq(1L).toDF("corpus_id"), dir))
-    assert(d.getMessage.contains("built by PhashStore"),
-      s"delete must refuse by identity: ${d.getMessage}")
   }
 }

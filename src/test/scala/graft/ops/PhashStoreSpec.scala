@@ -111,10 +111,10 @@ class PhashStoreSpec extends AnyFunSuite {
     PhashStore.save(corpusDf.filter(col("doc_id") <= 10), dir)
     (1 to 3).foreach(i => PhashStore.append(
       corpusDf.filter(col("doc_id") === (10L + i)), dir, s"day$i"))
-    assert(StoreMaintenance.maintainPhash(spark, dir, maxIngests = 2),
+    assert(StoreMaintenance.maintain(PhashStore, spark, dir, maxIngests = 2),
       "4 ingests past a cap of 2 must compact")
     assert(PhashStore.stats(spark, dir).head().getAs[Long]("n_ingests") == 1L)
-    val rec = StoreMaintenance.recommendPhash(spark, dir,
+    val rec = StoreMaintenance.recommend(PhashStore, spark, dir,
       maxIngests = 2).head()
     assert(rec.getString(rec.fieldIndex("recommendation")) == "ok")
   }

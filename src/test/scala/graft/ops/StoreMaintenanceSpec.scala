@@ -200,15 +200,15 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     def stat(name: String): Long =
       IvfIndex.stats(spark, dir).select(col(name)).head.getLong(0)
     val v0 = stat("version")
-    assert(!StoreMaintenance.maintainIvf(spark, dir))
+    assert(!StoreMaintenance.maintain(IvfIndex, spark, dir))
     assert(stat("version") == v0, "a healthy store must not be rewritten")
     // retract >10% of the corpus
     val n = e.count()
     IvfIndex.delete(sp.range(0, n / 5).select(col("id").as("vec_id")), dir)
-    assert(StoreMaintenance.maintainIvf(spark, dir))
+    assert(StoreMaintenance.maintain(IvfIndex, spark, dir))
     assert(stat("version") > v0)
     assert(stat("n_tombstoned") == 0 && stat("n_vectors") == n - n / 5)
-    assert(!StoreMaintenance.maintainIvf(spark, dir),
+    assert(!StoreMaintenance.maintain(IvfIndex, spark, dir),
       "a freshly compacted store must decide no-op")
   }
 
@@ -246,7 +246,8 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     def rec(dir: String,
         corpus: Option[org.apache.spark.sql.DataFrame] = None,
         margin: Double = 0.35) = {
-      val r = StoreMaintenance.recommendIvfPq(spark, dir, corpus, margin)
+      val r = StoreMaintenance.recommend(IvfPqStore, spark, dir, corpus,
+        margin)
         .head()
       (r.getString(0), r.getString(1))
     }
@@ -295,27 +296,27 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     val pqDir = tmpDir("recpq")
     try {
       PqStore.save(e, pqDir)
-      val r = StoreMaintenance.recommendPq(spark, pqDir,
+      val r = StoreMaintenance.recommend(PqStore, spark, pqDir,
         corpus = Some(e)).head()
       assert(r.getString(0) == "ok", r.toString)
       // degraded PQ geometry fires the gap trigger here too
       val badPq = tmpDir("recpqbad")
       PqStore.save(e, badPq, m = 2, kCodes = 2)
-      val rb = StoreMaintenance.recommendPq(spark, badPq,
+      val rb = StoreMaintenance.recommend(PqStore, spark, badPq,
         margin = 0.05).head()
       assert(rb.getString(0) == "rebuild" &&
         rb.getString(1).contains("gap"), rb.toString)
     } finally Pq.clearCodebookCache()
     val ivfDir = tmpDir("recivf")
     IvfIndex.save(e, ivfDir, nCells = 4)
-    assert(StoreMaintenance.recommendIvf(spark, ivfDir,
+    assert(StoreMaintenance.recommend(IvfIndex, spark, ivfDir,
       corpus = Some(e)).head().getString(0) == "ok")
     val docs = graft.engine.Tables
       .table(spark, "/root/testdata/sf0.001", "documents")
     val dedupDir = tmpDir("recdedup")
     DedupStore.save(docs, dedupDir)
     Dedup.clearShingleCache()
-    assert(StoreMaintenance.recommendDedup(spark, dedupDir,
+    assert(StoreMaintenance.recommend(DedupStore, spark, dedupDir,
       corpus = Some(docs)).head().getString(0) == "ok")
   }
 
