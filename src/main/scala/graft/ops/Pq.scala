@@ -56,8 +56,8 @@ object Pq {
     * the `Similarity.quantizerFor` pattern: repeated queries over one
     * corpus train the m subspace codebooks once.
     */
-  private val codebooks = new BoundedMemo[(Int, Int, Int, Int, Int), Codebook](
-    capacity = 32)
+  private val codebooks =
+    new BoundedMemo[(Int, Int, Int, Int, Int, Long), Codebook](capacity = 32)
 
   private[ops] def codebookCacheSize: Int = codebooks.size
 
@@ -85,6 +85,124 @@ object Pq {
     */
   private val FitScale = 1L << 30
 
+  /** The driver-fit budget of both model fits (this codebook and
+    * [[Similarity.quantizerFor]]'s coarse quantizer), in doubles: a
+    * training sample of n vectors of dimension dim is fitted on the
+    * driver when n·dim ≤ this (driver memory, 32 MB of vectors) and
+    * n·k·dim ≤ 32× this (2²⁷ multiply-adds per Lloyd iteration).
+    * Past it the distributed loop runs unchanged — an automatic
+    * degrade, not a refusal (the `Dedup.MaxDriverEdges` pattern).
+    * Why the driver path exists: every distributed Lloyd iteration is
+    * a groupBy + collect, two whole Spark jobs under AQE, so on a
+    * training sample of a few hundred to a few thousand vectors the
+    * fit is pure scheduler overhead (~0.5 s per iteration in a 4-core
+    * local session, for well under a millisecond of arithmetic).
+    */
+  private[ops] val DriverFitBound: Long = 1L << 22
+
+  /** Rows of the first bounded probe: a sample of at most this many
+    * vectors of at most `bound / FirstProbeRows` dims (4,096 at the
+    * default bound) comes back in ONE collect; a larger one is probed
+    * a second time at the row cap its observed dimension allows.
+    */
+  private val FirstProbeRows = 1 << 10
+
+  /** One training-sample row as the driver fits read it: the raw id
+    * and its xxhash64 (the fits' two orders), the vector length, the
+    * two rejection flags, and the vector as doubles (null elements
+    * read as 0 — such a vector is rejected before use — and null when
+    * the row is longer than the probe's per-row cap).
+    */
+  private[ops] final case class TrainRow(id: Long, h: Long, size: Int,
+      nulls: Boolean, nonFinite: Boolean, v: Array[Double])
+
+  private def nullsOf(v: Column): Column = v.isNull || exists(v, _.isNull)
+
+  private def nonFiniteOf(v: Column): Column = coalesce(exists(v, x =>
+    isnan(x) || abs(x) === lit(Double.PositiveInfinity)), lit(false))
+
+  /** The whole (vec_id, v) training sample on the driver, vec_id-
+    * ordered, when a k-centroid fit of it stays inside the driver
+    * budget `bound` ([[DriverFitBound]] outside specs) — else None:
+    * take the distributed loop. As in `Dedup.clusterLabelsOf`, a
+    * bounded `head(cap + 1)` either returns the COMPLETE sample or
+    * proves the cap exceeded. The first probe caps each row's payload
+    * too, so the probe itself stays inside the budget whatever the
+    * dimension.
+    */
+  private[ops] def driverSample(sample: DataFrame, k: Int,
+      bound: Long): Option[Array[TrainRow]] = {
+    def probe(rows: Int, maxDim: Long): Array[TrainRow] = sample
+      .select(col("vec_id").cast("long").as("id"),
+        xxhash64(col("vec_id")).as("h"),
+        coalesce(size(col("v")), lit(-1)).as("size"),
+        nullsOf(col("v")).as("nulls"), nonFiniteOf(col("v")).as("nonFinite"),
+        when(size(col("v")) <= maxDim, transform(col("v"),
+          x => coalesce(x.cast("double"), lit(0.0d)))).as("v"))
+      .as(org.apache.spark.sql.Encoders.product[TrainRow])
+      .head(rows + 1)
+    def complete(rs: Array[TrainRow], cap: Long): Boolean =
+      rs.length <= cap && rs.forall(r => r.v != null || r.size < 0)
+    val first = probe(FirstProbeRows, bound / FirstProbeRows)
+    val rows =
+      if (complete(first, FirstProbeRows)) first
+      else {
+        val dim = math.max(1L, first.map(_.size.toLong).max)
+        val cap = math.min(bound / dim, (bound << 5) / (math.max(k, 1) * dim))
+        if (cap < first.length) return None
+        val all = probe(math.min(cap, Int.MaxValue - 1L).toInt, dim)
+        if (!complete(all, cap)) return None
+        all
+      }
+    val dim = if (rows.isEmpty) 0L else rows.map(_.size.toLong).max
+    val n = rows.length.toLong
+    if (n * dim > bound || n * k * dim > (bound << 5)) None
+    else Some(rows.sortBy(_.id))
+  }
+
+  /** What the fits check before training, from either regime: row
+    * count, dimension range and the lowest vec_id holding a null or a
+    * non-finite component.
+    */
+  private[ops] final case class SampleStats(n: Long, dimLo: Int, dim: Int,
+      nullId: Option[Long], nonFiniteId: Option[Long]) {
+
+    /** The checks both fits share, in one order, so every refusal
+      * reads the same in both regimes; returns the common dimension.
+      * A null or non-finite component would otherwise surface deep in
+      * the distributed loop (a null code from `pq_encode`, or a NaN
+      * distance leaving the argmin at −1) as an unexplained failure.
+      */
+    def requireTrainable(tag: String, model: String): Int = {
+      require(n > 0, s"$tag: cannot train a $model on an empty embeddings sample")
+      val bad = (nullId ++ nonFiniteId).minOption
+      require(bad.isEmpty, s"$tag: training vector vec_id=${bad.get} has " +
+        (if (nullId == bad) "a null" else "a non-finite") + " component")
+      require(dimLo == dim,
+        s"$tag: corpus has mixed embedding dimensions ($dimLo..$dim)")
+      dim
+    }
+  }
+
+  private[ops] def statsOf(rows: Array[TrainRow]): SampleStats =
+    SampleStats(rows.length,
+      if (rows.isEmpty) 0 else rows.map(_.size).min,
+      if (rows.isEmpty) 0 else rows.map(_.size).max,
+      rows.find(_.nulls).map(_.id), rows.find(_.nonFinite).map(_.id))
+
+  /** [[statsOf]] as one aggregate job over a persisted sample — the
+    * distributed regime's geometry probe.
+    */
+  private[ops] def statsOf(sample: DataFrame): SampleStats = {
+    val id = col("vec_id").cast("long")
+    val r = sample.agg(count(lit(1)), min(size(col("v"))),
+      max(size(col("v"))), min(when(nullsOf(col("v")), id)),
+      min(when(nonFiniteOf(col("v")), id))).head()
+    def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    SampleStats(r.getLong(0), if (r.isNullAt(1)) 0 else r.getInt(1),
+      if (r.isNullAt(2)) 0 else r.getInt(2), opt(3), opt(4))
+  }
+
   /** Train (or reuse) the m per-subspace codebooks on the
     * deterministic hash-mod sample — a DETERMINISTIC,
     * PARTITION-INDEPENDENT Lloyd loop over ALL m subspaces at once:
@@ -92,32 +210,38 @@ object Pq {
     *  - Seeds: the k lowest-vec_id vectors' subvectors per subspace
     *    (Forgy init on the id order — ids are uncorrelated with
     *    embedding geometry, so this is a deterministic random sample).
-    *  - Assignment: the SAME codegen'd `pq_encode` argmin the corpus
-    *    encode uses (ties to the lower code), all m subspaces of a
-    *    vector in one expression.
-    *  - Update: per-(subspace, code, dim) mean via ONE groupBy —
-    *    empty codes keep their centroid. [[FitIters]] iterations.
+    *  - Assignment: the `pq_encode` argmin the corpus encode uses
+    *    (ties to the lower code), all m subspaces of a vector at once.
+    *  - Update: per-(subspace, code, dim) mean — empty codes keep
+    *    their centroid. [[FitIters]] iterations.
     *    The mean is EXACTLY layout-independent: each component is
     *    fixed-point-quantized (×2³⁰, one deterministic per-value
-    *    rounding) and summed as decimal(38,0) — an exact, commutative
-    *    integer sum that no partition re-layout can move by an ulp —
-    *    then divided once on the way out. A plain double avg() sums
+    *    rounding) and summed as an exact integer — a commutative sum
+    *    that no partition re-layout can move by an ulp — then divided
+    *    once on the way out. A plain double avg() sums
     *    in partition order, and an ulp drift there can flip an argmin
     *    tie downstream: the same (much smaller) failure class the
     *    kmeans|| replacement was motivated by. Cost: ~1e-9 per-mean
     *    quantization error, irrelevant at centroid scale.
     *
+    * Two regimes, bit-identical by construction ([[driverLloyd]]):
+    * a sample inside [[DriverFitBound]] is fitted on the driver from
+    * the one bounded probe ([[driverSample]]) — one collect, or two
+    * past [[FirstProbeRows]] rows; a larger one is persisted and
+    * fitted by the distributed loop: one geometry aggregate, one seed
+    * collect and [[FitIters]] groupBy-collect iterations.
+    *
     * This replaced m=16 concurrent MLlib KMeans fits in round 14 for
     * two measured reasons. COST: the MLlib path was ~430 whole Spark
     * jobs (per-fit kmeans|| init passes + Lloyd steps), pure
     * scheduling overhead at any sample size a driver schedules —
-    * the r13 driver's 132 s cold fit; this loop is 1 seed job +
-    * FitIters aggregate jobs for the whole codebook (measured 21 s →
-    * ~3 s at sf0.1). STABILITY: kmeans||'s init samples PER PARTITION,
-    * so the codebook — and with it the SDC covering margin — moved
-    * with the data layout (a 1-partition re-layout pushed the sf0.001
-    * worst exact−SDC gap 0.30 → 0.37, past the 0.35 margin); seeds by
-    * id order make the codebook a function of the DATA alone.
+    * the r13 driver's 132 s cold fit (measured 21 s → ~3 s at sf0.1
+    * with the distributed loop). STABILITY: kmeans||'s init samples
+    * PER PARTITION, so the codebook — and with it the SDC covering
+    * margin — moved with the data layout (a 1-partition re-layout
+    * pushed the sf0.001 worst exact−SDC gap 0.30 → 0.37, past the
+    * 0.35 margin); seeds by id order make the codebook a function of
+    * the DATA alone.
     * (Cheapening the fit itself was also measured recall-unsafe:
     * maxIter=10 under MLlib moved sf0.1's gap 0.32 → 0.38, trainMod=4
     * moved sf0.01 to 0.37 — codebook quality is the binding
@@ -129,34 +253,53 @@ object Pq {
     * corpus collect.
     */
   private def codebookFor(e: DataFrame, m: Int, k: Int,
-      trainMod: Int): Codebook = {
+      trainMod: Int, bound: Long = DriverFitBound): Codebook = {
     val sample = e.select(col("vec_id"), col("v"))
       .filter(pmod(xxhash64(col("vec_id")), lit(trainMod)) === 0)
     val key = (sample.queryExecution.optimizedPlan.semanticHash(),
       java.util.Arrays.hashCode(e.inputFiles.asInstanceOf[Array[AnyRef]]),
-      m, k, trainMod)
-    codebooks.getOrElseUpdate(key) {
+      m, k, trainMod, bound)
+    codebooks.getOrElseUpdate(key)(fitCodebook(sample, m, k, bound))
+  }
+
+  /** [[codebookFor]]'s fit, unmemoized: the driver regime when the
+    * sample fits `bound` and its fixed-point sums fit a Long, else the
+    * distributed one. The subspace geometry comes from the DATA, not
+    * a constant: a corpus of any dimension trains a codebook whose
+    * flat length agrees with its vectors, and an empty corpus, a
+    * MIXED-dimension corpus, or an m that doesn't divide the observed
+    * dim all fail HERE with a real error instead of pq_encode's
+    * geometry check silently nulling every code downstream.
+    */
+  private[ops] def fitCodebook(sample: DataFrame, m: Int, k: Int,
+      bound: Long): Codebook = {
+    def subDimOf(st: SampleStats): Int = {
+      val dim = st.requireTrainable("pq", "codebook")
+      require(dim > 0 && dim % m == 0,
+        s"pq: corpus dimension $dim is not divisible into m=$m subspaces")
+      dim / m
+    }
+    // Forgy seeds: the k lowest-vec_id vectors, sliced per subspace
+    def cb0Of(seeds: Array[Array[Double]], subDim: Int) = {
+      require(seeds.length >= k, s"pq: need at least k=$k vectors to " +
+        s"train a codebook, got ${seeds.length}")
+      Array.tabulate(m, k)((s, c) => seeds(c).slice(s * subDim, (s + 1) * subDim))
+    }
+    driverSample(sample, k, bound).flatMap { rows =>
+      val subDim = subDimOf(statsOf(rows))
+      val cb0 = cb0Of(rows.take(k).map(_.v), subDim)
+      driverLloyd(rows.map(_.v), m, k, subDim, cb0, FitIters)
+        .map(Codebook(m, k, subDim, _))
+    }.getOrElse {
       val persisted = sample.persist()
       try {
-        // the subspace geometry comes from the DATA, not a constant: a
-        // corpus of any dimension trains a codebook whose flat length
-        // agrees with its vectors, and an empty corpus, a MIXED-
-        // dimension corpus, or an m that doesn't divide the observed
-        // dim all fail HERE with a real error instead of pq_encode's
-        // geometry check silently nulling every code downstream. One
-        // tiny aggregate job, paid only on a memo miss — a single-row
-        // probe would miss heterogeneous dimensions entirely.
-        val dims = persisted.agg(min(size(col("v"))).as("lo"),
-          max(size(col("v"))).as("hi")).head()
-        require(!dims.isNullAt(0),
-          "pq: cannot train a codebook on an empty embeddings sample")
-        val (dimLo, dim) = (dims.getInt(0), dims.getInt(1))
-        require(dimLo == dim,
-          s"pq: corpus has mixed embedding dimensions ($dimLo..$dim)")
-        require(dim > 0 && dim % m == 0,
-          s"pq: corpus dimension $dim is not divisible into m=$m subspaces")
-        val subDim = dim / m
-        Codebook(m, k, subDim, codebookFit(persisted, m, k, subDim))
+        val subDim = subDimOf(statsOf(persisted))
+        val vd = transform(col("v"), x => x.cast("double"))
+        val seeds = persisted.select(col("vec_id"), vd.as("vd"))
+          .orderBy(col("vec_id")).limit(k).collect()
+          .map(_.getSeq[Double](1).toArray)
+        Codebook(m, k, subDim, lloydIters(persisted, m, k, subDim,
+          cb0Of(seeds, subDim), FitIters))
       } finally { persisted.unpersist(); () }
     }
   }
@@ -166,46 +309,20 @@ object Pq {
     * so a store build right after an in-session query reuses the fit).
     */
   private[ops] def codebookForStore(embeddings: DataFrame, m: Int,
-      kCodes: Int, trainMod: Int): Codebook =
+      kCodes: Int, trainMod: Int, bound: Long = DriverFitBound): Codebook =
     codebookFor(Spread(embeddings)
-      .select(col("vec_id"), col("embedding").as("v")), m, kCodes, trainMod)
+      .select(col("vec_id"), col("embedding").as("v")), m, kCodes, trainMod,
+      bound)
 
-  /** The deterministic Lloyd loop of [[codebookFor]] over a persisted
-    * (vec_id, v) sample. Shared with [[Similarity.quantizerFor]]: the
-    * float IVF coarse quantizer is exactly this fit at m = 1,
-    * k = nCells, subDim = dim — one Lloyd implementation for both
-    * quantizers, so the cost/stability properties measured here
-    * (data-keyed seeds, O(10–25) scheduler jobs) hold for the whole
-    * family.
-    *
-    * Seeding is Forgy on the k lowest-vec_id sample vectors — one
-    * job, and with m subspaces per vector the k seeds are effectively
-    * m·k independent draws, so the measured SDC covering margins hold
-    * (`Prof pqgap`). (The m = 1 coarse quantizer is MORE
-    * init-sensitive — its whole geometry rides one k-centroid
-    * solution — so [[Similarity.quantizerFor]] seeds [[lloydIters]]
-    * with a driver-side multi-restart kmeans++ instead.)
-    */
-  private[ops] def codebookFit(sample: DataFrame, m: Int, k: Int,
-      subDim: Int): Array[Array[Array[Double]]] = {
-    val vd = transform(col("v"), x => x.cast("double"))
-    val seedRows = sample.select(col("vec_id"), vd.as("vd"))
-      .orderBy(col("vec_id")).limit(k).collect()
-      .map(_.getSeq[Double](1).toArray)
-    require(seedRows.length >= k,
-      s"pq: need at least k=$k vectors to train a codebook, " +
-        s"got ${seedRows.length}")
-    val cb0: Array[Array[Array[Double]]] = Array.tabulate(m, k) { (s, c) =>
-      seedRows(c).slice(s * subDim, (s + 1) * subDim)
-    }
-    lloydIters(sample, m, k, subDim, cb0, FitIters)
-  }
-
-  /** The distributed fixed-point Lloyd loop of [[codebookFit]] from an
-    * explicit initial codebook — shared with the coarse-quantizer fit
-    * ([[Similarity.quantizerFor]] at m = 1), which seeds it
-    * differently but polishes through this SAME body, so the
-    * layout-independence and job-count properties are measured once.
+  /** The distributed fixed-point Lloyd loop from an explicit initial
+    * codebook — shared with the coarse-quantizer fit
+    * ([[Similarity.quantizerFor]] at m = 1, k = nCells, subDim = dim),
+    * which seeds it differently but polishes through this SAME body:
+    * one Lloyd implementation for both quantizers, so the
+    * layout-independence properties are measured once. Each
+    * iteration is one groupBy + collect (two jobs under AQE); the
+    * driver regime [[driverLloyd]] computes the same centroids bit for
+    * bit.
     */
   private[ops] def lloydIters(sample: DataFrame, m: Int, k: Int,
       subDim: Int, cb0: Array[Array[Array[Double]]],
@@ -238,6 +355,89 @@ object Pq {
       cb = next
     }
     cb
+  }
+
+  /** [[lloydIters]] on a driver-resident sample, bit-identical to it:
+    *  - assignment is `PqEncode`'s loop — (x−c)² summed left to right,
+    *    strict `<`, ties to the lower code;
+    *  - each component is quantized ONCE as the distributed cast does
+    *    it, through Spark's own [[org.apache.spark.sql.types.Decimal]]
+    *    (`Decimal(x·2³⁰)` rounded to scale 0), and summed exactly as a
+    *    Long — the decimal(38,0) sum's value;
+    *  - a mean is `Decimal(sum).toDouble / n / 2³⁰`, the distributed
+    *    aggregate's three roundings in its order.
+    * None when a quantized component or a sum leaves the Long range
+    * (|x| ≳ 2³³, far outside embedding geometry): the caller then
+    * takes the distributed loop, whose decimal sums still hold.
+    */
+  private[ops] def driverLloyd(vecs: Array[Array[Double]], m: Int, k: Int,
+      subDim: Int, cb0: Array[Array[Array[Double]]],
+      iters: Int): Option[Array[Array[Array[Double]]]] = {
+    import org.apache.spark.sql.types.Decimal
+    val dim = m * subDim
+    val fixed = new Array[Long](vecs.length * dim)
+    var i = 0
+    while (i < vecs.length) {
+      var j = 0
+      while (j < dim) {
+        val y = vecs(i)(j) * FitScale
+        if (!(math.abs(y) < 9.0e18)) return None
+        val d = Decimal(y)
+        d.changePrecision(38, 0)
+        fixed(i * dim + j) = d.toLong
+        j += 1
+      }
+      i += 1
+    }
+    val sums = new Array[Long](m * k * subDim)
+    val counts = new Array[Long](m * k)
+    var cb = cb0
+    try {
+      for (_ <- 1 to iters) {
+        java.util.Arrays.fill(sums, 0L)
+        java.util.Arrays.fill(counts, 0L)
+        i = 0
+        while (i < vecs.length) {
+          val v = vecs(i)
+          var s = 0
+          while (s < m) {
+            var best = -1
+            var bestD = Double.MaxValue
+            var c = 0
+            while (c < k) {
+              val cent = cb(s)(c)
+              var d = 0.0d
+              var j = 0
+              while (j < subDim) {
+                val diff = v(s * subDim + j) - cent(j)
+                d += diff * diff
+                j += 1
+              }
+              if (d < bestD) { bestD = d; best = c }
+              c += 1
+            }
+            counts(s * k + best) += 1
+            var j = 0
+            while (j < subDim) {
+              val at = (s * k + best) * subDim + j
+              sums(at) = Math.addExact(sums(at), fixed(i * dim + s * subDim + j))
+              j += 1
+            }
+            s += 1
+          }
+          i += 1
+        }
+        val prev = cb
+        cb = Array.tabulate(m, k) { (s, c) =>
+          val n = counts(s * k + c)
+          if (n == 0) prev(s)(c)
+          else Array.tabulate(subDim) { j =>
+            Decimal(sums((s * k + c) * subDim + j)).toDouble / n / FitScale
+          }
+        }
+      }
+      Some(cb)
+    } catch { case _: ArithmeticException => None }
   }
 
   /** The codebook as a nested plan literal: [m][k][subDim] doubles.

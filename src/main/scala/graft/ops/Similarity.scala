@@ -165,11 +165,11 @@ object Similarity {
     * long sessions over many corpora can't grow it without bound.
     */
   private val quantizers =
-    new BoundedMemo[(Int, Int, Int), Coarse](capacity = 32)
+    new BoundedMemo[(Int, Int, Int, Long), Coarse](capacity = 32)
 
-  /** Distributed polish iterations of the coarse fit (the shared
-    * [[Pq.lloydIters]] body over the FULL hash-mod training sample,
-    * from the driver-side init below).
+  /** Polish iterations of the coarse fit (the shared fixed-point
+    * Lloyd over the FULL hash-mod training sample, from the
+    * driver-side init below).
     */
   private val CoarsePolishIters = 10
 
@@ -308,20 +308,23 @@ object Similarity {
   /** Fit (or reuse) the coarse quantizer for a corpus, fully
     * DETERMINISTIC and layout-independent: driver-side multi-restart
     * kmeans++ on the bounded hash-ordered sub-sample ([[kppBestOf]]),
-    * polished by the shared distributed fixed-point Lloyd
-    * ([[Pq.lloydIters]] at m = 1, assignment via the same codegen'd
-    * argmin the corpus encode uses, exact fixed-point means) over the
-    * full hash-mod SPHERICAL sample ([[unitOf]]), memoized per
-    * (corpus, nCells).
+    * polished by the shared fixed-point Lloyd at m = 1 (assignment by
+    * the same argmin the corpus encode uses, exact fixed-point means)
+    * over the full hash-mod SPHERICAL sample ([[unitOf]]), memoized
+    * per (corpus, nCells). The polish runs on the driver
+    * ([[Pq.driverLloyd]]) when the sample fits [[Pq.DriverFitBound]],
+    * else distributed ([[Pq.lloydIters]]) — bit-identical centroids.
     *
     * This replaced the MLlib `KMeans` fit in round 15 for the same
     * two measured reasons the PQ codebook dropped it in round 14
-    * (`Pq.codebookFit`'s scaladoc): COST — kmeans||'s init passes +
+    * (`Pq.codebookFor`'s scaladoc): COST — kmeans||'s init passes +
     * per-fit Lloyd steps were ~dozens of scheduler jobs and the
     * single largest cold event left in the driver bench (23–28 s
     * pass-1 on the embedding-ANN legs, ~51 s of the artifact's
-    * cold-over-warm excess); this fit is 2 driver collects (dims
-    * probe + init sub-sample) + CoarsePolishIters aggregate jobs.
+    * cold-over-warm excess); under the driver bound this fit is the
+    * one bounded probe collect ([[Pq.driverSample]]), and past it a
+    * geometry aggregate, the init sub-sample collect and
+    * CoarsePolishIters groupBy-collect iterations.
     * STABILITY — kmeans|| samples its init PER PARTITION, so the
     * centroids (and the covering measurement behind
     * `x_knn_ivf_recall`) moved with the data layout; the hash-ordered
@@ -340,74 +343,80 @@ object Similarity {
     * of one per family.
     */
   private def quantizerFor(e: DataFrame, nCells: Int,
-      trainMod: Int): Coarse = {
+      trainMod: Int, bound: Long = Pq.DriverFitBound): Coarse = {
     val trainSample = e.select(col("vec_id"), col("v"))
       .filter(pmod(xxhash64(col("vec_id")), lit(trainMod)) === 0)
     val key = (trainSample.queryExecution.optimizedPlan.semanticHash(),
       java.util.Arrays.hashCode(e.inputFiles.asInstanceOf[Array[AnyRef]]),
-      nCells)
-    quantizers.getOrElseUpdate(key) {
-      // spherical training: the quantizer lives in the SAME unit-
-      // sphere geometry assignment and probing use (see unitOf)
-      val persisted = trainSample
-        .select(col("vec_id"), unitOf(col("v")).as("v")).persist()
+      nCells, bound)
+    quantizers.getOrElseUpdate(key)(fitQuantizer(trainSample, nCells, bound))
+  }
+
+  /** [[quantizerFor]]'s fit, unmemoized, over a (vec_id, v) training
+    * sample: the driver regime when the sample fits `bound` and its
+    * fixed-point sums fit a Long ([[Pq.driverSample]],
+    * [[Pq.driverLloyd]]), else the distributed one — the same
+    * centroids to the bit either way.
+    */
+  private[ops] def fitQuantizer(trainSample: DataFrame, nCells: Int,
+      bound: Long): Coarse = {
+    // spherical training: the quantizer lives in the SAME unit-
+    // sphere geometry assignment and probing use (see unitOf)
+    val unit = trainSample.select(col("vec_id"), unitOf(col("v")).as("v"))
+    // loud minimum-sample guard (the Pq.fitCodebook convention),
+    // on DISTINCT sample points: duplicate seeds — whether from a
+    // short sample or from duplicated corpus vectors (common after
+    // unitOf collapses colinear embeddings) — starve their cells
+    // permanently under the strict-< argmin (ties to the lower
+    // cell), so the store would silently commit fewer effective
+    // cells than requested, the exact silent-knob class the margin
+    // certification refuses. Dedup preserves hash order, so on a
+    // duplicate-free corpus (the fixtures, any real embedding set)
+    // the init — and therefore the pinned covering gates — is
+    // bit-identical to the pre-guard fit.
+    def requireCover(got: Int): Unit = require(got >= nCells,
+      s"ivf: the training sample has $got distinct vector(s) but " +
+        s"nCells=$nCells — duplicate seeds would leave cells " +
+        "permanently empty. Lower trainMod (denser sample) or " +
+        "lower nCells")
+    // Small k → multi-restart kmeans++ on the hash-ordered
+    // sub-sample (init luck is decisive there — see KppMaxCells);
+    // large k → the k lowest-hash sample vectors as spread Forgy
+    // seeds (a uniform random k-draw, deterministic), so the
+    // driver cost stays O(k·dim) however many cells √n implies —
+    // with a bounded margin beyond nCells (still O(k·dim) driver
+    // state) so duplicates can be dropped and replaced by the next
+    // distinct hash-ordered vectors
+    val initRows =
+      if (nCells <= KppMaxCells) CoarseInitSample
+      else math.max(CoarseInitSample, 2 * nCells)
+    // `hashOrdered`: the sample's lowest-(xxhash64, vec_id) vectors
+    def initOf(hashOrdered: Iterator[Array[Double]]): Array[Array[Double]] = {
+      val seen = scala.collection.mutable.LinkedHashSet.empty[Seq[Double]]
+      hashOrdered.take(initRows).foreach(v => seen += v.toVector)
+      val distinct = seen.iterator.map(_.toArray).toArray
+      requireCover(distinct.length)
+      if (nCells <= KppMaxCells) kppBestOf(distinct, nCells)
+      else distinct.take(nCells)
+    }
+    Pq.driverSample(unit, nCells, bound).flatMap { rows =>
+      val dim = Pq.statsOf(rows).requireTrainable("ivf", "coarse quantizer")
+      val init = initOf(
+        rows.sortBy(r => (r.h, r.id)).iterator.map(_.v))
+      Pq.driverLloyd(rows.map(_.v), 1, nCells, dim, Array(init),
+        CoarsePolishIters).map(cb => Coarse(cb(0)))
+    }.getOrElse {
+      val persisted = unit.persist()
       try {
-        // loud geometry check, the codebookFor convention: an empty or
-        // mixed-dimension corpus fails HERE with a real error instead
-        // of pq_encode nulling every cell assignment downstream
-        val dims = persisted.agg(min(size(col("v"))).as("lo"),
-          max(size(col("v"))).as("hi")).head()
-        require(!dims.isNullAt(0),
-          "ivf: cannot train a coarse quantizer on an empty embeddings sample")
-        val (dimLo, dim) = (dims.getInt(0), dims.getInt(1))
-        require(dimLo == dim,
-          s"ivf: corpus has mixed embedding dimensions ($dimLo..$dim)")
+        val dim = Pq.statsOf(persisted)
+          .requireTrainable("ivf", "coarse quantizer")
         // init: driver-side (one bounded collect job); polish: the
-        // shared distributed fixed-point Lloyd over the FULL sample.
-        // Small k → multi-restart kmeans++ on the hash-ordered
-        // sub-sample (init luck is decisive there — see KppMaxCells);
-        // large k → the k lowest-hash sample vectors as spread Forgy
-        // seeds (a uniform random k-draw, deterministic), so the
-        // driver cost stays O(k·dim) however many cells √n implies
-        // loud minimum-sample guard (the Pq.codebookFit convention),
-        // on DISTINCT sample points: duplicate seeds — whether from a
-        // short sample or from duplicated corpus vectors (common after
-        // unitOf collapses colinear embeddings) — starve their cells
-        // permanently under the strict-< argmin (ties to the lower
-        // cell), so the store would silently commit fewer effective
-        // cells than requested, the exact silent-knob class the margin
-        // certification refuses. Dedup preserves hash order, so on a
-        // duplicate-free corpus (the fixtures, any real embedding set)
-        // the init — and therefore the pinned covering gates — is
-        // bit-identical to the pre-guard fit.
-        def requireCover(got: Int): Unit = require(got >= nCells,
-          s"ivf: the training sample has $got distinct vector(s) but " +
-            s"nCells=$nCells — duplicate seeds would leave cells " +
-            "permanently empty. Lower trainMod (denser sample) or " +
-            "lower nCells")
-        def sample(limit: Int): Array[Array[Double]] = {
-          val seen = scala.collection.mutable.LinkedHashSet.empty[Seq[Double]]
-          persisted
-            .select(transform(col("v"), x => x.cast("double")).as("vd"),
-              xxhash64(col("vec_id")).as("h"), col("vec_id"))
-            .orderBy(col("h"), col("vec_id")).limit(limit)
-            .collect()
-            .foreach(r => seen += r.getSeq[Double](0))
-          seen.iterator.map(_.toArray).toArray
-        }
-        val init =
-          if (nCells <= KppMaxCells) {
-            val sub = sample(CoarseInitSample)
-            requireCover(sub.length)
-            kppBestOf(sub, nCells)
-          } else {
-            // collect a bounded margin beyond nCells (still O(k·dim)
-            // driver state) so duplicates can be dropped and replaced
-            // by the next distinct hash-ordered vectors
-            val distinct = sample(math.max(CoarseInitSample, 2 * nCells))
-            requireCover(distinct.length)
-            distinct.take(nCells)
-          }
+        // shared distributed fixed-point Lloyd over the FULL sample
+        val init = initOf(persisted
+          .select(transform(col("v"), x => x.cast("double")).as("vd"),
+            xxhash64(col("vec_id")).as("h"), col("vec_id"))
+          .orderBy(col("h"), col("vec_id")).limit(initRows)
+          .collect().iterator.map(_.getSeq[Double](0).toArray))
         Coarse(Pq.lloydIters(persisted, 1, nCells, dim,
           Array(init), CoarsePolishIters)(0))
       } finally { persisted.unpersist(); () }
@@ -439,9 +448,9 @@ object Similarity {
     * queries bit-identically to the in-session IVF path.
     */
   private[ops] def assignedWithModel(embeddings: DataFrame, nCells: Int,
-      trainMod: Int): (DataFrame, Coarse) = {
+      trainMod: Int, bound: Long = Pq.DriverFitBound): (DataFrame, Coarse) = {
     val e = withNorm(embeddings)
-    val model = quantizerFor(e, nCells, trainMod)
+    val model = quantizerFor(e, nCells, trainMod, bound)
     (e.select(col("vec_id"), col("v"), col("norm"),
       cellOf(col("v"), model).as("cell")), model)
   }
