@@ -31,6 +31,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (the verified near-dup pair set that an earlier leg or pass
   * computed), not the cost of those queries run alone. Compare them
   * across rounds only as memo-hit legs.
+  *
+  * Warm legs now reuse more of the generated classes earlier passes
+  * compiled: [[graft.engine.Sessions.configure]] sizes Spark's codegen
+  * cache to 512 classes (Spark's default is 100). One pass over every
+  * leg still needs more than 512, so part of each leg's classes is
+  * evicted before its next pass: at sf0.001 on 4 vCPUs a warm pass
+  * compiled ~1,420 classes, against ~2,000 at the default. A
+  * `tools/bench_diff.py` comparison against an artifact recorded
+  * before that (`BENCH_r20.json` and earlier) therefore moves warm
+  * medians for a reason outside the operators.
   */
 object Bench {
 

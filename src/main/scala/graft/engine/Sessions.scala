@@ -7,6 +7,21 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Capacity of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One refit of
+    * the IVF kNN, PQ near-dup, n-gram prefix dedup and PQ store rebuild
+    * stages compiles ~165 distinct classes, so at 100 the LRU evicts
+    * every class before its plan runs again and each warm run
+    * recompiles them all (and restarts them cold in the JIT); 512 is
+    * ~3x that working set. Worst-case heap: 512 classes x ~90 KB
+    * ≈ 45 MB. A static conf: Spark reads it once per JVM, from the
+    * session active when the first class is compiled, so it takes
+    * effect only when graft builds the JVM's first session.
+    */
+  private[graft] val CodegenCacheEntries = 512
+
   /** Apply graft's standard config to any builder. */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -20,14 +35,39 @@ object Sessions {
       // native function registration (rolling_hash et al.)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // The status store keeps the last 1,000 SQL executions (plan
+      // description and graph each), jobs, stages and tasks for a UI
+      // that is off and that graft never reads; a scheduled session
+      // would grow it run over run. Bounded, it costs less heap than
+      // the larger codegen cache adds.
+      .config("spark.sql.ui.retainedExecutions", "10")
+      .config("spark.ui.retainedJobs", "10")
+      .config("spark.ui.retainedStages", "10")
+      .config("spark.ui.retainedTasks", "100")
 
-  def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession = {
-    val spark = configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft"),
-      shufflePartitions = cpus).getOrCreate()
+  /** The WARN to log when `getOrCreate` handed back a session whose
+    * codegen cache is smaller than graft's: a pre-existing session
+    * keeps its static confs, so [[CodegenCacheEntries]] did not apply.
+    * Pure so the check is spec-testable without a second session.
+    */
+  private[graft] def codegenCacheWarning(maxEntries: Int): Option[String] =
+    if (maxEntries >= CodegenCacheEntries) None
+    else Some(s"reusing a Spark session with spark.sql.codegen.cache.maxEntries=" +
+      s"$maxEntries < $CodegenCacheEntries: warm runs will recompile generated " +
+      "classes; set it when building the session")
+
+  private def finish(spark: SparkSession): SparkSession = {
     spark.sparkContext.setLogLevel("WARN")
+    codegenCacheWarning(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt)
+      .foreach(log.warn)
     spark
   }
+
+  def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession =
+    finish(configure(
+      SparkSession.builder().master(s"local[$cpus]").appName("graft"),
+      shufflePartitions = cpus).getOrCreate())
 
   /** Master URL for a deployment: the explicit `--master` arg wins,
     * then `SPARK_GRAFT_MASTER`, then whatever `spark.master` the
@@ -70,10 +110,8 @@ object Sessions {
   def deployment(explicitMaster: Option[String] = None,
       cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession = {
     val master = resolveMaster(explicitMaster).getOrElse(s"local[$cpus]")
-    val spark = configure(
+    finish(configure(
       SparkSession.builder().master(master).appName("graft"),
-      shufflePartitions = shufflePartitionsFor(master, cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+      shufflePartitions = shufflePartitionsFor(master, cpus)).getOrCreate())
   }
 }

@@ -35,4 +35,11 @@ class SessionsSpec extends AnyFunSuite {
     assert(Sessions.shufflePartitionsFor("local[4]", cpus = 8, env) == 4096)
   }
 
+  test("codegenCacheWarning: only a session below graft's codegen cache warns") {
+    assert(Sessions.codegenCacheWarning(Sessions.CodegenCacheEntries).isEmpty)
+    assert(Sessions.codegenCacheWarning(Sessions.CodegenCacheEntries * 2).isEmpty)
+    val warning = Sessions.codegenCacheWarning(100)
+    assert(warning.exists(w => w.contains("spark.sql.codegen.cache.maxEntries=100") &&
+      w.contains(s"< ${Sessions.CodegenCacheEntries}")), warning)
+  }
 }
