@@ -20,11 +20,13 @@ import graft.config.PipelineConfig.{Pagination, Retry, Source}
   * bodies (/root/reference/src/http/fetcher.rs:34-134,250-533).
   *
   * Spark-first design: page fetching with a KNOWN page count fans out
-  * across executors (`spark.range(...).mapPartitions`) — each task owns
-  * its own client, so a 1000-executor cluster pulls 1000 pages
-  * concurrently. Unknown-total pagination is inherently sequential
-  * (stop condition = first empty page, fetcher.rs:302-304) and runs on
-  * the driver, like the reference.
+  * across executors (`spark.range(...).mapPartitions`) in one task per
+  * core (`defaultParallelism`), each walking a contiguous page range
+  * over its own keep-alive client — so a cluster with 1000 cores pulls
+  * 1000 pages concurrently, and the load downstream writes one file per
+  * task rather than per page. Unknown-total pagination is inherently
+  * sequential (stop condition = first empty page, fetcher.rs:302-304)
+  * and runs on the driver, like the reference.
   */
 object HttpJsonSource {
 
@@ -312,9 +314,12 @@ object HttpJsonSource {
     * resolves the page count, pages 2..N are fetched in PARALLEL ON
     * EXECUTORS — the Spark-native upgrade of the reference's
     * buffer_unordered(5) — otherwise sequentially until an empty page.
-    * The first page is also returned driver-side so schema inference
-    * can run on it WITHOUT consuming (= re-fetching) the distributed
-    * rows.
+    * The fan-out cuts pages 2..N into `min(N - 1, defaultParallelism)`
+    * contiguous ranges, read when this plan is built; a failed task
+    * re-fetches its whole range. Rows come back in page order, page 1
+    * as one partition. The first page is also returned driver-side so
+    * schema inference can run on it WITHOUT consuming (= re-fetching)
+    * the distributed rows.
     */
   def fetchPageNumber(spark: SparkSession, spec: FetchSpec,
       pageParam: String, perPageParam: String, perPage: Long,
@@ -350,14 +355,20 @@ object HttpJsonSource {
       }
     }
 
-    val firstDs = spark.createDataset(firstRows)
+    // page 1 as ONE partition: a local relation otherwise spreads over
+    // up to defaultParallelism partitions, and each becomes a write
+    // task and a file downstream (coalesce(1) adds no shuffle)
+    val firstDs = spark.createDataset(firstRows).coalesce(1)
     val rows = totalPages match {
       case Some(n) if n > 1 =>
-        // Executor-parallel fan-out; one task per slice of pages, each
-        // task builds its own client (HttpClient is not serializable).
-        // range() takes the slice count directly — a repartition here
-        // would add a shuffle stage just to spread 64 longs.
-        val rest = spark.range(2, n + 1, 1, math.min(n - 1, 64).toInt)
+        // Executor-parallel fan-out: one task per core, each walking a
+        // contiguous page range over one keep-alive client
+        // (HttpClient is not serializable, so the task builds it).
+        // range() takes the slice count directly — no shuffle — and
+        // min(n - 1, ·) leaves no slice empty, so every client built
+        // serves at least one page.
+        val slices = math.min(n - 1, spark.sparkContext.defaultParallelism.toLong)
+        val rest = spark.range(2, n + 1, 1, slices.toInt)
           .mapPartitions { pages =>
             val c = buildClient(spec)
             pages.flatMap(p => fetchPage(c, spec,
@@ -372,8 +383,8 @@ object HttpJsonSource {
             .map(p => fetchPage(client, spec,
               Seq(pageParam -> p.toString, perPageParam -> perPage.toString)))
             .takeWhile(_.nonEmpty)
-            .flatten.toSeq
-          firstDs.union(spark.createDataset(rest))
+            .flatten
+          spark.createDataset(firstRows ++ rest)
         }
     }
     PagedFetch(firstRows, rows)

@@ -150,7 +150,11 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.count() == 4)
   }
 
-  test("page_number with YAML total_items_pointer fans out without an empty-page probe") {
+  /** Runs one module over the stubbed 8-item `page_number` source with
+    * a YAML `total_items_pointer`, into a parquet warehouse; returns the
+    * landed table's directory.
+    */
+  private def runPaged(pageSize: Int): String = {
     val spark = graft.SparkTestSession.spark
     val dir = Files.createTempDirectory("pipeline-paged")
     val modules = Files.createDirectories(dir.resolve("modules"))
@@ -164,7 +168,7 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
          |    url: $base/paged
          |    table_destination_name: paged
          |    data_path: /data
-         |    page_size: 3
+         |    page_size: $pageSize
          |    pagination:
          |      kind: page_number
          |      page_param: page
@@ -186,14 +190,33 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
       configPath = dir.resolve("pipelines.yaml").toString,
       warehouse = Some(warehouse)), spark)
     assert(failed == 0)
+    s"$warehouse/paged"
+  }
 
-    val out = spark.read.parquet(s"$warehouse/paged")
+  test("page_number with YAML total_items_pointer fans out without an empty-page probe") {
+    val out = graft.SparkTestSession.spark.read.parquet(runPaged(pageSize = 3))
     assert(out.select("id").collect().map(_.getLong(0)).sorted.toSeq == (1L to 8L))
     // ceil(8/3) = 3 pages: the known-total path fetches exactly 3
     // requests (page 1 + parallel 2..3); the sequential fallback would
     // need a 4th, empty-page probe to stop
     assert(pagedRequests.get == 3,
       s"expected exactly 3 page fetches, saw ${pagedRequests.get}")
+  }
+
+  test("page_number fan-out lands one data file per task, not per page") {
+    val spark = graft.SparkTestSession.spark
+    // one item per page: 8 pages against defaultParallelism 4
+    val table = runPaged(pageSize = 1)
+    val ids = spark.read.parquet(table).select("id").collect().map(_.getLong(0))
+    assert(ids.sorted.toSeq == (1L to 8L))
+    assert(pagedRequests.get == 8,
+      s"expected exactly 8 page fetches, saw ${pagedRequests.get}")
+    // page 1 is one task and pages 2..8 at most one task per core
+    val files = new java.io.File(table).listFiles()
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    val bound = 1 + spark.sparkContext.defaultParallelism
+    assert(files >= 1 && files <= bound,
+      s"expected at most $bound data files, saw $files")
   }
 
   test("--truncate-first drops the prior sink contents before loading") {

@@ -3,6 +3,7 @@ package graft.http
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,6 +22,9 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var base: String = _
   private val flakyHits = new AtomicInteger(0)
   private val rateHits = new java.util.concurrent.atomic.AtomicInteger(0)
+  // /paged requests per page number, and the client port that asked
+  private val pagedHits =
+    new java.util.concurrent.ConcurrentHashMap[Int, java.util.List[Int]]()
 
   private val retry = Retry(maxAttempts = 3, maxDelaySecs = 1, minDelaySecs = 0)
 
@@ -49,6 +53,9 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val p = qparams(ex)
       val page = p("page").toInt
       val per = p("per_page").toInt
+      pagedHits.computeIfAbsent(page,
+        _ => java.util.Collections.synchronizedList(new java.util.ArrayList[Int]()))
+        .add(ex.getRemoteAddress.getPort)
       val startIx = (page - 1) * per
       val end = math.min(startIx + per, 7)
       val data = if (startIx >= 7) "[]" else items(startIx + 1, end)
@@ -131,6 +138,39 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(withPages.rows.count() == 7)
     assert(without.rows.count() == 7)
   }
+
+  test("page_number fan-out: one contiguous page range per core, page 1 " +
+      "as one partition, each page requested once, rows in page order") {
+    val spark = graft.SparkTestSession.spark
+    val cores = spark.sparkContext.defaultParallelism
+    // 7 items: perPage 1 is 7 pages (6 to fan out, more than the test
+    // session's 4 cores); perPage 3 is 3 pages (2 to fan out, fewer)
+    for (perPage <- Seq(1, 3)) {
+      val pages = (7 + perPage - 1) / perPage
+      pagedHits.clear()
+      val fetched = fetchPageNumber(spark, spec("/paged"), "page", "per_page",
+        perPage, totalHint = Some(TotalHint.Items("/metadata/total_items")))
+      val slices = math.min(pages - 1, cores)
+      assert(fetched.rows.rdd.getNumPartitions == 1 + slices,
+        s"perPage $perPage: expected page 1 + $slices slices")
+      // one job reads every partition once
+      val parts = fetched.rows.rdd.mapPartitions(it => Iterator(it.toVector))
+        .collect().toSeq.map(_.map(idOf))
+      assert(parts.head == (1 to perPage).toVector, "page 1 alone in partition 0")
+      assert(parts.forall(_.nonEmpty), s"an empty slice: $parts")
+      assert(parts.flatten == (1 to 7), s"rows out of page order: $parts")
+      val hits = pagedHits.asScala.map { case (p, ports) => p -> ports.size }.toMap
+      assert(hits == (1 to pages).map(_ -> 1).toMap,
+        s"each page requested once: $hits")
+      // each slice walks its range over one client: no more client
+      // connections than slices serve pages 2..N
+      val ports = (2 to pages).map(p => pagedHits.get(p).get(0)).toSet
+      assert(ports.size <= slices, s"$slices slices used ${ports.size} connections")
+    }
+  }
+
+  private def idOf(row: String): Int =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(row).get("id").asInt()
 
   test("HTTP/2 parity (reference README.md:128): the client negotiates h2 " +
       "by default and degrades cleanly to a 1.1-only server") {
