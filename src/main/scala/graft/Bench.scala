@@ -236,7 +236,7 @@ object Bench {
       pipelineRows = graft.engine.Engine.withSqlOver(spark, events, "events",
         """SELECT event_id, user_id, event_type, value,
           |  get_json_object(props, '$.k') AS k_val FROM events""".stripMargin) { out =>
-        new graft.writer.ParquetWriter(s"$sinkDir/events_out")
+        new graft.writer.FileWriter(s"$sinkDir/events_out")
           .write(out, graft.writer.WriteMode.Append).rowsWritten
       }
     }

@@ -6,20 +6,19 @@ import org.apache.spark.sql.SparkSession
 import org.slf4j.LoggerFactory
 
 import graft.config.PipelineConfig
-import graft.config.PipelineConfig.Target
 import graft.engine.{Engine, Sessions}
 import graft.http.HttpJsonSource
 import graft.template.Templates
-import graft.writer.{DataWriter, ParquetWriter, PostgresWriter, WriteMode}
+import graft.writer.{DataWriter, TargetSink, WriteMode}
 
 /** Pipeline orchestrator CLI (SURVEY A30-A33).
   *
   * Mirrors the reference's `apitap -m DIR -y FILE` flow
   * (/root/reference/src/cmd/mod.rs:22-201): discover modules, render
   * templates (capturing sink + source), resolve config, fetch the HTTP
-  * source, run the module SQL, load into the target. Targets resolve to
-  * a Postgres JDBC writer; `--warehouse DIR` swaps in a parquet sink
-  * per dest-table for driverless/local runs.
+  * source, run the module SQL, load into the target. Targets resolve
+  * through [[graft.writer.TargetSink]]; `--warehouse DIR` swaps in a
+  * parquet sink per dest-table for driverless/local runs.
   */
 object Main {
 
@@ -82,39 +81,16 @@ object Main {
     a
   }
 
-  private def makeWriter(target: Option[Target], destTable: String,
+  private def makeWriter(sink: Option[TargetSink], destTable: String,
       primaryKey: Seq[String], args: Args,
-      getenv: String => Option[String],
       schemaEvolution: Boolean = false): DataWriter =
     args.warehouse match {
       case Some(dir) =>
         new graft.writer.FileWriter(s"$dir/$destTable", args.warehouseFormat)
       case None =>
-        val t = target.getOrElse(throw new IllegalArgumentException(
+        sink.getOrElse(throw new IllegalArgumentException(
           s"no target resolved for '$destTable' and no --warehouse fallback"))
-        if (t.kind == "bigquery") {
-          // loud like the incremental-sync target check, not silent:
-          // the BigQuery writer has no evolution support, so accepting
-          // the flag would drop columns without a trace
-          if (schemaEvolution) throw new IllegalArgumentException(
-            "schema_evolution is not supported for bigquery targets " +
-              "(supported: postgres, clickhouse)")
-          new graft.writer.BigQueryWriter(t.bqEndpoint, t.project.get,
-            t.database, destTable,
-            graft.writer.BigQueryWriter.StaticToken(t.auth.resolvedPassword(getenv)),
-            primaryKey)
-        }
-        else if (t.kind == "clickhouse") {
-          // the transport split (native SQL-over-HTTP vs JDBC) is
-          // inside the writer, keyed off Target.chUrl's scheme
-          new graft.writer.ClickHouseWriter(t.chUrl,
-            t.auth.resolvedUsername(getenv), t.auth.resolvedPassword(getenv),
-            destTable, primaryKey, schemaEvolution = schemaEvolution)
-        }
-        else
-          new PostgresWriter(t.jdbcUrl, t.auth.resolvedUsername(getenv),
-            t.auth.resolvedPassword(getenv), destTable, primaryKey,
-            useCopy = args.pgCopy, schemaEvolution = schemaEvolution)
+          .writer(destTable, primaryKey, schemaEvolution, args.pgCopy)
     }
 
   /** Delta landing for relation-producing stream stages on the
@@ -270,8 +246,8 @@ object Main {
     * CLI's `dotenvy::dotenv()` startup (main.rs:11).
     */
   /** `syncStateOverride` is the test seam for incremental sync: the
-    * default builds a [[graft.writer.PgSyncState]] from the module's
-    * target (production, pgjdbc on the classpath); tests inject a
+    * default is the module target's own backend
+    * ([[graft.writer.TargetSink.syncState]]); tests inject a
     * [[graft.writer.FileSyncState]] so the watermark round-trip runs
     * without a JDBC driver (the live suite pins the PG state SQL text
     * separately, via psql — the writer convention).
@@ -280,6 +256,10 @@ object Main {
       getenv: String => Option[String] = graft.config.DotEnv.resolver(),
       syncStateOverride: Option[graft.writer.SyncState] = None): Int = {
     val cfg = PipelineConfig.loadFromPath(args.configPath)
+    // one resolved sink per target name, so credentials resolve once
+    val sinks = scala.collection.mutable.Map.empty[String, TargetSink]
+    def sinkOf(name: String): TargetSink =
+      sinks.getOrElseUpdate(name, TargetSink(cfg.target(name), getenv))
 
     // ---- startup validation: the YAML and the CLI args are BOTH known
     // right here, so every config hole they jointly create fails before
@@ -294,15 +274,12 @@ object Main {
     val fileWh = args.warehouse.isDefined
     // a replace is SAFE (no empty-destination window on failure)
     // exactly when the writer path is transactional/atomic: the file
-    // warehouse's single commit-protocol overwrite job, the postgres
-    // staged swap (load staging, swap in one transaction), or the
-    // clickhouse staged swap (load staging, one atomic EXCHANGE
-    // TABLES). bigquery replace is still truncate-then-load, so it
-    // never defaults there. An unknown sink name resolves false here
-    // (no silent replace) and fails loudly when its stage runs.
+    // warehouse's single commit-protocol overwrite job, or a target
+    // whose TargetSink.atomicReplace holds. An unknown sink name
+    // resolves false here (no silent replace) and fails loudly when
+    // its stage runs.
     def safeReplaceSink(s: PipelineConfig.Stage): Boolean = fileWh ||
-      s.sink.exists(n => cfg.targets.exists(t =>
-        t.name == n && Set("postgres", "clickhouse")(t.kind)))
+      s.sink.exists(n => cfg.targets.exists(_.name == n) && sinkOf(n).atomicReplace)
     def resolvesReplace(s: PipelineConfig.Stage): Boolean =
       s.primaryKey.isEmpty && (
         s.writeMode.contains("replace") ||
@@ -361,7 +338,7 @@ object Main {
           throw new IllegalArgumentException(
             s"module $module declares no {{ use_source(...) }}"))
         val source = graft.http.OAuth2.applyAuth(cfg.source(sourceName), getenv)
-        val target = rendered.sink.map(cfg.target)
+        val sink = rendered.sink.map(sinkOf)
         val destTable = source.destTable
 
         log.info("module name={} source={} dest={}", module, sourceName, destTable)
@@ -376,28 +353,9 @@ object Main {
             require(args.warehouse.isEmpty,
               s"source '${source.name}': incremental sync requires a keyed " +
                 "warehouse target — the file warehouse overwrites on merge")
-            val t = target.getOrElse(throw new IllegalArgumentException(
+            sink.getOrElse(throw new IllegalArgumentException(
               s"no target resolved for incremental source '${source.name}'"))
-            // the watermark lives IN the warehouse the pipeline writes
-            // to (each target kind via its own stack), so state and
-            // data share fate — a restored warehouse backup restores a
-            // CONSISTENT watermark with it
-            t.kind match {
-              case "postgres" => new graft.writer.PgSyncState(
-                t.jdbcUrl, t.auth.resolvedUsername(getenv),
-                t.auth.resolvedPassword(getenv))
-              case "bigquery" => new graft.writer.BqSyncState(
-                t.bqEndpoint, t.project.get, t.database,
-                graft.writer.BigQueryWriter.StaticToken(
-                  t.auth.resolvedPassword(getenv)))
-              case "clickhouse" =>
-                new graft.writer.ChSyncState(t.chUrl,
-                  t.auth.resolvedUsername(getenv),
-                  t.auth.resolvedPassword(getenv))
-              case other => throw new IllegalArgumentException(
-                s"source '${source.name}': no sync-state backend for " +
-                  s"target kind '$other'")
-            }
+              .syncState()
           }
           (st, inc, st.get(source.name))
         }
@@ -417,17 +375,16 @@ object Main {
         // otherwise.
         val sourceDf = HttpJsonSource.load(spark, fetchSource, args.pageSize).cache()
         try {
-          // stage-6 rewrite: source name → destination table name
-          val sql = Templates.rewriteIdentifier(rendered.sql, sourceName, destTable)
-          val writer = makeWriter(target, destTable, source.primaryKeyInDest.toSeq,
-            args, getenv, source.schemaEvolution)
+          val writer = makeWriter(sink, destTable, source.primaryKeyInDest.toSeq,
+            args, source.schemaEvolution)
           if (args.truncateFirst) {
             log.info("sql.execute statement=truncate table={}", destTable)
             writer.truncate()
           }
           val mode = if (source.primaryKeyInDest.isDefined) WriteMode.Merge
             else args.writeMode
-          val stats = Engine.withSqlOver(spark, sourceDf, destTable, sql) { out =>
+          val stats = Engine.runModule(spark, sourceDf, sourceName, destTable,
+              rendered.sql) { out =>
             log.debug("sql.execute statement=module table={}", destTable)
             writer.write(out, mode)
           }
@@ -528,17 +485,17 @@ object Main {
         // exactly where appending would compound (relation-producing
         // streams, chained relation outputs) and only onto sinks whose
         // replace path has no empty-destination window — the file
-        // warehouse's single overwrite job or the postgres/clickhouse
-        // staged swaps. Audit/advisory TRAIL stages never flip
-        // implicitly: the consumer of a trail wants the trail.
-        // bigquery replace is still truncate-then-load, so a relation
-        // stream landing there must make the choice explicit instead
-        // of compounding duplicates silently.
+        // warehouse's single overwrite job or a staged swap. Audit/
+        // advisory TRAIL stages never flip implicitly: the consumer of
+        // a trail wants the trail. Elsewhere replace is truncate-then-
+        // load, so a relation stream landing there must make the
+        // choice explicit instead of compounding duplicates silently.
         if (isRelationStream(stage) && !safeReplaceSink(stage) &&
             stage.writeMode.isEmpty && stage.primaryKey.isEmpty)
           throw new IllegalArgumentException(
             s"stage '${stage.name}': a relation-producing stream landing " +
-              "on a bigquery sink needs an explicit " +
+              s"on sink '${stage.sink.getOrElse("")}', whose replace is not " +
+              "atomic, needs an explicit " +
               "'write_mode' (replace = truncate-then-load each run; " +
               "append = trail, duplicates across runs) or a " +
               "'primary_key' for MERGE idempotence")
@@ -547,8 +504,8 @@ object Main {
         // config hole must not cost a full drain first
         def runAndLand(): graft.writer.WriteStats = {
           val out = StageRunner.run(spark, stage, priorOutput)
-          val writer = makeWriter(stage.sink.map(cfg.target), stage.destTable,
-            stage.primaryKey.toSeq, args, getenv)
+          val writer = makeWriter(stage.sink.map(sinkOf), stage.destTable,
+            stage.primaryKey.toSeq, args)
           if (replace && fileWh && args.warehouseFormat == "parquet" &&
               isRelationStream(stage) && out.columns.contains("graft_batch"))
             // mirror semantics at delta cost — see landStreamDelta

@@ -168,23 +168,23 @@ object PipelineConfig {
         * under the same env-indirection rules as every credential.
         */
       project: Option[String] = None) {
-    def jdbcUrl: String = kind match {
-      case "clickhouse" => s"jdbc:clickhouse://$host:$port/$database"
-      case _ => s"jdbc:postgresql://$host:$port/$database"
-    }
+    /** Postgres JDBC URL. */
+    def jdbcUrl: String = s"jdbc:postgresql://$host:$port/$database"
 
     /** BigQuery REST endpoint: a bare host assumes https. */
     def bqEndpoint: String =
       if (host.contains("://")) host else s"https://$host"
 
-    /** ClickHouse connection URL: a host carrying a scheme selects
-      * the native SQL-over-HTTP interface (port 8123), a bare host
-      * the JDBC transport — ONE derivation for the writer and the
-      * sync-state backend, so they can never land on different
-      * databases.
+    /** ClickHouse SQL-over-HTTP URL: a bare host means
+      * `http://host:port` (8123 by default, ClickHouse's HTTP port); a
+      * host carrying a scheme is used as-is — ONE derivation for the
+      * writer and the sync-state backend, so they can never land on
+      * different databases.
       */
-    def chUrl: String =
-      if (host.contains("://")) s"$host/?database=$database" else jdbcUrl
+    def chUrl: String = {
+      val server = if (host.contains("://")) host else s"http://$host:$port"
+      s"$server/?database=$database"
+    }
   }
 
   /** A declarative ANALYTICS stage (`stages:` in pipelines.yaml) —

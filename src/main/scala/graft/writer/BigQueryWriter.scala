@@ -7,8 +7,6 @@ import java.time.Duration
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.http.OAuth2
 
@@ -22,10 +20,15 @@ import graft.http.OAuth2
   *
   * Distributed shape mirrors [[PostgresWriter]]: DDL once on the
   * driver, then each executor partition posts its own literal-SQL
-  * batches (INSERT for append, MERGE for merge — BigQuery's native
-  * upsert). Batches are bounded BOTH by row count and by rendered
-  * query size, because `jobs.query` caps un-parameterized query text
-  * at 1 MB ([[BigQueryWriter.MaxQueryBytes]] keeps headroom under it).
+  * INSERT batches. Batches are bounded BOTH by row count and by
+  * rendered query size, because `jobs.query` caps un-parameterized
+  * query text at 1 MB ([[BigQueryWriter.MaxQueryBytes]] keeps
+  * headroom under it). A keyed (merge) write lands those batches in
+  * a per-write stage table and the driver then issues ONE
+  * key-deduplicated MERGE (BigQuery's native upsert) into the
+  * destination — BigQuery serializes mutating DML per table, so
+  * per-partition MERGEs would only queue behind each other and
+  * abort.
   *
   * Auth is either a static bearer token or an [[OAuth2.TokenSpec]];
   * with a spec, each JVM (driver, every executor) resolves and
@@ -43,27 +46,9 @@ final class BigQueryWriter(
     batchSize: Int = 500,
     autoCreate: Boolean = true,
     requestTimeoutSecs: Long = 60,
-    stagedMerge: Boolean = false,
     maxAttempts: Int = 5) extends DataWriter with Serializable {
 
   private def tablePath = s"$dataset.$table"
-
-  /** Same normalization contract as the other writers: nested →
-    * JSON text, temporals → strings, so literal rendering sees only
-    * scalar JVM types.
-    */
-  private def normalized(df: DataFrame): DataFrame = {
-    val cols = df.schema.fields.toIndexedSeq.map { f =>
-      f.dataType match {
-        case _: StructType | _: ArrayType | _: MapType =>
-          to_json(col(f.name)).as(f.name)
-        case TimestampType | DateType =>
-          col(f.name).cast(StringType).as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    df.select(cols: _*)
-  }
 
   // idempotent like the Postgres 42P01 swallow — but on the PARSED
   // error reason only (job errors in a 2xx body, or the real
@@ -79,7 +64,7 @@ final class BigQueryWriter(
   override def write(df: DataFrame, mode: WriteMode): WriteStats = {
     if (mode == WriteMode.Merge && primaryKey.isEmpty)
       throw new IllegalArgumentException("merge mode requires a primary key")
-    val prepared = normalized(df)
+    val prepared = DataWriter.normalized(df)
     // typed off the ORIGINAL schema so normalized nested columns keep
     // their JSON destination (their frame type is now string)
     val schema = BqSql.schemaOfSpark(df.schema)
@@ -89,46 +74,38 @@ final class BigQueryWriter(
         BqSql.createTableSql(tablePath, schema, primaryKey), requestTimeoutSecs,
         maxAttempts = maxAttempts)
 
-    // BigQuery serializes mutating DML per table: concurrent MERGEs
-    // from every partition queue shallowly and then abort. The staged
-    // path sidesteps the contention class entirely — partitions
-    // APPEND into a per-write staging table (appends don't compete),
-    // the driver issues ONE key-deduplicated MERGE, then drops the
-    // stage. The direct path remains for single-partition/low-
-    // concurrency writes; its MERGEs retry on the documented
-    // concurrent-update abort (see `post`).
-    if (mode == WriteMode.Merge && stagedMerge) {
+    if (mode == WriteMode.Append) writeBatches(prepared, schema, tablePath)
+    else {
+      // keyed: partitions APPEND into a per-write stage (appends don't
+      // compete for the table's DML lock), the driver issues ONE
+      // key-deduplicated MERGE, then drops the stage
       val stage = s"$dataset.${table}__stage_${java.util.UUID.randomUUID.toString.take(8)}"
       BigQueryWriter.post(endpoint, project, auth,
         BqSql.createTableSql(stage, schema), requestTimeoutSecs,
         maxAttempts = maxAttempts)
       try {
-        val stats = writeBatches(prepared, schema, stage, WriteMode.Append)
+        val stats = writeBatches(prepared, schema, stage)
         BigQueryWriter.post(endpoint, project, auth,
           BqSql.mergeFromTableSql(tablePath, stage, schema, primaryKey),
           requestTimeoutSecs, maxAttempts = maxAttempts)
         stats
       } finally BigQueryWriter.post(endpoint, project, auth,
         BqSql.dropTableSql(stage), requestTimeoutSecs, maxAttempts = maxAttempts)
-    } else writeBatches(prepared, schema, tablePath, mode)
+    }
   }
 
   private def writeBatches(prepared: DataFrame,
-      schema: scala.collection.immutable.ListMap[String, BqSql.BqType],
-      destTable: String, md: WriteMode): WriteStats = {
-    val (ep, proj, a, pk, bs, timeout, attempts) =
-      (endpoint, project, auth, primaryKey, batchSize, requestTimeoutSecs, maxAttempts)
+      schema: ListMap[String, BqSql.BqType], destTable: String): WriteStats = {
+    val (ep, proj, a, bs, timeout, attempts) =
+      (endpoint, project, auth, batchSize, requestTimeoutSecs, maxAttempts)
     val counter = prepared.sparkSession.sparkContext.longAccumulator("rowsWritten")
 
     prepared.foreachPartition { (rows: Iterator[Row]) =>
       val buf = new scala.collection.mutable.ArrayBuffer[Seq[Any]](bs)
       var bufBytes = 0
       def flush(): Unit = if (buf.nonEmpty) {
-        val sql = md match {
-          case WriteMode.Append => BqSql.insertSql(destTable, schema, buf.toSeq)
-          case WriteMode.Merge => BqSql.mergeSql(destTable, schema, pk, buf.toSeq)
-        }
-        BigQueryWriter.post(ep, proj, a, sql, timeout, maxAttempts = attempts)
+        BigQueryWriter.post(ep, proj, a, BqSql.insertSql(destTable, schema, buf.toSeq),
+          timeout, maxAttempts = attempts)
         counter.add(buf.size.toLong)
         buf.clear()
         bufBytes = 0

@@ -8,16 +8,17 @@ import org.apache.spark.sql.types._
   * the reference plans but never built
   * (/root/reference/README.md:120,529). BigQuery's native surface is
   * REST (`jobs.query`), not JDBC, and that endpoint takes full query
-  * text — so unlike the Postgres/ClickHouse paths the DML here
-  * renders rows as GoogleSQL literals rather than bind placeholders,
-  * and the escaping rules are part of the tested surface.
+  * text — so unlike the Postgres path the DML here renders rows as
+  * GoogleSQL literals rather than bind placeholders, and the escaping
+  * rules are part of the tested surface.
   *
   * Dialect facts used (all public BigQuery docs): backtick-quoted
   * identifiers with backslash escapes; `PRIMARY KEY .. NOT ENFORCED`
   * (BigQuery never enforces keys — MERGE supplies the upsert
-  * semantics); native `MERGE`; `JSON '…'` literals; `FROM_BASE64`
-  * for bytes; a 1 MB un-parameterized query size cap, enforced here
-  * by the batch renderer so a flush can never exceed it.
+  * semantics); native `MERGE` from a staging table; `JSON '…'`
+  * literals; `FROM_BASE64` for bytes; a 1 MB un-parameterized query
+  * size cap, enforced here by the batch renderer so a flush can never
+  * exceed it.
   */
 object BqSql {
 
@@ -131,50 +132,17 @@ object BqSql {
     s"INSERT INTO ${quoteIdent(table)} ($cols) VALUES ${rendered.mkString(", ")}"
   }
 
-  /** MERGE with a UNION ALL literal source — BigQuery's native upsert
-    * (first SELECT carries the column aliases, the rest are
-    * positional, the GoogleSQL idiom for VALUES-like sources).
-    */
-  def mergeSql(table: String, schema: ListMap[String, BqType],
-      primaryKey: Seq[String], rows: Seq[Seq[Any]]): String = {
-    require(primaryKey.nonEmpty, "merge requires a primary key")
-    require(rows.nonEmpty, "no rows to merge")
-    val names = schema.keys.toIndexedSeq
-    val types = schema.values.toIndexedSeq
-    val source = rows.zipWithIndex.map { case (r, ix) =>
-      val vals = r.iterator.zip(types.iterator).zipWithIndex.map {
-        case ((v, t), c) =>
-          val lit = literal(v, t)
-          if (ix == 0) s"$lit AS ${quoteIdent(names(c))}" else lit
-      }
-      s"SELECT ${vals.mkString(", ")}"
-    }.mkString(" UNION ALL ")
-    val on = primaryKey.map(k => s"t.${quoteIdent(k)} = s.${quoteIdent(k)}")
-      .mkString(" AND ")
-    val updatable = names.filterNot(primaryKey.contains)
-    val matched =
-      if (updatable.isEmpty) ""
-      else " WHEN MATCHED THEN UPDATE SET " +
-        updatable.map(c => s"${quoteIdent(c)} = s.${quoteIdent(c)}").mkString(", ")
-    val colsQ = names.map(quoteIdent)
-    s"MERGE ${quoteIdent(table)} AS t USING ($source) AS s ON $on$matched " +
-      s"WHEN NOT MATCHED THEN INSERT (${colsQ.mkString(", ")}) " +
-      s"VALUES (${colsQ.map(c => s"s.$c").mkString(", ")})"
-  }
-
   def truncateSql(table: String): String =
     s"TRUNCATE TABLE ${quoteIdent(table)}"
 
-  /** MERGE from a staging table — the stage-append-then-one-MERGE
-    * write path: partitions INSERT into the stage concurrently
-    * (BigQuery serializes mutating DML per TABLE, so appends to the
-    * stage never compete with each other the way concurrent MERGEs on
-    * the target do), then the driver issues this one MERGE. Source
-    * rows are key-deduplicated with ROW_NUMBER first: BigQuery MERGE
-    * errors when several source rows match one target row, and which
-    * duplicate of a single load survives is explicitly
-    * nondeterministic — the same contract as the per-batch literal
-    * MERGE.
+  /** The keyed write's one MERGE, from its staging table: partitions
+    * INSERT into the stage concurrently (BigQuery serializes mutating
+    * DML per TABLE, so appends to the stage never compete with each
+    * other the way concurrent MERGEs on the target would), then the
+    * driver issues this one MERGE. Source rows are key-deduplicated
+    * with ROW_NUMBER first: BigQuery MERGE errors when several source
+    * rows match one target row, and which duplicate of a single load
+    * survives is explicitly nondeterministic.
     */
   def mergeFromTableSql(table: String, stage: String,
       schema: ListMap[String, BqType], primaryKey: Seq[String]): String = {

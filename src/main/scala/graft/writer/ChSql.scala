@@ -101,26 +101,15 @@ object ChSql {
       s"(${cols.mkString(", ")}) ENGINE = $engine"
   }
 
-  /** Multi-row parameterized INSERT — the one statement both write
-    * modes use (merge-mode dedup happens in the engine, not the
-    * statement).
-    */
-  def insertSql(table: String, schema: ListMap[String, ChType], nRows: Int): String = {
-    val cols = schema.keys.map(quoteIdent).mkString(", ")
-    val row = "(" + Seq.fill(schema.size)("?").mkString(", ") + ")"
-    s"INSERT INTO ${quoteIdent(table)} ($cols) VALUES " +
-      Seq.fill(nRows)(row).mkString(", ")
-  }
-
   /** Force the replace-merge after a keyed load so the table holds
     * exactly one row per key without readers needing `FINAL`.
     */
   def optimizeSql(table: String): String =
     s"OPTIMIZE TABLE ${quoteIdent(table)} FINAL"
 
-  /** INSERT header for the HTTP transport: ClickHouse's native bulk
-    * path is `INSERT INTO … FORMAT JSONEachRow` with NDJSON rows in
-    * the request body — no literal-escaping surface at all, and the
+  /** The one INSERT header: ClickHouse's native bulk path is
+    * `INSERT INTO … FORMAT JSONEachRow` with NDJSON rows in the
+    * request body — no literal-escaping surface at all, and the
     * server parses values straight into the destination columns.
     */
   def insertHttpSql(table: String, schema: ListMap[String, ChType]): String =
@@ -142,8 +131,7 @@ object ChSql {
   }
 
   /** One JSONEachRow value under the writers' shared coercion
-    * lattice — the HTTP rendering of [[ClickHouseWriter.bindValue]]:
-    * strings parse into numeric destinations (unparseable → null),
+    * lattice: strings parse into numeric destinations (unparseable → null),
     * numbers/booleans stringify into String destinations, fractional
     * into Int64 degrades to null, non-finite floats to null (JSON has
     * no NaN/Infinity).

@@ -1,11 +1,8 @@
 package graft.writer
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** ClickHouse sink — the writer the reference plans
   * (/root/reference/README.md:121) built on this engine's
@@ -13,18 +10,12 @@ import org.apache.spark.sql.types._
   * [[PostgresWriter]]: DDL once on the driver, then every executor
   * partition lands its rows in bounded batches.
   *
-  * TWO TRANSPORTS behind one seam, picked from the URL scheme:
-  *   - `jdbc:clickhouse://…` — parameterized multi-row batches over
-  *     `java.sql` (a production classpath with `clickhouse-jdbc`
-  *     needs no code change; this sandbox has no driver jar, so the
-  *     JDBC path's statement TEXT is covered by [[ChSqlSpec]]);
-  *   - `http://…` / `https://…` — ClickHouse's NATIVE SQL-over-HTTP
-  *     interface (port 8123): DDL as POSTed statements, inserts as
-  *     `INSERT … FORMAT JSONEachRow` with NDJSON bodies, auth via
-  *     the X-ClickHouse-User/-Key headers. This path runs END-TO-END
-  *     against a stub server in tests — the BigQueryWriter pattern —
-  *     so the actual partition write path executes in CI, which the
-  *     JDBC path cannot.
+  * One transport: ClickHouse's native SQL-over-HTTP interface (port
+  * 8123, every server has it) — DDL as POSTed statements, inserts as
+  * `INSERT … FORMAT JSONEachRow` with NDJSON bodies, auth via the
+  * X-ClickHouse-User/-Key headers. No driver jar is needed, and the
+  * whole partition write path runs end to end against a stub server
+  * in tests — the BigQueryWriter pattern.
   *
   * Mode semantics follow ClickHouse's own model rather than
   * pretending it is Postgres: Append inserts into a `MergeTree`;
@@ -41,7 +32,7 @@ import org.apache.spark.sql.types._
   * mirrors.
   */
 final class ClickHouseWriter(
-    url: String, // jdbc:clickhouse://host:port/db  OR  http://host:8123/?database=db
+    url: String, // http(s)://host:8123/?database=db
     user: String,
     password: String,
     table: String,
@@ -50,35 +41,9 @@ final class ClickHouseWriter(
     autoCreate: Boolean = true,
     schemaEvolution: Boolean = false) extends DataWriter with Serializable {
 
-  // driver-side transports are short-lived: close in finally, or every
-  // truncate/DDL/OPTIMIZE leaks a JDBC connection on a production
-  // classpath (the HTTP transport's close is a no-op, which is why
-  // stub-backed tests alone could never see the leak)
-  private def withTransport[A](f: ClickHouseWriter.ChTransport => A): A = {
-    val t = ClickHouseWriter.transportOf(url, user, password)
-    try f(t) finally t.close()
-  }
+  private def transport = new ClickHouseWriter.HttpTransport(url, user, password)
 
-  /** Same normalization contract as the Postgres path: nested and
-    * temporal columns become strings so every value is a scalar.
-    */
-  private def normalized(df: DataFrame): DataFrame = {
-    val cols = df.schema.fields.toIndexedSeq.map { f =>
-      f.dataType match {
-        case _: StructType | _: ArrayType | _: MapType =>
-          to_json(col(f.name)).as(f.name)
-        case TimestampType | DateType =>
-          col(f.name).cast(StringType).as(f.name)
-        case BinaryType =>
-          base64(col(f.name)).as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    df.select(cols: _*)
-  }
-
-  override def truncate(): Unit =
-    withTransport(_.execute(ChSql.truncateSql(table)))
+  override def truncate(): Unit = transport.execute(ChSql.truncateSql(table))
 
   /** Staged-swap replace, ClickHouse dialect: load the staging table
     * (distributed, the standard partition-batch path), then ONE
@@ -93,26 +58,26 @@ final class ClickHouseWriter(
     * recovers by rerunning the replace.
     */
   override def replace(df: DataFrame): WriteStats = {
-    val chSchema = ChSql.schemaOfSpark(normalized(df).schema)
-    withTransport { t =>
-      t.execute(ChSql.dropStagingSql(table))
-      // the destination must exist before the staging can clone its
-      // structure (and before the exchange, on the very first run)
-      t.execute(ChSql.createTableSql(table, chSchema, primaryKey))
-      // staging = empty structural clone of the destination: columns
-      // this writer never created (user-managed DateTimes, an earlier
-      // wider relation's fields), the engine, TTLs and settings all
-      // survive the swap — the batch's own drift is then evolved onto
-      // the STAGING exactly as write() would evolve the destination
-      t.execute(ChSql.createStagingSql(table))
-      if (schemaEvolution) {
-        val staging = ChSql.stagingName(table)
-        val existing = ClickHouseWriter.readSchema(t, staging)
-          .filterNot { case (n, _) => primaryKey.contains(n) }
-        val incoming = chSchema
-          .filterNot { case (n, _) => primaryKey.contains(n) }
-        ChSql.evolveSql(staging, existing, incoming).foreach(t.execute)
-      }
+    val chSchema = ChSql.schemaOfSpark(
+      DataWriter.normalized(df, base64Binary = true).schema)
+    val t = transport
+    t.execute(ChSql.dropStagingSql(table))
+    // the destination must exist before the staging can clone its
+    // structure (and before the exchange, on the very first run)
+    t.execute(ChSql.createTableSql(table, chSchema, primaryKey))
+    // staging = empty structural clone of the destination: columns
+    // this writer never created (user-managed DateTimes, an earlier
+    // wider relation's fields), the engine, TTLs and settings all
+    // survive the swap — the batch's own drift is then evolved onto
+    // the STAGING exactly as write() would evolve the destination
+    t.execute(ChSql.createStagingSql(table))
+    if (schemaEvolution) {
+      val staging = ChSql.stagingName(table)
+      val existing = ClickHouseWriter.readSchema(t, staging)
+        .filterNot { case (n, _) => primaryKey.contains(n) }
+      val incoming = chSchema
+        .filterNot { case (n, _) => primaryKey.contains(n) }
+      ChSql.evolveSql(staging, existing, incoming).foreach(t.execute)
     }
     // Append, not Merge: replace lands the relation AS-IS, and the
     // swap makes it the destination wholesale — no OPTIMIZE needed
@@ -120,25 +85,24 @@ final class ClickHouseWriter(
       ChSql.stagingName(table), primaryKey, batchSize,
       autoCreate = false)
     val stats = stagingWriter.write(df, WriteMode.Append)
-    withTransport { t =>
-      t.execute(ChSql.exchangeSql(table))
-      t.execute(ChSql.dropStagingSql(table)) // now holds the OLD rows
-    }
+    t.execute(ChSql.exchangeSql(table))
+    t.execute(ChSql.dropStagingSql(table)) // now holds the OLD rows
     stats
   }
 
   override def write(df: DataFrame, mode: WriteMode): WriteStats = {
     if (mode == WriteMode.Merge && primaryKey.isEmpty)
       throw new IllegalArgumentException("merge mode requires a primary key")
-    val prepared = normalized(df)
+    val prepared = DataWriter.normalized(df, base64Binary = true)
     val chSchema = ChSql.schemaOfSpark(prepared.schema)
     // keyed tables carry the writer-managed version column; its value
-    // is stamped per row at bind/render time, never read from data
+    // is stamped per row at render time, never read from data
     val keyed = primaryKey.nonEmpty
     val insertSchema =
       if (keyed) chSchema.updated(ChSql.VerCol, ChSql.ChInt64) else chSchema
 
-    if (autoCreate) withTransport { t =>
+    if (autoCreate) {
+      val t = transport
       t.execute(ChSql.createTableSql(table, chSchema, primaryKey))
       // schema evolution, the PostgresWriter contract in ClickHouse
       // dialect. ORDER BY (key) columns are excluded from the diff:
@@ -165,36 +129,34 @@ final class ClickHouseWriter(
 
     prepared.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.hasNext) {
-        val t = ClickHouseWriter.transportOf(u, usr, pw)
-        try {
-          val buf = new scala.collection.mutable.ArrayBuffer[Seq[Any]](bs)
-          var seq = 0L
-          def flush(): Unit = if (buf.nonEmpty) {
-            t.insert(tbl, insertSchema, buf)
-            counter.add(buf.size.toLong)
-            buf.clear()
-          }
-          rows.foreach { r =>
-            val vals = if (isKeyed) {
-              // (epoch << 31) | seq: within-partition arrival order,
-              // saturating at 2^31-1 rows (ties beyond that resolve
-              // arbitrarily — documented bound)
-              val ver = (verBase << 31) | math.min(seq, (1L << 31) - 1)
-              seq += 1
-              r.toSeq :+ (ver: Any)
-            } else r.toSeq
-            buf += vals
-            if (buf.size >= bs) flush()
-          }
-          flush()
-        } finally t.close()
+        val t = new ClickHouseWriter.HttpTransport(u, usr, pw)
+        val buf = new scala.collection.mutable.ArrayBuffer[Seq[Any]](bs)
+        var seq = 0L
+        def flush(): Unit = if (buf.nonEmpty) {
+          t.insert(tbl, insertSchema, buf)
+          counter.add(buf.size.toLong)
+          buf.clear()
+        }
+        rows.foreach { r =>
+          val vals = if (isKeyed) {
+            // (epoch << 31) | seq: within-partition arrival order,
+            // saturating at 2^31-1 rows (ties beyond that resolve
+            // arbitrarily — documented bound)
+            val ver = (verBase << 31) | math.min(seq, (1L << 31) - 1)
+            seq += 1
+            r.toSeq :+ (ver: Any)
+          } else r.toSeq
+          buf += vals
+          if (buf.size >= bs) flush()
+        }
+        flush()
       }
     }
 
     // one driver-side compaction lands the replace semantics; runs
     // after every partition committed its inserts
     if (mode == WriteMode.Merge)
-      withTransport(_.execute(ChSql.optimizeSql(table)))
+      transport.execute(ChSql.optimizeSql(table))
     WriteStats(counter.value)
   }
 }
@@ -210,34 +172,11 @@ object ClickHouseWriter {
     lastEpoch.updateAndGet(last =>
       math.max(System.currentTimeMillis() / 1000L, last + 1))
 
-  /** THE URL-scheme → transport dispatch — every construction site
-    * (driver DDL, executor partition writes, the sync-state backend)
-    * goes through here, so a dispatch tweak (a new scheme, URL
-    * normalization) has exactly one home.
-    */
-  private[writer] def transportOf(url: String, user: String,
-      password: String): ChTransport =
-    if (url.startsWith("http://") || url.startsWith("https://"))
-      new HttpTransport(url, user, password)
-    else new JdbcTransport(url, user, password)
-
-  /** The transport seam: DDL/commands, schema read-back, and batch
-    * insert — everything the writer needs from a ClickHouse.
-    */
-  private[writer] trait ChTransport {
-    def execute(sql: String): Unit
-    /** Rows of a 2-column query (name, type) — the evolution read-back. */
-    def queryPairs(sql: String): Seq[(String, String)]
-    def insert(table: String, schema: ListMap[String, ChSql.ChType],
-        rows: Iterable[Seq[Any]]): Unit
-    def close(): Unit
-  }
-
   /** SQL-over-HTTP: ClickHouse's native interface. One pooled
     * `java.net.http.HttpClient` per JVM (the BigQueryWriter pattern).
     */
   private[writer] final class HttpTransport(endpoint: String,
-      user: String, password: String) extends ChTransport {
+      user: String, password: String) {
     import java.net.URI
     import java.net.http.{HttpRequest, HttpResponse}
     import java.nio.charset.StandardCharsets
@@ -258,15 +197,15 @@ object ClickHouseWriter {
       resp.body()
     }
 
-    override def execute(sql: String): Unit = { post(sql); () }
+    def execute(sql: String): Unit = { post(sql); () }
 
     // TabSeparated values arrive ESCAPED (\t \n \r \\ \0 \b \f \'):
     // split on the raw separators first (escaped ones can't collide —
     // they're backslash sequences), then unescape each field, or a
     // watermark containing a backslash round-trips corrupted through
     // ChSyncState (stored raw via JSONEachRow, read back escaped) and
-    // the two transports disagree on the same row
-    override def queryPairs(sql: String): Seq[(String, String)] =
+    // ChSyncState reads back a different mark than it stored
+    def queryPairs(sql: String): Seq[(String, String)] =
       post(sql + " FORMAT TabSeparated").split('\n').toSeq
         .filter(_.nonEmpty)
         .map { line =>
@@ -276,14 +215,12 @@ object ClickHouseWriter {
             ClickHouseWriter.unescapeTsv(line.substring(tab + 1)))
         }
 
-    override def insert(table: String, schema: ListMap[String, ChSql.ChType],
+    def insert(table: String, schema: ListMap[String, ChSql.ChType],
         rows: Iterable[Seq[Any]]): Unit = {
       post(ChSql.insertHttpSql(table, schema) + "\n" +
         ChSql.jsonEachRow(schema, rows))
       ()
     }
-
-    override def close(): Unit = () // the client is JVM-shared
   }
 
   /** Decode ClickHouse TabSeparated escaping — the inverse of the
@@ -316,102 +253,16 @@ object ClickHouseWriter {
     java.net.http.HttpClient.newBuilder()
       .connectTimeout(java.time.Duration.ofSeconds(30)).build()
 
-  /** JDBC over `java.sql` interfaces only (no driver-jar import). */
-  private[writer] final class JdbcTransport(url: String,
-      user: String, password: String) extends ChTransport {
-    private lazy val conn: Connection =
-      DriverManager.getConnection(url, user, password)
-
-    override def execute(sql: String): Unit = {
-      val st = conn.createStatement()
-      try { st.execute(sql); () } finally st.close()
-    }
-
-    override def queryPairs(sql: String): Seq[(String, String)] = {
-      val st = conn.createStatement()
-      try {
-        val rs = st.executeQuery(sql)
-        val out = Seq.newBuilder[(String, String)]
-        while (rs.next()) out += ((rs.getString(1), rs.getString(2)))
-        out.result()
-      } finally st.close()
-    }
-
-    override def insert(table: String, schema: ListMap[String, ChSql.ChType],
-        rows: Iterable[Seq[Any]]): Unit = {
-      val st = conn.prepareStatement(ChSql.insertSql(table, schema, rows.size))
-      try {
-        bindRows(st, rows, schema)
-        st.executeUpdate()
-        ()
-      } finally st.close()
-    }
-
-    override def close(): Unit = conn.close()
-  }
-
   /** Live column→type read-back for the evolution diff (types this
     * writer never creates — including the UInt64 version column — are
     * dropped so the diff leaves them alone).
     */
-  private[writer] def readSchema(t: ChTransport,
+  private[writer] def readSchema(t: HttpTransport,
       table: String): ListMap[String, ChSql.ChType] = {
     var out = ListMap.empty[String, ChSql.ChType]
     t.queryPairs(ChSql.existingSchemaSql(table)).foreach { case (name, typ) =>
       ChSql.ofChTypeName(typ).foreach(ct => out = out.updated(name, ct))
     }
     out
-  }
-
-  /** Bind rows column-major, coercing to the destination lattice the
-    * same way [[PostgresWriter.bindValue]] does, restricted to
-    * ClickHouse's four-type surface: strings parse into numeric
-    * destinations (unparseable → NULL), numbers/booleans stringify
-    * into String destinations, a fractional number into an Int64
-    * destination degrades to NULL rather than erroring the batch.
-    */
-  private[writer] def bindRows(st: PreparedStatement, rows: Iterable[Seq[Any]],
-      schema: ListMap[String, ChSql.ChType]): Unit = {
-    var i = 1
-    rows.foreach { row =>
-      schema.valuesIterator.zipWithIndex.foreach { case (ct, ix) =>
-        bindValue(st, i, row(ix), ct)
-        i += 1
-      }
-    }
-  }
-
-  private[writer] def bindValue(st: PreparedStatement, i: Int, v: Any,
-      ct: ChSql.ChType): Unit = (v, ct) match {
-    case (null, _) => st.setObject(i, null)
-
-    case (b: java.lang.Boolean, ChSql.ChBool) => st.setBoolean(i, b)
-    case (b: java.lang.Boolean, ChSql.ChString) => st.setString(i, b.toString)
-    case (b: java.lang.Boolean, ChSql.ChInt64) => st.setLong(i, if (b) 1L else 0L)
-    case (b: java.lang.Boolean, ChSql.ChFloat64) =>
-      st.setDouble(i, if (b) 1.0 else 0.0)
-
-    case (n: Number, ChSql.ChInt64) =>
-      if (PostgresWriter.isIntegral(n)) st.setLong(i, n.longValue())
-      else st.setObject(i, null)
-    case (n: Number, ChSql.ChFloat64) => st.setDouble(i, n.doubleValue())
-    case (n: Number, ChSql.ChString) => st.setString(i, n.toString)
-    case (_: Number, _) => st.setObject(i, null)
-
-    case (s: String, ChSql.ChString) => st.setString(i, s)
-    case (s: String, ChSql.ChInt64) =>
-      s.toLongOption match {
-        case Some(l) => st.setLong(i, l)
-        case None => st.setObject(i, null)
-      }
-    case (s: String, ChSql.ChFloat64) =>
-      s.toDoubleOption match {
-        case Some(d) => st.setDouble(i, d)
-        case None => st.setObject(i, null)
-      }
-    case (s: String, ChSql.ChBool) =>
-      st.setBoolean(i, s.toLowerCase == "true" || s == "1")
-
-    case (other, _) => st.setObject(i, other)
   }
 }

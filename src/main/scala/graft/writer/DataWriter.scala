@@ -1,6 +1,8 @@
 package graft.writer
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{base64, col, to_json}
+import org.apache.spark.sql.types._
 
 /** Write modes (SURVEY A24, /root/reference/src/writer/mod.rs:10-46). */
 sealed trait WriteMode
@@ -38,6 +40,32 @@ trait DataWriter {
   def replace(df: DataFrame): WriteStats = {
     truncate()
     write(df, WriteMode.Append)
+  }
+}
+
+object DataWriter {
+
+  /** The warehouse writers' shared row shape: nested columns become
+    * JSON text and temporals strings, so every value a writer binds or
+    * renders is a scalar. `base64Binary` also turns binary into base64
+    * text (ClickHouse's JSONEachRow body has no bytes form). One
+    * select, not a withColumn-per-column fold (which stacks a
+    * projection node per converted column).
+    */
+  private[writer] def normalized(df: DataFrame,
+      base64Binary: Boolean = false): DataFrame = {
+    val cols = df.schema.fields.toIndexedSeq.map { f =>
+      f.dataType match {
+        case _: StructType | _: ArrayType | _: MapType =>
+          to_json(col(f.name)).as(f.name)
+        case TimestampType | DateType =>
+          col(f.name).cast(StringType).as(f.name)
+        case BinaryType if base64Binary =>
+          base64(col(f.name)).as(f.name)
+        case _ => col(f.name)
+      }
+    }
+    df.select(cols: _*)
   }
 }
 
@@ -88,11 +116,4 @@ final class FileWriter(path: String, format: String = "parquet") extends DataWri
     (if (format == "csv") w.option("header", "true") else w).save(path)
     WriteStats(obs.get("rows").asInstanceOf[Long])
   }
-}
-
-/** Parquet sink (compatibility alias). */
-final class ParquetWriter(path: String) extends DataWriter {
-  private val inner = new FileWriter(path, "parquet")
-  override def write(df: DataFrame, mode: WriteMode): WriteStats =
-    inner.write(df, mode)
 }

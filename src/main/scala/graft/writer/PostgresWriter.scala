@@ -4,8 +4,6 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Postgres sink (SURVEY A18-A25) over JDBC.
   *
@@ -28,7 +26,6 @@ final class PostgresWriter(
     primaryKey: Seq[String] = Seq.empty,
     batchSize: Int = 5000,
     autoCreate: Boolean = true,
-    truncateFirst: Boolean = false,
     useCopy: Boolean = false,
     schemaEvolution: Boolean = false) extends DataWriter with Serializable {
 
@@ -37,24 +34,6 @@ final class PostgresWriter(
 
   private def version(c: Connection): (Int, Int) =
     (c.getMetaData.getDatabaseMajorVersion, c.getMetaData.getDatabaseMinorVersion)
-
-  /** Normalize a DataFrame for binding: nested/temporal columns become
-    * strings (JSONB/text), so every bind is a simple setObject. One
-    * select, not a withColumn-per-column fold (which stacks a
-    * projection node per converted column).
-    */
-  private def normalized(df: DataFrame): DataFrame = {
-    val cols = df.schema.fields.toIndexedSeq.map { f =>
-      f.dataType match {
-        case _: StructType | _: ArrayType | _: MapType =>
-          to_json(col(f.name)).as(f.name)
-        case TimestampType | DateType =>
-          col(f.name).cast(StringType).as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    df.select(cols: _*)
-  }
 
   override def truncate(): Unit = {
     val c = connect()
@@ -90,7 +69,7 @@ final class PostgresWriter(
     *     debris).
     */
   override def replace(df: DataFrame): WriteStats = {
-    val pgSchema = PgSql.schemaOfSpark(normalized(df).schema)
+    val pgSchema = PgSql.schemaOfSpark(DataWriter.normalized(df).schema)
     val c = connect()
     try {
       val st = c.createStatement()
@@ -123,12 +102,11 @@ final class PostgresWriter(
   }
 
   override def write(df: DataFrame, mode: WriteMode): WriteStats = {
-    val prepared = normalized(df)
+    val prepared = DataWriter.normalized(df)
     val pgSchema = PgSql.schemaOfSpark(prepared.schema)
 
     val c = connect()
     val (major, minor) = try {
-      if (truncateFirst) truncate()
       if (autoCreate) {
         val st = c.createStatement()
         try {

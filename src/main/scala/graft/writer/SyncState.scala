@@ -175,11 +175,11 @@ object BqSyncState {
   }
 }
 
-/** ClickHouse-backed state over the writer's transport seam (HTTP or
-  * JDBC from the URL scheme): a tiny `ReplacingMergeTree(ver)` keyed
-  * by source name, `ver` from the writer's strictly-increasing ingest
-  * epoch so the latest put always wins, and reads go through `FINAL`
-  * so an un-compacted state table still returns the newest watermark.
+/** ClickHouse-backed state over the writer's HTTP transport: a tiny
+  * `ReplacingMergeTree(ver)` keyed by source name, `ver` from the
+  * writer's strictly-increasing ingest epoch so the latest put always
+  * wins, and reads go through `FINAL` so an un-compacted state table
+  * still returns the newest watermark.
   */
 final class ChSyncState(url: String, user: String, password: String,
     table: String = "graft_sync_state") extends SyncState {
@@ -190,23 +190,19 @@ final class ChSyncState(url: String, user: String, password: String,
     "source_name" -> (ChSql.ChString: ChSql.ChType),
     "watermark" -> ChSql.ChString, "ver" -> ChSql.ChInt64)
 
-  private def withTransport[T](f: ClickHouseWriter.ChTransport => T): T = {
-    val t = ClickHouseWriter.transportOf(url, user, password)
-    try f(t) finally t.close()
-  }
+  private val transport = new ClickHouseWriter.HttpTransport(url, user, password)
 
-  override def get(sourceName: String): Option[String] = withTransport { t =>
-    t.execute(ChSyncState.createSql(table))
-    t.queryPairs(ChSyncState.selectSql(table, sourceName))
+  override def get(sourceName: String): Option[String] = {
+    transport.execute(ChSyncState.createSql(table))
+    transport.queryPairs(ChSyncState.selectSql(table, sourceName))
       .headOption.map(_._2)
   }
 
-  override def put(sourceName: String, watermark: String): Unit =
-    withTransport { t =>
-      t.execute(ChSyncState.createSql(table))
-      t.insert(table, schema, Seq(Seq(sourceName, watermark,
-        ClickHouseWriter.nextIngestEpoch() << 31)))
-    }
+  override def put(sourceName: String, watermark: String): Unit = {
+    transport.execute(ChSyncState.createSql(table))
+    transport.insert(table, schema, Seq(Seq(sourceName, watermark,
+      ClickHouseWriter.nextIngestEpoch() << 31)))
+  }
 }
 
 object ChSyncState {
@@ -215,9 +211,9 @@ object ChSyncState {
       "(`source_name` String, `watermark` String, `ver` UInt64) " +
       "ENGINE = ReplacingMergeTree(`ver`) ORDER BY (`source_name`)"
 
-  /** Two-column form so the transport's generic (name, value) TSV/
-    * resultSet reader applies; FINAL resolves replaced versions at
-    * read time without requiring a prior OPTIMIZE.
+  /** Two-column form so the transport's generic (name, value) TSV
+    * reader applies; FINAL resolves replaced versions at read time
+    * without requiring a prior OPTIMIZE.
     */
   def selectSql(table: String, sourceName: String): String =
     s"SELECT `source_name`, `watermark` FROM ${ChSql.quoteIdent(table)} FINAL " +

@@ -181,10 +181,14 @@ class IncrementalSyncE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val args = Main.Args(modulesDir = modules.toString,
       configPath = dir.resolve("pipelines.yaml").toString)
     def run(): Int = Main.run(args, spark, Map.empty[String, String].get)
+    // a keyed load appends its rows to a stage, then ONE MERGE per run
+    // moves them into `ds.items`
     def dataMergeIds(): Seq[Long] = {
       import scala.jdk.CollectionConverters._
-      statements.asScala.toList.filter(_.startsWith("MERGE `ds.items`"))
-        .flatMap("SELECT (\\d+)[, ]".r.findAllMatchIn(_).map(_.group(1).toLong))
+      val qs = statements.asScala.toList
+      assert(qs.count(_.startsWith("MERGE `ds.items`")) == 1, qs)
+      qs.filter(_.startsWith("INSERT INTO `ds.items__stage_"))
+        .flatMap("\\((\\d+), '".r.findAllMatchIn(_).map(_.group(1).toLong))
     }
 
     upstream = Seq(

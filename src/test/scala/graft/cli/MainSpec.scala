@@ -401,6 +401,54 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows == List("""{"id":1,"title":"t1"}""", """{"id":2,"title":"t2"}"""))
   }
 
+  test("clickhouse target with a bare host lands rows over HTTP on host:port") {
+    val spark = graft.SparkTestSession.spark
+    // a bare host is ClickHouse's HTTP interface on `port` — the stub
+    // answers at the server root, where `http://host:port/` points
+    val ch = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val databases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    ch.createContext("/", (ex: HttpExchange) => {
+      databases.add(ex.getRequestURI.getQuery)
+      bodies.add(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
+      graft.HttpStub.respond(ex, "")
+    })
+    ch.start()
+    try {
+      val dir = Files.createTempDirectory("pipeline-ch-bare")
+      val modules = Files.createDirectories(dir.resolve("modules"))
+      Files.writeString(modules.resolve("posts.sql"),
+        """{{ sink(name="ch") }}
+          |SELECT id, title FROM {{ use_source("posts_api") }} WHERE id <= 2""".stripMargin)
+      Files.writeString(dir.resolve("pipelines.yaml"),
+        s"""sources:
+           |  - name: posts_api
+           |    url: $base/posts
+           |    table_destination_name: posts
+           |    data_path: /data
+           |targets:
+           |  - name: ch
+           |    type: clickhouse
+           |    host: 127.0.0.1
+           |    port: ${ch.getAddress.getPort}
+           |    database: db
+           |    auth:
+           |      username: u1
+           |      password: p1
+           |""".stripMargin)
+      val failed = Main.run(Main.Args(
+        modulesDir = modules.toString,
+        configPath = dir.resolve("pipelines.yaml").toString), spark)
+      assert(failed == 0)
+      import scala.jdk.CollectionConverters._
+      val qs = bodies.asScala.toList
+      assert(databases.asScala.toSet == Set("database=db"))
+      val rows = qs.filter(_.startsWith("INSERT INTO `posts` (`id`, `title`) FORMAT JSONEachRow"))
+        .flatMap(_.linesIterator.drop(1)).filter(_.nonEmpty).sorted
+      assert(rows == List("""{"id":1,"title":"t1"}""", """{"id":2,"title":"t2"}"""), qs)
+    } finally ch.stop(0)
+  }
+
   test("schema_evolution + bigquery target is rejected loudly, not silently ignored") {
     val spark = graft.SparkTestSession.spark
     val bqCalls = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -136,6 +136,69 @@ class StartupValidationSpec extends AnyFunSuite {
     assert(e.getMessage.contains("dest_table 'shared3'"), e.getMessage)
   }
 
+  test("a relation stream on a clickhouse sink resolves to replace (EXCHANGE swap)") {
+    // the postgres case above on a clickhouse target: its staged swap
+    // is atomic too, so the stream defaults to replace and collides
+    val yaml =
+      s"""targets:
+         |  - name: cht
+         |    type: clickhouse
+         |    host: localhost
+         |    database: g
+         |    auth: {username: u, password: p}
+         |stages:
+         |  - name: flags
+         |    kind: stream
+         |    stream: store_dedup
+         |    source_dir: /tmp/nope_src
+         |    checkpoint: /tmp/nope_ck
+         |    dir: /tmp/nope_store
+         |    out_dir: /tmp/nope_out
+         |    input_dir: $sf
+         |    sink: cht
+         |    dest_table: shared4
+         |  - name: trail
+         |    kind: query
+         |    query: x_dedup_exact
+         |    input_dir: $sf
+         |    sink: cht
+         |    dest_table: shared4
+         |""".stripMargin
+    val e = intercept[IllegalArgumentException] { run(yaml, None) }
+    assert(e.getMessage.contains("dest_table 'shared4'"), e.getMessage)
+  }
+
+  test("a relation stream on a bigquery sink without write_mode is refused before any drain") {
+    // bigquery's replace is truncate-then-load, so replace never
+    // defaults there and appending would compound the cumulative
+    // relation: the stage fails before its drain takes the lease
+    val dir = Files.createTempDirectory("startup_val_bq")
+    val ck = dir.resolve("ck")
+    val yaml =
+      s"""targets:
+         |  - name: bqt
+         |    type: bigquery
+         |    host: http://127.0.0.1:1
+         |    project: p
+         |    database: ds
+         |    auth: {password: tok}
+         |stages:
+         |  - name: flags
+         |    kind: stream
+         |    stream: store_dedup
+         |    source_dir: ${dir.resolve("src")}
+         |    checkpoint: $ck
+         |    dir: ${dir.resolve("store")}
+         |    out_dir: ${dir.resolve("out")}
+         |    input_dir: $sf
+         |    sink: bqt
+         |    dest_table: flags
+         |""".stripMargin
+    assert(run(yaml, None) == 1)
+    assert(!Files.exists(ck), "the drain's lease was taken")
+    assert(!Files.exists(dir.resolve("out")))
+  }
+
   test("same dest_table on DIFFERENT sinks is not a collision (distinct databases)") {
     // two targets: the tables live in different databases and can
     // never overwrite each other, so startup must NOT refuse; the run

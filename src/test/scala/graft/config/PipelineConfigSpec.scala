@@ -187,7 +187,7 @@ class PipelineConfigSpec extends AnyFunSuite {
     assert(err.getMessage.contains("schema_evolution"))
   }
 
-  test("clickhouse target parses with its own default port and JDBC url") {
+  test("clickhouse target parses with its own default port and HTTP url") {
     val cfg = PipelineConfig.parse(
       """sources:
         |  - name: s
@@ -204,7 +204,11 @@ class PipelineConfigSpec extends AnyFunSuite {
     val t = cfg.targets.head
     assert(t.kind == "clickhouse")
     assert(t.port == 8123)
-    assert(t.jdbcUrl == "jdbc:clickhouse://ch.example.com:8123/analytics")
+    // a bare host means ClickHouse's HTTP interface on that port
+    assert(t.chUrl == "http://ch.example.com:8123/?database=analytics")
+    // a scheme-carrying host (https, stub servers) is used as-is
+    assert(t.copy(host = "https://ch.example.com:8443").chUrl ==
+      "https://ch.example.com:8443/?database=analytics")
     // unknown kinds still rejected at parse
     val err = intercept[IllegalArgumentException] {
       PipelineConfig.parse(

@@ -87,10 +87,14 @@ class BigQueryWriterSpec extends AnyFunSuite {
 
       val w = new BigQueryWriter(base, "p1", "ds", "t",
         BigQueryWriter.StaticToken("tok"), primaryKey = Seq("id"))
-      w.write(df, WriteMode.Merge)
+      assert(w.write(df, WriteMode.Merge).rowsWritten == 1)
       import scala.jdk.CollectionConverters._
+      // the row lands in the stage; the one MERGE reads it from there
+      val insert = queries.asScala.find(_.startsWith("INSERT")).get
+      assert(insert.matches("INSERT INTO `ds\\.t__stage_\\w+` \\(`id`, `v`\\) VALUES \\(1, 'a'\\)"),
+        insert)
       val merge = queries.asScala.find(_.startsWith("MERGE")).get
-      assert(merge.startsWith("MERGE `ds.t` AS t USING (SELECT 1 AS `id`, 'a' AS `v`)"))
+      assert(merge.startsWith("MERGE `ds.t` AS t USING (SELECT * EXCEPT (__rn)"))
       assert(merge.contains("WHEN NOT MATCHED THEN INSERT (`id`, `v`)"))
 
       intercept[IllegalArgumentException] {
@@ -98,9 +102,9 @@ class BigQueryWriterSpec extends AnyFunSuite {
           BigQueryWriter.StaticToken("tok")).write(df, WriteMode.Merge)
       }
 
-      // a job-level error (HTTP 200 + errors array) fails the write;
-      // thrown in an executor task, it surfaces wrapped by Spark —
-      // the WriterError must sit in the cause chain
+      // a job-level error (HTTP 200 + errors array) on the MERGE fails
+      // the write, and the WriterError must sit in the cause chain
+      queries.clear()
       val err = intercept[Exception] {
         new BigQueryWriter(base, "p1", "ds", "boom",
           BigQueryWriter.StaticToken("tok"), primaryKey = Seq("id"))
@@ -112,6 +116,8 @@ class BigQueryWriterSpec extends AnyFunSuite {
         chain.map(_.getClass.getName))
       assert(chain.exists(t =>
         Option(t.getMessage).exists(_.contains("invalidQuery"))))
+      // the failed write still drops its stage
+      assert(queries.asScala.last.startsWith("DROP TABLE IF EXISTS `ds.boom__stage_"))
     }
   }
 
@@ -258,8 +264,8 @@ class BigQueryWriterSpec extends AnyFunSuite {
 
   test("staged merge: partitions append to a stage, ONE driver MERGE, stage dropped") {
     import spark.implicits._
-    // several partitions would normally race their MERGEs — staged
-    // mode must turn them into stage-appends plus one MERGE
+    // several partitions must not race MERGEs on the target: they
+    // append to a stage, and the driver issues one MERGE
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c"), (1L, "a2"))
       .toDF("id", "v").repartition(4)
     withServer { (server, base) =>
@@ -269,8 +275,7 @@ class BigQueryWriterSpec extends AnyFunSuite {
         respond(ex, """{"jobComplete": true}""")
       })
       val w = new BigQueryWriter(base, "p1", "ds", "t",
-        BigQueryWriter.StaticToken("tok"), primaryKey = Seq("id"),
-        stagedMerge = true)
+        BigQueryWriter.StaticToken("tok"), primaryKey = Seq("id"))
       val stats = w.write(df, WriteMode.Merge)
       assert(stats.rowsWritten == 4)
       import scala.jdk.CollectionConverters._
@@ -290,6 +295,33 @@ class BigQueryWriterSpec extends AnyFunSuite {
       assert(merges.head.contains(s"FROM `$stage`"))
       assert(merges.head.contains("ROW_NUMBER() OVER (PARTITION BY `id`)"))
       assert(qs.last == s"DROP TABLE IF EXISTS `$stage`")
+    }
+  }
+
+  test("replace: truncate-then-load; the first run's missing table is created") {
+    import spark.implicits._
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    withServer { (server, base) =>
+      val queries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      server.createContext("/bigquery/v2/projects/p1/queries", ex => {
+        val q = queryOf(readBody(ex))
+        queries.add(q)
+        if (q.startsWith("TRUNCATE"))
+          respond(ex, """{"errors": [{"reason": "notFound"}]}""")
+        else respond(ex, """{"jobComplete": true}""")
+      })
+      val w = new BigQueryWriter(base, "p1", "ds", "t",
+        BigQueryWriter.StaticToken("tok"))
+      assert(w.replace(df).rowsWritten == 2)
+      import scala.jdk.CollectionConverters._
+      val qs = queries.asScala.toList
+      assert(qs.take(2) == List("TRUNCATE TABLE `ds.t`",
+        "CREATE TABLE IF NOT EXISTS `ds.t` (`id` INT64, `v` STRING)"), qs)
+      val ids = qs.drop(2).flatMap { q =>
+        assert(q.startsWith("INSERT INTO `ds.t` (`id`, `v`) VALUES "), q)
+        "\\((\\d+), '".r.findAllMatchIn(q).map(_.group(1).toLong)
+      }
+      assert(ids.sorted == List(1L, 2L))
     }
   }
 

@@ -47,18 +47,21 @@ class BqSqlSpec extends AnyFunSuite {
     assert(literal(7L: java.lang.Long, BqString) == "'7'")
   }
 
-  test("MERGE uses a UNION ALL source with first-row aliases") {
+  test("MERGE reads the stage key-deduplicated; all-key schema skips UPDATE") {
     val s2 = ListMap("id" -> BqInt64, "v" -> BqString)
-    assert(mergeSql("ds.t", s2, Seq("id"), Seq(Seq(1L, "a"), Seq(2L, "b"))) ==
-      "MERGE `ds.t` AS t USING (" +
-        "SELECT 1 AS `id`, 'a' AS `v` UNION ALL SELECT 2, 'b') AS s " +
+    assert(mergeFromTableSql("ds.t", "ds.t__stage_1", s2, Seq("id")) ==
+      "MERGE `ds.t` AS t USING (SELECT * EXCEPT (__rn) FROM (SELECT *, " +
+        "ROW_NUMBER() OVER (PARTITION BY `id`) AS __rn " +
+        "FROM `ds.t__stage_1`) WHERE __rn = 1) AS s " +
         "ON t.`id` = s.`id` " +
         "WHEN MATCHED THEN UPDATE SET `v` = s.`v` " +
         "WHEN NOT MATCHED THEN INSERT (`id`, `v`) VALUES (s.`id`, s.`v`)")
     // all-key schema: no UPDATE branch, like the Postgres forms
     val keyOnly = ListMap("id" -> BqInt64)
-    assert(!mergeSql("ds.t", keyOnly, Seq("id"), Seq(Seq(1L)))
+    assert(!mergeFromTableSql("ds.t", "ds.s", keyOnly, Seq("id"))
       .contains("WHEN MATCHED"))
+    intercept[IllegalArgumentException](mergeFromTableSql("ds.t", "ds.s", s2, Nil))
+    assert(dropTableSql("ds.s") == "DROP TABLE IF EXISTS `ds.s`")
     assert(truncateSql("ds.t") == "TRUNCATE TABLE `ds.t`")
     // backtick escape is backslash-based in GoogleSQL, not doubling
     assert(quoteIdent("a`b") == "`a\\`b`")

@@ -35,9 +35,12 @@ class ChSqlSpec extends AnyFunSuite {
   }
 
   test("multi-row INSERT and the merge-compaction statements") {
-    assert(insertSql("t", schema, 2) ==
-      "INSERT INTO `t` (`id`, `name`, `score`, `active`) " +
-        "VALUES (?, ?, ?, ?), (?, ?, ?, ?)")
+    // one header for any number of rows: the NDJSON body carries them
+    assert(insertHttpSql("t", schema) ==
+      "INSERT INTO `t` (`id`, `name`, `score`, `active`) FORMAT JSONEachRow")
+    assert(jsonEachRow(schema, Seq(Seq(1L, "a", 0.5, true), Seq(2L, null, null, null))) ==
+      "{\"id\":1,\"name\":\"a\",\"score\":0.5,\"active\":true}\n" +
+        "{\"id\":2,\"name\":null,\"score\":null,\"active\":null}\n")
     assert(optimizeSql("t") == "OPTIMIZE TABLE `t` FINAL")
     assert(truncateSql("t") == "TRUNCATE TABLE IF EXISTS `t`")
     // backtick quoting doubles embedded backticks
@@ -57,29 +60,18 @@ class ChSqlSpec extends AnyFunSuite {
   }
 
   test("bind lattice: strings parse into numeric dests, misses go NULL") {
-    import java.lang.reflect.{InvocationHandler, Method, Proxy}
-    import java.sql.PreparedStatement
-    // record binds through a proxy, the PostgresBindSpec convention
-    val binds = scala.collection.mutable.ArrayBuffer.empty[(Int, Any)]
-    val handler = new InvocationHandler {
-      override def invoke(proxy: Any, m: Method, as: Array[AnyRef]): AnyRef = {
-        if (m.getName.startsWith("set") && as != null && as.length == 2)
-          binds += ((as(0).asInstanceOf[Int], as(1)))
-        null
-      }
-    }
-    val st = Proxy.newProxyInstance(classOf[PreparedStatement].getClassLoader,
-      Array(classOf[PreparedStatement]), handler).asInstanceOf[PreparedStatement]
-
-    ClickHouseWriter.bindValue(st, 1, "42", ChInt64) // parses
-    ClickHouseWriter.bindValue(st, 2, "x", ChInt64) // miss → NULL
-    ClickHouseWriter.bindValue(st, 3, 1.5: java.lang.Double, ChInt64) // fractional → NULL
-    ClickHouseWriter.bindValue(st, 4, 7: java.lang.Integer, ChString) // stringify
-    ClickHouseWriter.bindValue(st, 5, true: java.lang.Boolean, ChInt64) // 1
-    ClickHouseWriter.bindValue(st, 6, "2.5", ChFloat64)
-    ClickHouseWriter.bindValue(st, 7, null, ChString)
-    assert(binds.toList == List(
-      (1, 42L), (2, null), (3, null), (4, "7"), (5, 1L), (6, 2.5), (7, null)))
+    // the JSONEachRow rendering of the writers' shared coercion lattice
+    def render(v: Any, ct: ChType): String =
+      jsonEachRow(ListMap("c" -> ct), Seq(Seq(v))).trim
+    assert(render("42", ChInt64) == """{"c":42}""") // parses
+    assert(render("x", ChInt64) == """{"c":null}""") // miss → NULL
+    assert(render(1.5: java.lang.Double, ChInt64) == """{"c":null}""") // fractional → NULL
+    assert(render(7: java.lang.Integer, ChString) == """{"c":"7"}""") // stringify
+    assert(render(true: java.lang.Boolean, ChInt64) == """{"c":1}""")
+    assert(render("2.5", ChFloat64) == """{"c":2.5}""")
+    assert(render(null, ChString) == """{"c":null}""")
+    // JSON has no NaN/Infinity: non-finite floats land as NULL
+    assert(render(Double.NaN: java.lang.Double, ChFloat64) == """{"c":null}""")
   }
 
   test("sync-state statements: versioned state table, FINAL read, literal escaping") {

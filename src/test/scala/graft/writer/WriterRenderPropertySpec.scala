@@ -1,24 +1,17 @@
 package graft.writer
 
-import java.lang.reflect.{InvocationHandler, Method, Proxy}
-import java.sql.PreparedStatement
-
-import scala.collection.immutable.ListMap
-import scala.collection.mutable
-
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property pins for the round-13 rendering seams:
+/** Property pins for the rendering seams:
   *
   *  - the BigQuery size estimate must EQUAL the escaped literal's
   *    UTF-8 byte length for arbitrary strings (an under-count can
   *    breach the 1 MB statement cap — chars undercount CJK text 3x;
   *    a systematic over-count shrinks batches);
-  *  - the ClickHouse HTTP JSONEachRow rendering must traverse the
-  *    coercion lattice exactly like the JDBC bind path — NULL
-  *    together, same value otherwise — for arbitrary values, so the
-  *    two transports can never land different data from one input.
+  *  - a ClickHouse JSONEachRow body must parse back to exactly the
+  *    values rendered into their own column type, whatever the
+  *    strings contain (quotes, backslashes, control characters).
   */
 class WriterRenderPropertySpec extends AnyFunSuite {
 
@@ -48,62 +41,24 @@ class WriterRenderPropertySpec extends AnyFunSuite {
     })
   }
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper
-
-  private def jdbcOutcome(v: Any, ct: ChSql.ChType): Option[Any] = {
-    val calls = mutable.Buffer.empty[Any]
-    val handler = new InvocationHandler {
-      override def invoke(proxy: Any, m: Method, args: Array[AnyRef]): AnyRef = {
-        if (m.getName.startsWith("set") && args != null && args.length == 2)
-          calls += args(1)
-        null
-      }
-    }
-    val st = Proxy.newProxyInstance(classOf[PreparedStatement].getClassLoader,
-      Array(classOf[PreparedStatement]), handler).asInstanceOf[PreparedStatement]
-    ClickHouseWriter.bindValue(st, 1, v, ct)
-    calls.headOption.filter(_ != null)
-  }
-
-  private def httpOutcome(v: Any, ct: ChSql.ChType): Option[Any] = {
-    val line = ChSql.jsonEachRow(ListMap("c" -> ct), Seq(Seq(v))).trim
-    val node = mapper.readTree(line).get("c")
-    if (node == null || node.isNull) None
-    else Some(ct match {
-      case ChSql.ChString => node.asText()
-      case ChSql.ChBool => java.lang.Boolean.valueOf(node.asBoolean())
-      case ChSql.ChInt64 => java.lang.Long.valueOf(node.asLong())
-      case ChSql.ChFloat64 => java.lang.Double.valueOf(node.asDouble())
-    })
-  }
-
-  private val anyValue: Gen[Any] = Gen.oneOf(
-    Gen.const(null),
-    trickyString,
-    Gen.long.map(l => (l: java.lang.Long)),
-    Gen.chooseNum(-1e12, 1e12).map(d => (d: java.lang.Double)),
-    Gen.oneOf(Seq[Any](Double.NaN, Double.PositiveInfinity)),
-    Gen.oneOf(true, false).map(b => (b: java.lang.Boolean)),
-    Gen.numStr.suchThat(_.length < 15), // numeric-looking strings
-    Gen.oneOf("true", "false", "1", "0", "2.5", "-3", "x"))
-
-  test("property: ClickHouse HTTP JSONEachRow values equal the JDBC binds per destination") {
-    val types = Seq(ChSql.ChString, ChSql.ChBool, ChSql.ChInt64, ChSql.ChFloat64)
-    check(Prop.forAll(anyValue, Gen.oneOf(types)) { (v, ct) =>
-      val jdbc = jdbcOutcome(v, ct).map {
-        case l: java.lang.Long => l
-        case i: java.lang.Integer => java.lang.Long.valueOf(i.longValue())
-        case d: java.lang.Double
-            if !java.lang.Double.isFinite(d) && ct == ChSql.ChFloat64 =>
-          null // JSON has no NaN/Inf: the HTTP path maps these to null
-        case other => other
-      }.filter(_ != null)
-      val http = httpOutcome(v, ct)
-      // both transports must agree on null-vs-value, and on the value
-      (jdbc, http) match {
-        case (None, None) => true
-        case (Some(a), Some(b)) => a == b
-        case _ => false
+  test("property: ClickHouse JSONEachRow rows parse back to the rendered values") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    val schema = scala.collection.immutable.ListMap("s" -> ChSql.ChString,
+      "i" -> ChSql.ChInt64, "f" -> ChSql.ChFloat64, "b" -> ChSql.ChBool)
+    val row = for {
+      s <- Gen.option(trickyString)
+      i <- Gen.option(Gen.long)
+      f <- Gen.option(Gen.chooseNum(-1e12, 1e12))
+      b <- Gen.option(Gen.oneOf(true, false))
+    } yield Seq[Option[Any]](s, i, f, b)
+    check(Prop.forAll(Gen.nonEmptyListOf(row)) { rows =>
+      val lines = ChSql.jsonEachRow(schema, rows.map(_.map(_.orNull)))
+        .split('\n').toSeq
+      lines.size == rows.size && lines.zip(rows).forall { case (line, r) =>
+        val n = mapper.readTree(line)
+        def v(k: String) = Option(n.get(k)).filterNot(_.isNull)
+        v("s").map(_.asText()) == r(0) && v("i").map(_.asLong()) == r(1) &&
+          v("f").map(_.asDouble()) == r(2) && v("b").map(_.asBoolean()) == r(3)
       }
     })
   }
