@@ -78,6 +78,7 @@ object Main {
     val a = loop(Args(), argv.toList)
     require(a.modulesDir.nonEmpty, "--modules is required")
     require(a.configPath.nonEmpty, "--yaml-config is required")
+    require(a.pageSize > 0, s"--page-size must be positive, got ${a.pageSize}")
     a
   }
 

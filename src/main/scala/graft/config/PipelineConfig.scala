@@ -84,74 +84,55 @@ object PipelineConfig {
     def destTable: String = tableDestinationName.getOrElse(name)
 
     /** Resolve `bearer_token_env` (preferred over an inline
-      * `bearer_token`, like the postgres auth rule); a missing or
-      * empty env value is a config error, mirroring
-      * `PostgresAuth.resolve`.
+      * `bearer_token`) by the [[credential]] rule.
       */
     def withBearerResolved(getenv: String => Option[String] = sys.env.get): Source =
-      bearerTokenEnv match {
-        case Some(e) =>
-          val v = getenv(e).getOrElse(throw new IllegalArgumentException(
-            s"environment variable '$e' for bearer token is not set"))
-          if (v.trim.isEmpty) throw new IllegalArgumentException(
-            s"environment variable '$e' for bearer token is empty")
-          copy(bearerToken = Some(v))
-        case None => this
-      }
+      copy(bearerToken = credential("bearer token", bearerTokenEnv, bearerToken, getenv))
   }
 
+  /** The env-indirection rule every credential follows
+    * (mod.rs:84-130): a declared env variable is preferred over the
+    * inline value, and a missing or empty one is a config error
+    * naming `label`.
+    */
+  private def credential(label: String, env: Option[String],
+      inline: Option[String], getenv: String => Option[String]): Option[String] =
+    env.map { e =>
+      val v = getenv(e).getOrElse(throw new IllegalArgumentException(
+        s"environment variable '$e' for $label is not set"))
+      if (v.trim.isEmpty) throw new IllegalArgumentException(
+        s"environment variable '$e' for $label is empty")
+      v
+    }.orElse(inline)
+
+  /** [[credential]] for a credential that must be given in one form. */
+  private def requiredCredential(label: String, env: Option[String],
+      inline: Option[String], getenv: String => Option[String]): String =
+    credential(label, env, inline, getenv).getOrElse(
+      throw new IllegalArgumentException(s"$label not provided"))
+
   /** OAuth2 client-credentials config: `token_url` plus a client id
-    * and secret, each with the env-indirection rule every credential
-    * here follows (env name preferred; missing/empty env is a config
-    * error; the secret additionally REQUIRES one of the two forms).
+    * and secret, each required and resolved by the [[credential]]
+    * rule.
     */
   final case class OAuth2Conf(
       tokenUrl: String,
       clientId: Option[String], clientIdEnv: Option[String],
       clientSecret: Option[String], clientSecretEnv: Option[String],
       scope: Option[String]) {
-    private def resolve(kind: String, env: Option[String],
-        inline: Option[String], getenv: String => Option[String]): String =
-      env match {
-        case Some(e) =>
-          val v = getenv(e).getOrElse(throw new IllegalArgumentException(
-            s"environment variable '$e' for oauth2 $kind is not set"))
-          if (v.trim.isEmpty) throw new IllegalArgumentException(
-            s"environment variable '$e' for oauth2 $kind is empty")
-          v
-        case None => inline.getOrElse(throw new IllegalArgumentException(
-          s"oauth2 $kind not provided"))
-      }
-
     def resolvedClientId(getenv: String => Option[String] = sys.env.get): String =
-      resolve("client_id", clientIdEnv, clientId, getenv)
+      requiredCredential("oauth2 client_id", clientIdEnv, clientId, getenv)
     def resolvedClientSecret(getenv: String => Option[String] = sys.env.get): String =
-      resolve("client_secret", clientSecretEnv, clientSecret, getenv)
+      requiredCredential("oauth2 client_secret", clientSecretEnv, clientSecret, getenv)
   }
 
   final case class PostgresAuth(
       username: Option[String], password: Option[String],
       usernameEnv: Option[String], passwordEnv: Option[String]) {
-    /** Resolve a credential preferring env indirection; missing or
-      * empty env values are config errors (mod.rs:84-130).
-      */
-    private def resolve(kind: String, env: Option[String],
-        inline: Option[String], getenv: String => Option[String]): String =
-      env match {
-        case Some(e) =>
-          val v = getenv(e).getOrElse(throw new IllegalArgumentException(
-            s"environment variable '$e' for postgres $kind is not set"))
-          if (v.trim.isEmpty) throw new IllegalArgumentException(
-            s"environment variable '$e' for postgres $kind is empty")
-          v
-        case None => inline.getOrElse(throw new IllegalArgumentException(
-          s"postgres $kind not provided"))
-      }
-
     def resolvedUsername(getenv: String => Option[String] = sys.env.get): String =
-      resolve("username", usernameEnv, username, getenv)
+      requiredCredential("postgres username", usernameEnv, username, getenv)
     def resolvedPassword(getenv: String => Option[String] = sys.env.get): String =
-      resolve("password", passwordEnv, password, getenv)
+      requiredCredential("postgres password", passwordEnv, password, getenv)
   }
 
   final case class Target(
@@ -626,6 +607,8 @@ object PipelineConfig {
         case other => throw new IllegalArgumentException(
           s"schema_evolution must be a boolean, got '$other'")
       })
+    if (s.pageSize.exists(_ <= 0)) throw new IllegalArgumentException(
+      s"source '${s.name}': page_size must be positive, got ${s.pageSize.get}")
     if (s.oauth2.isDefined && (s.bearerToken.isDefined || s.bearerTokenEnv.isDefined))
       throw new IllegalArgumentException(
         s"source '${s.name}': oauth2 and bearer_token(_env) are mutually exclusive")

@@ -1,13 +1,16 @@
 package graft.http
 
+import java.io.InputStream
 import java.net.URI
 import java.net.URLEncoder
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
 import scala.jdk.CollectionConverters._
+import scala.jdk.OptionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.MissingNode
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.config.PipelineConfig.{Pagination, Retry, Source}
@@ -18,6 +21,10 @@ import graft.config.PipelineConfig.{Pagination, Retry, Source}
   * retries with exponential backoff, extracts rows via an RFC-6901
   * `data_path` pointer, and understands both whole-JSON and NDJSON
   * bodies (/root/reference/src/http/fetcher.rs:34-134,250-533).
+  *
+  * Every request goes through one retrying [[exchange]] (the token
+  * POST in [[OAuth2]] included) and every body through one parser,
+  * [[readPage]].
   *
   * Spark-first design: page fetching with a KNOWN page count fans out
   * across executors (`spark.range(...).mapPartitions`) in one task per
@@ -39,8 +46,6 @@ object HttpJsonSource {
       queryParams: Seq[(String, String)],
       dataPath: Option[String],
       retry: Retry,
-      requestTimeoutSecs: Long = 30,
-      connectTimeoutSecs: Long = 10,
       bearerToken: Option[String] = None,
       /** When set, the bearer is RE-RESOLVED per request through
         * [[OAuth2.token]]'s cache (a fresh POST only past the expiry
@@ -90,9 +95,13 @@ object HttpJsonSource {
   /** Rows of one page as raw JSON object text. */
   type Page = Seq[String]
 
+  private[http] val connectTimeout = Duration.ofSeconds(10)
+  private[http] val requestTimeout = Duration.ofSeconds(30)
+
+  /** A keep-alive client; every source shares the same timeouts. */
   def buildClient(spec: FetchSpec): HttpClient =
     HttpClient.newBuilder()
-      .connectTimeout(Duration.ofSeconds(spec.connectTimeoutSecs))
+      .connectTimeout(connectTimeout)
       .followRedirects(HttpClient.Redirect.NORMAL)
       .build()
 
@@ -102,7 +111,7 @@ object HttpJsonSource {
     @transient lazy val mapper = new ObjectMapper()
   }
 
-  private def encode(s: String): String =
+  private[http] def encode(s: String): String =
     URLEncoder.encode(s, StandardCharsets.UTF_8)
 
   private[http] def buildUri(spec: FetchSpec, extra: Seq[(String, String)]): URI = {
@@ -115,63 +124,57 @@ object HttpJsonSource {
     }
   }
 
-  /** GET with retry/backoff (A7) under an arbitrary body handler:
-    * attempts up to maxAttempts, delay doubling from minDelaySecs,
-    * capped at maxDelaySecs; 5xx and IO errors retry, other statuses
-    * fail fast. `errorPeek` renders the first part of an error body
-    * for the 4xx message; `discard` releases a body that will be
-    * retried or abandoned (a streaming handler must close its stream).
+  /** The one retrying exchange (A7): page GETs and the [[OAuth2]]
+    * token POST both go through it. Up to `retry.maxAttempts`
+    * attempts, the delay doubling from minDelaySecs, capped at
+    * maxDelaySecs; 5xx, 429 and IO errors retry, other statuses
+    * >= 400 fail fast with a 200-byte body peek. `request` is rebuilt
+    * per attempt, so an OAuth2 bearer re-resolves through the token
+    * cache after a refresh. `on401` buys one free replay on a 401:
+    * the hook runs (a page GET's evicts its cached OAuth2 token,
+    * revoked or expired past the margin by server clock skew) and the
+    * next attempt runs at once; a second 401 is a real authorization
+    * error and fails fast. The body
+    * arrives as a stream the caller closes; retried and error bodies
+    * are closed here.
     */
-  private def sendWithRetry[T](client: HttpClient, spec: FetchSpec,
-      extra: Seq[(String, String)], handler: HttpResponse.BodyHandler[T],
-      errorPeek: T => String, discard: T => Unit): HttpResponse[T] = {
-    // the request is built PER attempt: with an oauth spec the bearer
-    // header re-resolves through the token cache, so an attempt after
-    // a refresh (expiry horizon passed, or the 401 eviction below)
-    // carries the new token instead of the one from attempt 1
-    def buildReq(): HttpRequest = {
-      val builder = HttpRequest.newBuilder(buildUri(spec, extra))
-        .timeout(Duration.ofSeconds(spec.requestTimeoutSecs)).GET()
-      effectiveHeaders(spec).foreach { case (k, v) => builder.header(k, v) }
-      builder.build()
-    }
+  private[http] def exchange(client: HttpClient, retry: Retry,
+      request: () => HttpRequest,
+      on401: Option[() => Unit]): HttpResponse[InputStream] = {
     var attempt = 0
-    var refreshed = false
-    var delayMs = spec.retry.minDelaySecs * 1000
+    var refresh = on401
+    var delayMs = retry.minDelaySecs * 1000
     while (true) {
       attempt += 1
-      val req = buildReq()
-      val resp: Either[Throwable, HttpResponse[T]] =
-        try Right(client.send(req, handler))
+      val req = request()
+      val resp: Either[Throwable, HttpResponse[InputStream]] =
+        try Right(client.send(req, HttpResponse.BodyHandlers.ofInputStream()))
         catch { case e: java.io.IOException => Left(e) }
       resp match {
-        // one free replay on 401 under oauth: the cached token may be
-        // revoked or expired past our margin (server clock skew) —
-        // evict it and retry immediately on a fresh one; a second 401
-        // is a real authorization error and fails fast below
-        case Right(r) if r.statusCode() == 401 && spec.oauth.isDefined
-            && !refreshed =>
-          discard(r.body())
-          refreshed = true
+        case Right(r) if r.statusCode() == 401 && refresh.isDefined =>
+          r.body().close()
+          refresh.foreach(_.apply())
+          refresh = None
           attempt -= 1
-          spec.oauth.foreach(OAuth2.invalidate)
         case Right(r) if r.statusCode() < 500 && r.statusCode() != 429 =>
           if (r.statusCode() >= 400) {
-            val peek = errorPeek(r.body())
+            val in = r.body()
+            val peek = try new String(in.readNBytes(200), StandardCharsets.UTF_8)
+              finally in.close()
             throw new RuntimeException(
               s"HTTP ${r.statusCode()} from ${req.uri()}: $peek")
           }
           // span-named event mirroring fetcher.rs:48 debug_span!("http.request")
-          log.debug("http.request method=GET source={} status={} attempt={}",
-            spec.url, r.statusCode().toString, attempt.toString)
+          log.debug("http.request method={} uri={} status={} attempt={}",
+            req.method(), req.uri(), r.statusCode().toString, attempt.toString)
           return r
         case other =>
           // retryable: 5xx, transport I/O, and 429 — rate limiting is
           // the one 4xx a 32-thread executor fan-out RELIABLY
           // produces against a real API, and failing the whole
           // partition on it turns a polite server into a hard error
-          other.foreach(r => discard(r.body()))
-          if (attempt >= spec.retry.maxAttempts) other match {
+          other.foreach(_.body().close())
+          if (attempt >= retry.maxAttempts) other match {
             case Right(r) => throw new RuntimeException(
               s"HTTP ${r.statusCode()} from ${req.uri()} after $attempt attempts")
             case Left(e) => throw new RuntimeException(
@@ -182,56 +185,16 @@ object HttpJsonSource {
           // will take the request, sleeping less just burns attempts;
           // capped at 300 s so a hostile header can't hang a task
           val retryAfterMs = other.toOption
-            .flatMap(r => Option(r.headers()
-              .firstValue("Retry-After").orElse(null)))
+            .flatMap(_.headers().firstValue("Retry-After").toScala)
             .flatMap(_.trim.toLongOption)
             .map(s => math.min(s, 300L) * 1000)
             .getOrElse(0L)
           Thread.sleep(math.max(delayMs, retryAfterMs))
-          delayMs = math.min(delayMs * 2, spec.retry.maxDelaySecs * 1000)
+          delayMs = math.min(delayMs * 2, retry.maxDelaySecs * 1000)
       }
     }
     throw new IllegalStateException("unreachable")
   }
-
-  /** GET with retry/backoff, whole body as a String — the metadata
-    * path (first page for schema/total hints, cursor threading).
-    */
-  def getWithRetry(client: HttpClient, spec: FetchSpec,
-      extra: Seq[(String, String)]): HttpResponse[String] =
-    sendWithRetry(client, spec, extra, HttpResponse.BodyHandlers.ofString(),
-      (b: String) => b.take(200), (_: String) => ())
-
-  /** GET with retry/backoff, body as a stream — the row path: an
-    * NDJSON page frames line-by-line off the wire without ever
-    * materializing as one String (the reference's LinesCodec property,
-    * fetcher.rs:115-124). Error peeks read at most 200 bytes; retried
-    * bodies are closed before the next attempt.
-    */
-  def getWithRetryStream(client: HttpClient, spec: FetchSpec,
-      extra: Seq[(String, String)]): HttpResponse[java.io.InputStream] =
-    sendWithRetry(client, spec, extra,
-      HttpResponse.BodyHandlers.ofInputStream(),
-      (in: java.io.InputStream) =>
-        try new String(in.readNBytes(200), StandardCharsets.UTF_8)
-        finally in.close(),
-      (in: java.io.InputStream) => in.close())
-
-  /** Parse a response body into rows (A2-A3): NDJSON content types are
-    * framed line-by-line; plain JSON is drilled with the RFC-6901
-    * data_path (array → rows, null/missing → none, scalar/object → one
-    * row) — fetcher.rs:61-93,115-124.
-    */
-  def parseBody(body: String, contentType: Option[String],
-      dataPath: Option[String]): Page = {
-    if (isNdjson(contentType))
-      parseNdjsonLines(body.split('\n').iterator, dataPath).toSeq
-    else if (body.trim.isEmpty) Seq.empty
-    else extractRows(mapper.readTree(body), dataPath)
-  }
-
-  private def isNdjson(contentType: Option[String]): Boolean =
-    contentType.exists(ct => ct.contains("ndjson") || ct.contains("x-ndjson"))
 
   /** NDJSON line framing as an incremental pass: each line parses and
     * extracts independently, so peak memory is one line + the
@@ -253,33 +216,47 @@ object HttpJsonSource {
     else Seq(mapper.writeValueAsString(target))
   }
 
-  /** Fetch one page of rows. The body arrives as a stream: NDJSON
-    * frames line-by-line (a multi-GB page never exists as one heap
-    * String — only the extracted row strings accumulate, which is the
-    * data itself); whole-JSON bodies must materialize to parse (same
-    * as the reference's serde_json path) and are read from the stream
-    * in one pass.
+  /** Parse one response body into rows (A2-A3), plus the whole-JSON
+    * body tree that pagination metadata (total hints, next cursor) is
+    * read from — a MissingNode for NDJSON and empty bodies. NDJSON
+    * content types frame line-by-line off the stream, so a multi-GB
+    * page never exists as one heap String, only the extracted rows
+    * (fetcher.rs:115-124); a whole-JSON body is read to its end (the
+    * connection stays reusable), parsed once and drilled with the
+    * RFC-6901 data_path: array → rows, null/missing → none,
+    * scalar/object → one row (fetcher.rs:61-93).
     */
-  def fetchPage(client: HttpClient, spec: FetchSpec,
-      params: Seq[(String, String)]): Page = {
-    val resp = getWithRetryStream(client, spec, params)
-    val ct = resp.headers().firstValue("content-type")
-    val ctOpt = if (ct.isPresent) Some(ct.get()) else None
+  private[http] def readPage(in: InputStream, contentType: Option[String],
+      dataPath: Option[String]): (Page, JsonNode) =
+    if (contentType.exists(_.contains("ndjson"))) {
+      val reader = new java.io.BufferedReader(
+        new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
+      (parseNdjsonLines(Iterator.continually(reader.readLine())
+        .takeWhile(_ != null), dataPath).toVector, MissingNode.getInstance)
+    } else {
+      val body = mapper.readTree(in.readAllBytes())
+      (extractRows(body, dataPath), body)
+    }
+
+  /** GET one page through [[exchange]] and [[readPage]] its body. */
+  private def fetchWithBody(client: HttpClient, spec: FetchSpec,
+      params: Seq[(String, String)]): (Page, JsonNode) = {
+    val resp = exchange(client, spec.retry, () => {
+      val builder = HttpRequest.newBuilder(buildUri(spec, params))
+        .timeout(requestTimeout).GET()
+      effectiveHeaders(spec).foreach { case (k, v) => builder.header(k, v) }
+      builder.build()
+    }, spec.oauth.map(o => () => OAuth2.invalidate(o)))
     val in = resp.body()
-    try {
-      if (isNdjson(ctOpt)) {
-        val reader = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-        parseNdjsonLines(
-          Iterator.continually(reader.readLine()).takeWhile(_ != null),
-          spec.dataPath).toVector
-      } else {
-        val body = new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        if (body.trim.isEmpty) Seq.empty
-        else extractRows(mapper.readTree(body), spec.dataPath)
-      }
-    } finally in.close()
+    try readPage(in, resp.headers().firstValue("content-type").toScala,
+      spec.dataPath)
+    finally in.close()
   }
+
+  /** Fetch one page of rows. */
+  def fetchPage(client: HttpClient, spec: FetchSpec,
+      params: Seq[(String, String)]): Page =
+    fetchWithBody(client, spec, params)._1
 
   /** Hint to compute the total page count (fetcher.rs:194-198):
     * Items → ceil(items / perPage); Pages → the count itself.
@@ -292,17 +269,20 @@ object HttpJsonSource {
 
   // ---- pagination drivers ---------------------------------------------------
 
-  /** limit_offset (A4): sequential driver loop, stop on first empty
-    * page (fetcher.rs:302-304).
+  /** Pages `n`, `n + 1`, … one GET each, until the first empty page
+    * (fetcher.rs:302-304): the sequential driver for every source
+    * whose page count is unknown.
     */
-  def fetchLimitOffset(spec: FetchSpec, limitParam: String,
-      offsetParam: String, limit: Long): Iterator[Page] = {
-    val client = buildClient(spec)
-    Iterator.iterate(0L)(_ + limit)
-      .map(off => fetchPage(client, spec,
-        Seq(limitParam -> limit.toString, offsetParam -> off.toString)))
+  private def pagesFrom(client: HttpClient, spec: FetchSpec, n: Long)(
+      params: Long => Seq[(String, String)]): Iterator[Page] =
+    Iterator.iterate(n)(_ + 1).map(p => fetchPage(client, spec, params(p)))
       .takeWhile(_.nonEmpty)
-  }
+
+  /** limit_offset (A4): sequential on the driver. */
+  def fetchLimitOffset(spec: FetchSpec, limitParam: String,
+      offsetParam: String, limit: Long): Iterator[Page] =
+    pagesFrom(buildClient(spec), spec, 0)(i =>
+      Seq(limitParam -> limit.toString, offsetParam -> (i * limit).toString))
 
   /** A page_number fetch: the driver-held first page (the schema
     * sample) plus the full row Dataset (which may fetch pages 2..N on
@@ -325,33 +305,18 @@ object HttpJsonSource {
       pageParam: String, perPageParam: String, perPage: Long,
       totalHint: Option[TotalHint]): PagedFetch = {
     import spark.implicits._
+    def pageParams(p: Long) =
+      Seq(pageParam -> p.toString, perPageParam -> perPage.toString)
     val client = buildClient(spec)
-    val first = getWithRetry(client, spec,
-      Seq(pageParam -> "1", perPageParam -> perPage.toString))
-    val ct = first.headers().firstValue("content-type")
-    val ctOpt = if (ct.isPresent) Some(ct.get()) else None
-    // parse the first-page body ONCE: both the row extraction and the
-    // TotalHint pointer read the same tree (a large first page would
-    // otherwise be fully re-parsed on the driver just to read one
-    // numeric field); NDJSON bodies have no hint to read and keep the
-    // line-framed path
-    val bodyTree =
-      if (isNdjson(ctOpt) || first.body().trim.isEmpty) None
-      else Some(mapper.readTree(first.body()))
-    val firstRows = bodyTree match {
-      case Some(tree) => extractRows(tree, spec.dataPath)
-      case None => parseBody(first.body(), ctOpt, spec.dataPath)
-    }
-
+    // page 1's body is parsed once: the rows and the TotalHint pointer
+    // read the same tree
+    val (firstRows, body) = fetchWithBody(client, spec, pageParams(1))
     val totalPages: Option[Long] = totalHint.flatMap { hint =>
-      bodyTree.flatMap { tree =>
-        val n = tree.at(hint.pointer)
-        if (n == null || !n.isNumber) None
-        else hint match {
-          case TotalHint.Items(_) =>
-            Some((n.asLong() + perPage - 1) / perPage)
-          case TotalHint.Pages(_) => Some(n.asLong())
-        }
+      val n = body.at(hint.pointer)
+      if (!n.isNumber) None
+      else hint match {
+        case TotalHint.Items(_) => Some((n.asLong() + perPage - 1) / perPage)
+        case TotalHint.Pages(_) => Some(n.asLong())
       }
     }
 
@@ -371,21 +336,14 @@ object HttpJsonSource {
         val rest = spark.range(2, n + 1, 1, slices.toInt)
           .mapPartitions { pages =>
             val c = buildClient(spec)
-            pages.flatMap(p => fetchPage(c, spec,
-              Seq(pageParam -> p.toString, perPageParam -> perPage.toString)))
+            pages.flatMap(p => fetchPage(c, spec, pageParams(p)))
           }
         firstDs.union(rest)
       case Some(_) => firstDs
       case None =>
         if (firstRows.isEmpty) firstDs
-        else {
-          val rest = Iterator.from(2)
-            .map(p => fetchPage(client, spec,
-              Seq(pageParam -> p.toString, perPageParam -> perPage.toString)))
-            .takeWhile(_.nonEmpty)
-            .flatten
-          spark.createDataset(firstRows ++ rest)
-        }
+        else spark.createDataset(
+          firstRows ++ pagesFrom(client, spec, 2)(pageParams).flatten)
     }
     PagedFetch(firstRows, rows)
   }
@@ -393,19 +351,15 @@ object HttpJsonSource {
   /** page_only (A6 — a stub in the reference, implemented for real
     * here): page counter only, sequential until empty.
     */
-  def fetchPageOnly(spec: FetchSpec, pageParam: String): Iterator[Page] = {
-    val client = buildClient(spec)
-    Iterator.from(1)
-      .map(p => fetchPage(client, spec, Seq(pageParam -> p.toString)))
-      .takeWhile(_.nonEmpty)
-  }
+  def fetchPageOnly(spec: FetchSpec, pageParam: String): Iterator[Page] =
+    pagesFrom(buildClient(spec), spec, 1)(p => Seq(pageParam -> p.toString))
 
   /** cursor (A6 — a stub in the reference, implemented for real here):
-    * threads `next_cursor` from each response until absent.
+    * threads the whole-JSON body's `/next_cursor` from each response
+    * until absent.
     */
   def fetchCursor(spec: FetchSpec, cursorParam: String,
-      pageSizeParam: Option[String], pageSize: Long = 100,
-      nextCursorPointer: String = "/next_cursor"): Iterator[Page] = {
+      pageSizeParam: Option[String], pageSize: Long = 100): Iterator[Page] = {
     val client = buildClient(spec)
     val sizeParams = pageSizeParam.map(_ -> pageSize.toString).toSeq
     var cursor: Option[String] = None
@@ -413,14 +367,10 @@ object HttpJsonSource {
     new Iterator[Page] {
       def hasNext: Boolean = !done
       def next(): Page = {
-        val params = sizeParams ++ cursor.map(cursorParam -> _).toSeq
-        val resp = getWithRetry(client, spec, params)
-        val ct = resp.headers().firstValue("content-type")
-        val rows = parseBody(resp.body(),
-          if (ct.isPresent) Some(ct.get()) else None, spec.dataPath)
-        val nxt = mapper.readTree(resp.body()).at(nextCursorPointer)
-        cursor = if (nxt == null || nxt.isMissingNode || nxt.isNull) None
-          else Some(nxt.asText())
+        val (rows, body) = fetchWithBody(client, spec,
+          sizeParams ++ cursor.map(cursorParam -> _))
+        val nxt = body.at("/next_cursor")
+        cursor = if (nxt.isMissingNode || nxt.isNull) None else Some(nxt.asText())
         done = cursor.isEmpty || rows.isEmpty
         rows
       }
@@ -436,13 +386,10 @@ object HttpJsonSource {
     *
     * `pageSize` is the FALLBACK for sources whose config carries no
     * `page_size` (it is the CLI's --page-size default, so per-source
-    * config wins); an explicit `totalHint` argument conversely
-    * OVERRIDES the config's `total_items_pointer`/
-    * `total_pages_pointer` — it is a per-call instruction, not a
-    * default.
+    * config wins); a page_number source's total hint comes from its
+    * `total_items_pointer`/`total_pages_pointer`.
     */
-  def load(spark: SparkSession, source: Source, pageSize: Long = 100,
-      totalHint: Option[TotalHint] = None): DataFrame = {
+  def load(spark: SparkSession, source: Source, pageSize: Long = 100): DataFrame = {
     import spark.implicits._
     // an oauth2 block whose credentials are already inline (the shape
     // OAuth2.applyAuth returns) rides along as a TokenSpec so every
@@ -458,9 +405,7 @@ object HttpJsonSource {
     val effectivePageSize = source.pageSize.getOrElse(pageSize)
     source.pagination match {
       case Some(Pagination.PageNumber(pp, ppp, itemsPtr, pagesPtr)) =>
-        val hint = totalHint
-          .orElse(itemsPtr.map(TotalHint.Items))
-          .orElse(pagesPtr.map(TotalHint.Pages))
+        val hint = itemsPtr.map(TotalHint.Items).orElse(pagesPtr.map(TotalHint.Pages))
         val fetched = fetchPageNumber(spark, spec, pp, ppp, effectivePageSize, hint)
         // schema from the driver-held first page (the reference's
         // first-100-rows inference contract) — parsing the distributed
@@ -469,20 +414,16 @@ object HttpJsonSource {
         graft.infer.SchemaInfer.readNestedSampled(spark, fetched.rows,
           fetched.firstPage)
       case other =>
-        val rows: Dataset[String] = other match {
+        val pages = other match {
           case Some(Pagination.LimitOffset(lp, op)) =>
-            spark.createDataset(
-              fetchLimitOffset(spec, lp, op, effectivePageSize).flatten.toSeq)
-          case Some(Pagination.PageOnly(pp)) =>
-            spark.createDataset(fetchPageOnly(spec, pp).flatten.toSeq)
+            fetchLimitOffset(spec, lp, op, effectivePageSize)
+          case Some(Pagination.PageOnly(pp)) => fetchPageOnly(spec, pp)
           case Some(Pagination.Cursor(cp, psp)) =>
-            spark.createDataset(
-              fetchCursor(spec, cp, psp, effectivePageSize).flatten.toSeq)
-          case _ =>
-            val client = buildClient(spec)
-            spark.createDataset(fetchPage(client, spec, Seq.empty))
+            fetchCursor(spec, cp, psp, effectivePageSize)
+          case _ => Iterator(fetchPage(buildClient(spec), spec, Seq.empty))
         }
-        graft.infer.SchemaInfer.readNested(spark, rows)
+        graft.infer.SchemaInfer.readNested(spark,
+          spark.createDataset(pages.flatten.toSeq))
     }
   }
 }

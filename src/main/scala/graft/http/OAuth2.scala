@@ -1,10 +1,8 @@
 package graft.http
 
 import java.net.URI
-import java.net.URLEncoder
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.http.{HttpClient, HttpRequest}
 import java.nio.charset.StandardCharsets
-import java.time.Duration
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -23,9 +21,11 @@ import graft.config.PipelineConfig.{Retry, Source}
   * refresh margin — a pipeline run touching one API N times fetches
   * one token, and a token expiring mid-session refreshes on the next
   * source resolution rather than failing a page fetch. The token
-  * POST follows the page-fetch retry contract: 5xx and IO errors
-  * back off and retry, 4xx fails fast with a body peek (a wrong
-  * secret should read as a config error, not a transient).
+  * POST goes through the page fetch's retrying
+  * [[HttpJsonSource.exchange]]: 5xx, 429 and IO errors back off and
+  * retry (honouring `Retry-After`), any other 4xx fails fast as
+  * `HTTP <code> from <token_url>: <body peek>` (a wrong secret should
+  * read as a config error, not a transient).
   */
 object OAuth2 {
 
@@ -34,8 +34,7 @@ object OAuth2 {
 
   final case class TokenSpec(
       tokenUrl: String, clientId: String, clientSecret: String,
-      scope: Option[String], retry: Retry,
-      requestTimeoutSecs: Long = 30)
+      scope: Option[String], retry: Retry)
 
   private final case class Cached(token: String, expiresAtMs: Long)
 
@@ -72,50 +71,24 @@ object OAuth2 {
       if (v != null && v.expiresAtMs - refreshMarginMs > nowMs()) v
       else fetchToken(spec, nowMs)).token
 
-  private def enc(s: String): String =
-    URLEncoder.encode(s, StandardCharsets.UTF_8)
-
   private def fetchToken(spec: TokenSpec, nowMs: () => Long): Cached = {
     val form = Seq(
       "grant_type" -> "client_credentials",
       "client_id" -> spec.clientId,
       "client_secret" -> spec.clientSecret) ++ spec.scope.map("scope" -> _)
-    val body = form.map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&")
+    val body = form.map { case (k, v) =>
+      s"${HttpJsonSource.encode(k)}=${HttpJsonSource.encode(v)}" }.mkString("&")
     val client = HttpClient.newBuilder()
-      .connectTimeout(Duration.ofSeconds(10)).build()
+      .connectTimeout(HttpJsonSource.connectTimeout).build()
     val req = HttpRequest.newBuilder(URI.create(spec.tokenUrl))
-      .timeout(Duration.ofSeconds(spec.requestTimeoutSecs))
+      .timeout(HttpJsonSource.requestTimeout)
       .header("Content-Type", "application/x-www-form-urlencoded")
       .header("Accept", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(body))
       .build()
-    var attempt = 0
-    var delayMs = spec.retry.minDelaySecs * 1000
-    while (true) {
-      attempt += 1
-      val resp: Either[Throwable, HttpResponse[String]] =
-        try Right(client.send(req, HttpResponse.BodyHandlers.ofString()))
-        catch { case e: java.io.IOException => Left(e) }
-      resp match {
-        case Right(r) if r.statusCode() < 500 =>
-          if (r.statusCode() >= 400) throw new RuntimeException(
-            s"oauth2 token endpoint ${spec.tokenUrl} returned " +
-              s"${r.statusCode()}: ${r.body().take(200)}")
-          return parseToken(r.body(), spec, nowMs)
-        case other =>
-          if (attempt >= spec.retry.maxAttempts) other match {
-            case Right(r) => throw new RuntimeException(
-              s"oauth2 token endpoint ${spec.tokenUrl} returned " +
-                s"${r.statusCode()} after $attempt attempts")
-            case Left(e) => throw new RuntimeException(
-              s"oauth2 token request to ${spec.tokenUrl} failed " +
-                s"after $attempt attempts", e)
-          }
-          Thread.sleep(delayMs)
-          delayMs = math.min(delayMs * 2, spec.retry.maxDelaySecs * 1000)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    val in = HttpJsonSource.exchange(client, spec.retry, () => req, None).body()
+    try parseToken(new String(in.readAllBytes(), StandardCharsets.UTF_8), spec, nowMs)
+    finally in.close()
   }
 
   private def parseToken(body: String, spec: TokenSpec,

@@ -303,6 +303,16 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Main.parseArgs(Array("-m", "mods", "-y", "cfg.yaml")).pgCopy)
   }
 
+  test("--page-size must be positive") {
+    def parse(v: String) =
+      Main.parseArgs(Array("-m", "mods", "-y", "cfg.yaml", "--page-size", v))
+    assert(parse("7").pageSize == 7L)
+    for (bad <- Seq("0", "-1")) {
+      val e = intercept[IllegalArgumentException](parse(bad))
+      assert(e.getMessage.contains(s"--page-size must be positive, got $bad"))
+    }
+  }
+
   test("--master CLI flag lands in the parsed args") {
     val args = Main.parseArgs(Array(
       "-m", "mods", "-y", "cfg.yaml", "--master", "spark://m:7077"))

@@ -155,6 +155,15 @@ class PipelineConfigSpec extends AnyFunSuite {
     assert(s.pageSize.contains(25L))
   }
 
+  test("page_size must be positive") {
+    for (bad <- Seq("0", "-5")) {
+      val e = intercept[IllegalArgumentException](PipelineConfig.parse(
+        yaml.replace("    data_path: /data", s"    data_path: /data\n    page_size: $bad")))
+      assert(e.getMessage ==
+        s"source 'employees': page_size must be positive, got $bad")
+    }
+  }
+
   test("page_number rejects both total pointers at once") {
     val both = yaml.replace(
       "      per_page_param: per_page",

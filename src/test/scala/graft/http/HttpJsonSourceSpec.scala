@@ -26,6 +26,9 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val pagedHits =
     new java.util.concurrent.ConcurrentHashMap[Int, java.util.List[Int]]()
 
+  private val pageOnlyHits = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+  private val defaultQueries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
   private val retry = Retry(maxAttempts = 3, maxDelaySecs = 1, minDelaySecs = 0)
 
   private def qparams(ex: HttpExchange): Map[String, String] =
@@ -96,6 +99,15 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         case Some("c2") => respond(ex, """{"data": [{"id": 2}], "next_cursor": null}""")
         case Some(other) => respond(ex, s"""{"data": [], "err": "$other"}""")
       }
+    })
+    server.createContext("/pageonly", (ex: HttpExchange) => {
+      val page = qparams(ex)("page").toInt
+      pageOnlyHits.add(page)
+      respond(ex, if (page > 3) "[]" else items(2 * page - 1, 2 * page))
+    })
+    server.createContext("/default", (ex: HttpExchange) => {
+      defaultQueries.add(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
+      respond(ex, s"""{"data": ${items(1, 3)}}""")
     })
     server.createContext("/auth", (ex: HttpExchange) => {
       val h = ex.getRequestHeaders.getFirst("X-API-KEY")
@@ -218,11 +230,14 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("data_path pointer: array flattens, null/missing yields none (fetcher.rs:74-93)") {
-    assert(parseBody("""{"data": [{"a":1},{"a":2}]}""", None, Some("/data")).size == 2)
-    assert(parseBody("""{"data": null}""", None, Some("/data")).isEmpty)
-    assert(parseBody("""{"other": 1}""", None, Some("/data")).isEmpty)
-    assert(parseBody("""{"data": {"a": 1}}""", None, Some("/data")) == Seq("""{"a":1}"""))
-    assert(parseBody("""{"data": 5}""", None, Some("/data")) == Seq("5"))
+    def rowsOf(body: String, contentType: Option[String], dataPath: Option[String]) =
+      readPage(new java.io.ByteArrayInputStream(body.getBytes(StandardCharsets.UTF_8)),
+        contentType, dataPath)._1
+    assert(rowsOf("""{"data": [{"a":1},{"a":2}]}""", None, Some("/data")).size == 2)
+    assert(rowsOf("""{"data": null}""", None, Some("/data")).isEmpty)
+    assert(rowsOf("""{"other": 1}""", None, Some("/data")).isEmpty)
+    assert(rowsOf("""{"data": {"a": 1}}""", None, Some("/data")) == Seq("""{"a":1}"""))
+    assert(rowsOf("""{"data": 5}""", None, Some("/data")) == Seq("5"))
   }
 
   test("retry with backoff recovers from 5xx (http_retry.rs:96-114)") {
@@ -301,6 +316,30 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cursor pagination threads next_cursor (implemented beyond the reference's stub)") {
     val pages = fetchCursor(spec("/cursor"), "cursor", None).toSeq
     assert(pages.flatten == Seq("""{"id":1}""", """{"id":2}"""))
+  }
+
+  test("page_only requests pages 1..N once each and stops at the first empty page") {
+    pageOnlyHits.clear()
+    val pages = fetchPageOnly(spec("/pageonly", dataPath = None), "page").toSeq
+    assert(pages.map(_.map(idOf)) == Seq(Seq(1, 2), Seq(3, 4), Seq(5, 6)))
+    assert(pageOnlyHits.asScala.toSeq == Seq(1, 2, 3, 4),
+      s"pages 1..3 and the empty page 4, once each: ${pageOnlyHits.asScala}")
+  }
+
+  test("kind: default loads one GET with no page parameters") {
+    defaultQueries.clear()
+    val cfg = graft.config.PipelineConfig.parse(
+      s"""sources:
+         |  - name: plain
+         |    url: $base/default
+         |    data_path: /data
+         |    pagination:
+         |      kind: default
+         |""".stripMargin)
+    val df = HttpJsonSource.load(graft.SparkTestSession.spark, cfg.source("plain"))
+    assert(df.count() == 3)
+    assert(defaultQueries.asScala.toSeq == Seq(""),
+      s"exactly one GET, no query string: ${defaultQueries.asScala}")
   }
 
   test("end-to-end load: source config → DataFrame with inferred schema") {

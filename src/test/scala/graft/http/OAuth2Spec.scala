@@ -77,6 +77,31 @@ class OAuth2Spec extends AnyFunSuite {
     }
   }
 
+  test("token endpoint: 429 retries after its Retry-After; errors name code and url") {
+    OAuth2.clearCache()
+    withServer { (server, base) =>
+      val calls = new AtomicInteger(0)
+      server.createContext("/token", ex => {
+        if (calls.incrementAndGet() < 2) {
+          ex.getResponseHeaders.set("Retry-After", "1")
+          respond(ex, """{"error":"slow_down"}""", status = 429)
+        } else respond(ex, """{"access_token":"ok","expires_in":60}""")
+      })
+      val t0 = System.nanoTime()
+      assert(OAuth2.token(
+        OAuth2.TokenSpec(s"$base/token", "c", "s", None, retry)) == "ok")
+      val elapsedMs = (System.nanoTime() - t0) / 1000000
+      assert(calls.get() == 2, "429 must retry")
+      // minDelaySecs = 0, so any wait >= ~1 s came from Retry-After: 1
+      assert(elapsedMs >= 900L, s"Retry-After not honored: ${elapsedMs}ms")
+      server.createContext("/deny", ex =>
+        respond(ex, """{"error":"invalid_request"}""", status = 400))
+      val e = intercept[RuntimeException](OAuth2.token(
+        OAuth2.TokenSpec(s"$base/deny", "c", "s", None, retry)))
+      assert(e.getMessage == s"""HTTP 400 from $base/deny: {"error":"invalid_request"}""")
+    }
+  }
+
   test("applyAuth: oauth2 block resolves env credentials and authorizes the page fetch") {
     OAuth2.clearCache()
     withServer { (server, base) =>
@@ -156,15 +181,15 @@ class OAuth2Spec extends AnyFunSuite {
       })
       val spec = HttpJsonSource.FetchSpec(s"$base/rows", Nil, Nil, None, retry,
         oauth = Some(OAuth2.TokenSpec(s"$base/token", "cid", "sec", None, retry)))
-      val resp = HttpJsonSource.getWithRetry(
+      val rows = HttpJsonSource.fetchPage(
         HttpJsonSource.buildClient(spec), spec, Seq.empty)
-      assert(resp.statusCode() == 200 && resp.body().contains("\"id\":1"))
+      assert(rows == Seq("""{"id":1}"""))
       assert(tokenCalls.get() == 2, "the 401 must force exactly one re-fetch")
       assert(rowCalls.get() == 2, "one rejected page + one refreshed retry")
       // a SECOND 401 (token still rejected) fails fast, no refresh loop
       OAuth2.clearCache()
       tokenCalls.set(10) // server now issues tok11, tok12... none == tok2
-      val e = intercept[RuntimeException](HttpJsonSource.getWithRetry(
+      val e = intercept[RuntimeException](HttpJsonSource.fetchPage(
         HttpJsonSource.buildClient(spec), spec, Seq.empty))
       assert(e.getMessage.contains("401"))
       assert(tokenCalls.get() == 12, "refresh happens once, then fail fast")
