@@ -268,7 +268,7 @@ object Main {
     // stages have already done their work.
     val chainedUpstreams = cfg.stages.flatMap(_.inputStage).toSet
     def isRelationStream(s: PipelineConfig.Stage): Boolean =
-      s.kind == "stream" && !s.stream.contains("index_ingest")
+      s.kind == "stream" && StageRunner.streamLandsRelation(s.stream.get)
     def isRelationOutput(s: PipelineConfig.Stage): Boolean =
       s.kind == "query" || isRelationStream(s) ||
         (s.kind == "store" && s.action.contains("dedup"))

@@ -3,9 +3,13 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
+import scala.collection.immutable.ListMap
+
 import graft.config.PipelineConfig.Stage
-import graft.ops.{AfpStore, Classify, DedupStore, IvfIndex, IvfPqStore,
-  PhashStore, PqStore, StoreMaintenance, VersionedStore}
+import graft.ops.{AfpStore, Classify, Dedup, DedupStore, FingerprintStore,
+  IvfIndex, IvfPqStore, PhashStore, PqStore, StoreMaintenance,
+  VersionedStore}
+import graft.streaming.BatchedParquetSink
 
 /** Executes one declarative analytics stage
   * ([[graft.config.PipelineConfig.Stage]]) and returns the DataFrame
@@ -39,18 +43,27 @@ import graft.ops.{AfpStore, Classify, DedupStore, IvfIndex, IvfPqStore,
   *    the maintainer lease, so a fingerprint-drifted store goes
   *    recommend("rebuild") → rebuild → recommend("ok") from YAML
   *    alone.
-  *  - `kind: stream` drives the streaming modules
-  *    ([[graft.streaming.StreamingIndexIngest]] /
-  *    [[graft.streaming.StreamingEmbeddingDedup]] /
-  *    [[graft.streaming.StreamingStoreDedup]] /
-  *    [[graft.streaming.StreamingClassify]]) as an INCREMENTAL DRAIN:
-  *    start the stream over `source_dir`, process everything
-  *    available, stop. The REQUIRED durable `checkpoint:` is what
-  *    makes successive scheduled CLI runs exactly-once — a restart
-  *    resumes at the unprocessed files, and replayed micro-batches
-  *    land idempotently (ingest-keyed store appends, batch-keyed
-  *    output partitions). This is the reference's scheduled
+  *  - `kind: stream` runs ONE store verb per micro-batch of
+  *    `source_dir` as an INCREMENTAL DRAIN: start the stream, process
+  *    everything available, stop. `index_ingest` is the store's
+  *    `append` (ivf | pq | ivfpq, ingest id `stream_<batchId>`);
+  *    `embedding_dedup` / `store_dedup` / `image_dedup` /
+  *    `audio_dedup` are the ivfpq / dedup / phash / afp store's
+  *    `dedup`, each batch's flags landed through
+  *    [[graft.streaming.BatchedParquetSink.landBatch]]; `classify`
+  *    scores through [[graft.streaming.StreamingClassify]]. The
+  *    REQUIRED durable `checkpoint:` is what makes successive
+  *    scheduled CLI runs exactly-once — a restart resumes at the
+  *    unprocessed files, and replayed micro-batches land
+  *    idempotently (ingest-keyed store appends, batch-keyed output
+  *    partitions). This is the reference's scheduled
   *    incremental-pull premise, carried to the store/dedup surface.
+  *
+  * The stage vocabulary — which stores exist, which actions each
+  * allows, which streams run which verb on which store — is declared
+  * once, in [[stores]] and [[streams]]; config validation
+  * ([[checkStore]], [[checkStream]]) and the CLI's landing policy
+  * ([[streamLandsRelation]]) read the same tables this runner dispatches on.
   */
 object StageRunner {
 
@@ -132,63 +145,202 @@ object StageRunner {
     }
   }
 
-  /** A persisted store as the YAML `store:` name sees it: the stage
-    * input its build/append read by default, and its save/append at
-    * the library defaults. Every other verb is the store's own.
+  /** A store's `dedup` verb. `flags` is the DDL of the flag relation
+    * it lands; `corpus` flags the stage's corpus (`action: dedup`);
+    * `batch` flags one micro-batch of a stream's source and hands the
+    * flags to `land` inside the call, so a store that caches the
+    * batch's prepared side releases it only after the landing read it.
     */
-  private final case class StoreVerbs(store: VersionedStore, corpus: String,
-      save: (DataFrame, String) => Unit,
-      append: (DataFrame, String, String) => Unit)
+  private[graft] final case class DedupVerb(flags: String,
+      corpus: (SparkSession, DataFrame, String, Stage) => DataFrame,
+      batch: (SparkSession, DataFrame, String, Stage,
+        DataFrame => Unit) => Unit)
 
-  private val stores: Map[String, StoreVerbs] = Map(
-    "dedup" -> StoreVerbs(DedupStore, "documents",
-      DedupStore.save(_, _), DedupStore.append(_, _, _)),
-    // the image/audio fingerprint stores: decode paid once at
-    // build/append, never again
-    "phash" -> StoreVerbs(PhashStore, "documents",
-      PhashStore.save(_, _), PhashStore.append(_, _, _)),
-    "afp" -> StoreVerbs(AfpStore, "documents",
-      AfpStore.save(_, _), AfpStore.append(_, _, _)),
-    "ivf" -> StoreVerbs(IvfIndex, "embeddings",
+  /** A YAML `store:` name: the stage input its build/append read by
+    * default, what a refusal calls it, its save and stats at the
+    * library defaults, and — where it has them — its versioned
+    * lifecycle, ingest-keyed append and dedup. The actions a stage
+    * may run on it are exactly the verbs it has.
+    */
+  private[graft] final case class StoreVerbs(corpus: String, noun: String,
+      save: (DataFrame, String) => Unit,
+      stats: (SparkSession, String) => DataFrame,
+      lifecycle: Option[VersionedStore] = None,
+      append: Option[(DataFrame, String, String) => Unit] = None,
+      dedup: Option[DedupVerb] = None) {
+    def actions: Seq[String] = Seq("build", "rebuild", "stats") ++
+      lifecycle.fold(Seq.empty[String])(_ =>
+        Seq("compact", "maintain", "recommend", "auto", "delete")) ++
+      append.map(_ => "append") ++ dedup.map(_ => "dedup")
+  }
+
+  private def versioned(store: VersionedStore, corpus: String,
+      noun: String, save: (DataFrame, String) => Unit,
+      append: (DataFrame, String, String) => Unit,
+      dedup: Option[DedupVerb] = None): StoreVerbs =
+    StoreVerbs(corpus, noun, save, store.stats(_, _), Some(store),
+      Some(append), dedup)
+
+  // advisory/dedup knobs: the stage's own bar, else the ONE shared
+  // set of library defaults (StoreMaintenance.Default*) — an
+  // advisory judged at a margin the deployment does not run is the
+  // "silent knob" class the round-15 certification work exists to
+  // kill, and a default retune must reach YAML and library callers
+  // together
+  private def stageMargin(stage: Stage): Double =
+    stage.margin.getOrElse(StoreMaintenance.DefaultMargin)
+  private def stageMinCosine(stage: Stage): Double =
+    stage.minCosine.getOrElse(StoreMaintenance.DefaultMinCosine)
+
+  /** The image/audio stores' dedup: decode the incoming side only (the
+    * corpus never re-decodes), banded Hamming join at radius 3 over 4
+    * bands.
+    */
+  private def fingerprintDedup(store: FingerprintStore): DedupVerb = {
+    def flags(spark: SparkSession, docs: DataFrame, dir: String) =
+      store.dedupAgainst(spark, docs, dir, maxDist = 3, nBands = 4)
+    DedupVerb("inc_id BIGINT, corpus_id BIGINT, hamming BIGINT",
+      (spark, docs, dir, _) => flags(spark, docs, dir),
+      (spark, batch, dir, _, land) => land(flags(spark, batch, dir)))
+  }
+
+  /** The ivfpq store's dedup at 4 probed cells and the stage's
+    * `min_cosine`/`margin`. A stream's source is already probe-shaped
+    * (query_id, qv); a stage's corpus is embeddings and remaps to it.
+    */
+  private val ivfpqDedup: DedupVerb = {
+    def flags(spark: SparkSession, probe: DataFrame, dir: String,
+        stage: Stage) =
+      IvfPqStore.dedupAgainst(spark, dir, probe, stageMinCosine(stage),
+        nProbe = 4, stageMargin(stage))
+    DedupVerb("query_id BIGINT, corpus_id BIGINT, cosine DOUBLE",
+      (spark, emb, dir, stage) => flags(spark,
+        emb.select(col("vec_id").as("query_id"), col("embedding").as("qv")),
+        dir, stage),
+      (spark, batch, dir, stage, land) => land(flags(spark, batch, dir, stage)))
+  }
+
+  /** The gram store's dedup. A stage's corpus goes through the
+    * memoized [[DedupStore.dedupAgainst]]; a micro-batch bypasses the
+    * plan-hash-keyed shingle memo (every batch's plan is distinct and
+    * would thrash the bounded cache) — its shingles persist for the
+    * join's two traversals (gram explode + per-doc sizes) until the
+    * flags have landed.
+    */
+  private val gramDedup = DedupVerb(
+    "inc_id BIGINT, corpus_id BIGINT, jaccard DOUBLE",
+    (spark, docs, dir, _) => DedupStore.dedupAgainst(spark, docs, dir),
+    (spark, batch, dir, _, land) => {
+      val sh = Dedup.shingled(batch).persist()
+      try land(DedupStore.dedupShingled(spark, sh, dir))
+      finally { sh.unpersist(); () }
+    })
+
+  /** The stores, by YAML `store:` name. */
+  private[graft] val stores: ListMap[String, StoreVerbs] = ListMap(
+    "dedup" -> versioned(DedupStore, "documents", "dedup gram store",
+      DedupStore.save(_, _), DedupStore.append(_, _, _), Some(gramDedup)),
+    "phash" -> versioned(PhashStore, "documents", "phash store",
+      PhashStore.save(_, _), PhashStore.append(_, _, _),
+      Some(fingerprintDedup(PhashStore))),
+    "afp" -> versioned(AfpStore, "documents", "afp store",
+      AfpStore.save(_, _), AfpStore.append(_, _, _),
+      Some(fingerprintDedup(AfpStore))),
+    "ivf" -> versioned(IvfIndex, "embeddings", "ivf store",
       IvfIndex.save(_, _), IvfIndex.append(_, _, _)),
-    "pq" -> StoreVerbs(PqStore, "embeddings",
+    "pq" -> versioned(PqStore, "embeddings", "pq store",
       PqStore.save(_, _), PqStore.append(_, _, _)),
-    "ivfpq" -> StoreVerbs(IvfPqStore, "embeddings",
-      IvfPqStore.save(_, _), IvfPqStore.append(_, _, _)))
+    "ivfpq" -> versioned(IvfPqStore, "embeddings", "ivfpq store",
+      IvfPqStore.save(_, _), IvfPqStore.append(_, _, _), Some(ivfpqDedup)),
+    // the classifier model is a store too (build once, score many):
+    // build/rebuild train from the stage's (adaptable) corpus and
+    // commit a fresh version — the labels come from the corpus' `lang`
+    // column, so a differently-labeled corpus maps it via `columns:`.
+    // It has no tombstones, ingests or geometry probe, so the
+    // maintenance and advisory actions have nothing to act on.
+    "classifier" -> StoreVerbs("documents", "classifier model",
+      Classify.saveModel(_, _), Classify.modelStats(_, _)))
+
+  /** A store-backed `stream:` name: the store verb it runs per
+    * micro-batch of `source_dir`, on `store` — or, when `None`, on
+    * the stage's `store:`, any embeddings store that has the verb.
+    * `classify` scores through a model, not a store verb, and is
+    * handled on its own.
+    */
+  private[graft] final case class StreamVerb(verb: String,
+      store: Option[String] = None)
+
+  private[graft] val streams: ListMap[String, StreamVerb] = ListMap(
+    "index_ingest" -> StreamVerb("append"),
+    "embedding_dedup" -> StreamVerb("dedup", Some("ivfpq")),
+    "store_dedup" -> StreamVerb("dedup", Some("dedup")),
+    "image_dedup" -> StreamVerb("dedup", Some("phash")),
+    "audio_dedup" -> StreamVerb("dedup", Some("afp")))
+
+  private def streamStores(v: StreamVerb): Seq[String] = v.store.fold(
+    stores.collect { case (n, s) if s.corpus == "embeddings" &&
+      s.actions.contains(v.verb) => n }.toSeq)(Seq(_))
+
+  /** Whether stream `name` lands a relation under `out_dir` (dedup
+    * flags, classify predictions) rather than its store's audit row.
+    */
+  private[graft] def streamLandsRelation(name: String): Boolean =
+    !streams.get(name).exists(_.verb == "append")
+
+  private def refuse(stage: Stage, why: String): Nothing =
+    throw new IllegalArgumentException(s"stage '${stage.name}': $why")
+
+  /** Refuse a `kind: store` stage whose store or action is not in the
+    * vocabulary, or whose store does not have the action.
+    */
+  private[graft] def checkStore(stage: Stage): Unit = {
+    val name = stage.store.get
+    val action = stage.action.get
+    val verbs = stores.getOrElse(name, refuse(stage, s"unknown store '$name'"))
+    if (!stores.values.exists(_.actions.contains(action)))
+      refuse(stage, s"unknown action '$action'")
+    if (!verbs.actions.contains(action))
+      refuse(stage, s"store '$name' supports actions " +
+        s"${verbs.actions.mkString(" | ")}, not '$action'")
+  }
+
+  /** Refuse a store-backed `kind: stream` stage whose stream is not in
+    * the vocabulary, that misses the store fields its verb needs, or
+    * that names a store the stream does not run on.
+    */
+  private[graft] def checkStream(stage: Stage): Unit = {
+    val name = stage.stream.get
+    val v = streams.getOrElse(name, refuse(stage, s"unknown stream " +
+      s"'$name' (${(streams.keys.toSeq :+ "classify").mkString(" | ")})"))
+    val on = streamStores(v)
+    v.store match {
+      case Some(store) =>
+        if (stage.dir.isEmpty || stage.outDir.isEmpty)
+          refuse(stage, s"stream '$name' requires 'dir' (the " +
+            s"${stores(store).noun}) and 'out_dir'")
+      case None =>
+        if (stage.store.isEmpty || stage.dir.isEmpty)
+          refuse(stage, s"stream '$name' requires 'store' " +
+            s"(${on.mkString(" | ")}) and 'dir'")
+        if (!on.contains(stage.store.get))
+          refuse(stage, s"stream '$name' runs '${v.verb}' on the " +
+            s"${on.mkString(" | ")} stores, not '${stage.store.get}'")
+    }
+  }
 
   private def runStore(spark: SparkSession, stage: Stage,
       priorOutput: String => DataFrame): DataFrame = {
+    checkStore(stage)
     val dir = stage.dir.get
     val name = stage.store.get
     val action = stage.action.get
+    val verbs = stores(name)
+    // checkStore admits the lifecycle actions only where there is one
+    def store: VersionedStore = verbs.lifecycle.get
     def input(default: String): DataFrame =
       adaptedInput(spark, stage, priorOutput, default)
         .getOrElse(graft.engine.Tables.table(spark, stage.inputDir, default))
-    // the classifier model is a store too (build once, score many):
-    // `build`/`rebuild` train from the stage's (adaptable) corpus and
-    // commit a fresh version — the labels come from the corpus' `lang`
-    // column, so a differently-labeled corpus maps it via `columns:`
-    if (name == "classifier") {
-      action match {
-        case "build" | "rebuild" => Classify.saveModel(input("documents"), dir)
-        case "stats" =>
-        case other => throw new IllegalArgumentException(
-          s"stage '${stage.name}': unsupported ${(name, other)}")
-      }
-      return statsAudit(spark, stage, name, dir, action, compacted = false)
-    }
-    val verbs = stores(name)
-    val store = verbs.store
     def corpus: DataFrame = input(verbs.corpus)
-    // advisory/dedup knobs: the stage's own bar, else the ONE shared
-    // set of library defaults (StoreMaintenance.Default*) — an
-    // advisory judged at a margin the deployment does not run is the
-    // "silent knob" class the round-15 certification work exists to
-    // kill, and a default retune must reach YAML and library callers
-    // together
-    val margin = stage.margin.getOrElse(StoreMaintenance.DefaultMargin)
-    val minCosine =
-      stage.minCosine.getOrElse(StoreMaintenance.DefaultMinCosine)
     val maxTombstoneRatio = stage.maxTombstoneRatio
       .getOrElse(StoreMaintenance.DefaultMaxTombstoneRatio)
     val maxIngests =
@@ -199,7 +351,8 @@ object StageRunner {
     // warehouse next to the stats audit rows. The stage's corpus rides
     // in for the lineage-drift check, the stage's knobs set the bar.
     def advice: DataFrame = StoreMaintenance.recommend(store, spark, dir,
-      Some(corpus), margin, minCosine, maxTombstoneRatio, maxIngests)
+      Some(corpus), stageMargin(stage), stageMinCosine(stage),
+      maxTombstoneRatio, maxIngests)
     // `auto` closes the whole loop in ONE scheduled stage: compute the
     // advisory, then ACT on it — ok → nothing, compact → compact,
     // rebuild → a fresh save() from the current corpus — and land the
@@ -243,21 +396,8 @@ object StageRunner {
     // persisted history), not the stats audit row — the incremental
     // step of a declarative curation pipeline: yesterday's store,
     // today's batch, flags to the sink
-    if (action == "dedup") return name match {
-      case "dedup" => DedupStore.dedupAgainst(spark, corpus, dir)
-      // the incremental image/audio step: decode TODAY'S batch only,
-      // flag it against the stored fingerprints — the corpus never
-      // re-decodes
-      case "phash" => PhashStore.dedupAgainst(spark, corpus, dir)
-      case "afp" => AfpStore.dedupAgainst(spark, corpus, dir)
-      case "ivfpq" => IvfPqStore.dedupAgainst(spark, dir,
-        corpus.select(col("vec_id").as("query_id"),
-          col("embedding").as("qv")),
-        minCosine = minCosine, margin = margin)
-      case other => throw new IllegalArgumentException(
-        s"stage '${stage.name}': action 'dedup' supports the dedup, " +
-          s"phash, afp and ivfpq stores, not '$other'")
-    }
+    if (action == "dedup")
+      return verbs.dedup.get.corpus(spark, corpus, dir, stage)
     var compacted = false
     action match {
       // `rebuild` IS save(): a fresh version root re-fit from the
@@ -266,28 +406,45 @@ object StageRunner {
       // (geometry re-fits, lineage re-fingerprints, tombstones and
       // fragmentation reset with the fresh build)
       case "build" | "rebuild" => verbs.save(corpus, dir)
-      case "append" => verbs.append(corpus, dir, stage.ingestId.get)
+      case "append" => verbs.append.get(corpus, dir, stage.ingestId.get)
       case "compact" => store.compact(spark, dir)
       case "maintain" => compacted = StoreMaintenance.maintain(store,
         spark, dir, maxTombstoneRatio, maxIngests)
-      case "stats" => // introspection only, no maintenance op
-      case other => throw new IllegalArgumentException(
-        s"stage '${stage.name}': unsupported ${(name, other)}")
+      case _ => // stats: introspection only, no maintenance op
     }
     statsAudit(spark, stage, name, dir, action, compacted)
   }
 
   private def statsAudit(spark: SparkSession, stage: Stage, store: String,
       dir: String, action: String, compacted: Boolean): DataFrame = {
-    val stats =
-      if (store == "classifier") Classify.modelStats(spark, dir)
-      else stores(store).store.stats(spark, dir)
+    val stats = stores(store).stats(spark, dir)
     val statCols = stats.columns.toSeq
     stats
       .withColumn("stage", lit(stage.name))
       .withColumn("action", lit(action))
       .withColumn("compacted", lit(compacted))
       .select((Seq("stage", "action", "compacted") ++ statCols).map(col): _*)
+  }
+
+  /** The per-micro-batch body of store-backed stream `stage`: its
+    * store verb, landed idempotently — an append under the ingest id
+    * `stream_<batchId>` (a store append dynamically overwrites exactly
+    * that ingest's subtree), or the dedup flags into `out_dir`'s own
+    * `graft_batch=<batchId>` partition. Either way a replayed batch
+    * replaces its earlier output instead of duplicating it.
+    */
+  private[graft] def streamBatch(spark: SparkSession,
+      stage: Stage): (DataFrame, Long) => Unit = {
+    val v = streams(stage.stream.get)
+    val verbs = stores(v.store.getOrElse(stage.store.get))
+    val dir = stage.dir.get
+    v.verb match {
+      case "append" => (batch, batchId) =>
+        verbs.append.get(batch, dir, s"stream_$batchId")
+      case "dedup" => (batch, batchId) =>
+        verbs.dedup.get.batch(spark, batch, dir, stage,
+          BatchedParquetSink.landBatch(_, stage.outDir.get, batchId))
+    }
   }
 
   /** Drain-what's-available streaming: start, processAllAvailable,
@@ -322,85 +479,6 @@ object StageRunner {
           "(action: build); stream stages only read or grow an " +
           "existing store")
     stage.stream.get match {
-      case "index_ingest" =>
-        val dir = stage.dir.get
-        requireStore(dir, s"${stage.store.get} store")
-        if (srcReady) {
-          val q = stage.store.get match {
-            case "ivf" => graft.streaming.StreamingIndexIngest.intoIvf(
-              spark, sourceDir, schema, dir, throttle, Some(checkpoint))
-            case "pq" => graft.streaming.StreamingIndexIngest.intoPq(
-              spark, sourceDir, schema, dir, throttle, Some(checkpoint))
-            case "ivfpq" => graft.streaming.StreamingIndexIngest.intoIvfPq(
-              spark, sourceDir, schema, dir, throttle, Some(checkpoint))
-          }
-          drain(q)
-        }
-        statsAudit(spark, stage, stage.store.get, dir, "stream_ingest",
-          compacted = false)
-      case "embedding_dedup" =>
-        val outDir = stage.outDir.get
-        requireStore(stage.dir.get, "ivfpq store")
-        if (srcReady) {
-          val q = graft.streaming.StreamingEmbeddingDedup
-            .streamingDedupAgainstStore(spark, sourceDir, schema,
-              stage.dir.get, outDir,
-              minCosine = stage.minCosine
-                .getOrElse(StoreMaintenance.DefaultMinCosine),
-              margin = stage.margin
-                .getOrElse(StoreMaintenance.DefaultMargin),
-              maxFilesPerTrigger = throttle, checkpoint = Some(checkpoint))
-          drain(q)
-        }
-        // the stage lands the accumulated flag relation (all batches);
-        // empty-schema'd when nothing has ever landed
-        readOrEmpty(spark, outDir,
-          "query_id BIGINT, corpus_id BIGINT, cosine DOUBLE, graft_batch BIGINT")
-      case "image_dedup" =>
-        // the IMAGE-side analogue of store_dedup: incoming image
-        // batches decoded once and flagged against the persisted
-        // fingerprint store, per micro-batch — the corpus never
-        // re-decodes
-        val outDir = stage.outDir.get
-        requireStore(stage.dir.get, "phash store")
-        if (srcReady) {
-          val q = graft.streaming.StreamingImageDedup
-            .streamingDedupAgainstStore(spark, sourceDir, schema,
-              stage.dir.get, outDir,
-              maxFilesPerTrigger = throttle, checkpoint = Some(checkpoint))
-          drain(q)
-        }
-        readOrEmpty(spark, outDir,
-          "inc_id BIGINT, corpus_id BIGINT, hamming BIGINT, graft_batch BIGINT")
-      case "audio_dedup" =>
-        // the AUDIO twin of image_dedup: incoming clips decoded once
-        // and flagged against the persisted afp store
-        val outDir = stage.outDir.get
-        requireStore(stage.dir.get, "afp store")
-        if (srcReady) {
-          val q = graft.streaming.StreamingAudioDedup
-            .streamingDedupAgainstStore(spark, sourceDir, schema,
-              stage.dir.get, outDir,
-              maxFilesPerTrigger = throttle, checkpoint = Some(checkpoint))
-          drain(q)
-        }
-        readOrEmpty(spark, outDir,
-          "inc_id BIGINT, corpus_id BIGINT, hamming BIGINT, graft_batch BIGINT")
-      case "store_dedup" =>
-        // the TEXT-side analogue of embedding_dedup: incoming document
-        // batches flagged against the persisted gram store, per
-        // micro-batch, history never re-read
-        val outDir = stage.outDir.get
-        requireStore(stage.dir.get, "dedup gram store")
-        if (srcReady) {
-          val q = graft.streaming.StreamingStoreDedup
-            .streamingDedupAgainstStore(spark, sourceDir, schema,
-              stage.dir.get, outDir,
-              maxFilesPerTrigger = throttle, checkpoint = Some(checkpoint))
-          drain(q)
-        }
-        readOrEmpty(spark, outDir,
-          "inc_id BIGINT, corpus_id BIGINT, jaccard DOUBLE, graft_batch BIGINT")
       case "classify" =>
         val outDir = stage.outDir.get
         // with `model_dir:` the gate applies whether or not the source
@@ -430,7 +508,24 @@ object StageRunner {
           drain(q)
         }
         readOrEmpty(spark, outDir,
-          "doc_id BIGINT, predicted STRING, score BIGINT, graft_batch BIGINT")
+          "doc_id BIGINT, predicted STRING, score BIGINT")
+      case name =>
+        checkStream(stage)
+        val v = streams(name)
+        val store = v.store.getOrElse(stage.store.get)
+        val verbs = stores(store)
+        val dir = stage.dir.get
+        requireStore(dir, verbs.noun)
+        if (srcReady)
+          drain(BatchedParquetSink.start(spark, sourceDir, schema, throttle,
+            Some(checkpoint))(streamBatch(spark, stage)))
+        // an ingest lands its store's audit row; a dedup lands the
+        // accumulated flag relation (all batches), empty-schema'd when
+        // nothing has ever landed
+        if (v.verb == "append")
+          statsAudit(spark, stage, store, dir, "stream_ingest",
+            compacted = false)
+        else readOrEmpty(spark, stage.outDir.get, verbs.dedup.get.flags)
     }
   }
 
@@ -465,17 +560,21 @@ object StageRunner {
     }
   }
 
+  /** The relation a stream landed under `dir`, or — before its first
+    * batch — an empty one typed `ddl` plus the batch column.
+    */
   private def readOrEmpty(spark: SparkSession, dir: String,
       ddl: String): DataFrame =
     if (hasDataFiles(spark, dir))
       // partition-value inference types `graft_batch=<id>` as INT;
       // the empty schema (and any warehouse landing) wants one stable
       // type across runs — cast to the declared BIGINT
-      spark.read.parquet(dir).withColumn("graft_batch",
-        col("graft_batch").cast("long"))
+      spark.read.parquet(dir).withColumn(BatchedParquetSink.BatchCol,
+        col(BatchedParquetSink.BatchCol).cast("long"))
     else spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      org.apache.spark.sql.types.StructType.fromDDL(
+        s"$ddl, ${BatchedParquetSink.BatchCol} BIGINT"))
 
   /** Drain everything available, then stop — without letting the
     * shutdown mask the real failure or fail a drain that succeeded:

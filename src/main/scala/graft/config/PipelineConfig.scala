@@ -187,26 +187,35 @@ object PipelineConfig {
     *    prior stage's landed output.
     *  - `kind: store` — drive a persisted store's lifecycle (`store:`
     *    dedup | phash | afp | ivf | pq | ivfpq | classifier;
-    *    `action:` build | rebuild | append |
-    *    compact | maintain | stats | recommend | dedup | delete) at
-    *    `dir:`, landing the store's STATS relation on the sink as the
-    *    run's audit row (the maintenance-loop contract: decisions
-    *    read stats, pipelines record them). Exceptions to the
-    *    stats-audit output: `action: dedup` (dedup/phash/afp/ivfpq)
-    *    lands the OPERATOR relation — the incoming batch's flagged
-    *    near-duplicates against the persisted history — and
-    *    `action: recommend` (all six stores) lands the
-    *    rebuild-vs-compact-vs-ok ADVISORY row, judged at the stage's
-    *    own `margin`/`min_cosine`/threshold knobs. `action: rebuild`
-    *    acts on that advisory (a fresh save() from the stage's
-    *    current corpus under the maintainer lease); `action: delete`
-    *    files tombstones from a declared takedown relation.
-    *  - `kind: stream` — drive a streaming module (`stream:`
-    *    index_ingest | embedding_dedup | store_dedup | classify) as a CHECKPOINTED
-    *    INCREMENTAL DRAIN of `source_dir`: each scheduled run
-    *    processes exactly the files that arrived since the last one,
-    *    replays land idempotently, and a not-yet-producing source is
-    *    a no-op, not an error.
+    *    `action:` build | rebuild | append | compact | maintain |
+    *    stats | recommend | auto | dedup | delete) at `dir:`, landing
+    *    the store's STATS relation on the sink as the run's audit row
+    *    (the maintenance-loop contract: decisions read stats,
+    *    pipelines record them). Exceptions to the stats-audit output:
+    *    `action: dedup` (dedup/phash/afp/ivfpq) lands the OPERATOR
+    *    relation — the incoming batch's flagged near-duplicates
+    *    against the persisted history — `action: recommend` (all six
+    *    versioned stores) lands the rebuild-vs-compact-vs-ok ADVISORY
+    *    row, judged at the stage's own `margin`/`min_cosine`/threshold
+    *    knobs, and `action: auto` lands that row after acting on it.
+    *    `action: rebuild` acts on the advisory (a fresh save() from
+    *    the stage's current corpus under the maintainer lease);
+    *    `action: delete` files tombstones from a declared takedown
+    *    relation. The classifier model store takes build | rebuild |
+    *    stats only.
+    *  - `kind: stream` — run one store verb per micro-batch (`stream:`
+    *    index_ingest = append into `store:` ivf | pq | ivfpq;
+    *    embedding_dedup | store_dedup | image_dedup | audio_dedup =
+    *    dedup against the ivfpq | dedup | phash | afp store at `dir:`)
+    *    or score with a classifier (`stream: classify`) as a
+    *    CHECKPOINTED INCREMENTAL DRAIN of `source_dir`: each scheduled
+    *    run processes exactly the files that arrived since the last
+    *    one, replays land idempotently, and a not-yet-producing source
+    *    is a no-op, not an error.
+    *
+    * Which stores, actions and streams exist, and which go together,
+    * is declared once in [[graft.cli.StageRunner]]'s vocabulary tables;
+    * the parse-time refusals read them.
     */
   final case class Stage(
       name: String,
@@ -252,9 +261,9 @@ object PipelineConfig {
       minCosine: Option[Double] = None,
       maxTombstoneRatio: Option[Double] = None,
       maxIngests: Option[Long] = None,
-      /** `kind: stream` fields: the streaming module to drive
-        * (`stream:` index_ingest | embedding_dedup | store_dedup | classify), its
-        * parquet source (`source_dir:`), the durable checkpoint
+      /** `kind: stream` fields: the stream to drive (`stream:`
+        * index_ingest | embedding_dedup | store_dedup | image_dedup |
+        * audio_dedup | classify), its parquet source (`source_dir:`), the durable checkpoint
         * (`checkpoint:` — REQUIRED: it is what makes successive
         * scheduled runs incremental and exactly-once), the landing
         * directory for relation-producing streams (`out_dir:`), and
@@ -384,28 +393,7 @@ object PipelineConfig {
           throw new IllegalArgumentException(
             s"stage '${s.name}': kind 'store' requires 'store', " +
               "'action' and 'dir'")
-        if (!Set("dedup", "phash", "afp", "ivf", "pq", "ivfpq",
-            "classifier")(s.store.get))
-          throw new IllegalArgumentException(
-            s"stage '${s.name}': unknown store '${s.store.get}'")
-        if (!Set("build", "rebuild", "append", "compact", "maintain",
-            "stats", "dedup", "recommend", "auto", "delete")(s.action.get))
-          throw new IllegalArgumentException(
-            s"stage '${s.name}': unknown action '${s.action.get}'")
-        // the classifier model store is build-once/score-many: it has
-        // no tombstones, ingests or geometry probe, so the maintenance
-        // and advisory actions have nothing to act on — a rebuild IS
-        // its whole lifecycle
-        if (s.store.contains("classifier") &&
-            !Set("build", "rebuild", "stats")(s.action.get))
-          throw new IllegalArgumentException(
-            s"stage '${s.name}': store 'classifier' supports actions " +
-              s"build | rebuild | stats, not '${s.action.get}'")
-        if (s.action.contains("dedup") &&
-            !Set("dedup", "phash", "afp", "ivfpq")(s.store.get))
-          throw new IllegalArgumentException(
-            s"stage '${s.name}': action 'dedup' supports the dedup, " +
-              "phash, afp and ivfpq stores")
+        graft.cli.StageRunner.checkStore(s)
         if (s.action.contains("append") && s.ingestId.isEmpty)
           throw new IllegalArgumentException(
             s"stage '${s.name}': action 'append' requires 'ingest_id' " +
@@ -428,35 +416,6 @@ object PipelineConfig {
               s"have no effect on stream '${s.stream.get}' — its input " +
               "is 'source_dir' (only 'classify' adapts a training corpus)")
         s.stream.get match {
-          case "index_ingest" =>
-            if (s.store.isEmpty || s.dir.isEmpty)
-              throw new IllegalArgumentException(
-                s"stage '${s.name}': stream 'index_ingest' requires " +
-                  "'store' (ivf | pq | ivfpq) and 'dir'")
-            if (!Set("ivf", "pq", "ivfpq")(s.store.get))
-              throw new IllegalArgumentException(
-                s"stage '${s.name}': stream 'index_ingest' grows the " +
-                  s"ANN stores (ivf | pq | ivfpq), not '${s.store.get}'")
-          case "embedding_dedup" =>
-            if (s.dir.isEmpty || s.outDir.isEmpty)
-              throw new IllegalArgumentException(
-                s"stage '${s.name}': stream 'embedding_dedup' requires " +
-                  "'dir' (the ivfpq store) and 'out_dir'")
-          case "store_dedup" =>
-            if (s.dir.isEmpty || s.outDir.isEmpty)
-              throw new IllegalArgumentException(
-                s"stage '${s.name}': stream 'store_dedup' requires " +
-                  "'dir' (the dedup gram store) and 'out_dir'")
-          case "image_dedup" =>
-            if (s.dir.isEmpty || s.outDir.isEmpty)
-              throw new IllegalArgumentException(
-                s"stage '${s.name}': stream 'image_dedup' requires " +
-                  "'dir' (the phash store) and 'out_dir'")
-          case "audio_dedup" =>
-            if (s.dir.isEmpty || s.outDir.isEmpty)
-              throw new IllegalArgumentException(
-                s"stage '${s.name}': stream 'audio_dedup' requires " +
-                  "'dir' (the afp store) and 'out_dir'")
           case "classify" =>
             if (s.outDir.isEmpty)
               throw new IllegalArgumentException(
@@ -473,10 +432,7 @@ object PipelineConfig {
                   "input_stage (training-corpus adapters) have no " +
                   "effect — drop them, or drop model_dir to retrain " +
                   "per drain")
-          case other => throw new IllegalArgumentException(
-            s"stage '${s.name}': unknown stream '$other' " +
-              "(index_ingest | embedding_dedup | store_dedup | " +
-              "image_dedup | audio_dedup | classify)")
+          case _ => graft.cli.StageRunner.checkStream(s)
         }
       case other => throw new IllegalArgumentException(
         s"stage '${s.name}': unknown kind '$other' (query | store | stream)")

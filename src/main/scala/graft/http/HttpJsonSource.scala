@@ -180,21 +180,25 @@ object HttpJsonSource {
             case Left(e) => throw new RuntimeException(
               s"request to ${req.uri()} failed after $attempt attempts", e)
           }
-          // a 429/503 Retry-After (delta-seconds form) OVERRIDES the
-          // computed backoff when longer — the server told us when it
-          // will take the request, sleeping less just burns attempts;
-          // capped at 300 s so a hostile header can't hang a task
-          val retryAfterMs = other.toOption
-            .flatMap(_.headers().firstValue("Retry-After").toScala)
-            .flatMap(_.trim.toLongOption)
-            .map(s => math.min(s, 300L) * 1000)
-            .getOrElse(0L)
-          Thread.sleep(math.max(delayMs, retryAfterMs))
+          Thread.sleep(other.toOption.fold(delayMs)(retryWaitMs(delayMs, _)))
           delayMs = math.min(delayMs * 2, retry.maxDelaySecs * 1000)
       }
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** The wait before retrying a 429/5xx response: the longer of the
+    * computed `backoffMs` and the response's `Retry-After`
+    * (delta-seconds form) — the server told us when it will take the
+    * request, sleeping less just burns attempts — the header capped
+    * at 300 s so a hostile value can't hang a task. The HTTP source
+    * and the BigQuery writer both retry by this rule.
+    */
+  private[graft] def retryWaitMs(backoffMs: Long,
+      resp: HttpResponse[_]): Long =
+    resp.headers().firstValue("Retry-After").toScala
+      .flatMap(_.trim.toLongOption)
+      .fold(backoffMs)(s => math.max(backoffMs, math.min(s, 300L) * 1000))
 
   /** NDJSON line framing as an incremental pass: each line parses and
     * extracts independently, so peak memory is one line + the

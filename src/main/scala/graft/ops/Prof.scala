@@ -647,6 +647,18 @@ object Prof {
       def drop(df: org.apache.spark.sql.DataFrame, src: String): Unit =
         df.coalesce(1).write.mode("append").parquet(src)
       def schemaOf(src: String) = spark.read.parquet(src).schema
+      // a store-backed stream stage's drain: its per-batch store verb
+      // over `src`, one file per trigger
+      def stageDrain(src: String, ck: String, fields: String*): () => Unit = {
+        val stage = graft.config.PipelineConfig.parse(
+          (Seq("stages:", "  - name: prof", "    kind: stream",
+            s"    input_dir: $base", s"    source_dir: $src",
+            s"    checkpoint: $ck") ++ fields.map("    " + _))
+            .mkString("\n")).stages.head
+        () => drain(graft.streaming.BatchedParquetSink.start(spark, src,
+          schemaOf(src), 1, Some(ck))(
+          graft.cli.StageRunner.streamBatch(spark, stage)))
+      }
 
       // ---- index_ingest (ivf): fresh ids appended into a built store
       val ivfDir = s"$base/ivf_store"
@@ -656,9 +668,8 @@ object Prof {
         col("embedding"))
       for (i <- 0 until 4)
         drop(fresh.filter(col("vec_id") % 100 === i), ingSrc)
-      def ingDrain(): Unit = drain(graft.streaming.StreamingIndexIngest
-        .intoIvf(spark, ingSrc, schemaOf(ingSrc), ivfDir, 1,
-          Some(s"$base/ing_ck")))
+      val ingDrain = stageDrain(ingSrc, s"$base/ing_ck",
+        "stream: index_ingest", "store: ivf", s"dir: $ivfDir")
       q1("streams_ivf_ingest_drain4")(ingDrain())
       drop(fresh.filter(col("vec_id") % 100 === 4), ingSrc)
       q1("streams_ivf_ingest_inc")(ingDrain())
@@ -672,10 +683,8 @@ object Prof {
         col("embedding").as("qv"))
       for (i <- 0 until 4)
         drop(qrel.filter(col("query_id") % 100 === i), edSrc)
-      def edDrain(): Unit = drain(graft.streaming.StreamingEmbeddingDedup
-        .streamingDedupAgainstStore(spark, edSrc, schemaOf(edSrc), pqDir,
-          s"$base/ed_out", maxFilesPerTrigger = 1,
-          checkpoint = Some(s"$base/ed_ck")))
+      val edDrain = stageDrain(edSrc, s"$base/ed_ck",
+        "stream: embedding_dedup", s"dir: $pqDir", s"out_dir: $base/ed_out")
       q1("streams_embdedup_drain4")(edDrain())
       drop(qrel.filter(col("query_id") % 100 === 4), edSrc)
       q1("streams_embdedup_inc")(edDrain())
@@ -688,10 +697,8 @@ object Prof {
       val drel = docs.select(col("doc_id"), col("text"))
       for (i <- 0 until 4)
         drop(drel.filter(col("doc_id") % 100 === i), sdSrc)
-      def sdDrain(): Unit = drain(graft.streaming.StreamingStoreDedup
-        .streamingDedupAgainstStore(spark, sdSrc, schemaOf(sdSrc), gramDir,
-          s"$base/sd_out", maxFilesPerTrigger = 1,
-          checkpoint = Some(s"$base/sd_ck")))
+      val sdDrain = stageDrain(sdSrc, s"$base/sd_ck",
+        "stream: store_dedup", s"dir: $gramDir", s"out_dir: $base/sd_out")
       q1("streams_storededup_drain4")(sdDrain())
       drop(drel.filter(col("doc_id") % 100 === 4), sdSrc)
       q1("streams_storededup_inc")(sdDrain())

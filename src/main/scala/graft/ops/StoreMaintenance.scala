@@ -20,7 +20,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * log/alert on the decision. The compact itself runs under the
   * maintainer lease like every maintenance op; racing a live ingest
   * stream fails loudly (stop the stream, maintain, restart — the
-  * [[graft.streaming.StreamingIndexIngest]] contract).
+  * `stream: index_ingest` contract, each micro-batch an append under
+  * the lease).
   */
 object StoreMaintenance {
 

@@ -11,8 +11,8 @@ import graft.ops.IvfIndex
   * on a stream (fresh documents' embeddings, user queries) get their
   * top-k neighbors from the index built by an earlier job.
   *
-  * Same architecture as [[StreamingStoreDedup]], for the same
-  * reasons: `foreachBatch` runs the EXACT batch operator per
+  * Same architecture as the store-backed stream stages
+  * ([[BatchedParquetSink]]), for the same reasons: `foreachBatch` runs the EXACT batch operator per
   * micro-batch (the top-k window over a streaming relation would be
   * a stateful sort Spark refuses in append mode; inside foreachBatch
   * it is the ordinary batch window), stream == batch holds by

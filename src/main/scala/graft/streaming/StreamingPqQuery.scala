@@ -8,7 +8,7 @@ import graft.ops.PqStore
 
 /** Live retrieval against the PERSISTED PQ store — the streaming
   * counterpart of [[graft.ops.PqStore.query]], completing the
-  * streaming triple ([[StreamingStoreDedup]], [[StreamingIvfQuery]]):
+  * streaming triple (`stream: store_dedup`, [[StreamingIvfQuery]]):
   * query vectors arriving on a stream get their top-k neighbors via
   * the stored codebook's ADC prefilter + exact rerank, paying neither
   * the codebook fit nor the corpus encode (both live in the store).

@@ -222,8 +222,10 @@ object BigQueryWriter {
     */
   @volatile private[writer] var sleeper: Long => Unit = Thread.sleep
 
-  private def backoff(attempt: Int): Unit =
-    sleeper(math.min(200L << math.min(attempt, 4), 5000L))
+  private def backoffMs(attempt: Int): Long =
+    math.min(200L << math.min(attempt, 4), 5000L)
+
+  private def backoff(attempt: Int): Unit = sleeper(backoffMs(attempt))
 
   /** POST one statement to `jobs.query`. Robustness contract:
     *   - 401 → one token refresh (OAuth only), the HTTP-source
@@ -231,7 +233,9 @@ object BigQueryWriter {
     *   - 429 / 5xx / transport IOExceptions / retryable job errors
     *     (backendError, rateLimitExceeded, the concurrent-DML
     *     "concurrent update" abort) → exponential backoff, up to
-    *     `maxAttempts` total; ambiguous faults (5xx, I/O) reuse the
+    *     `maxAttempts` total, a 429/5xx waiting at least its
+    *     `Retry-After` ([[graft.http.HttpJsonSource.retryWaitMs]]);
+    *     ambiguous faults (5xx, I/O) reuse the
     *     requestId so the DML can't double-apply, definitive job
     *     errors mint a fresh one so the retry re-RUNS instead of
     *     replaying the dedup cache's stored failure;
@@ -375,7 +379,8 @@ object BigQueryWriter {
           if (attempt >= maxAttempts)
             throw new graft.errors.GraftError.WriterError(
               s"bigquery jobs.query HTTP $code after $attempt attempts: ${resp.body().take(500)}")
-          backoff(attempt - 1)
+          sleeper(graft.http.HttpJsonSource.retryWaitMs(
+            backoffMs(attempt - 1), resp))
         } else if (code / 100 != 2) {
           val reasons = httpErrorReasons(resp.body())
           if (reasons.nonEmpty && reasons.subsetOf(swallowReasons))

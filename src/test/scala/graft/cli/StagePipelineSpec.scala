@@ -707,17 +707,45 @@ class StagePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a stream stage racing an empty source is a no-op, not an error") {
-    val sp = spark
+    val sp = spark; import sp.implicits._
     val dir = Files.createTempDirectory("stage_empty_src")
     val modules = Files.createDirectories(dir.resolve("modules"))
     val warehouse = dir.resolve("warehouse").toString
     val storeDir = dir.resolve("ivf_store").toString
     val srcDir = Files.createDirectories(dir.resolve("incoming")).toString
-    graft.ops.IvfIndex.save(
-      graft.engine.Tables.table(sp, sf, "embeddings"), storeDir, nCells = 16)
+    val emb = graft.engine.Tables.table(sp, sf, "embeddings")
+    graft.ops.IvfIndex.save(emb, storeDir, nCells = 16)
+    // every store-backed stream gets its built store, so each drain
+    // reaches its no-op path instead of the missing-store refusal
+    val ivfpqDir = dir.resolve("ivfpq_store").toString
+    val gramDir = dir.resolve("gram_store").toString
+    val phashDir = dir.resolve("phash_store").toString
+    val afpDir = dir.resolve("afp_store").toString
+    graft.ops.IvfPqStore.save(emb, ivfpqDir, nCells = 16)
+    graft.ops.DedupStore.save(
+      graft.engine.Tables.table(sp, sf, "documents"), gramDir)
+    val cells = (1 to 3).map(i =>
+      graft.ops.Multimodal.cellsForBits(i * 0x9E3779B97F4A7C15L))
+    graft.ops.PhashStore.save(cells.zipWithIndex.map { case (c, i) =>
+      (i.toLong, graft.ops.Multimodal.grayCellsPng(c)) }
+      .toDF("doc_id", "payload"), phashDir)
+    graft.ops.AfpStore.save(cells.zipWithIndex.map { case (c, i) =>
+      (i.toLong, graft.ops.Multimodal.energyCellsWav(c)) }
+      .toDF("doc_id", "payload"), afpDir)
+    def flagStage(name: String, stream: String, store: String): String =
+      s"""  - name: $name
+         |    kind: stream
+         |    stream: $stream
+         |    input_dir: $sf
+         |    source_dir: ${Files.createDirectories(dir.resolve(s"in_$name"))}
+         |    checkpoint: ${dir.resolve(s"ck_$name")}
+         |    dir: $store
+         |    out_dir: ${dir.resolve(s"out_$name")}
+         |    dest_table: $name
+         |""".stripMargin
     // the nightly pipeline fires before the crawler's first drop: the
     // ingest drain no-ops and still lands its audit row; the classify
-    // drain no-ops and lands an EMPTY typed relation
+    // and dedup drains no-op and land an EMPTY typed relation
     Files.writeString(dir.resolve("pipelines.yaml"),
       s"""stages:
          |  - name: grow_index
@@ -737,7 +765,11 @@ class StagePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
          |    checkpoint: ${dir.resolve("ck2")}
          |    out_dir: ${dir.resolve("preds")}
          |    dest_table: preds
-         |""".stripMargin)
+         |""".stripMargin +
+        flagStage("emb_flags", "embedding_dedup", ivfpqDir) +
+        flagStage("text_flags", "store_dedup", gramDir) +
+        flagStage("image_flags", "image_dedup", phashDir) +
+        flagStage("audio_flags", "audio_dedup", afpDir))
     assert(Main.run(Main.Args(
       modulesDir = modules.toString,
       configPath = dir.resolve("pipelines.yaml").toString,
@@ -747,6 +779,19 @@ class StagePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(audit.getAs[String]("action") == "stream_ingest")
     val preds = sp.read.parquet(s"$warehouse/preds")
     assert(preds.count() == 0 && preds.columns.contains("predicted"))
+    Seq(
+      "emb_flags" -> "query_id BIGINT, corpus_id BIGINT, cosine DOUBLE",
+      "text_flags" -> "inc_id BIGINT, corpus_id BIGINT, jaccard DOUBLE",
+      "image_flags" -> "inc_id BIGINT, corpus_id BIGINT, hamming BIGINT",
+      "audio_flags" -> "inc_id BIGINT, corpus_id BIGINT, hamming BIGINT")
+      .foreach { case (table, ddl) =>
+        val landed = sp.read.parquet(s"$warehouse/$table")
+        val want = org.apache.spark.sql.types.StructType
+          .fromDDL(s"$ddl, graft_batch BIGINT")
+        assert(landed.count() == 0, table)
+        assert(landed.schema.map(f => (f.name, f.dataType)) ==
+          want.map(f => (f.name, f.dataType)), s"$table: ${landed.schema}")
+      }
   }
 
   test("a chained stage refuses a FAILED upstream instead of reading stale output") {

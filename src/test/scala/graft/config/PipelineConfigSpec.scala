@@ -264,4 +264,79 @@ class PipelineConfigSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("requires 'project'"))
   }
+
+  test("stage vocabulary: every valid store action and stream parses; every refusal is loud at parse") {
+    def stage(fields: String*): String =
+      ("stages:\n  - name: s\n    input_dir: /x\n" +:
+        fields.map(f => s"    $f\n")).mkString
+    def store(st: String, action: String, extra: String*): String =
+      stage(Seq("kind: store", s"store: $st", s"action: $action",
+        "dir: /d") ++ extra: _*)
+    def stream(name: String, extra: String*): String =
+      stage(Seq("kind: stream", s"stream: $name", "source_dir: /in",
+        "checkpoint: /ck") ++ extra: _*)
+
+    val lifecycle = Seq("build", "rebuild", "compact", "maintain", "stats",
+      "recommend", "auto", "delete")
+    val accepted: Seq[String] =
+      (for {
+        st <- Seq("dedup", "phash", "afp", "ivf", "pq", "ivfpq")
+        a <- lifecycle
+      } yield store(st, a)) ++
+        Seq("dedup", "phash", "afp", "ivf", "pq", "ivfpq")
+          .map(store(_, "append", "ingest_id: i1")) ++
+        Seq("dedup", "phash", "afp", "ivfpq").map(store(_, "dedup")) ++
+        Seq("build", "rebuild", "stats").map(store("classifier", _)) ++
+        Seq("ivf", "pq", "ivfpq").map(st =>
+          stream("index_ingest", s"store: $st", "dir: /d")) ++
+        Seq("embedding_dedup", "store_dedup", "image_dedup", "audio_dedup")
+          .map(stream(_, "dir: /d", "out_dir: /o")) ++
+        Seq(stream("classify", "out_dir: /o"),
+          stream("classify", "out_dir: /o", "model_dir: /m"),
+          stream("classify", "out_dir: /o", "table: docs"))
+    accepted.foreach { yaml =>
+      val st = PipelineConfig.parse(yaml).stages.head
+      assert(st.kind == "store" || st.kind == "stream", yaml)
+    }
+
+    val refused: Seq[(String, String)] = Seq(
+      "unknown store" -> store("nope", "build"),
+      "unknown action" -> store("ivf", "nope"),
+      "classifier maintain" -> store("classifier", "maintain"),
+      "classifier recommend" -> store("classifier", "recommend"),
+      "classifier append" -> store("classifier", "append", "ingest_id: i1"),
+      "classifier dedup" -> store("classifier", "dedup"),
+      "dedup on ivf" -> store("ivf", "dedup"),
+      "dedup on pq" -> store("pq", "dedup"),
+      "append without ingest_id" -> store("ivfpq", "append"),
+      "store without dir" -> stage("kind: store", "store: ivf",
+        "action: build"),
+      "index_ingest without dir" -> stream("index_ingest", "store: ivf"),
+      "index_ingest without store" -> stream("index_ingest", "dir: /d"),
+      "index_ingest on dedup" -> stream("index_ingest", "store: dedup",
+        "dir: /d"),
+      "index_ingest on phash" -> stream("index_ingest", "store: phash",
+        "dir: /d"),
+      "index_ingest on classifier" -> stream("index_ingest",
+        "store: classifier", "dir: /d"),
+      "unknown stream" -> stream("nope", "dir: /d", "out_dir: /o"),
+      "stream without checkpoint" -> stage("kind: stream",
+        "stream: store_dedup", "source_dir: /in", "dir: /d", "out_dir: /o"),
+      "classify without out_dir" -> stream("classify"),
+      "model_dir on a store stage" -> store("ivf", "build", "model_dir: /m"),
+      "model_dir on index_ingest" -> stream("index_ingest", "store: ivf",
+        "dir: /d", "model_dir: /m"),
+      "model_dir with adapters" -> stream("classify", "out_dir: /o",
+        "model_dir: /m", "table: docs"),
+      "adapters on a store-backed stream" -> stream("image_dedup",
+        "dir: /d", "out_dir: /o", "table: docs")) ++
+      Seq("embedding_dedup", "store_dedup", "image_dedup", "audio_dedup")
+        .flatMap(n => Seq(
+          s"$n without dir" -> stream(n, "out_dir: /o"),
+          s"$n without out_dir" -> stream(n, "dir: /d")))
+    refused.foreach { case (what, yaml) =>
+      val e = intercept[IllegalArgumentException](PipelineConfig.parse(yaml))
+      assert(e.getMessage.contains("stage 's'"), s"$what: ${e.getMessage}")
+    }
+  }
 }

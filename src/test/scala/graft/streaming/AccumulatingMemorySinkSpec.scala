@@ -139,7 +139,11 @@ class AccumulatingMemorySinkSpec extends AnyFunSuite {
   test("a scorer whose model materialization throws releases its cache " +
       "before rethrowing") {
     val sp = spark; import sp.implicits._
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // compare ids, not counts: the context cleaner may unpersist an
+    // earlier suite's garbage-collected RDD mid-test, which would hide
+    // a leak from (or fake one into) a size comparison
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     // a model whose count() throws: raise_error fires on materialization
     val bad = Seq(("A", "t", 5L)).toDF("label", "tok", "w")
       .withColumn("w", when(col("w") > 0,
@@ -147,7 +151,7 @@ class AccumulatingMemorySinkSpec extends AnyFunSuite {
     intercept[Exception] {
       StreamingClassify.scorer(bad, maxModelRows = Long.MaxValue)
     }
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
+    assert(leaked.isEmpty,
       "a throwing scorer must not leak its persisted model into the session")
     val badBench = Seq((0L, "x")).toDF("doc_id", "text")
       .withColumn("text", when(length(col("text")) > 0,
@@ -155,7 +159,7 @@ class AccumulatingMemorySinkSpec extends AnyFunSuite {
     intercept[Exception] {
       StreamingDecontaminate.scorer(badBench, minShared = 2)
     }
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
+    assert(leaked.isEmpty,
       "a throwing decontaminate scorer must not leak its persisted grams")
   }
 }

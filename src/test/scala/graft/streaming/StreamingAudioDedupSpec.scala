@@ -3,13 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.cli.StageRunner
 import graft.ops.{AfpStore, Multimodal}
 
 /** Streaming audio dedup pinned equal to the batch operator over the
   * same incoming set under forced multi-micro-batch arrival, plus the
   * replay-idempotence contract of the batch-keyed delivery — the
-  * audio twin of [[StreamingImageDedupSpec]] through the shared
-  * [[StreamingFingerprintDedup]].
+  * audio twin of [[StreamingImageDedupSpec]]: the `stream:
+  * audio_dedup` stage, the afp store's dedup per micro-batch.
   */
 class StreamingAudioDedupSpec extends AnyFunSuite {
 
@@ -38,13 +39,13 @@ class StreamingAudioDedupSpec extends AnyFunSuite {
     incoming.repartition(4).write.mode("overwrite").parquet(srcDir)
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_afp_out").toString + "/flags"
-    val q = StreamingAudioDedup.streamingDedupAgainstStore(
-      spark, srcDir, incoming.schema, store, outDir, maxFilesPerTrigger = 1)
-    try q.processAllAvailable() finally q.stop()
-    assert(q.recentProgress.count(_.numInputRows > 0) > 1,
+    val streamed = StageRunner.run(spark, StreamStages.stage("audio_dedup",
+      srcDir, s"dir: $store", s"out_dir: $outDir")).drop("graft_batch")
+    assert(StreamStages.landedBatches(outDir) > 1,
       "fixture must actually exercise multiple micro-batches")
-    val streamed = spark.read.parquet(outDir).drop("graft_batch")
-    val batch = AfpStore.dedupAgainst(spark, incoming, store)
+    // the stage's per-batch knobs: Hamming radius 3 over 4 bands
+    val batch = AfpStore.dedupAgainst(spark, incoming, store, maxDist = 3,
+      nBands = 4)
     assert(batch.count() >= 10L, "fixture must contain incremental near-dups")
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
@@ -59,10 +60,10 @@ class StreamingAudioDedupSpec extends AnyFunSuite {
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_afp_out2").toString + "/flags"
     val batch = Seq((100L, wav(mix(2)))).toDF("doc_id", "payload")
-    StreamingFingerprintDedup.writeBatch(AfpStore, spark, batch, 7L,
-      store, outDir, 3, 4)
-    StreamingFingerprintDedup.writeBatch(AfpStore, spark, batch, 7L,
-      store, outDir, 3, 4)
+    val body = StageRunner.streamBatch(spark, StreamStages.stage(
+      "audio_dedup", "/unused", s"dir: $store", s"out_dir: $outDir"))
+    body(batch, 7L)
+    body(batch, 7L)
     assert(spark.read.parquet(outDir).count() == 1L,
       "an at-least-once replay must overwrite its own batch partition")
   }

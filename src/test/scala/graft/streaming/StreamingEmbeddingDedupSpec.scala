@@ -3,9 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.cli.StageRunner
+
 /** Streaming embedding dedup against the persisted store pinned equal
   * to the batch operator over the same incoming set, under forced
-  * multi-batch arrival.
+  * multi-batch arrival — the `stream: embedding_dedup` stage, the
+  * ivfpq store's dedup per micro-batch at the stage's knobs.
   */
 class StreamingEmbeddingDedupSpec extends AnyFunSuite {
 
@@ -25,15 +28,14 @@ class StreamingEmbeddingDedupSpec extends AnyFunSuite {
       incoming.repartition(3).write.mode("overwrite").parquet(srcDir)
       val outDir = java.nio.file.Files
         .createTempDirectory("graft_stream_edup_out").toString + "/pairs"
-      val q = StreamingEmbeddingDedup.streamingDedupAgainstStore(
-        spark, srcDir, incoming.schema, store, outDir,
-        minCosine = 0.3, nProbe = 16, margin = 2.0, maxFilesPerTrigger = 1)
-      try q.processAllAvailable() finally q.stop()
-      assert(q.recentProgress.count(_.numInputRows > 0) > 1,
+      val streamed = StageRunner.run(spark, StreamStages.stage(
+        "embedding_dedup", srcDir, s"dir: $store", s"out_dir: $outDir",
+        "min_cosine: 0.3", "margin: 2.0")).drop("graft_batch")
+      assert(StreamStages.landedBatches(outDir) > 1,
         "fixture must actually exercise multiple micro-batches")
-      val streamed = spark.read.parquet(outDir).drop("graft_batch")
+      // the stage probes 4 cells per batch; the batch operator likewise
       val batch = graft.ops.IvfPqStore.dedupAgainst(spark, store, incoming,
-        minCosine = 0.3, nProbe = 16, margin = 2.0)
+        minCosine = 0.3, nProbe = 4, margin = 2.0)
       assert(batch.count() > 0)
       assert(streamed.count() == batch.count())
       assert(streamed.exceptAll(batch).isEmpty

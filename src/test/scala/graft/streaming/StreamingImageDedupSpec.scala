@@ -3,11 +3,13 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.cli.StageRunner
 import graft.ops.{Multimodal, PhashStore}
 
 /** Streaming image dedup pinned equal to the batch operator over the
   * same incoming set under forced multi-micro-batch arrival, plus the
-  * replay-idempotence contract of the batch-keyed delivery.
+  * replay-idempotence contract of the batch-keyed delivery — the
+  * `stream: image_dedup` stage, the phash store's dedup per batch.
   */
 class StreamingImageDedupSpec extends AnyFunSuite {
 
@@ -37,13 +39,13 @@ class StreamingImageDedupSpec extends AnyFunSuite {
     incoming.repartition(4).write.mode("overwrite").parquet(srcDir)
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_img_out").toString + "/flags"
-    val q = StreamingImageDedup.streamingDedupAgainstStore(
-      spark, srcDir, incoming.schema, store, outDir, maxFilesPerTrigger = 1)
-    try q.processAllAvailable() finally q.stop()
-    assert(q.recentProgress.count(_.numInputRows > 0) > 1,
+    val streamed = StageRunner.run(spark, StreamStages.stage("image_dedup",
+      srcDir, s"dir: $store", s"out_dir: $outDir")).drop("graft_batch")
+    assert(StreamStages.landedBatches(outDir) > 1,
       "fixture must actually exercise multiple micro-batches")
-    val streamed = spark.read.parquet(outDir).drop("graft_batch")
-    val batch = PhashStore.dedupAgainst(spark, incoming, store)
+    // the stage's per-batch knobs: Hamming radius 3 over 4 bands
+    val batch = PhashStore.dedupAgainst(spark, incoming, store, maxDist = 3,
+      nBands = 4)
     assert(batch.count() >= 10L, "fixture must contain incremental near-dups")
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
@@ -58,10 +60,10 @@ class StreamingImageDedupSpec extends AnyFunSuite {
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_img_out2").toString + "/flags"
     val batch = Seq((100L, png(mix(2)))).toDF("doc_id", "payload")
-    StreamingFingerprintDedup.writeBatch(PhashStore, spark, batch, 7L,
-      store, outDir, 3, 4)
-    StreamingFingerprintDedup.writeBatch(PhashStore, spark, batch, 7L,
-      store, outDir, 3, 4)
+    val body = StageRunner.streamBatch(spark, StreamStages.stage(
+      "image_dedup", "/unused", s"dir: $store", s"out_dir: $outDir"))
+    body(batch, 7L)
+    body(batch, 7L)
     assert(spark.read.parquet(outDir).count() == 1L,
       "an at-least-once replay must overwrite its own batch partition")
   }

@@ -3,11 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.cli.StageRunner
+
 /** Streaming index growth pinned against brute force: an index built
   * from half the corpus, grown by streaming the other half in across
   * multiple micro-batches, must answer exhaustive-settings queries
   * exactly like brute force over the union — no vector lost,
-  * duplicated, or misencoded on the ingest path.
+  * duplicated, or misencoded on the ingest path. Driven as the
+  * `stream: index_ingest` stage: the store's append per micro-batch.
   */
 class StreamingIndexIngestSpec extends AnyFunSuite {
 
@@ -27,12 +30,11 @@ class StreamingIndexIngestSpec extends AnyFunSuite {
     val srcDir = java.nio.file.Files
       .createTempDirectory("graft_ingest_ivf_src").toString
     odd.repartition(3).write.mode("overwrite").parquet(srcDir)
-    val q = StreamingIndexIngest.intoIvf(
-      spark, srcDir, odd.schema, index, maxFilesPerTrigger = 1)
-    try q.processAllAvailable() finally q.stop()
-    assert(q.recentProgress.count(_.numInputRows > 0) > 1,
-      "fixture must actually exercise multiple micro-batches")
+    val audit = StageRunner.run(spark, StreamStages.stage("index_ingest",
+      srcDir, "store: ivf", s"dir: $index")).head()
+    assert(audit.getAs[String]("action") == "stream_ingest")
     // each micro-batch landed as its own idempotent ingest partition
+    // (the build is ingest 0, so > 2 means more than one micro-batch)
     def stat(name: String): Long = graft.ops.IvfIndex.stats(spark, index)
       .select(col(name)).head.getLong(0)
     assert(stat("n_ingests") > 2,
@@ -57,10 +59,10 @@ class StreamingIndexIngestSpec extends AnyFunSuite {
       val srcDir = java.nio.file.Files
         .createTempDirectory("graft_ingest_ivfpq_src").toString
       odd.repartition(3).write.mode("overwrite").parquet(srcDir)
-      val q = StreamingIndexIngest.intoIvfPq(
-        spark, srcDir, odd.schema, store, maxFilesPerTrigger = 1)
-      try q.processAllAvailable() finally q.stop()
-      assert(q.recentProgress.count(_.numInputRows > 0) > 1)
+      val audit = StageRunner.run(spark, StreamStages.stage("index_ingest",
+        srcDir, "store: ivfpq", s"dir: $store")).head()
+      assert(audit.getAs[Long]("n_ingests") > 2,
+        "fixture must actually exercise multiple micro-batches")
       val got = graft.ops.IvfPqStore.querySelf(spark, store, nProbe = 16,
         candidates = e.count().toInt).collect().toSeq
       val want = graft.ops.Similarity.knnBrute(e).collect().toSeq

@@ -3,10 +3,13 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.cli.StageRunner
+
 /** Streaming store-dedup pinned equal to the batch operator over the
   * same incoming set, under forced multi-micro-batch arrival — the
   * union-over-batches == batch-over-union property the foreachBatch
-  * reuse gives by construction, verified anyway.
+  * reuse gives by construction, verified anyway. Driven as the
+  * `stream: store_dedup` stage, the gram store's dedup per batch.
   */
 class StreamingStoreDedupSpec extends AnyFunSuite {
 
@@ -25,12 +28,10 @@ class StreamingStoreDedupSpec extends AnyFunSuite {
     incoming.repartition(4).write.mode("overwrite").parquet(srcDir)
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_stream_out").toString + "/flags"
-    val q = StreamingStoreDedup.streamingDedupAgainstStore(
-      spark, srcDir, incoming.schema, store, outDir, maxFilesPerTrigger = 1)
-    try q.processAllAvailable() finally q.stop()
-    assert(q.recentProgress.count(_.numInputRows > 0) > 1,
+    val streamed = StageRunner.run(spark, StreamStages.stage("store_dedup",
+      srcDir, s"dir: $store", s"out_dir: $outDir")).drop("graft_batch")
+    assert(StreamStages.landedBatches(outDir) > 1,
       "fixture must actually exercise multiple micro-batches")
-    val streamed = spark.read.parquet(outDir).drop("graft_batch")
     val batch = graft.ops.DedupStore.dedupAgainst(spark, incoming, store)
     assert(batch.count() > 0, "fixture must contain incremental near-dups")
     assert(streamed.count() == batch.count())
@@ -49,8 +50,10 @@ class StreamingStoreDedupSpec extends AnyFunSuite {
       .createTempDirectory("graft_replay_out").toString + "/flags"
     // foreachBatch is at-least-once: simulate Spark replaying batch 7
     // after its write landed but its offset commit didn't
-    StreamingStoreDedup.writeBatch(spark, incoming, 7L, store, outDir)
-    StreamingStoreDedup.writeBatch(spark, incoming, 7L, store, outDir)
+    val body = StageRunner.streamBatch(spark, StreamStages.stage(
+      "store_dedup", "/unused", s"dir: $store", s"out_dir: $outDir"))
+    body(incoming, 7L)
+    body(incoming, 7L)
     val landed = spark.read.parquet(outDir).drop("graft_batch")
     val want = graft.ops.DedupStore.dedupAgainst(spark, incoming, store)
     assert(want.count() > 0)

@@ -204,6 +204,34 @@ class BigQueryWriterSpec extends AnyFunSuite {
     } finally BigQueryWriter.sleeper = prevSleeper
   }
 
+  test("a 429's Retry-After stretches the backoff, capped at 300 s") {
+    val slept = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val prevSleeper = BigQueryWriter.sleeper
+    BigQueryWriter.sleeper = ms => { slept.add(ms); () }
+    try withServer { (server, base) =>
+      val calls = new AtomicInteger(0)
+      server.createContext("/bigquery/v2/projects/p1/queries", ex => {
+        readBody(ex)
+        calls.incrementAndGet() match {
+          case 1 =>
+            ex.getResponseHeaders.set("Retry-After", "2")
+            respond(ex, """{"error":"slow down"}""", status = 429)
+          case 2 =>
+            ex.getResponseHeaders.set("Retry-After", "86400")
+            respond(ex, """{"error":"down"}""", status = 503)
+          case 3 => respond(ex, """{"error":"slow down"}""", status = 429)
+          case _ => respond(ex, """{"jobComplete": true}""")
+        }
+      })
+      BigQueryWriter.post(base, "p1", BigQueryWriter.StaticToken("tok"),
+        "INSERT INTO x VALUES (1)", 5, maxAttempts = 4)
+      import scala.jdk.CollectionConverters._
+      // the header wins over the 200 ms first backoff, a hostile one
+      // is capped, and a header-less 429 keeps the computed backoff
+      assert(slept.asScala.toList == List(2000L, 300000L, 800L))
+    } finally BigQueryWriter.sleeper = prevSleeper
+  }
+
   test("attempts exhaust: a persistent 503 fails instead of spinning") {
     val prevSleeper = BigQueryWriter.sleeper
     BigQueryWriter.sleeper = _ => ()
