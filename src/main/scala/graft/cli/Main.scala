@@ -373,7 +373,9 @@ object Main {
         // the Spark analog of the reference's buffered replay channel
         // (fetcher.rs:653-727). Page size + TotalHint come from the
         // source config (page_size / total_*_pointer), CLI default
-        // otherwise.
+        // otherwise. The schema comes from the first 100 rows and every
+        // row is parsed strictly against it: a row that does not fit
+        // fails this module's first action, logged as [datatype] below.
         val sourceDf = HttpJsonSource.load(spark, fetchSource, args.pageSize).cache()
         try {
           val writer = makeWriter(sink, destTable, source.primaryKeyInDest.toSeq,

@@ -56,6 +56,7 @@ object GraftError {
   /** Classify an arbitrary throwable into the taxonomy. */
   def from(t: Throwable): GraftError = t match {
     case g: GraftError => g
+    case e if malformedRecord(e) => Wrapped("datatype", e)
     // Jackson before IOException — JacksonException extends it
     case e: com.fasterxml.jackson.core.JacksonException => Wrapped("json", e)
     case e: java.io.IOException => Wrapped("io", e)
@@ -66,4 +67,16 @@ object GraftError {
     case e: NoSuchElementException => ConfigError(e.getMessage)
     case e => Wrapped("unknown", e)
   }
+
+  /** A fetched row that does not fit its source's sampled schema:
+    * Spark's strict JSON parse raises `MALFORMED_RECORD_IN_PARSING`,
+    * which a job abort or a failed write may wrap — so the whole cause
+    * chain is searched.
+    */
+  private def malformedRecord(t: Throwable): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists {
+      case s: org.apache.spark.SparkThrowable =>
+        Option(s.getCondition).exists(_.startsWith("MALFORMED_RECORD_IN_PARSING"))
+      case _ => false
+    }
 }

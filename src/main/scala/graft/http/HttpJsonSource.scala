@@ -99,7 +99,7 @@ object HttpJsonSource {
   private[http] val requestTimeout = Duration.ofSeconds(30)
 
   /** A keep-alive client; every source shares the same timeouts. */
-  def buildClient(spec: FetchSpec): HttpClient =
+  def buildClient(): HttpClient =
     HttpClient.newBuilder()
       .connectTimeout(connectTimeout)
       .followRedirects(HttpClient.Redirect.NORMAL)
@@ -285,25 +285,30 @@ object HttpJsonSource {
   /** limit_offset (A4): sequential on the driver. */
   def fetchLimitOffset(spec: FetchSpec, limitParam: String,
       offsetParam: String, limit: Long): Iterator[Page] =
-    pagesFrom(buildClient(spec), spec, 0)(i =>
+    pagesFrom(buildClient(), spec, 0)(i =>
       Seq(limitParam -> limit.toString, offsetParam -> (i * limit).toString))
 
-  /** A page_number fetch: the driver-held first page (the schema
-    * sample) plus the full row Dataset (which may fetch pages 2..N on
+  /** A fetch: the rows the driver holds, page 1 onward (the schema
+    * sample; every row for a sequential source), plus the full row
+    * Dataset (which may fetch the remaining page_number pages on
     * executors when consumed).
     */
   final case class PagedFetch(firstPage: Page, rows: Dataset[String])
 
-  /** page_number (A5). Page 1 is fetched eagerly; when a TotalHint
-    * resolves the page count, pages 2..N are fetched in PARALLEL ON
-    * EXECUTORS — the Spark-native upgrade of the reference's
-    * buffer_unordered(5) — otherwise sequentially until an empty page.
-    * The fan-out cuts pages 2..N into `min(N - 1, defaultParallelism)`
-    * contiguous ranges, read when this plan is built; a failed task
-    * re-fetches its whole range. Rows come back in page order, page 1
-    * as one partition. The first page is also returned driver-side so
-    * schema inference can run on it WITHOUT consuming (= re-fetching)
-    * the distributed rows.
+  /** page_number (A5). The schema sample is pages 1..⌈100 / perPage⌉
+    * (capped at the total): the first
+    * [[graft.infer.SchemaInfer.SampleCap]] rows, like every other
+    * kind's. When a TotalHint resolves the page count, every page
+    * after page 1 is fetched in PARALLEL ON EXECUTORS — the
+    * Spark-native upgrade of the reference's buffer_unordered(5) — the
+    * sample pages by one collected job, the rest when the rows are
+    * consumed; otherwise every page is fetched sequentially on the
+    * driver until an empty one. A fan-out cuts its pages into
+    * `min(pages, defaultParallelism)` contiguous ranges; a failed task
+    * re-fetches its whole range. Rows come back in page order, the
+    * sample pages as one partition. The sample is returned driver-side
+    * as `firstPage`, so schema inference runs on it WITHOUT consuming
+    * (= re-fetching) the distributed rows.
     */
   def fetchPageNumber(spark: SparkSession, spec: FetchSpec,
       pageParam: String, perPageParam: String, perPage: Long,
@@ -311,7 +316,7 @@ object HttpJsonSource {
     import spark.implicits._
     def pageParams(p: Long) =
       Seq(pageParam -> p.toString, perPageParam -> perPage.toString)
-    val client = buildClient(spec)
+    val client = buildClient()
     // page 1's body is parsed once: the rows and the TotalHint pointer
     // read the same tree
     val (firstRows, body) = fetchWithBody(client, spec, pageParams(1))
@@ -323,40 +328,43 @@ object HttpJsonSource {
         case TotalHint.Pages(_) => Some(n.asLong())
       }
     }
-
-    // page 1 as ONE partition: a local relation otherwise spreads over
-    // up to defaultParallelism partitions, and each becomes a write
-    // task and a file downstream (coalesce(1) adds no shuffle)
-    val firstDs = spark.createDataset(firstRows).coalesce(1)
-    val rows = totalPages match {
-      case Some(n) if n > 1 =>
-        // Executor-parallel fan-out: one task per core, each walking a
-        // contiguous page range over one keep-alive client
-        // (HttpClient is not serializable, so the task builds it).
-        // range() takes the slice count directly — no shuffle — and
-        // min(n - 1, ·) leaves no slice empty, so every client built
-        // serves at least one page.
-        val slices = math.min(n - 1, spark.sparkContext.defaultParallelism.toLong)
-        val rest = spark.range(2, n + 1, 1, slices.toInt)
-          .mapPartitions { pages =>
-            val c = buildClient(spec)
-            pages.flatMap(p => fetchPage(c, spec, pageParams(p)))
-          }
-        firstDs.union(rest)
-      case Some(_) => firstDs
-      case None =>
-        if (firstRows.isEmpty) firstDs
-        else spark.createDataset(
-          firstRows ++ pagesFrom(client, spec, 2)(pageParams).flatten)
+    // pages from..to on executors: one task per core, each walking a
+    // contiguous page range over one keep-alive client (HttpClient is
+    // not serializable, so the task builds it). range() takes the
+    // slice count directly — no shuffle — and min(pages, ·) leaves no
+    // slice empty, so every client built serves at least one page.
+    def fanOut(from: Long, to: Long): Dataset[String] = {
+      val slices = math.min(to - from + 1, spark.sparkContext.defaultParallelism.toLong)
+      spark.range(from, to + 1, 1, slices.toInt).mapPartitions { pages =>
+        val c = buildClient()
+        pages.flatMap(p => fetchPage(c, spec, pageParams(p)))
+      }
     }
-    PagedFetch(firstRows, rows)
+
+    totalPages match {
+      case Some(n) =>
+        val lead = math.min(n,
+          (graft.infer.SchemaInfer.SampleCap + perPage - 1) / perPage)
+        val head = if (lead < 2) firstRows else firstRows ++ fanOut(2, lead).collect()
+        // the sample pages as ONE partition: a local relation otherwise
+        // spreads over up to defaultParallelism partitions, and each
+        // becomes a write task and a file downstream (coalesce(1) adds
+        // no shuffle)
+        val headDs = spark.createDataset(head).coalesce(1)
+        PagedFetch(head, if (n <= lead) headDs else headDs.union(fanOut(lead + 1, n)))
+      case None =>
+        val all =
+          if (firstRows.isEmpty) firstRows
+          else firstRows ++ pagesFrom(client, spec, 2)(pageParams).flatten
+        PagedFetch(all, spark.createDataset(all))
+    }
   }
 
   /** page_only (A6 — a stub in the reference, implemented for real
     * here): page counter only, sequential until empty.
     */
   def fetchPageOnly(spec: FetchSpec, pageParam: String): Iterator[Page] =
-    pagesFrom(buildClient(spec), spec, 1)(p => Seq(pageParam -> p.toString))
+    pagesFrom(buildClient(), spec, 1)(p => Seq(pageParam -> p.toString))
 
   /** cursor (A6 — a stub in the reference, implemented for real here):
     * threads the whole-JSON body's `/next_cursor` from each response
@@ -364,7 +372,7 @@ object HttpJsonSource {
     */
   def fetchCursor(spec: FetchSpec, cursorParam: String,
       pageSizeParam: Option[String], pageSize: Long = 100): Iterator[Page] = {
-    val client = buildClient(spec)
+    val client = buildClient()
     val sizeParams = pageSizeParam.map(_ -> pageSize.toString).toSeq
     var cursor: Option[String] = None
     var done = false
@@ -384,9 +392,13 @@ object HttpJsonSource {
   // ---- top-level entry ------------------------------------------------------
 
   /** Fetch a configured source into a DataFrame: pagination driver →
-    * JSON rows → nested schema inference (`spark.read.json`, the A9
-    * batch path). The result is cached by callers that run multiple
-    * actions — HTTP happens once, like the reference's replay channel.
+    * JSON rows → [[graft.infer.SchemaInfer.readNestedSampled]], the one
+    * JSON contract of every kind — the schema from the first 100 rows
+    * the driver holds, every row parsed strictly against it (a row
+    * that does not fit fails the load's first action; a field first
+    * seen after the sample is dropped). The result is cached by
+    * callers that run multiple actions — HTTP happens once, like the
+    * reference's replay channel.
     *
     * `pageSize` is the FALLBACK for sources whose config carries no
     * `page_size` (it is the CLI's --page-size default, so per-source
@@ -407,27 +419,21 @@ object HttpJsonSource {
       source.dataPath, source.retry, bearerToken = source.bearerToken,
       oauth = oauthSpec)
     val effectivePageSize = source.pageSize.getOrElse(pageSize)
-    source.pagination match {
+    def sequential(pages: Iterator[Page]): PagedFetch = {
+      val rows = pages.flatten.toVector
+      PagedFetch(rows, spark.createDataset(rows))
+    }
+    val fetched = source.pagination match {
       case Some(Pagination.PageNumber(pp, ppp, itemsPtr, pagesPtr)) =>
         val hint = itemsPtr.map(TotalHint.Items).orElse(pagesPtr.map(TotalHint.Pages))
-        val fetched = fetchPageNumber(spark, spec, pp, ppp, effectivePageSize, hint)
-        // schema from the driver-held first page (the reference's
-        // first-100-rows inference contract) — parsing the distributed
-        // rows with a fixed schema avoids a second pass, which would
-        // re-fetch every executor-side page over HTTP
-        graft.infer.SchemaInfer.readNestedSampled(spark, fetched.rows,
-          fetched.firstPage)
-      case other =>
-        val pages = other match {
-          case Some(Pagination.LimitOffset(lp, op)) =>
-            fetchLimitOffset(spec, lp, op, effectivePageSize)
-          case Some(Pagination.PageOnly(pp)) => fetchPageOnly(spec, pp)
-          case Some(Pagination.Cursor(cp, psp)) =>
-            fetchCursor(spec, cp, psp, effectivePageSize)
-          case _ => Iterator(fetchPage(buildClient(spec), spec, Seq.empty))
-        }
-        graft.infer.SchemaInfer.readNested(spark,
-          spark.createDataset(pages.flatten.toSeq))
+        fetchPageNumber(spark, spec, pp, ppp, effectivePageSize, hint)
+      case Some(Pagination.LimitOffset(lp, op)) =>
+        sequential(fetchLimitOffset(spec, lp, op, effectivePageSize))
+      case Some(Pagination.PageOnly(pp)) => sequential(fetchPageOnly(spec, pp))
+      case Some(Pagination.Cursor(cp, psp)) =>
+        sequential(fetchCursor(spec, cp, psp, effectivePageSize))
+      case _ => sequential(Iterator(fetchPage(buildClient(), spec, Seq.empty)))
     }
+    graft.infer.SchemaInfer.readNestedSampled(spark, fetched.rows, fetched.firstPage)
   }
 }

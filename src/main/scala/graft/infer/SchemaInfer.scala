@@ -1,146 +1,40 @@
 package graft.infer
 
-import scala.collection.mutable
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.types._
 
-/** Sample-based JSON schema inference.
+/** Sample-based JSON schema inference: the one JSON → DataFrame
+  * contract of every HTTP source (SURVEY §1.2).
   *
-  * Reproduces the reference's two inference paths (SURVEY §1.2):
-  *
-  * (a) the streaming lattice (/root/reference/src/utils/schema.rs:104-128):
-  *     `Unknown < {Boolean, Int64, Float64, String}`,
-  *     `Int64 ⊔ Float64 = Float64`, `String` absorbs everything, any other
-  *     conflict degrades to `String`; JSON arrays/objects are degraded to
-  *     JSON-text strings (schema.rs:80-88); nulls only set nullability
-  *     (schema.rs:68); only the first 100 objects are sampled
-  *     (schema.rs:15,30-33).
-  *
-  * (b) the nested batch path (schema.rs:133-148): full nested inference
-  *     where objects become structs and arrays become lists — delegated to
-  *     `spark.read.json`, whose semantics (long→double widening, null
-  *     fields allowed, first-object field order) match serde_arrow's.
+  * The schema comes from the first 100 rows (the reference's sample
+  * window, its `src/utils/schema.rs:15,30-33`) through
+  * `spark.read.json`, whose nested inference (objects → structs,
+  * arrays → lists, long ⊔ double = double, a bool/number conflict →
+  * string, first-seen nullability) matches the reference's batch path
+  * (schema.rs:133-148). Every row is then parsed once against that
+  * schema in `FAILFAST` mode: a row that does not fit — a scalar or an
+  * array of scalars where an object belongs, a value the sampled type
+  * cannot hold — fails the action with Spark's
+  * `MALFORMED_RECORD_IN_PARSING` instead of landing as nulls. A field
+  * first seen after the sample is dropped.
   */
 object SchemaInfer {
 
-  /** Sample cap of the streaming path (schema.rs:15). */
+  /** The inference sample window (schema.rs:15). */
   val SampleCap = 100
 
-  /** The streaming-lattice element types. */
-  sealed trait JType
-  case object JUnknown extends JType
-  case object JBool extends JType
-  case object JLong extends JType
-  case object JDouble extends JType
-  case object JString extends JType
-
-  /** Lattice merge (schema.rs:104-128). */
-  def merge(a: JType, b: JType): JType = (a, b) match {
-    case (JUnknown, x) => x
-    case (x, JUnknown) => x
-    case (x, y) if x == y => x
-    case (JLong, JDouble) | (JDouble, JLong) => JDouble
-    case (JString, _) | (_, JString) => JString
-    case _ => JString // incompatible (e.g. bool vs number) degrades to string
-  }
-
-  def toSparkType(t: JType): DataType = t match {
-    case JBool => BooleanType
-    case JLong => LongType
-    case JDouble => DoubleType
-    // Unknown (never observed non-null) lands on String, like the
-    // reference's Utf8 fallback.
-    case _ => StringType
-  }
-
-  private val mapper = new ObjectMapper()
-
-  private def typeOf(n: JsonNode): JType =
-    if (n.isBoolean) JBool
-    // integrals beyond Long range (JSON permits them; Jackson parses
-    // them as BigInteger) type as Double — a LongType field would
-    // null the row at parse time instead of degrading the value
-    else if (n.isIntegralNumber) { if (n.canConvertToLong) JLong else JDouble }
-    else if (n.isFloatingPointNumber) JDouble
-    // arrays and objects are degraded to JSON-text strings on this path
-    else JString
-
-  private final class FieldState {
-    var tpe: JType = JUnknown
-    var nullable: Boolean = false
-    var seen: Int = 0
-  }
-
-  /** Streaming-path inference over raw JSON object texts. Non-object
-    * rows are rejected; an empty sample is an error — both mirror the
-    * reference (schema.rs:36-47).
-    */
-  def inferStreaming(rows: IterableOnce[String]): StructType = {
-    val fields = mutable.LinkedHashMap.empty[String, FieldState]
-    var count = 0
-    val it = rows.iterator
-    while (it.hasNext && count < SampleCap) {
-      val node = mapper.readTree(it.next())
-      require(node != null && node.isObject,
-        s"schema inference expects JSON objects, got: $node")
-      count += 1
-      val names = node.fieldNames()
-      while (names.hasNext) {
-        val name = names.next()
-        val v = node.get(name)
-        val st = fields.getOrElseUpdate(name, new FieldState)
-        st.seen += 1
-        if (v.isNull) st.nullable = true
-        else st.tpe = merge(st.tpe, typeOf(v))
-      }
-    }
-    require(count > 0, "schema inference requires at least one row")
-    StructType(fields.iterator.map { case (name, st) =>
-      // fields missing from some sampled rows are nullable
-      StructField(name, toSparkType(st.tpe), st.nullable || st.seen < count)
-    }.toSeq)
-  }
-
-  /** Serialize arrays/objects in a parsed row to JSON text per the
-    * streaming path's degradation rule, so the row matches the schema
-    * produced by [[inferStreaming]].
-    */
-  def degradeRow(json: String): String = {
-    val node = mapper.readTree(json)
-    // same rejection as inferStreaming, but on EVERY row: a non-object
-    // row beyond the 100-row sample must fail loudly here, not parse
-    // as an all-null row against the object schema (the reference's
-    // rejection, schema.rs:36-47, is not sample-capped either)
-    require(node != null && node.isObject,
-      s"schema inference expects JSON objects, got: $node")
-    val out = mapper.createObjectNode()
-    val names = node.fieldNames()
-    while (names.hasNext) {
-      val name = names.next()
-      val v = node.get(name)
-      if (v.isContainerNode) out.put(name, mapper.writeValueAsString(v))
-      else out.set(name, v)
-    }
-    mapper.writeValueAsString(out)
-  }
-
-  /** Batch-path (nested) inference + load: Spark's native JSON source
-    * infers structs/arrays with the same widening rules as the
-    * reference's serde_arrow path, then builds the DataFrame in the
-    * same pass. Distributed: rows stay a Dataset, never collected.
+  /** Full-data nested inference and load in one `spark.read.json`:
+    * every row is read for the schema, so `rows` is consumed twice.
+    * Distributed: rows stay a Dataset, never collected.
     */
   def readNested(spark: SparkSession, rows: Dataset[String]): DataFrame =
     spark.read.json(rows)
 
   /** Nested load with the schema inferred from a driver-held sample
-    * (capped at the reference's 100-row inference window,
-    * schema_tests.rs:156-172). Parsing the distributed rows with a
-    * fixed schema skips Spark's inference pass — essential when
-    * consuming `rows` has side effects (executor-parallel HTTP page
-    * fetches would otherwise run twice). Fields absent from the sample
-    * read as null, like the reference's sampled inference.
+    * (its first [[SampleCap]] rows, schema_tests.rs:156-172) and every
+    * row of `rows` parsed once against it with `mode=FAILFAST`.
+    * Parsing with a fixed schema skips Spark's full inference pass —
+    * essential when consuming `rows` has side effects (executor-parallel
+    * HTTP page fetches would otherwise run twice).
     *
     * Empty-sample fallback: a bounded prefix of `rows` is collected
     * for inference instead (still the 100-row contract), which IS one
@@ -153,47 +47,20 @@ object SchemaInfer {
   def readNestedSampled(spark: SparkSession, rows: Dataset[String],
       sample: Seq[String]): DataFrame = {
     import spark.implicits._
-    if (sample.isEmpty) {
-      // an empty sample (e.g. a paged API whose first page carries no
-      // rows but whose total hint is valid) falls back to sampling
-      // the dataset itself — a BOUNDED consumption (limit scans
-      // partitions incrementally), not Spark's full inference pass,
-      // and not a `.cache()` of the rows: CacheManager holds cached
-      // relations until an explicit unpersist, so caching here would
-      // pin every such load's InMemoryRelation for the session.
-      val selfSample = rows.limit(SampleCap).collect().toSeq
-      if (selfSample.isEmpty) readNested(spark, rows) // truly empty source
-      else {
-        val schema = spark.read.json(selfSample.toDS()).schema
-        spark.read.schema(schema).json(rows)
-      }
-    } else {
-      val schema = spark.read.json(sample.take(SampleCap).toDS()).schema
-      spark.read.schema(schema).json(rows)
+    // an empty sample (e.g. a paged API whose first page carries no
+    // rows but whose total hint is valid) falls back to sampling the
+    // dataset itself — a BOUNDED consumption (limit scans partitions
+    // incrementally), not Spark's full inference pass, and not a
+    // `.cache()` of the rows: CacheManager holds cached relations
+    // until an explicit unpersist, so caching here would pin every
+    // such load's InMemoryRelation for the session.
+    val window =
+      if (sample.nonEmpty) sample.take(SampleCap)
+      else rows.limit(SampleCap).collect().toSeq
+    if (window.isEmpty) readNested(spark, rows) // truly empty source
+    else {
+      val schema = spark.read.json(window.toDS()).schema
+      spark.read.schema(schema).option("mode", "FAILFAST").json(rows)
     }
   }
-
-  /** Streaming-path load with a DRIVER-HELD sample (the same contract
-    * as [[readNestedSampled]]): infer on the sample (cap 100), then
-    * read the full distributed dataset ONCE with the fixed schema,
-    * degrading nested values to JSON text exactly like the
-    * reference's path. Use this form when consuming `rows` has side
-    * effects (executor-parallel HTTP fetches).
-    */
-  def readStreamingSampled(spark: SparkSession, rows: Dataset[String],
-      sample: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val schema = inferStreaming(sample.take(SampleCap))
-    val degraded = rows.map(degradeRow)
-    spark.read.schema(schema).json(degraded)
-  }
-
-  /** Streaming-path load sampling from the dataset itself. NOTE: this
-    * consumes `rows` twice (limit+collect for the sample, then the
-    * full parse) — fine for driver-built or cached datasets, but an
-    * executor-side-effecting source must pass its driver-held sample
-    * to [[readStreamingSampled]] instead.
-    */
-  def readStreaming(spark: SparkSession, rows: Dataset[String]): DataFrame =
-    readStreamingSampled(spark, rows, rows.limit(SampleCap).collect().toSeq)
 }

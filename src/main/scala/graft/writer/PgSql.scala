@@ -2,7 +2,6 @@ package graft.writer
 
 import scala.collection.immutable.ListMap
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.types._
 
 /** Postgres DDL/DML text generation (SURVEY A18-A21).
@@ -25,15 +24,6 @@ object PgSql {
   case object PgJsonb extends PgType { val ddl = "JSONB" }
   case object PgBytea extends PgType { val ddl = "BYTEA" }
 
-  /** JSON value → PgType (postgres.rs:36-51). */
-  def ofJson(n: JsonNode): PgType =
-    if (n == null || n.isNull) PgText
-    else if (n.isBoolean) PgBoolean
-    else if (n.isIntegralNumber) PgBigInt
-    else if (n.isFloatingPointNumber) PgDouble
-    else if (n.isTextual) PgText
-    else PgJsonb // arrays and objects land in JSONB
-
   /** Merge two observed column types (postgres.rs:53-62): Text absorbs
     * everything; BigInt ⊔ Double = Double; anything else conflicting
     * degrades to Text.
@@ -55,30 +45,6 @@ object PgSql {
     case BinaryType => PgBytea
     case _: StructType | _: ArrayType | _: MapType => PgJsonb
     case _ => PgText
-  }
-
-  /** Default analysis sample size (/root/reference/src/cmd/mod.rs:154). */
-  val SampleSize = 10
-
-  private val mapper = new ObjectMapper()
-
-  /** Analyze the first `sampleSize` JSON rows into a name→type schema
-    * with stable (first-seen) column order (postgres.rs:213-239).
-    */
-  def analyzeSchema(rows: Seq[String], sampleSize: Int = SampleSize): ListMap[String, PgType] = {
-    var out = ListMap.empty[String, PgType]
-    rows.take(sampleSize).foreach { json =>
-      val node = mapper.readTree(json)
-      if (node.isObject) {
-        val names = node.fieldNames()
-        while (names.hasNext) {
-          val name = names.next()
-          val t = ofJson(node.get(name))
-          out = out.updated(name, out.get(name).map(merge(_, t)).getOrElse(t))
-        }
-      }
-    }
-    out
   }
 
   def schemaOfSpark(schema: StructType): ListMap[String, PgType] =

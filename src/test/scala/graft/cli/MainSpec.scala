@@ -50,6 +50,18 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
         else (403, """{"data": []}""")
       graft.HttpStub.respond(ex, body, status = status)
     })
+    // 150 page_number rows, 10 a page, whose `v` turns fractional at
+    // row 125 — past the 100-row schema sample
+    server.createContext("/drift", (ex: HttpExchange) => {
+      val params = graft.HttpStub.qparams(ex)
+      val page = params("page").toInt
+      val per = params("per_page").toInt
+      val all = (1 to 150).map(i =>
+        s"""{"id": $i, "v": ${if (i == 125) "125.5" else i.toString}}""")
+      val slice = all.slice((page - 1) * per, (page - 1) * per + per)
+      graft.HttpStub.respond(ex,
+        s"""{"meta": {"total": 150}, "data": [${slice.mkString(",")}]}""")
+    })
     server.start()
     base = s"http://127.0.0.1:${server.getAddress.getPort}"
   }
@@ -496,5 +508,74 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     // support, so nothing may reach the API (unlike a silent drop)
     assert(failed == 1)
     assert(bqCalls.get() == 0)
+  }
+
+  test("a row that does not fit its sampled schema fails its module as " +
+      "[datatype]; a sibling module still lands") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val spark = graft.SparkTestSession.spark
+    val dir = Files.createTempDirectory("pipeline-drift")
+    val modules = Files.createDirectories(dir.resolve("modules"))
+    val warehouse = dir.resolve("warehouse").toString
+    Files.writeString(modules.resolve("drift.sql"),
+      """{{ sink(name="sink1") }}
+        |SELECT id, v FROM {{ use_source("drift_src") }}""".stripMargin)
+    Files.writeString(modules.resolve("posts.sql"),
+      """{{ sink(name="sink1") }}
+        |SELECT id FROM {{ use_source("posts_src") }}""".stripMargin)
+    Files.writeString(dir.resolve("pipelines.yaml"),
+      s"""sources:
+         |  - name: drift_src
+         |    url: $base/drift
+         |    table_destination_name: drifted
+         |    data_path: /data
+         |    page_size: 10
+         |    pagination:
+         |      kind: page_number
+         |      page_param: page
+         |      per_page_param: per_page
+         |      total_items_pointer: /meta/total
+         |  - name: posts_src
+         |    url: $base/posts
+         |    table_destination_name: posts
+         |    data_path: /data
+         |targets:
+         |  - name: sink1
+         |    type: postgres
+         |    host: localhost
+         |    database: unused
+         |    auth:
+         |      username: u
+         |      password: p
+         |""".stripMargin)
+
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("drift-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        errors.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.ERROR, null)
+    ctx.updateLoggers()
+    val failed = try Main.run(Main.Args(
+      modulesDir = modules.toString,
+      configPath = dir.resolve("pipelines.yaml").toString,
+      warehouse = Some(warehouse)), spark)
+    finally {
+      root.removeAppender("drift-capture")
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    assert(failed == 1)
+    assert(errors.toArray.exists(m =>
+      m.toString.startsWith("module drift.sql failed [datatype]")),
+      s"no [datatype] failure logged: ${errors.toArray.mkString(" | ")}")
+    assert(spark.read.parquet(s"$warehouse/posts").count() == 8)
   }
 }

@@ -55,17 +55,19 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
 
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    // 230 items: more than the 100-row schema sample, so at 50 a page
+    // both the sample's page 2 and pages 3..5 are fetched by executors
     server.createContext("/paged", (ex: HttpExchange) => {
       val params = graft.HttpStub.qparams(ex)
       val page = params("page").toInt
       val per = params("per_page").toInt
       val from = (page - 1) * per + 1
-      val to = math.min(page * per, 23)
+      val to = math.min(page * per, 230)
       val items =
-        if (from > 23) "[]"
+        if (from > 230) "[]"
         else (from to to).map(i => s"""{"id": $i, "name": "u$i"}""")
           .mkString("[", ",", "]")
-      graft.HttpStub.respond(ex, s"""{"total": 23, "data": $items}""")
+      graft.HttpStub.respond(ex, s"""{"total": 230, "data": $items}""")
     })
     server.start()
     base = s"http://127.0.0.1:${server.getAddress.getPort}"
@@ -137,12 +139,12 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.config.PipelineConfig.Retry
     val spec = FetchSpec(s"$base/paged", Seq.empty, Seq.empty,
       Some("/data"), Retry(maxAttempts = 3, maxDelaySecs = 1, minDelaySecs = 0))
-    val fetched = fetchPageNumber(spark, spec, "page", "per_page", 5,
+    val fetched = fetchPageNumber(spark, spec, "page", "per_page", 50,
       Some(TotalHint.Items("/total")))
     val ids = fetched.rows
       .select(get_json_object(col("value"), "$.id").cast("int").as("id"))
       .collect().map(_.getInt(0)).toSet
-    assert(ids == (1 to 23).toSet)
+    assert(ids == (1 to 230).toSet)
   }
 
   test("multimodal decoder seam survives executor serialization") {

@@ -34,6 +34,21 @@ class GraftErrorSpec extends AnyFunSuite {
     assert(GraftError.from(e) eq e)
   }
 
+  test("a malformed-record parse anywhere in the cause chain is a datatype error") {
+    // the shape a strict JSON parse raises, and a write that wraps it
+    val malformed = new org.apache.spark.SparkException(
+      "MALFORMED_RECORD_IN_PARSING.WITHOUT_SUGGESTION",
+      Map("badRecord" -> "[null]", "failFastMode" -> "FAILFAST"), null)
+    assert(GraftError.from(malformed).category == "datatype")
+    val wrapped = new RuntimeException("write failed",
+      new java.io.IOException("task", malformed))
+    assert(GraftError.from(wrapped).category == "datatype")
+    assert(GraftError.from(wrapped).getCause eq wrapped)
+    // other Spark conditions keep their old classes
+    assert(GraftError.from(new org.apache.spark.SparkException("boom")).category ==
+      "unknown")
+  }
+
   test("errors are catchable as the sealed root") {
     val caught = intercept[GraftError] {
       throw GraftError.WriterError("nope")

@@ -38,7 +38,10 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       contentType: String = "application/json", status: Int = 200): Unit =
     graft.HttpStub.respond(ex, body, contentType, status)
 
-  // 7 items served in pages: ids 1..7
+  // /paged serves ids 1..700: more than the 100-row schema sample, so
+  // pages past the sample fan out
+  private val pagedTotal = 700
+
   private def items(from: Int, to: Int): String =
     (from to to).map(i => s"""{"id": $i, "name": "u$i"}""").mkString("[", ",", "]")
 
@@ -60,10 +63,11 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         _ => java.util.Collections.synchronizedList(new java.util.ArrayList[Int]()))
         .add(ex.getRemoteAddress.getPort)
       val startIx = (page - 1) * per
-      val end = math.min(startIx + per, 7)
-      val data = if (startIx >= 7) "[]" else items(startIx + 1, end)
+      val end = math.min(startIx + per, pagedTotal)
+      val data = if (startIx >= pagedTotal) "[]" else items(startIx + 1, end)
+      val pages = (pagedTotal + per - 1) / per
       respond(ex,
-        s"""{"data": $data, "metadata": {"total_items": 7, "total_pages": ${(7 + per - 1) / per}}}""")
+        s"""{"data": $data, "metadata": {"total_items": $pagedTotal, "total_pages": $pages}}""")
     })
     server.createContext("/ndjson", (ex: HttpExchange) =>
       respond(ex, "{\"id\": 1}\n{\"id\": 2}\n\n{\"id\": 3}\n",
@@ -118,6 +122,26 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val h = Option(ex.getRequestHeaders.getFirst("Authorization")).getOrElse("")
       respond(ex, s"""[{"auth": "$h"}]""")
     })
+    // the same 150 rows (`set` picks them, see rowsOf) in every
+    // pagination shape: page_only and cursor serve 50 rows a page
+    server.createContext("/rows", (ex: HttpExchange) => {
+      val p = qparams(ex)
+      val rows = rowsOf(p("set"))
+      def slice(from: Int, n: Int) = rows.slice(from, from + n).mkString("[", ",", "]")
+      val body = ex.getRequestURI.getPath.stripPrefix("/rows/") match {
+        case "offset" => s"""{"data": ${slice(p("start").toInt, p("limit").toInt)}}"""
+        case "paged" =>
+          val per = p("per_page").toInt
+          s"""{"data": ${slice((p("page").toInt - 1) * per, per)}, "total": ${rows.size}}"""
+        case "pageonly" => s"""{"data": ${slice((p("page").toInt - 1) * 50, 50)}}"""
+        case "cursor" =>
+          val at = p.get("cursor").fold(0)(_.toInt)
+          val next = if (at + 50 < rows.size) s""""${at + 50}"""" else "null"
+          s"""{"data": ${slice(at, 50)}, "next_cursor": $next}"""
+        case "default" => s"""{"data": ${slice(0, rows.size)}}"""
+      }
+      respond(ex, body)
+    })
     server.start()
     base = s"http://127.0.0.1:${server.getAddress.getPort}"
   }
@@ -136,29 +160,30 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("page_number with Items total hint fans out on executors (fetcher.rs:412-497)") {
     val spark = graft.SparkTestSession.spark
     val fetched = fetchPageNumber(spark, spec("/paged"), "page", "per_page",
-      perPage = 3, totalHint = Some(TotalHint.Items("/metadata/total_items")))
-    assert(fetched.firstPage.size == 3)
-    assert(fetched.rows.count() == 7)
+      perPage = 300, totalHint = Some(TotalHint.Items("/metadata/total_items")))
+    assert(fetched.firstPage.size == 300)
+    assert(fetched.rows.count() == pagedTotal)
   }
 
   test("page_number with Pages hint and without hint agree") {
     val spark = graft.SparkTestSession.spark
     val withPages = fetchPageNumber(spark, spec("/paged"), "page", "per_page",
-      perPage = 2, totalHint = Some(TotalHint.Pages("/metadata/total_pages")))
+      perPage = 200, totalHint = Some(TotalHint.Pages("/metadata/total_pages")))
     val without = fetchPageNumber(spark, spec("/paged"), "page", "per_page",
-      perPage = 2, totalHint = None)
-    assert(withPages.rows.count() == 7)
-    assert(without.rows.count() == 7)
+      perPage = 200, totalHint = None)
+    assert(withPages.rows.count() == pagedTotal)
+    assert(without.rows.count() == pagedTotal)
   }
 
   test("page_number fan-out: one contiguous page range per core, page 1 " +
       "as one partition, each page requested once, rows in page order") {
     val spark = graft.SparkTestSession.spark
     val cores = spark.sparkContext.defaultParallelism
-    // 7 items: perPage 1 is 7 pages (6 to fan out, more than the test
-    // session's 4 cores); perPage 3 is 3 pages (2 to fan out, fewer)
-    for (perPage <- Seq(1, 3)) {
-      val pages = (7 + perPage - 1) / perPage
+    // 700 items: perPage 100 is 7 pages (6 to fan out, more than the
+    // test session's 4 cores); perPage 300 is 3 pages (2 to fan out,
+    // fewer). Page 1 holds the whole 100-row sample either way.
+    for (perPage <- Seq(100, 300)) {
+      val pages = (pagedTotal + perPage - 1) / perPage
       pagedHits.clear()
       val fetched = fetchPageNumber(spark, spec("/paged"), "page", "per_page",
         perPage, totalHint = Some(TotalHint.Items("/metadata/total_items")))
@@ -170,7 +195,7 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().toSeq.map(_.map(idOf))
       assert(parts.head == (1 to perPage).toVector, "page 1 alone in partition 0")
       assert(parts.forall(_.nonEmpty), s"an empty slice: $parts")
-      assert(parts.flatten == (1 to 7), s"rows out of page order: $parts")
+      assert(parts.flatten == (1 to pagedTotal), s"rows out of page order: $parts")
       val hits = pagedHits.asScala.map { case (p, ports) => p -> ports.size }.toMap
       assert(hits == (1 to pages).map(_ -> 1).toMap,
         s"each page requested once: $hits")
@@ -179,6 +204,27 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ports = (2 to pages).map(p => pagedHits.get(p).get(0)).toSet
       assert(ports.size <= slices, s"$slices slices used ${ports.size} connections")
     }
+  }
+
+  test("page_number pages under 100 rows: the sample is pages 1..⌈100 / " +
+      "per_page⌉, held as one partition, and every page is requested once") {
+    val spark = graft.SparkTestSession.spark
+    val cores = spark.sparkContext.defaultParallelism
+    // perPage 30: 24 pages, the sample pages 1..4 (rows 1..120)
+    val (perPage, pages, lead) = (30, 24, 4)
+    pagedHits.clear()
+    val fetched = fetchPageNumber(spark, spec("/paged"), "page", "per_page",
+      perPage, totalHint = Some(TotalHint.Items("/metadata/total_items")))
+    assert(fetched.firstPage.map(idOf) == (1 to lead * perPage))
+    // the sample pages are fetched before the rows are consumed
+    assert(pagedHits.keySet.asScala.toSet == (1 to lead).toSet)
+    assert(fetched.rows.rdd.getNumPartitions == 1 + math.min(pages - lead, cores))
+    val parts = fetched.rows.rdd.mapPartitions(it => Iterator(it.toVector))
+      .collect().toSeq.map(_.map(idOf))
+    assert(parts.head == (1 to lead * perPage).toVector, "the sample alone in partition 0")
+    assert(parts.flatten == (1 to pagedTotal), s"rows out of page order: $parts")
+    val hits = pagedHits.asScala.map { case (p, ports) => p -> ports.size }.toMap
+    assert(hits == (1 to pages).map(_ -> 1).toMap, s"each page requested once: $hits")
   }
 
   private def idOf(row: String): Int =
@@ -190,7 +236,7 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // last roadmap item costs nothing here, but pin it so a future
     // builder edit (e.g. .version(HTTP_1_1) while debugging a proxy)
     // can't silently drop the capability
-    val client = graft.http.HttpJsonSource.buildClient(spec("/ndjson"))
+    val client = graft.http.HttpJsonSource.buildClient()
     assert(client.version() == java.net.http.HttpClient.Version.HTTP_2,
       "buildClient must prefer HTTP/2 (negotiation falls back per server)")
     // the stub (com.sun HttpServer) speaks only 1.1 and ignores the
@@ -206,14 +252,14 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("NDJSON bodies framed line-by-line (fetcher.rs:61-66,95-133)") {
-    val rows = fetchPage(buildClient(spec("/ndjson")),
+    val rows = fetchPage(buildClient(),
       spec("/ndjson", dataPath = None), Seq.empty)
     assert(rows == Seq("""{"id":1}""", """{"id":2}""", """{"id":3}"""))
   }
 
   test("large chunked NDJSON body streams through the line path (fetcher.rs:115-124)") {
     val s = spec("/ndjson-big", dataPath = None)
-    val rows = fetchPage(buildClient(s), s, Seq.empty)
+    val rows = fetchPage(buildClient(), s, Seq.empty)
     assert(rows.size == 50000)
     assert(rows.head.contains("\"id\":1"))
     assert(rows.last.contains("\"id\":50000"))
@@ -242,7 +288,7 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("retry with backoff recovers from 5xx (http_retry.rs:96-114)") {
     flakyHits.set(0)
-    val rows = fetchPage(buildClient(spec("/flaky")),
+    val rows = fetchPage(buildClient(),
       spec("/flaky", dataPath = None), Seq.empty)
     assert(rows == Seq("""{"id":42}"""))
     assert(flakyHits.get() == 3)
@@ -251,7 +297,7 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("retry gives up after max_attempts") {
     flakyHits.set(-100) // needs 103 hits to succeed; only 3 attempts allowed
     val e = intercept[RuntimeException] {
-      fetchPage(buildClient(spec("/flaky")), spec("/flaky", dataPath = None), Seq.empty)
+      fetchPage(buildClient(), spec("/flaky", dataPath = None), Seq.empty)
     }
     assert(e.getMessage.contains("after 3 attempts"))
   }
@@ -263,7 +309,7 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // overrides a shorter computed backoff.
     rateHits.set(0)
     val t0 = System.nanoTime()
-    val rows = fetchPage(buildClient(spec("/ratelimited")),
+    val rows = fetchPage(buildClient(),
       spec("/ratelimited", dataPath = None), Seq.empty)
     val elapsedMs = (System.nanoTime() - t0) / 1000000
     assert(rows == Seq("""{"id":7}"""))
@@ -276,7 +322,7 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     flakyHits.set(0)
     val s = spec("/auth", dataPath = None)
     val e = intercept[RuntimeException] {
-      fetchPage(buildClient(s), s, Seq.empty)
+      fetchPage(buildClient(), s, Seq.empty)
     }
     assert(e.getMessage.contains("HTTP 403"))
   }
@@ -284,13 +330,13 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("custom headers are sent (mod.rs:13-94)") {
     val s = FetchSpec(s"$base/auth", Seq("X-API-KEY" -> "secret"),
       Seq.empty, None, retry)
-    assert(fetchPage(buildClient(s), s, Seq.empty) == Seq("""{"ok":true}"""))
+    assert(fetchPage(buildClient(), s, Seq.empty) == Seq("""{"ok":true}"""))
   }
 
   test("bearer token arrives as Authorization: Bearer (mod.rs:32-59)") {
     val s = FetchSpec(s"$base/bearer", Seq.empty, Seq.empty, None, retry,
       bearerToken = Some("tok-123"))
-    assert(fetchPage(buildClient(s), s, Seq.empty) ==
+    assert(fetchPage(buildClient(), s, Seq.empty) ==
       Seq("""{"auth":"Bearer tok-123"}"""))
   }
 
@@ -299,7 +345,7 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq.empty, None, retry, bearerToken = Some("tok-9"))
     // reqwest's HeaderMap::insert replaces — one Authorization line out
     assert(effectiveHeaders(s) == Seq("Authorization" -> "Bearer tok-9"))
-    assert(fetchPage(buildClient(s), s, Seq.empty) ==
+    assert(fetchPage(buildClient(), s, Seq.empty) ==
       Seq("""{"auth":"Bearer tok-9"}"""))
   }
 
@@ -307,7 +353,7 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = FetchSpec(s"$base/bearer", Seq.empty, Seq.empty, None, retry,
       bearerToken = Some("bad\ntoken"))
     // the header is dropped (mod.rs:55-58) — the request still succeeds
-    assert(fetchPage(buildClient(s), s, Seq.empty) == Seq("""{"auth":""}"""))
+    assert(fetchPage(buildClient(), s, Seq.empty) == Seq("""{"auth":""}"""))
     // custom headers survive the dropped bearer
     assert(effectiveHeaders(s.copy(headers = Seq("X-K" -> "v")))
       == Seq("X-K" -> "v"))
@@ -354,5 +400,83 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.count() == 7)
     assert(df.schema.fieldNames.toSet == Set("id", "name"))
     assert(df.filter(df("id") > 5).count() == 2)
+  }
+
+  /** Rows 1..150 `{"id", "name", "amount"}` with one twist per `set`:
+    * drift — a field `extra` from row 120 on; widen — `amount` 12.5 at
+    * row 41; fraction — `amount` 125.5 at row 125; scalar, string,
+    * null, array — row 125 is `5`, `"scalar"`, `null` or `[1,2]`, not
+    * an object.
+    */
+  private def rowsOf(set: String): IndexedSeq[String] = (1 to 150).map { i =>
+    val amount = (set, i) match {
+      case ("widen", 41) => "12.5"
+      case ("fraction", 125) => "125.5"
+      case _ => i.toString
+    }
+    (set, i) match {
+      case ("scalar", 125) => "5"
+      case ("string", 125) => "\"scalar\""
+      case ("null", 125) => "null"
+      case ("array", 125) => "[1,2]"
+      case _ =>
+        val extra = if (set == "drift" && i >= 120) s""", "extra": "e$i"""" else ""
+        s"""{"id": $i, "name": "u$i", "amount": $amount$extra}"""
+    }
+  }
+
+  private def rowsSource(path: String, set: String, pagination: Pagination) =
+    Source(name = "rows", url = s"$base/rows/$path",
+      tableDestinationName = Some("rows"), headers = Seq.empty,
+      queryParams = Seq("set" -> set), pagination = Some(pagination),
+      dataPath = Some("/data"), retry = retry, primaryKeyInDest = None)
+
+  // (kind, stub path, pagination); loaded with page size 10 — page_number
+  // with a total holds pages 1..10 (the sample) on the driver and fans
+  // out 11..15
+  private val everyKind: Seq[(String, String, Pagination)] = Seq(
+    ("limit_offset", "offset", Pagination.LimitOffset("limit", "start")),
+    ("page_only", "pageonly", Pagination.PageOnly("page")),
+    ("cursor", "cursor", Pagination.Cursor("cursor", None)),
+    ("default", "default", Pagination.Default),
+    ("page_number, total hint", "paged",
+      Pagination.PageNumber("page", "per_page", totalItemsPointer = Some("/total"))),
+    ("page_number, no hint", "paged", Pagination.PageNumber("page", "per_page")))
+
+  test("every pagination kind loads one schema from its first 100 rows; " +
+      "a field first seen after them is dropped") {
+    val spark = graft.SparkTestSession.spark
+    import org.apache.spark.sql.types._
+    val want = StructType(Seq(StructField("amount", LongType),
+      StructField("id", LongType), StructField("name", StringType)))
+    for ((kind, path, pagination) <- everyKind) {
+      val df = load(spark, rowsSource(path, "drift", pagination), pageSize = 10)
+      assert(df.schema == want, s"$kind: ${df.schema.simpleString}")
+      assert(df.count() == 150, kind)
+    }
+  }
+
+  test("a page_number sample is 100 rows, not page 1: a double at row 41 " +
+      "types the column and keeps its value") {
+    val spark = graft.SparkTestSession.spark
+    for ((kind, path, pagination) <- everyKind.filter(_._2 == "paged")) {
+      val df = load(spark, rowsSource(path, "widen", pagination), pageSize = 10)
+      assert(df.schema("amount").dataType == org.apache.spark.sql.types.DoubleType, kind)
+      assert(df.filter("id = 41").head().getAs[Double]("amount") == 12.5, kind)
+      assert(df.count() == 150, kind)
+    }
+  }
+
+  test("a row that does not fit the sampled schema fails the load, on any " +
+      "kind: a scalar, a string, a null, an array of scalars, a fraction in a bigint") {
+    val spark = graft.SparkTestSession.spark
+    // row 125 is past the sample — on page_number with a total it sits
+    // on an executor-fetched page
+    for ((kind, path, pagination) <- everyKind;
+         set <- Seq("scalar", "string", "null", "array", "fraction")) {
+      val df = load(spark, rowsSource(path, set, pagination), pageSize = 10)
+      val e = intercept[org.apache.spark.SparkException](df.count())
+      assert(graft.errors.GraftError.from(e).category == "datatype", s"$kind/$set: $e")
+    }
   }
 }

@@ -182,7 +182,7 @@ class OAuth2Spec extends AnyFunSuite {
       val spec = HttpJsonSource.FetchSpec(s"$base/rows", Nil, Nil, None, retry,
         oauth = Some(OAuth2.TokenSpec(s"$base/token", "cid", "sec", None, retry)))
       val rows = HttpJsonSource.fetchPage(
-        HttpJsonSource.buildClient(spec), spec, Seq.empty)
+        HttpJsonSource.buildClient(), spec, Seq.empty)
       assert(rows == Seq("""{"id":1}"""))
       assert(tokenCalls.get() == 2, "the 401 must force exactly one re-fetch")
       assert(rowCalls.get() == 2, "one rejected page + one refreshed retry")
@@ -190,7 +190,7 @@ class OAuth2Spec extends AnyFunSuite {
       OAuth2.clearCache()
       tokenCalls.set(10) // server now issues tok11, tok12... none == tok2
       val e = intercept[RuntimeException](HttpJsonSource.fetchPage(
-        HttpJsonSource.buildClient(spec), spec, Seq.empty))
+        HttpJsonSource.buildClient(), spec, Seq.empty))
       assert(e.getMessage.contains("401"))
       assert(tokenCalls.get() == 12, "refresh happens once, then fail fast")
     }

@@ -15,16 +15,6 @@ class PgSqlSpec extends AnyFunSuite {
     "pk" -> PgBigInt, "flag" -> PgBoolean, "n" -> PgBigInt,
     "x" -> PgDouble, "s" -> PgText, "arr" -> PgJsonb, "obj" -> PgJsonb)
 
-  test("JSON→PgType mapping (postgres.rs:36-51, FIXTURES 1.8)") {
-    val got = analyzeSchema(Seq(
-      """{"pk": 1, "flag": true, "n": 42, "x": 1.5, "s": "txt",
-         "arr": [1,2], "obj": {"k": "v"}, "none": null}"""))
-    assert(got("pk") == PgBigInt && got("flag") == PgBoolean)
-    assert(got("n") == PgBigInt && got("x") == PgDouble)
-    assert(got("s") == PgText && got("arr") == PgJsonb && got("obj") == PgJsonb)
-    assert(got("none") == PgText) // null → Text
-  }
-
   test("merge lattice (postgres.rs:53-62)") {
     assert(merge(PgBigInt, PgDouble) == PgDouble)
     assert(merge(PgDouble, PgBigInt) == PgDouble)
@@ -36,16 +26,6 @@ class PgSqlSpec extends AnyFunSuite {
       assert(merge(a, a) == a)
       assert(merge(PgText, merge(a, b)) == PgText)
     }
-  }
-
-  test("analyze respects sample size and keeps stable column order (postgres.rs:215-247)") {
-    val rows = Seq("""{"a": 1, "b": "x"}""") ++
-      (1 to 20).map(_ => """{"a": 2.5, "b": "y"}""")
-    // only the first row sampled with sampleSize=1 → a stays BigInt
-    assert(analyzeSchema(rows, sampleSize = 1)("a") == PgBigInt)
-    // default sample of 10 sees the coercion
-    assert(analyzeSchema(rows)("a") == PgDouble)
-    assert(analyzeSchema(rows).keys.toSeq == Seq("a", "b"))
   }
 
   test("ident quoting, including embedded quotes (postgres.rs:241-253,267-275)") {
