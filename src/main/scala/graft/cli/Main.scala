@@ -239,14 +239,63 @@ object Main {
     if (failed > 0) sys.exit(1)
   }
 
-  /** Orchestrator loop; returns the number of failed modules.
+  /** A module rendered before any module runs: its SQL, configured
+    * source, resolved sink, and the lane — the physical destination
+    * `(sink, dest_table)` — it runs in.
+    */
+  private final case class PlannedModule(module: String, sql: String,
+      source: PipelineConfig.Source, lane: (String, String),
+      sink: Option[TargetSink])
+
+  /** Run every lane's items in order, the lanes concurrently on
+    * `min(lanes, width)` threads of a pool that lives for this call;
+    * a single lane runs on the caller. Returns every item's result,
+    * lane by lane, once every lane has finished.
+    */
+  private[cli] def inLanes[A, B](lanes: Seq[Seq[A]], width: Int)(
+      run: A => B): Seq[B] = {
+    def lane(items: Seq[A]): Seq[B] = items.map(run)
+    if (lanes.size <= 1) lanes.flatMap(lane)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(lanes.size, math.max(width, 1)))
+      try {
+        val pending = lanes.map(l =>
+          pool.submit(new java.util.concurrent.Callable[Seq[B]] {
+            def call(): Seq[B] = lane(l)
+          }))
+        // wait for every lane before rethrowing, so none outlives the call
+        pending.map(f => scala.util.Try(f.get())).flatMap {
+          case scala.util.Success(r) => r
+          case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
+            throw e.getCause
+          case scala.util.Failure(e) => throw e
+        }
+      } finally pool.shutdown()
+    }
+  }
+
+  /** Orchestrator loop; returns the number of failed modules and
+    * stages.
+    *
+    * Every module is rendered first, on the calling thread; one whose
+    * render fails counts as failed. The modules are then grouped into
+    * lanes by physical destination — `(sink, dest_table)`, the file
+    * warehouse counting as one sink — and each lane runs its modules
+    * in listing order while the lanes run concurrently
+    * ([[inLanes]], at most `defaultParallelism` at once): a module is
+    * a chain of small Spark jobs, so one at a time leaves most cores
+    * idle. Stages start after every lane has finished. Known cost: a
+    * sequential-kind source (everything but `page_number` with a total
+    * hint) holds all its rows on the driver while it loads, so up to
+    * one such source per lane is held at once.
     *
     * `getenv` resolves `username_env`/`password_env` credential
     * indirection; the default overlays a `.env` from the working
     * directory under the real environment, mirroring the reference
     * CLI's `dotenvy::dotenv()` startup (main.rs:11).
-    */
-  /** `syncStateOverride` is the test seam for incremental sync: the
+    *
+    * `syncStateOverride` is the test seam for incremental sync: the
     * default is the module target's own backend
     * ([[graft.writer.TargetSink.syncState]]); tests inject a
     * [[graft.writer.FileSyncState]] so the watermark round-trip runs
@@ -309,15 +358,15 @@ object Main {
     // database) — keying on the sink NAME alone would let two target
     // entries for the same database (different credentials/roles)
     // clobber each other right past the check
-    def destKey(s: PipelineConfig.Stage): (String, String) = {
+    def destKey(sinkName: Option[String], destTable: String): (String, String) = {
       val sink =
         if (fileWh) "warehouse"
-        else s.sink.flatMap(n => cfg.targets.find(_.name == n))
+        else sinkName.flatMap(n => cfg.targets.find(_.name == n))
           .map(t => s"${t.kind}|${t.host}|${t.port}|${t.database}")
-          .getOrElse(s.sink.getOrElse(""))
-      (sink, s.destTable)
+          .getOrElse(sinkName.getOrElse(""))
+      (sink, destTable)
     }
-    cfg.stages.groupBy(destKey).foreach { case ((_, t), group) =>
+    cfg.stages.groupBy(s => destKey(s.sink, s.destTable)).foreach { case ((_, t), group) =>
       if (group.size > 1 && group.exists(resolvesReplace))
         throw new IllegalArgumentException(
           s"stages '${group.map(_.name).mkString("', '")}' all land on " +
@@ -329,17 +378,43 @@ object Main {
 
     val t0 = System.nanoTime()
     var ok, failed = 0
+    def moduleFailed(module: String, e: Exception): Unit = {
+      val classified = graft.errors.GraftError.from(e)
+      log.error(s"module $module failed [${classified.category}]: ${e.getMessage}", e)
+    }
 
-    Templates.listSqlModules(args.modulesDir).foreach { module =>
-      val mt0 = System.nanoTime()
+    // every module renders here, on the calling thread, and resolves
+    // its source and sink — so `sinks` is only ever touched by this
+    // thread; a module whose render fails counts as failed
+    val planned = Templates.listSqlModules(args.modulesDir).flatMap { module =>
       try {
         val text = Files.readString(Paths.get(s"${args.modulesDir}/$module"))
         val rendered = Templates.render(module, text, args.templateVars)
         val sourceName = rendered.source.getOrElse(
           throw new IllegalArgumentException(
             s"module $module declares no {{ use_source(...) }}"))
-        val source = graft.http.OAuth2.applyAuth(cfg.source(sourceName), getenv)
-        val sink = rendered.sink.map(sinkOf)
+        val source = cfg.source(sourceName)
+        Some(PlannedModule(module, rendered.sql, source,
+          destKey(rendered.sink, source.destTable), rendered.sink.map(sinkOf)))
+      } catch {
+        case e: Exception =>
+          failed += 1
+          moduleFailed(module, e)
+          None
+      }
+    }
+
+    // every sync-state call of this run goes through one lock: lanes
+    // run concurrently, FileSyncState.put is a read-modify-write of one
+    // file, and two first-use CREATE TABLE IF NOT EXISTS can race
+    val stateLock = new AnyRef
+
+    def runModule(m: PlannedModule): Boolean = {
+      val PlannedModule(module, moduleSql, configured, _, sink) = m
+      val mt0 = System.nanoTime()
+      try {
+        val source = graft.http.OAuth2.applyAuth(configured, getenv)
+        val sourceName = source.name
         val destTable = source.destTable
 
         log.info("module name={} source={} dest={}", module, sourceName, destTable)
@@ -350,15 +425,17 @@ object Main {
         // refused here, not silently degraded: FileWriter maps Merge
         // to overwrite, which would replace the table with the delta.
         val incState = source.incremental.map { inc =>
-          val st: graft.writer.SyncState = syncStateOverride.getOrElse {
-            require(args.warehouse.isEmpty,
-              s"source '${source.name}': incremental sync requires a keyed " +
-                "warehouse target — the file warehouse overwrites on merge")
-            sink.getOrElse(throw new IllegalArgumentException(
-              s"no target resolved for incremental source '${source.name}'"))
-              .syncState()
+          stateLock.synchronized {
+            val st: graft.writer.SyncState = syncStateOverride.getOrElse {
+              require(args.warehouse.isEmpty,
+                s"source '${source.name}': incremental sync requires a keyed " +
+                  "warehouse target — the file warehouse overwrites on merge")
+              sink.getOrElse(throw new IllegalArgumentException(
+                s"no target resolved for incremental source '${source.name}'"))
+                .syncState()
+            }
+            (st, inc, st.get(source.name))
           }
-          (st, inc, st.get(source.name))
         }
         val fetchSource = incState match {
           case Some((_, inc, Some(w))) =>
@@ -387,7 +464,7 @@ object Main {
           val mode = if (source.primaryKeyInDest.isDefined) WriteMode.Merge
             else args.writeMode
           val stats = Engine.runModule(spark, sourceDf, sourceName, destTable,
-              rendered.sql) { out =>
+              moduleSql) { out =>
             log.debug("sql.execute statement=module table={}", destTable)
             writer.write(out, mode)
           }
@@ -409,23 +486,29 @@ object Main {
               .map(o => greatest(c, lit(o).cast(dt))).getOrElse(c)
             val row = sourceDf.agg(max(tracked).cast("string").as("w")).head()
             if (!row.isNullAt(0)) {
-              st.put(source.name, row.getString(0))
+              stateLock.synchronized(st.put(source.name, row.getString(0)))
               log.info("incremental.watermark source={} {}={}", source.name,
                 inc.cursorField, row.getString(0))
             }
           }
-          ok += 1
           log.info("module {} loaded {} rows into {} in {}ms", module,
             stats.rowsWritten.toString, destTable,
             ((System.nanoTime() - mt0) / 1e6).round.toString)
+          true
         } finally sourceDf.unpersist()
       } catch {
         case e: Exception =>
-          failed += 1
-          val classified = graft.errors.GraftError.from(e)
-          log.error(s"module $module failed [${classified.category}]: ${e.getMessage}", e)
+          moduleFailed(module, e)
+          false
       }
     }
+
+    // one lane per physical destination, its modules in listing order;
+    // lanes run concurrently, and every lane finishes before any stage
+    val lanes = planned.map(_.lane).distinct.map(k => planned.filter(_.lane == k))
+    val landed = inLanes(lanes, spark.sparkContext.defaultParallelism)(runModule)
+    ok += landed.count(identity)
+    failed += landed.count(!_)
     // declarative analytics stages (dedup/curation/store lifecycle) —
     // run AFTER the HTTP→SQL modules in YAML order, through the same
     // writer stack and failure accounting, so one `apitap -m … -y …`

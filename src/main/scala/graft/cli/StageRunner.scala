@@ -504,7 +504,8 @@ object StageRunner {
           }
           val q = graft.streaming.StreamingClassify.streamingPredictToDir(
             spark, sourceDir, schema, model, outDir,
-            maxFilesPerTrigger = throttle, checkpoint = Some(checkpoint))
+            maxFilesPerTrigger = throttle, checkpoint = Some(checkpoint),
+            availableNow = true)
           drain(q)
         }
         readOrEmpty(spark, outDir,
@@ -518,7 +519,7 @@ object StageRunner {
         requireStore(dir, verbs.noun)
         if (srcReady)
           drain(BatchedParquetSink.start(spark, sourceDir, schema, throttle,
-            Some(checkpoint))(streamBatch(spark, stage)))
+            Some(checkpoint), availableNow = true)(streamBatch(spark, stage)))
         // an ingest lands its store's audit row; a dedup lands the
         // accumulated flag relation (all batches), empty-schema'd when
         // nothing has ever landed
@@ -576,22 +577,14 @@ object StageRunner {
       org.apache.spark.sql.types.StructType.fromDDL(
         s"$ddl, ${BatchedParquetSink.BatchCol} BIGINT"))
 
-  /** Drain everything available, then stop — without letting the
-    * shutdown mask the real failure or fail a drain that succeeded:
-    * if processAllAvailable threw, stop()/awaitTermination() errors
-    * are suppressed (the PRIMARY exception is the diagnosis); if the
-    * drain succeeded, a stop hiccup is swallowed too — every batch
-    * already landed idempotently, and poisoning downstream consumers
-    * over a teardown timeout would fail landed work.
+  /** Wait out a drain started with `Trigger.AvailableNow`: the query
+    * runs every file present at its start and stops itself, so a
+    * healthy drain never stops a live query from outside (a stop
+    * cancels the query's job group, and Spark WARNs when that group
+    * has no active job). A failed batch rethrows here as the query's
+    * exception; an interrupted wait stops the query.
     */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    var primary: Throwable = null
-    try q.processAllAvailable()
-    catch { case scala.util.control.NonFatal(e) => primary = e }
-    finally {
-      try { q.stop(); q.awaitTermination() }
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    if (primary != null) throw primary
-  }
+  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    try q.awaitTermination()
+    finally if (q.isActive) q.stop()
 }

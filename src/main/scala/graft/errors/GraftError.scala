@@ -70,11 +70,13 @@ object GraftError {
 
   /** A fetched row that does not fit its source's sampled schema:
     * Spark's strict JSON parse raises `MALFORMED_RECORD_IN_PARSING`,
-    * which a job abort or a failed write may wrap — so the whole cause
-    * chain is searched.
+    * and an array row a [[DataTypeError]] inside a task; a job abort
+    * or a failed write may wrap either — so the whole cause chain is
+    * searched.
     */
   private def malformedRecord(t: Throwable): Boolean =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists {
+      case _: DataTypeError => true
       case s: org.apache.spark.SparkThrowable =>
         Option(s.getCondition).exists(_.startsWith("MALFORMED_RECORD_IN_PARSING"))
       case _ => false

@@ -356,8 +356,21 @@ object HttpJsonSource {
         val all =
           if (firstRows.isEmpty) firstRows
           else firstRows ++ pagesFrom(client, spec, 2)(pageParams).flatten
-        PagedFetch(all, spark.createDataset(all))
+        PagedFetch(all, driverRows(spark, all))
     }
+  }
+
+  /** Rows the driver fetched, as a Dataset over an RDD rather than a
+    * local relation: a `LocalRelation` holding every row is copied by
+    * each Catalyst rule that maps a node's arguments, so planning cost
+    * grew with the row count. Sliced as
+    * a local table scan would be — at most one slice per core, none
+    * empty.
+    */
+  private def driverRows(spark: SparkSession, rows: Seq[String]): Dataset[String] = {
+    import spark.implicits._
+    val slices = math.max(1, math.min(rows.size, spark.sparkContext.defaultParallelism))
+    spark.createDataset(spark.sparkContext.parallelize(rows, slices))
   }
 
   /** page_only (A6 — a stub in the reference, implemented for real
@@ -406,7 +419,13 @@ object HttpJsonSource {
     * `total_items_pointer`/`total_pages_pointer`.
     */
   def load(spark: SparkSession, source: Source, pageSize: Long = 100): DataFrame = {
-    import spark.implicits._
+    val fetched = fetch(spark, source, pageSize)
+    graft.infer.SchemaInfer.readNestedSampled(spark, fetched.rows, fetched.firstPage)
+  }
+
+  /** The pagination driver [[load]] runs for `source`. */
+  private[http] def fetch(spark: SparkSession, source: Source,
+      pageSize: Long): PagedFetch = {
     // an oauth2 block whose credentials are already inline (the shape
     // OAuth2.applyAuth returns) rides along as a TokenSpec so every
     // page fetch re-resolves the bearer through the token cache;
@@ -421,9 +440,9 @@ object HttpJsonSource {
     val effectivePageSize = source.pageSize.getOrElse(pageSize)
     def sequential(pages: Iterator[Page]): PagedFetch = {
       val rows = pages.flatten.toVector
-      PagedFetch(rows, spark.createDataset(rows))
+      PagedFetch(rows, driverRows(spark, rows))
     }
-    val fetched = source.pagination match {
+    source.pagination match {
       case Some(Pagination.PageNumber(pp, ppp, itemsPtr, pagesPtr)) =>
         val hint = itemsPtr.map(TotalHint.Items).orElse(pagesPtr.map(TotalHint.Pages))
         fetchPageNumber(spark, spec, pp, ppp, effectivePageSize, hint)
@@ -434,6 +453,5 @@ object HttpJsonSource {
         sequential(fetchCursor(spec, cp, psp, effectivePageSize))
       case _ => sequential(Iterator(fetchPage(buildClient(), spec, Seq.empty)))
     }
-    graft.infer.SchemaInfer.readNestedSampled(spark, fetched.rows, fetched.firstPage)
   }
 }

@@ -11,11 +11,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * arrays → lists, long ⊔ double = double, a bool/number conflict →
   * string, first-seen nullability) matches the reference's batch path
   * (schema.rs:133-148). Every row is then parsed once against that
-  * schema in `FAILFAST` mode: a row that does not fit — a scalar or an
-  * array of scalars where an object belongs, a value the sampled type
-  * cannot hold — fails the action with Spark's
-  * `MALFORMED_RECORD_IN_PARSING` instead of landing as nulls. A field
-  * first seen after the sample is dropped.
+  * schema in `FAILFAST` mode: a row that does not fit — a scalar where
+  * an object belongs, a value the sampled type cannot hold — fails the
+  * action with Spark's `MALFORMED_RECORD_IN_PARSING` instead of
+  * landing as nulls, and an array row (of scalars or of objects) with
+  * a `DataTypeError`. A field first seen after the sample is dropped.
   */
 object SchemaInfer {
 
@@ -60,7 +60,20 @@ object SchemaInfer {
     if (window.isEmpty) readNested(spark, rows) // truly empty source
     else {
       val schema = spark.read.json(window.toDS()).schema
-      spark.read.schema(schema).option("mode", "FAILFAST").json(rows)
+      spark.read.schema(schema).option("mode", "FAILFAST").json(rows.map(notArray))
     }
+  }
+
+  /** `row`, unless it is a JSON array: Spark's reader expands a
+    * top-level array of objects into one row per element, even under
+    * `FAILFAST`, so an array row is refused here as a `DataTypeError`
+    * — every row must be one object.
+    */
+  private def notArray(row: String): String = {
+    val i = row.indexWhere(!Character.isWhitespace(_))
+    if (i >= 0 && row.charAt(i) == '[')
+      throw graft.errors.GraftError.DataTypeError(
+        s"a row is a JSON array, not an object: ${row.take(200)}")
+    row
   }
 }

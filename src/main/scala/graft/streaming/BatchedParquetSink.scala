@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** The shared scaffolding of the foreachBatch-over-parquet streamers
@@ -43,9 +43,13 @@ private[graft] object BatchedParquetSink {
     */
   val BatchCol = "graft_batch"
 
-  /** Start a parquet-file stream driving `body` per micro-batch. */
+  /** Start a parquet-file stream driving `body` per micro-batch.
+    * `availableNow` runs the files present at start (still
+    * `maxFilesPerTrigger` per batch) and then stops the query itself.
+    */
   def start(spark: SparkSession, dir: String, schema: StructType,
-      maxFilesPerTrigger: Int, checkpoint: Option[String])(
+      maxFilesPerTrigger: Int, checkpoint: Option[String],
+      availableNow: Boolean = false)(
       body: (DataFrame, Long) => Unit): StreamingQuery = {
     val reader = spark.readStream.schema(schema)
     val src = (if (maxFilesPerTrigger > 0)
@@ -53,6 +57,7 @@ private[graft] object BatchedParquetSink {
       else reader).parquet(dir)
     val writer = src.writeStream.foreachBatch(body)
     checkpoint.foreach(c => writer.option("checkpointLocation", c))
+    if (availableNow) writer.trigger(Trigger.AvailableNow())
     writer.start()
   }
 

@@ -206,12 +206,13 @@ object StreamingClassify {
   def streamingPredictToDir(spark: SparkSession, dir: String,
       schema: StructType, model: DataFrame, outDir: String,
       maxFilesPerTrigger: Int = 0, checkpoint: Option[String] = None,
-      maxModelRows: Long = 2000000L): StreamingQuery = {
+      maxModelRows: Long = 2000000L,
+      availableNow: Boolean = false): StreamingQuery = {
     val handle = scorer(model, maxModelRows)
     val q =
       try
         BatchedParquetSink.start(spark, dir, schema, maxFilesPerTrigger,
-          checkpoint) { (batch, batchId) =>
+          checkpoint, availableNow) { (batch, batchId) =>
           BatchedParquetSink.landBatch(handle.score(batch), outDir, batchId)
         }
       catch {

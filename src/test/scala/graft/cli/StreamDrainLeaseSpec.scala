@@ -144,4 +144,63 @@ class StreamDrainLeaseSpec extends AnyFunSuite {
       .count() == 20)
     assert(!Files.exists(lock), "the stolen-then-released lease must be gone")
   }
+
+  test("a healthy drain stops its own query: no 'Failed to cancel job group' " +
+      "WARN, and max_files_per_trigger still cuts one batch per file") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val sp = spark
+    val dir = Files.createTempDirectory("drain_quiet")
+    val modules = Files.createDirectories(dir.resolve("modules"))
+    val warehouse = dir.resolve("warehouse")
+    val srcDir = Files.createDirectories(dir.resolve("incoming")).toString
+    val preds = dir.resolve("preds")
+    val docs = graft.engine.Tables.table(sp, sf, "documents")
+    Files.writeString(dir.resolve("pipelines.yaml"),
+      s"""stages:
+         |  - name: score_incoming
+         |    kind: stream
+         |    stream: classify
+         |    input_dir: $sf
+         |    source_dir: $srcDir
+         |    checkpoint: ${dir.resolve("ckpt")}
+         |    out_dir: $preds
+         |    dest_table: incoming_preds
+         |    max_files_per_trigger: 1
+         |""".stripMargin)
+    Seq((0L, 10L), (10L, 20L), (20L, 30L)).foreach { case (lo, hi) =>
+      docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+        .select(col("doc_id"), col("text"))
+        .coalesce(1).write.mode("append").parquet(srcDir)
+    }
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("drain-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warns.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    val failed = try Main.run(Main.Args(
+      modulesDir = modules.toString,
+      configPath = dir.resolve("pipelines.yaml").toString,
+      warehouse = Some(warehouse.toString)), sp)
+    finally {
+      root.removeAppender("drain-capture")
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    assert(failed == 0)
+    assert(!warns.toArray.exists(_.toString.contains("Failed to cancel job group")),
+      warns.toArray.mkString(" | "))
+    val landed = sp.read.parquet(warehouse.resolve("incoming_preds").toString)
+    assert(landed.count() == 30)
+    assert(landed.select("graft_batch").distinct().count() == 3,
+      "one micro-batch per source file")
+  }
 }

@@ -405,10 +405,12 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Rows 1..150 `{"id", "name", "amount"}` with one twist per `set`:
     * drift — a field `extra` from row 120 on; widen — `amount` 12.5 at
     * row 41; fraction — `amount` 125.5 at row 125; scalar, string,
-    * null, array — row 125 is `5`, `"scalar"`, `null` or `[1,2]`, not
-    * an object.
+    * null, array, objects — row 125 is `5`, `"scalar"`, `null`,
+    * `[1,2]` or an array holding one object, not an object; many —
+    * 1,500 plain rows.
     */
-  private def rowsOf(set: String): IndexedSeq[String] = (1 to 150).map { i =>
+  private def rowsOf(set: String): IndexedSeq[String] =
+      (1 to (if (set == "many") 1500 else 150)).map { i =>
     val amount = (set, i) match {
       case ("widen", 41) => "12.5"
       case ("fraction", 125) => "125.5"
@@ -419,6 +421,7 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       case ("string", 125) => "\"scalar\""
       case ("null", 125) => "null"
       case ("array", 125) => "[1,2]"
+      case ("objects", 125) => """[{"id": 125, "name": "u125", "amount": 125}]"""
       case _ =>
         val extra = if (set == "drift" && i >= 120) s""", "extra": "e$i"""" else ""
         s"""{"id": $i, "name": "u$i", "amount": $amount$extra}"""
@@ -467,16 +470,35 @@ class HttpJsonSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // "an array of scalars" covers arrays of objects too (the `objects` set)
   test("a row that does not fit the sampled schema fails the load, on any " +
       "kind: a scalar, a string, a null, an array of scalars, a fraction in a bigint") {
     val spark = graft.SparkTestSession.spark
     // row 125 is past the sample — on page_number with a total it sits
     // on an executor-fetched page
     for ((kind, path, pagination) <- everyKind;
-         set <- Seq("scalar", "string", "null", "array", "fraction")) {
+         set <- Seq("scalar", "string", "null", "array", "objects", "fraction")) {
       val df = load(spark, rowsSource(path, set, pagination), pageSize = 10)
       val e = intercept[org.apache.spark.SparkException](df.count())
       assert(graft.errors.GraftError.from(e).category == "datatype", s"$kind/$set: $e")
     }
+  }
+
+  test("driver-fetched rows enter Spark as an RDD: no plan of a 1,500-row " +
+      "limit_offset load holds a local relation past the 100-row sample") {
+    val spark = graft.SparkTestSession.spark
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+    def localRows(p: LogicalPlan): Seq[Int] = p.collect {
+      case l: LocalRelation if l.data.size > graft.infer.SchemaInfer.SampleCap =>
+        l.data.size
+    }
+    val source = rowsSource("offset", "many", Pagination.LimitOffset("limit", "start"))
+    val fetched = fetch(spark, source, pageSize = 100)
+    assert(fetched.firstPage.size == 1500)
+    assert(localRows(fetched.rows.queryExecution.optimizedPlan).isEmpty,
+      fetched.rows.queryExecution.optimizedPlan.treeString)
+    val df = load(spark, source, pageSize = 100)
+    assert(localRows(df.queryExecution.optimizedPlan).isEmpty)
+    assert(df.count() == 1500)
   }
 }
