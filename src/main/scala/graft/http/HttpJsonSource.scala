@@ -362,10 +362,9 @@ object HttpJsonSource {
 
   /** Rows the driver fetched, as a Dataset over an RDD rather than a
     * local relation: a `LocalRelation` holding every row is copied by
-    * each Catalyst rule that maps a node's arguments, so planning cost
-    * grew with the row count. Sliced as
-    * a local table scan would be — at most one slice per core, none
-    * empty.
+    * each Catalyst rule that maps a node's arguments, so its planning
+    * cost grows with the row count. Sliced as a local table scan would
+    * be — at most one slice per core, none empty.
     */
   private def driverRows(spark: SparkSession, rows: Seq[String]): Dataset[String] = {
     import spark.implicits._
