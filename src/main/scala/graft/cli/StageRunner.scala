@@ -447,10 +447,12 @@ object StageRunner {
     }
   }
 
-  /** Drain-what's-available streaming: start, processAllAvailable,
-    * stop. With the stage's durable checkpoint this is the scheduled
-    * incremental regime — each CLI run picks up exactly the source
-    * files that arrived since the last one.
+  /** Drain-what's-available streaming: start the query under
+    * `Trigger.AvailableNow`, which runs the source files present at
+    * its start and stops itself, then await its termination. With the
+    * stage's durable checkpoint this is the scheduled incremental
+    * regime — each CLI run picks up exactly the source files that
+    * arrived since the last one.
     */
   private def runStream(spark: SparkSession, stage: Stage,
       priorOutput: String => DataFrame): DataFrame = {
@@ -504,8 +506,7 @@ object StageRunner {
           }
           val q = graft.streaming.StreamingClassify.streamingPredictToDir(
             spark, sourceDir, schema, model, outDir,
-            maxFilesPerTrigger = throttle, checkpoint = Some(checkpoint),
-            availableNow = true)
+            maxFilesPerTrigger = throttle, checkpoint = Some(checkpoint))
           drain(q)
         }
         readOrEmpty(spark, outDir,
@@ -584,7 +585,7 @@ object StageRunner {
     * has no active job). A failed batch rethrows here as the query's
     * exception; an interrupted wait stops the query.
     */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+  private[graft] def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
     try q.awaitTermination()
     finally if (q.isActive) q.stop()
 }

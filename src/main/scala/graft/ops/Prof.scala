@@ -641,12 +641,12 @@ object Prof {
         val t0 = System.nanoTime; f
         println(f"PROF $name ${(System.nanoTime - t0) / 1e9}%.2f s")
       }
-      def drain(sq: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-        try sq.processAllAvailable()
-        finally { sq.stop(); sq.awaitTermination() }
       def drop(df: org.apache.spark.sql.DataFrame, src: String): Unit =
         df.coalesce(1).write.mode("append").parquet(src)
       def schemaOf(src: String) = spark.read.parquet(src).schema
+      // every drain runs as a stage's does: started AvailableNow, then
+      // awaited until the query stops itself
+      import graft.cli.StageRunner.drain
       // a store-backed stream stage's drain: its per-batch store verb
       // over `src`, one file per trigger
       def stageDrain(src: String, ck: String, fields: String*): () => Unit = {
@@ -656,7 +656,7 @@ object Prof {
             s"    checkpoint: $ck") ++ fields.map("    " + _))
             .mkString("\n")).stages.head
         () => drain(graft.streaming.BatchedParquetSink.start(spark, src,
-          schemaOf(src), 1, Some(ck))(
+          schemaOf(src), 1, Some(ck), availableNow = true)(
           graft.cli.StageRunner.streamBatch(spark, stage)))
       }
 

@@ -199,20 +199,22 @@ object StreamingClassify {
     * `stream: classify`): predictions land under `outDir` through the
     * shared batch-keyed partition overwrite, so foreachBatch's
     * at-least-once replay is idempotent, and the optional durable
-    * checkpoint makes successive drains incremental. Same model
+    * checkpoint makes successive drains incremental. The query runs
+    * under `Trigger.AvailableNow`: it scores the files present at its
+    * start (`maxFilesPerTrigger` per batch) and then stops itself, so
+    * a caller drains it by awaiting termination. Same model
     * broadcast, same size guard, same scoring loop — one scoring
     * body ([[scorer]]), two deliveries.
     */
   def streamingPredictToDir(spark: SparkSession, dir: String,
       schema: StructType, model: DataFrame, outDir: String,
       maxFilesPerTrigger: Int = 0, checkpoint: Option[String] = None,
-      maxModelRows: Long = 2000000L,
-      availableNow: Boolean = false): StreamingQuery = {
+      maxModelRows: Long = 2000000L): StreamingQuery = {
     val handle = scorer(model, maxModelRows)
     val q =
       try
         BatchedParquetSink.start(spark, dir, schema, maxFilesPerTrigger,
-          checkpoint, availableNow) { (batch, batchId) =>
+          checkpoint, availableNow = true) { (batch, batchId) =>
           BatchedParquetSink.landBatch(handle.score(batch), outDir, batchId)
         }
       catch {

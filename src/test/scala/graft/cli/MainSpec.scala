@@ -510,12 +510,11 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bqCalls.get() == 0)
   }
 
+  // the two modules land in different tables, so they run as two
+  // concurrent lanes: one lane's [datatype] failure does not stop the
+  // other, and run counts it once
   test("a row that does not fit its sampled schema fails its module as " +
       "[datatype]; a sibling module still lands") {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
     val spark = graft.SparkTestSession.spark
     val dir = Files.createTempDirectory("pipeline-drift")
     val modules = Files.createDirectories(dir.resolve("modules"))
@@ -552,30 +551,14 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
          |      password: p
          |""".stripMargin)
 
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("drift-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        errors.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    root.addAppender(capture, Level.ERROR, null)
-    ctx.updateLoggers()
-    val failed = try Main.run(Main.Args(
+    val (failed, errors) = graft.LogCapture(
+        org.apache.logging.log4j.Level.ERROR)(Main.run(Main.Args(
       modulesDir = modules.toString,
       configPath = dir.resolve("pipelines.yaml").toString,
-      warehouse = Some(warehouse)), spark)
-    finally {
-      root.removeAppender("drift-capture")
-      ctx.updateLoggers()
-      capture.stop()
-    }
+      warehouse = Some(warehouse)), spark))
     assert(failed == 1)
-    assert(errors.toArray.exists(m =>
-      m.toString.startsWith("module drift.sql failed [datatype]")),
-      s"no [datatype] failure logged: ${errors.toArray.mkString(" | ")}")
+    assert(errors.exists(_.startsWith("module drift.sql failed [datatype]")),
+      s"no [datatype] failure logged: ${errors.mkString(" | ")}")
     assert(spark.read.parquet(s"$warehouse/posts").count() == 8)
   }
 }

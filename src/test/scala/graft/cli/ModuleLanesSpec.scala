@@ -6,10 +6,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, T
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
+import org.apache.logging.log4j.Level
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,12 +60,6 @@ class ModuleLanesSpec extends AnyFunSuite with BeforeAndAfterAll {
       val rows = (1 to n).map(i => s"""{"id": $i}""")
       graft.HttpStub.respond(ex, rows.mkString("""{"data": [""", ",", "]}"))
     })
-    // a fraction in a bigint column, past the 100-row schema sample
-    server.createContext("/misfit", (ex: HttpExchange) => {
-      val rows = (1 to 101).map(i =>
-        s"""{"id": $i, "v": ${if (i == 101) "1.5" else i.toString}}""")
-      graft.HttpStub.respond(ex, rows.mkString("""{"data": [""", ",", "]}"))
-    })
     server.start()
     base = s"http://127.0.0.1:${server.getAddress.getPort}"
   }
@@ -107,33 +98,6 @@ class ModuleLanesSpec extends AnyFunSuite with BeforeAndAfterAll {
     (dir, Main.Args(modulesDir = modules.toString,
       configPath = dir.resolve("pipelines.yaml").toString,
       warehouse = Some(dir.resolve("warehouse").toString)))
-  }
-
-  /** Run `body` with every event at `level` or above captured, this
-    * package's loggers lowered to `level` meanwhile.
-    */
-  private def capturing[T](level: Level)(body: => T): (T, Seq[String]) = {
-    import org.apache.logging.log4j.core.config.Configurator
-    val was = LogManager.getLogger("graft.cli").getLevel
-    Configurator.setLevel("graft.cli", level)
-    val seen = new ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("lanes-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        seen.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    root.addAppender(capture, level, null)
-    ctx.updateLoggers()
-    val out = try body finally {
-      root.removeAppender("lanes-capture")
-      ctx.updateLoggers()
-      capture.stop()
-      Configurator.setLevel("graft.cli", was)
-    }
-    (out, seen.toArray.toSeq.map(_.toString))
   }
 
   test("inLanes: one lane runs on the caller; lanes keep their order and " +
@@ -189,19 +153,6 @@ class ModuleLanesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(s"${args.warehouse.get}/other").count() == 4)
   }
 
-  test("a [datatype] failure in one lane does not stop a sibling lane; run " +
-      "returns 1") {
-    val spark = graft.SparkTestSession.spark
-    val (_, args) = pipeline("lanes-misfit", Seq(
-      ("bad.sql", "misfit", "/misfit", "bad"),
-      ("good.sql", "fine", "/rows?n=5", "good")))
-    val (failed, errors) = capturing(Level.ERROR)(Main.run(args, spark))
-    assert(failed == 1)
-    assert(errors.exists(_.startsWith("module bad.sql failed [datatype]")),
-      errors.mkString(" | "))
-    assert(spark.read.parquet(s"${args.warehouse.get}/good").count() == 5)
-  }
-
   test("two incremental sources on one FileSyncState both advance their " +
       "marks, round after round") {
     val spark = graft.SparkTestSession.spark
@@ -226,7 +177,8 @@ class ModuleLanesSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("c3.sql", "three", "/rows?n=3", "three"),
       ("c7.sql", "seven", "/rows?n=7", "seven"),
       ("c11.sql", "eleven", "/rows?n=11", "eleven")))
-    val (failed, infos) = capturing(Level.INFO)(Main.run(args, spark))
+    val (failed, infos) =
+      graft.LogCapture(Level.INFO, "graft.cli")(Main.run(args, spark))
     assert(failed == 0)
     for ((m, n, t) <- Seq(("c3.sql", 3, "three"), ("c7.sql", 7, "seven"),
         ("c11.sql", 11, "eleven")))

@@ -147,10 +147,6 @@ class StreamDrainLeaseSpec extends AnyFunSuite {
 
   test("a healthy drain stops its own query: no 'Failed to cancel job group' " +
       "WARN, and max_files_per_trigger still cuts one batch per file") {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
     val sp = spark
     val dir = Files.createTempDirectory("drain_quiet")
     val modules = Files.createDirectories(dir.resolve("modules"))
@@ -175,29 +171,14 @@ class StreamDrainLeaseSpec extends AnyFunSuite {
         .select(col("doc_id"), col("text"))
         .coalesce(1).write.mode("append").parquet(srcDir)
     }
-    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("drain-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        warns.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    root.addAppender(capture, Level.WARN, null)
-    ctx.updateLoggers()
-    val failed = try Main.run(Main.Args(
+    val (failed, warns) = graft.LogCapture(
+        org.apache.logging.log4j.Level.WARN)(Main.run(Main.Args(
       modulesDir = modules.toString,
       configPath = dir.resolve("pipelines.yaml").toString,
-      warehouse = Some(warehouse.toString)), sp)
-    finally {
-      root.removeAppender("drain-capture")
-      ctx.updateLoggers()
-      capture.stop()
-    }
+      warehouse = Some(warehouse.toString)), sp))
     assert(failed == 0)
-    assert(!warns.toArray.exists(_.toString.contains("Failed to cancel job group")),
-      warns.toArray.mkString(" | "))
+    assert(!warns.exists(_.contains("Failed to cancel job group")),
+      warns.mkString(" | "))
     val landed = sp.read.parquet(warehouse.resolve("incoming_preds").toString)
     assert(landed.count() == 30)
     assert(landed.select("graft_batch").distinct().count() == 3,
